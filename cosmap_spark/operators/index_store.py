@@ -1,16 +1,24 @@
 """Persist / reload / incrementally extend the ANN index artifacts.
 
-The train-once/serve-many split (`bench.py`'s ``knn_ann_split``)
-holds artifacts in memory via ``localCheckpoint``; a real deployment
+Serving needs the trained artifacts again and again: held in memory
+(``localCheckpoint``) they last one session; a real deployment
 persists them.  This module is that persistence: every artifact the
 serving path consumes — IVF centroids + inverted lists, PQ codebooks +
-coded corpus, LSH corpus buckets — lands as parquet under one index
-directory, and ``load_ann_index`` rebuilds exactly the keyword
-arguments ``queries.llm_ops.knn_ann_union`` (and the underlying
-``knn_ivf`` / ``knn_ivfpq`` / ``knn_lsh``) accept.  A manifest file
-records which components and structural parameters the index carries,
-so a serving session can refuse a mismatched probe configuration
-loudly instead of returning silently wrong neighbors.
+coded corpus, LSH corpus buckets — lands as parquet, and
+``load_ann_index`` rebuilds exactly the keyword arguments
+``queries.llm_ops.knn_ann_union`` (and the underlying ``knn_ivf`` /
+``knn_ivfpq`` / ``knn_lsh``) accept.
+
+Every store here (ANN, token bags, lexical) commits through the
+manifest-pointer protocol (:mod:`cosmap_spark.sinks.commit`): each
+component of a save lands in its own immutable data dir and ONE
+CAS-published manifest names the complete generation together with
+its structural parameters.  Readers therefore see the old save or the
+new one, never a mix of component generations; a serving session can
+refuse a mismatched probe configuration loudly instead of returning
+silently wrong neighbors; crashed saves leak only
+reachability-vacuumable orphans (``ManifestStore(path).vacuum()``);
+and ``version=`` pins a load to a historical save.
 
 ``ivf_append`` is the incremental path: new vectors are ASSIGNED to
 the existing (frozen) centroids and unioned into the inverted lists —
@@ -21,11 +29,10 @@ drift; the append never touches history).
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from cosmap_spark.sinks.commit import ManifestStore
 
 
 def save_ann_index(
@@ -40,7 +47,6 @@ def save_ann_index(
     opq_codebooks=None,
     opq_coded: DataFrame | None = None,
     bq_bits: DataFrame | None = None,
-    backend: str = "rename",
     fs=None,
 ) -> None:
     """Write the given artifacts under ``path`` (parquet + manifest).
@@ -60,46 +66,15 @@ def save_ann_index(
     storing them together is what makes a loaded OPQ serve
     row-identical to the in-memory one.
 
-    Commit backends (``backend=``): the default ``"rename"`` keeps
-    the historical in-place layout (components overwritten, manifest
-    written last and atomically) — safe for first saves and ADDING
-    components, but a crash mid-RE-save can mix component GENERATIONS
-    under the intact old manifest (new codebooks + old coded corpus =
-    silently wrong distances).  ``"manifest"`` closes that hole with
-    the commit protocol (:mod:`cosmap_spark.sinks.commit`): every
-    component of a save lands in its own immutable ``data/<uuid>``
-    dir and ONE CAS-published manifest names the complete generation —
-    readers see the old save or the new one, never a mix, and crashed
-    saves leak only reachability-vacuumable orphans."""
-    if backend not in ("rename", "manifest"):
-        raise ValueError(f"save_ann_index: unknown backend {backend!r}")
+    A re-save publishes the next manifest version; the previous save
+    stays loadable through ``load_ann_index(version=)``."""
+    ms = ManifestStore(path, fs)
     dirs: dict[str, str] = {}
-    ms = None
-    if backend == "manifest":
-        from cosmap_spark.sinks.commit import ManifestStore
 
-        if fs is None and os.path.exists(
-            os.path.join(path, "manifest.json")
-        ):
-            raise ValueError(
-                f"save_ann_index: {path!r} is an existing rename-"
-                "layout index — refusing to overlay a manifest store"
-            )
-        ms = ManifestStore(path, fs)
-
-        def dest(name: str) -> str:
-            rel, target = ms.new_data_dir()
-            dirs[name] = rel
-            return target
-    else:
-        if os.path.isdir(os.path.join(path, "_manifests")):
-            raise ValueError(
-                f"save_ann_index: {path!r} is an existing manifest-"
-                "layout index — pass backend='manifest'"
-            )
-
-        def dest(name: str) -> str:
-            return os.path.join(path, name)
+    def dest(name: str) -> str:
+        rel, target = ms.new_data_dir()
+        dirs[name] = rel
+        return target
 
     manifest: dict = {"components": []}
     if residual:
@@ -132,8 +107,8 @@ def save_ann_index(
         # partitionBy(cid): the inverted lists become DIRECTORIES, so a
         # probe-pruned serve (knn_ivfpq(prune_scan=True)) skips whole
         # lists at the file-listing level — the on-disk layout the
-        # SCALE.md §Similarity search story promises (preserved inside
-        # the manifest backend's immutable component dir)
+        # SCALE.md §Similarity search story promises (inside the
+        # component's immutable data dir)
         coded.write.mode("overwrite").partitionBy("cid").parquet(
             dest("pq_coded")
         )
@@ -171,23 +146,11 @@ def save_ann_index(
         # LONG array per id — the 32x-compressed scan column
         bq_bits.write.mode("overwrite").parquet(dest("bq_bits"))
         manifest["components"].append("bq")
-    if ms is not None:
-        version = ms.versions()[-1] if ms.exists() else 0
-        ms.publish(
-            {**manifest, "dirs": dirs,
-             "data_dirs": sorted(dirs.values())},
-            expected_version=version,
-        )
-        return
-    os.makedirs(path, exist_ok=True)
-    # manifest last AND atomically (tmp + rename): it is the marker
-    # that the parquet components are complete — a crash mid-save must
-    # leave either no manifest or the previous intact one, never a
-    # manifest describing half-written components
-    tmp = os.path.join(path, ".manifest.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-    os.replace(tmp, os.path.join(path, "manifest.json"))
+    version = ms.versions()[-1] if ms.exists() else 0
+    ms.publish(
+        {**manifest, "dirs": dirs, "data_dirs": sorted(dirs.values())},
+        expected_version=version,
+    )
 
 
 def save_token_bags(
@@ -196,163 +159,59 @@ def save_token_bags(
     bags: DataFrame,
     *,
     normalize: bool = True,
-    backend: str = "rename",
     fs=None,
 ) -> None:
     """Persist a :func:`cosmap_spark.operators.retrieval.
     maxsim_token_quantizer` result beside an index — the token-level
     centroid vectors plus the per-doc bags ``[nid, bag array<int>]``
     that :func:`cosmap_spark.operators.retrieval.maxsim_rerank_plaid`
-    consumes.  All three artifacts (centroids, bags, manifest with the
-    training ``normalize`` flag — bags scored under the wrong
-    convention are meaningless, the ``residual`` flag lesson) live in
-    ONE ``<path>/plaid`` directory, staged fully in a temp dir and
-    swapped in atomically (``writers._swap_dir_in`` — the shared
-    backup-rename back half, standard ``.__merge_backup`` suffix so
-    the interrupted-swap refusal covers it): a crash mid-RE-save can
-    never leave new data under an old manifest (the round-9 review
-    finding with the manifest-last variant).
-
-    ``backend="manifest"`` commits through the manifest-pointer
-    protocol instead (:mod:`cosmap_spark.sinks.commit` — the index
-    store ported through the StoreCommit seam, round-9 verdict task
-    #2): centroids and bags land in immutable ``data/<uuid>`` dirs
-    under ``<path>/plaid`` and ONE CAS-published manifest names them —
-    no directory rename anywhere, re-saves just publish the next
-    version, crashed saves leak only reachability-vacuumable orphans
-    (``ManifestStore(<path>/plaid).vacuum()``), and the layout works
-    on an object store once a ``CommitFS`` is supplied."""
-    import uuid
-
-    from cosmap_spark.sinks.writers import (
-        _refuse_interrupted_swap,
-        _require_local,
-        _swap_dir_in,
-    )
-
-    if backend not in ("rename", "manifest"):
-        raise ValueError(f"save_token_bags: unknown backend {backend!r}")
-    live = os.path.join(path, "plaid")
+    consumes.  Centroids and bags land in immutable data dirs of the
+    ``<path>/plaid`` store and ONE CAS-published manifest names them
+    together with the training ``normalize`` flag (bags scored under
+    the wrong convention are meaningless, the ``residual`` flag
+    lesson) — a crash mid-RE-save can never leave new data under an
+    old manifest, re-saves just publish the next version, and crashed
+    saves leak only reachability-vacuumable orphans
+    (``ManifestStore(<path>/plaid).vacuum()``)."""
+    ms = ManifestStore(f"{path.rstrip('/')}/plaid", fs)
     spark = bags.sparkSession
-    if backend == "manifest":
-        from cosmap_spark.sinks.commit import ManifestStore
-
-        if fs is None and os.path.exists(
-            os.path.join(live, "manifest.json")
-        ):
-            raise ValueError(
-                f"save_token_bags: {live!r} is an existing rename-"
-                "layout plaid store — refusing to overlay a manifest "
-                "store on it"
-            )
-        ms = ManifestStore(live, fs)
-        version = ms.versions()[-1] if ms.exists() else 0
-        crel, ctarget = ms.new_data_dir()
-        spark.createDataFrame(
-            [(int(cid), [float(x) for x in vec]) for cid, vec in centroids],
-            "cid INT, cvec ARRAY<DOUBLE>",
-        ).write.mode("overwrite").parquet(ctarget)
-        brel, btarget = ms.new_data_dir()
-        bags.write.mode("overwrite").parquet(btarget)
-        ms.publish(
-            {
-                "components": ["plaid"],
-                "nlist": len(centroids),
-                "normalize": bool(normalize),
-                "centroids": crel,
-                "bags": brel,
-                "data_dirs": [crel, brel],
-            },
-            expected_version=version,
-        )
-        return
-    _require_local(path, "save_token_bags")
-    if os.path.isdir(os.path.join(live, "_manifests")):
-        raise ValueError(
-            f"save_token_bags: {live!r} is an existing manifest-layout "
-            "plaid store — pass backend='manifest'"
-        )
-    _refuse_interrupted_swap(live)
-    os.makedirs(path, exist_ok=True)
-    # sweep debris from CRASHED prior saves (round-9 advice: unlike the
-    # MOR store there was no vacuum path for .plaid_tmp_* orphans, so
-    # repeated crashed re-saves accumulated full-size copies).  Age
-    # guard mirrors mor_vacuum's: an hour-old temp dir cannot belong to
-    # a live single-writer save; dot-prefixed names are invisible to
-    # readers, so the sweep is purely a disk-space concern.
-    import shutil
-    import time
-
-    now = time.time()
-    for name in os.listdir(path):
-        full = os.path.join(path, name)
-        if (
-            name.startswith(".plaid_tmp_")
-            and os.path.isdir(full)
-            and now - os.stat(full).st_mtime >= 3600.0
-        ):
-            shutil.rmtree(full)
-    tmp = os.path.join(path, f".plaid_tmp_{uuid.uuid4().hex}")
+    version = ms.versions()[-1] if ms.exists() else 0
+    crel, ctarget = ms.new_data_dir()
     spark.createDataFrame(
         [(int(cid), [float(x) for x in vec]) for cid, vec in centroids],
         "cid INT, cvec ARRAY<DOUBLE>",
-    ).write.mode("overwrite").parquet(os.path.join(tmp, "centroids"))
-    bags.write.mode("overwrite").parquet(os.path.join(tmp, "bags"))
-    with open(os.path.join(tmp, "manifest.json"), "w") as f:
-        json.dump(
-            {
-                "components": ["plaid"],
-                "nlist": len(centroids),
-                "normalize": bool(normalize),
-            },
-            f,
-        )
-    if not os.path.exists(live):
-        os.rename(tmp, live)
-        return
-    _swap_dir_in(live, tmp)
+    ).write.mode("overwrite").parquet(ctarget)
+    brel, btarget = ms.new_data_dir()
+    bags.write.mode("overwrite").parquet(btarget)
+    ms.publish(
+        {
+            "components": ["plaid"],
+            "nlist": len(centroids),
+            "normalize": bool(normalize),
+            "centroids": crel,
+            "bags": brel,
+            "data_dirs": [crel, brel],
+        },
+        expected_version=version,
+    )
 
 
 def load_token_bags(spark: SparkSession, path: str, *, fs=None) -> dict:
-    """Reload a ``save_token_bags`` directory: ``{"centroids": [...],
+    """Reload a ``save_token_bags`` store: ``{"centroids": [...],
     "bags": DataFrame, "normalize": bool}`` — pass centroids/bags to
     ``maxsim_rerank_plaid`` with the recorded ``normalize``.  Loaded
     serving is asserted row-identical to in-memory artifacts in
-    tests/test_retrieval.py.  The commit backend is probed from the
-    layout (rename-swap ``manifest.json`` vs manifest-pointer
-    ``_manifests/``), so readers need no out-of-band knowledge."""
-    from cosmap_spark.sinks.writers import _refuse_interrupted_swap
-
-    live = os.path.join(path, "plaid")
-    if fs is not None or os.path.isdir(os.path.join(live, "_manifests")):
-        from cosmap_spark.sinks.commit import ManifestStore
-
-        _, man = ManifestStore(live, fs).latest()
-        cdir = os.path.join(live, man["centroids"])
-        bdir = os.path.join(live, man["bags"])
-    else:
-        _refuse_interrupted_swap(live)
-        if not os.path.exists(live) and os.path.exists(
-            os.path.join(path, "plaid_manifest.json")
-        ):
-            raise ValueError(
-                f"load_token_bags: {path!r} holds the pre-release flat "
-                "plaid_* layout (round-9 interim) — re-save with "
-                "save_token_bags (the artifacts now live under "
-                "<path>/plaid as one atomic unit)"
-            )
-        with open(os.path.join(live, "manifest.json")) as f:
-            man = json.load(f)
-        cdir = os.path.join(live, "centroids")
-        bdir = os.path.join(live, "bags")
+    tests/test_retrieval.py."""
+    ms = ManifestStore(f"{path.rstrip('/')}/plaid", fs)
+    _, man = ms.latest()
     cents = [
         (r["cid"], list(r["cvec"]))
-        for r in spark.read.parquet(cdir).collect()
+        for r in spark.read.parquet(ms.data_path(man["centroids"])).collect()
     ]
     cents.sort(key=lambda t: t[0])
     return {
         "centroids": cents,
-        "bags": spark.read.parquet(bdir),
+        "bags": spark.read.parquet(ms.data_path(man["bags"])),
         "normalize": bool(man.get("normalize", True)),
     }
 
@@ -379,32 +238,13 @@ def load_ann_index(spark: SparkSession, path: str, *,
     absent from the manifest are simply missing from the dict (the
     consumer then retrains or rejects).  Loaded serve results are
     asserted row-identical to in-memory artifacts in
-    tests/test_index_store.py.  The commit backend is probed from the
-    layout (in-place ``manifest.json`` vs ``_manifests/``), so readers
-    need no out-of-band knowledge; ``version=`` pins a manifest-
-    backend load to a historical save."""
-    if fs is not None or os.path.isdir(os.path.join(path, "_manifests")):
-        from cosmap_spark.sinks.commit import ManifestStore
+    tests/test_index_store.py.  ``version=`` pins the load to a
+    historical save."""
+    ms = ManifestStore(path, fs)
+    manifest = ms.latest()[1] if version is None else ms.read_version(version)
 
-        ms = ManifestStore(path, fs)
-        if version is None:
-            _, manifest = ms.latest()
-        else:
-            manifest = ms.read_version(version)
-
-        def src(name: str) -> str:
-            return ms.data_path(manifest["dirs"][name])
-    else:
-        if version is not None:
-            raise ValueError(
-                "load_ann_index: version-pinned loads need the "
-                "manifest backend (the rename layout keeps no history)"
-            )
-        with open(os.path.join(path, "manifest.json")) as f:
-            manifest = json.load(f)
-
-        def src(name: str) -> str:
-            return os.path.join(path, name)
+    def src(name: str) -> str:
+        return ms.data_path(manifest["dirs"][name])
 
     out: dict = {}
     if "ivf" in manifest["components"]:
@@ -514,31 +354,9 @@ def pq_append(
 
 # --- lexical (BM25) index persistence -------------------------------
 
-def _write_lex_manifest(
-    path: str, lens: DataFrame, *, positional: bool
-) -> None:
-    """Aggregate the doc-count-sized lens table into the lexical
-    manifest stats and write it atomically (tmp + rename) — shared by
-    ``save_lex_index`` and ``lex_append`` so the manifest contract has
-    exactly one writer."""
-    row = lens.agg(
-        F.count("*").alias("n"), F.sum("dl").alias("t")
-    ).collect()[0]
-    manifest = {
-        "components": ["lex"],
-        "n_docs": int(row["n"] or 0),
-        "total_len": int(row["t"] or 0),
-        "positional": bool(positional),
-    }
-    tmp = os.path.join(path, ".manifest.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f)
-    os.replace(tmp, os.path.join(path, "manifest.json"))
-
-
 def save_lex_index(
     path: str, tf: DataFrame, lens: DataFrame | None = None, *,
-    backend: str = "rename", fs=None,
+    fs=None,
 ) -> None:
     """Persist a lexical index (``retrieval.build_lex_index`` result)
     under ``path``: the (doc, term, tf) table lands REPARTITIONED AND
@@ -562,82 +380,47 @@ def save_lex_index(
     capability and ``lex_append`` builds batches with the matching
     schema.
 
-    ``backend="manifest"`` commits through the manifest-pointer
-    protocol (:mod:`cosmap_spark.sinks.commit`, the same seam as the
-    ANN store): the tf and lens tables land in immutable data dirs and
-    ONE CAS publish names the complete generation — the rename
-    layout's re-save hazard (a crash between the tf and lens writes
-    leaves a NEW tf under OLD lens/stats: silently wrong BM25 norms)
-    structurally cannot happen.  Incremental maintenance on this
-    backend is the SEGMENT STACK (``lex_append`` appends immutable
-    segments; ``_lex_resolve_segments`` reconciles latest-unit-wins);
-    re-saving the loaded reconciled tf through this function IS the
-    compaction — it publishes a folded, term-sorted generation with
-    no ``segments`` list."""
+    The tf and lens tables land in immutable data dirs and ONE CAS
+    publish names the complete generation, so a crash between the tf
+    and lens writes cannot leave a NEW tf under OLD lens/stats
+    (silently wrong BM25 norms).  Incremental maintenance is the
+    SEGMENT STACK (``lex_append`` appends immutable segments;
+    ``_lex_resolve_segments`` reconciles latest-unit-wins); re-saving
+    the loaded reconciled tf through this function IS the compaction —
+    it publishes a folded, term-sorted generation with no ``segments``
+    list."""
     spark = tf.sparkSession
-    if backend not in ("rename", "manifest"):
-        raise ValueError(f"save_lex_index: unknown backend {backend!r}")
-    if backend == "manifest":
-        from cosmap_spark.sinks.commit import ManifestStore
-
-        if fs is None and os.path.exists(
-            os.path.join(path, "manifest.json")
-        ):
-            raise ValueError(
-                f"save_lex_index: {path!r} is an existing rename-"
-                "layout index — refusing to overlay a manifest store"
-            )
-        ms = ManifestStore(path, fs)
-        trel, ttarget = ms.new_data_dir()
-        tf.repartition(F.col("term")).sortWithinPartitions(
-            "term"
-        ).write.mode("overwrite").parquet(ttarget)
-        if lens is None:
-            lens = (
-                spark.read.parquet(ttarget)
-                .groupBy("__d").agg(F.sum("tf").alias("dl"))
-            )
-        lrel, ltarget = ms.new_data_dir()
-        lens.write.mode("overwrite").parquet(ltarget)
-        row = spark.read.parquet(ltarget).agg(
-            F.count("*").alias("n"), F.sum("dl").alias("t")
-        ).collect()[0]
-        version = ms.versions()[-1] if ms.exists() else 0
-        ms.publish(
-            {
-                "components": ["lex"],
-                "n_docs": int(row["n"] or 0),
-                "total_len": int(row["t"] or 0),
-                "positional": "pos" in tf.columns,
-                "dirs": {"lex_tf": trel, "lex_lens": lrel},
-                "data_dirs": [trel, lrel],
-            },
-            expected_version=version,
-        )
-        return
-    if os.path.isdir(os.path.join(path, "_manifests")):
-        raise ValueError(
-            f"save_lex_index: {path!r} is an existing manifest-layout "
-            "index — pass backend='manifest'"
-        )
-    tf.repartition(F.col("term")).sortWithinPartitions("term").write.mode(
-        "overwrite"
-    ).parquet(os.path.join(path, "lex_tf"))
+    ms = ManifestStore(path, fs)
+    trel, ttarget = ms.new_data_dir()
+    tf.repartition(F.col("term")).sortWithinPartitions(
+        "term"
+    ).write.mode("overwrite").parquet(ttarget)
     if lens is None:
         lens = (
-            spark.read.parquet(os.path.join(path, "lex_tf"))
-            .groupBy("__d")
-            .agg(F.sum("tf").alias("dl"))
+            spark.read.parquet(ttarget)
+            .groupBy("__d").agg(F.sum("tf").alias("dl"))
         )
-    lens.write.mode("overwrite").parquet(os.path.join(path, "lex_lens"))
-    _write_lex_manifest(
-        path, spark.read.parquet(os.path.join(path, "lex_lens")),
-        positional="pos" in tf.columns,
+    lrel, ltarget = ms.new_data_dir()
+    lens.write.mode("overwrite").parquet(ltarget)
+    row = spark.read.parquet(ltarget).agg(
+        F.count("*").alias("n"), F.sum("dl").alias("t")
+    ).collect()[0]
+    version = ms.versions()[-1] if ms.exists() else 0
+    ms.publish(
+        {
+            "components": ["lex"],
+            "n_docs": int(row["n"] or 0),
+            "total_len": int(row["t"] or 0),
+            "positional": "pos" in tf.columns,
+            "dirs": {"lex_tf": trel, "lex_lens": lrel},
+            "data_dirs": [trel, lrel],
+        },
+        expected_version=version,
     )
 
 
 def _lex_resolve_segments(spark: SparkSession, ms, manifest: dict):
-    """Reconcile a manifest-backend lexical index's SEGMENT STACK into
+    """Reconcile a lexical index's SEGMENT STACK into
     (tf, lens) frames — the Lucene/ES segment model as DataFrame
     algebra: unit 0 is the saved base, units 1..N the appended
     segments in publish order; a doc's postings come from the LATEST
@@ -670,12 +453,14 @@ def _lex_resolve_segments(spark: SparkSession, ms, manifest: dict):
             ln = ln.join(F.broadcast(killset), "__d", "left_anti")
         tf_parts.append(t)
         lens_parts.append(ln)
+    # allowMissingColumns: a segment appended with allow_new_columns
+    # carries posting columns older units lack (NULL there)
     tf = tf_parts[0]
     for t in tf_parts[1:]:
-        tf = tf.unionByName(t)
+        tf = tf.unionByName(t, allowMissingColumns=True)
     lens = lens_parts[0]
     for ln in lens_parts[1:]:
-        lens = lens.unionByName(ln)
+        lens = lens.unionByName(ln, allowMissingColumns=True)
     return tf, lens
 
 
@@ -686,32 +471,13 @@ def load_lex_index(spark: SparkSession, path: str, *,
     manifest's ``n_docs`` and the derived ``avgdl`` (``total_len /
     n_docs`` — the exact division the inline ``avg("dl")`` performs on
     integer lengths, so loaded serving is row-identical to in-memory,
-    pinned in tests/test_index_store.py).  The commit backend is
-    probed from the layout; ``version=`` pins a manifest-backend load
+    pinned in tests/test_index_store.py).  ``version=`` pins the load
     to a historical generation."""
-    if fs is not None or os.path.isdir(os.path.join(path, "_manifests")):
-        from cosmap_spark.sinks.commit import ManifestStore
-
-        ms = ManifestStore(path, fs)
-        manifest = (
-            ms.latest()[1] if version is None
-            else ms.read_version(version)
-        )
-        if "lex" not in manifest["components"]:
-            raise ValueError(f"{path}: not a lexical index (see manifest)")
-        tf, lens = _lex_resolve_segments(spark, ms, manifest)
-    else:
-        if version is not None:
-            raise ValueError(
-                "load_lex_index: version-pinned loads need the "
-                "manifest backend (the rename layout keeps no history)"
-            )
-        with open(os.path.join(path, "manifest.json")) as f:
-            manifest = json.load(f)
-        if "lex" not in manifest["components"]:
-            raise ValueError(f"{path}: not a lexical index (see manifest)")
-        tf = spark.read.parquet(os.path.join(path, "lex_tf"))
-        lens = spark.read.parquet(os.path.join(path, "lex_lens"))
+    ms = ManifestStore(path, fs)
+    manifest = ms.latest()[1] if version is None else ms.read_version(version)
+    if "lex" not in manifest["components"]:
+        raise ValueError(f"{path}: not a lexical index (see manifest)")
+    tf, lens = _lex_resolve_segments(spark, ms, manifest)
     out = {
         "tf": tf,
         "lens": lens,
@@ -736,16 +502,14 @@ def lex_append(
     """Incrementally maintain a persisted lexical index: tokenize ONLY
     the new batch and merge it in — history is never re-tokenized.
 
-    Maintenance rides ``sinks.writers.merge_upsert`` keyed on the doc
-    id: for the tf table that anti-join ∪ batch algebra is exactly
-    doc-level GROUP replacement (every surviving (doc, term) row of a
-    re-submitted doc is dropped, all of the batch doc's rows land —
-    multi-row "duplicates" per key are the intent here), and for the
-    lens table it is a plain one-row-per-doc upsert.  A batch of
-    entirely FRESH doc ids takes the writer's append fast path:
-    O(batch) new files, no history rewrite.  The manifest's corpus
-    stats are refreshed with one O(n_docs) aggregation of the merged
-    lens table (columnar, doc-count-sized — never the token table).
+    Maintenance is a SEGMENT STACK (the Lucene/ES model on the commit
+    protocol): the batch is tokenized into one immutable segment —
+    tf + lens + a drop list of every doc id the batch carried, which
+    covers re-submits AND retractions — and ONE CAS publish appends it
+    to the manifest.  Reads reconcile latest-unit-wins via broadcast
+    anti-joins (``_lex_resolve_segments``).  O(batch) data written; the
+    only history read is the doc-count-sized lens reconcile that
+    refreshes the manifest's corpus stats.
 
     Appended-then-loaded serving is row-identical to an index rebuilt
     from scratch on the merged corpus (pinned for both the fresh-ids
@@ -754,33 +518,27 @@ def lex_append(
     deleted (a rebuild over the merged corpus drops it the same way,
     since tokenization emits nothing for NULL text).
 
-    Layout note: appended/rewritten files are NOT term-sorted, so the
-    term-pruning layout ``save_lex_index`` establishes degrades by the
-    appended fraction; re-save (compact) periodically, exactly like
-    any sorted-layout table under append load.
+    Layout note: segments are NOT term-sorted, so the term-pruning
+    layout ``save_lex_index`` establishes degrades by the appended
+    fraction; re-saving the loaded reconciled tf through
+    ``save_lex_index`` is the compaction that folds the stack and
+    restores term order.
 
-    On a MANIFEST-backend store this function takes the segment-stack
-    path documented in its body (immutable per-batch segments, CAS
-    publish, latest-unit-wins reconcile at read time) — same external
-    contract, object-store-safe commit.
-
-    ``allow_new_columns=True`` forwards the sink-level ADD-only schema
-    evolution (``writers.merge_upsert``) to the tf/lens merges: a
-    batch built by a NEWER ``build_lex_index`` that emits extra
-    posting columns widens the stored tables (old rows NULL there)
-    instead of silently dropping the columns in alignment.  The
-    positional/bag-of-words SHAPE still follows the manifest (a
-    positional store gets positional batches), because phrase-query
-    capability is all-or-nothing — a half-positional index would
-    silently miss phrases over its NULL-pos rows."""
+    ``allow_new_columns=True`` is ADD-only schema evolution: a batch
+    built by a NEWER ``build_lex_index`` that emits extra posting
+    columns keeps them (older units read back NULL there); without it
+    the segment is aligned to the stored columns and extras are
+    dropped.  The positional/bag-of-words SHAPE still follows the
+    manifest (a positional store gets positional batches), because
+    phrase-query capability is all-or-nothing — a half-positional
+    index would silently miss phrases over its NULL-pos rows."""
     from cosmap_spark.operators.retrieval import build_lex_index
-    from cosmap_spark.sinks import writers
 
     # a NULL doc id is unaddressable: its postings survive every
-    # doc-keyed anti-join / upsert (equi-joins never match NULL), so
-    # each append would silently ACCUMULATE another copy that no
-    # re-submit or retraction can ever replace — refuse at the write
-    # boundary, the mor-store null-key rule (one eager batch-sized job)
+    # doc-keyed anti-join (equi-joins never match NULL), so each append
+    # would silently ACCUMULATE another copy that no re-submit or
+    # retraction can ever replace — refuse at the write boundary, the
+    # mor-store null-key rule (one eager batch-sized job)
     if new_docs.where(F.col(id_col).isNull()).limit(1).count():
         raise ValueError(
             f"lex_append: NULL values in id column {id_col!r} — "
@@ -788,87 +546,40 @@ def lex_append(
             "drop or fill NULL-id rows upstream (a RETRACTION is a "
             "NULL-text row with a real id)"
         )
-    if fs is not None or os.path.isdir(os.path.join(path, "_manifests")):
-        # manifest backend: SEGMENT-STACK maintenance (the Lucene/ES
-        # model on the commit protocol) — tokenize ONLY the batch,
-        # write one immutable segment (tf + lens + drop list = the
-        # batch's doc ids, covering re-submits AND retractions), and
-        # CAS-publish; the read side reconciles latest-unit-wins via
-        # broadcast anti-joins (_lex_resolve_segments).  O(batch) data
-        # written, no history re-read except the doc-count-sized lens
-        # reconcile for the manifest stats.  Re-SAVING the loaded
-        # reconciled tf (save_lex_index(backend='manifest')) is the
-        # compaction that folds the stack and restores term order.
-        if allow_new_columns:
-            raise ValueError(
-                "lex_append: allow_new_columns is rename-backend-only "
-                "— on the manifest backend widen by re-saving a folded "
-                "generation (segments must share one schema)"
-            )
-        from cosmap_spark.sinks.commit import ManifestStore
-
-        ms = ManifestStore(path, fs)
-        version, man = ms.latest()
-        positional = bool(man.get("positional", False))
-        tf_new, lens_new = build_lex_index(
-            new_docs, id_col=id_col, text_col=text_col,
-            positions=positional,
-        )
-        drop = new_docs.select(
-            F.col(id_col).alias("__d")
-        ).where(F.col("__d").isNotNull()).distinct()
-        trel, ttarget = ms.new_data_dir()
-        tf_new.write.mode("overwrite").parquet(ttarget)
-        lrel, ltarget = ms.new_data_dir()
-        lens_new.write.mode("overwrite").parquet(ltarget)
-        drel, dtarget = ms.new_data_dir()
-        drop.write.mode("overwrite").parquet(dtarget)
-        new_seg = {"tf": trel, "lens": lrel, "drop": drel}
-        new_man = {
-            **{k: man[k] for k in
-               ("components", "positional", "dirs")},
-            "segments": man.get("segments", []) + [new_seg],
-            "data_dirs": man["data_dirs"] + [trel, lrel, drel],
-        }
-        # corpus stats of the RECONCILED view (doc-count-sized scans)
-        _, lens_all = _lex_resolve_segments(spark, ms, new_man)
-        row = lens_all.agg(
-            F.count("*").alias("n"), F.sum("dl").alias("t")
-        ).collect()[0]
-        new_man["n_docs"] = int(row["n"] or 0)
-        new_man["total_len"] = int(row["t"] or 0)
-        ms.publish(new_man, expected_version=version)
-        return
-    # the batch must match the stored schema: a positional store
-    # (manifest flag) gets positional batches, a bag-of-words store
-    # plain ones — mixing would fail the path-level merge's unionByName
-    with open(os.path.join(path, "manifest.json")) as f:
-        positional = bool(json.load(f).get("positional", False))
+    ms = ManifestStore(path, fs)
+    version, man = ms.latest()
     tf_new, lens_new = build_lex_index(
-        new_docs, id_col=id_col, text_col=text_col, positions=positional
+        new_docs, id_col=id_col, text_col=text_col,
+        positions=bool(man.get("positional", False)),
     )
-    writers.merge_upsert(
-        spark, os.path.join(path, "lex_tf"), tf_new, ["__d"],
-        allow_new_columns=allow_new_columns,
-    )
-    writers.merge_upsert(
-        spark, os.path.join(path, "lex_lens"), lens_new, ["__d"],
-        allow_new_columns=allow_new_columns,
-    )
-    # a batch doc with NULL text is a RETRACTION: build_lex_index
-    # emits zero rows for it, so the merge above never replaces its
-    # group and the stale tokens would serve forever — delete them
-    # explicitly (delete_keys is a no-op when the ids are absent)
-    null_ids = new_docs.where(F.col(text_col).isNull()).select(
+    if not allow_new_columns:
+        tf_old, lens_old = _lex_resolve_segments(spark, ms, man)
+        tf_new = tf_new.select(
+            *[c for c in tf_new.columns if c in tf_old.columns]
+        )
+        lens_new = lens_new.select(
+            *[c for c in lens_new.columns if c in lens_old.columns]
+        )
+    drop = new_docs.select(
         F.col(id_col).alias("__d")
-    ).distinct()
-    writers.delete_keys(
-        spark, os.path.join(path, "lex_tf"), null_ids, ["__d"]
-    )
-    writers.delete_keys(
-        spark, os.path.join(path, "lex_lens"), null_ids, ["__d"]
-    )
-    _write_lex_manifest(
-        path, spark.read.parquet(os.path.join(path, "lex_lens")),
-        positional=positional,
-    )
+    ).where(F.col("__d").isNotNull()).distinct()
+    trel, ttarget = ms.new_data_dir()
+    tf_new.write.mode("overwrite").parquet(ttarget)
+    lrel, ltarget = ms.new_data_dir()
+    lens_new.write.mode("overwrite").parquet(ltarget)
+    drel, dtarget = ms.new_data_dir()
+    drop.write.mode("overwrite").parquet(dtarget)
+    new_man = {
+        **{k: man[k] for k in ("components", "positional", "dirs")},
+        "segments": man.get("segments", [])
+        + [{"tf": trel, "lens": lrel, "drop": drel}],
+        "data_dirs": man["data_dirs"] + [trel, lrel, drel],
+    }
+    # corpus stats of the RECONCILED view (doc-count-sized scans)
+    _, lens_all = _lex_resolve_segments(spark, ms, new_man)
+    row = lens_all.agg(
+        F.count("*").alias("n"), F.sum("dl").alias("t")
+    ).collect()[0]
+    new_man["n_docs"] = int(row["n"] or 0)
+    new_man["total_len"] = int(row["t"] or 0)
+    ms.publish(new_man, expected_version=version)

@@ -28,6 +28,7 @@ from cosmap_spark.pipeline.pipeline import (
     compile_pipeline,
     resolve_parameter,
 )
+from cosmap_spark.sinks.writers import write_output
 
 
 def run_setup_block(
@@ -148,15 +149,11 @@ class Analysis:
 
     def run(self, spark: SparkSession, catalog: DataFrame) -> DataFrame:
         """Build and, when output_parameters.path is set, write the sink
-        (reference O24/O25: append-mode writer, output/writer.py:23-35)."""
+        through :func:`cosmap_spark.sinks.writers.write_output`
+        (reference O24/O25: append-mode writer, output/writer.py:23-35);
+        an unsupported ``format`` raises ``ValueError``."""
         result = self.build(spark, catalog)
         out = self.config.output_parameters
         if out.path:
-            writer = result.write.mode(out.mode)
-            if out.format == "csv":
-                writer.option("header", True).csv(out.path)
-            elif out.format == "json":
-                writer.json(out.path)
-            else:
-                writer.parquet(out.path)
+            write_output(result, out.path, fmt=out.format, mode=out.mode)
         return result

@@ -1,13 +1,16 @@
-"""Manifest-pointer commit protocol — the object-store-shaped store
-backend.
+"""Manifest-pointer commit protocol — the one commit path of every
+versioned store in this package: the merge-on-read table
+(:mod:`cosmap_spark.sinks.mor`) and the ANN, token-bag and lexical
+indexes (:mod:`cosmap_spark.operators.index_store`).  This module is
+the only one that knows their on-disk layout.
 
-Every persisted store in this package historically committed by
-DIRECTORY RENAME (``writers._swap_in`` / ``_bootstrap_store``): correct
-and atomic-enough on a local filesystem, but the wrong primitive for
-the stated 100 TB target, where stores live on an object store and a
-directory "rename" is a non-atomic O(files) copy.  The public fix —
-Delta Lake's ``_delta_log`` and Iceberg's metadata pointer, re-expressed
-minimally — is the manifest-pointer commit:
+A directory rename (``writers._swap_in`` / ``_bootstrap_store``, kept
+for the plain parquet directories any Spark reader must be able to
+read directly) is atomic-enough on a local filesystem but the wrong
+primitive for the stated 100 TB target, where stores live on an
+object store and a directory "rename" is a non-atomic O(files) copy.
+The public fix — Delta Lake's ``_delta_log`` and Iceberg's metadata
+pointer, re-expressed minimally — is the manifest-pointer commit:
 
 * data directories are IMMUTABLE and write-once (``data/<uuid>/``) —
   nothing ever renames or mutates them; an uncommitted dir is invisible
@@ -59,6 +62,7 @@ import uuid
 MANIFEST_DIR = "_manifests"
 DATA_DIR = "data"
 _VERSION_RE = re.compile(r"^v(\d{9})\.json$")
+_DATA_NAME_RE = re.compile(r"^[0-9a-f]{32}$")  # new_data_dir's uuid hex
 
 
 class CommitConflict(RuntimeError):
@@ -176,6 +180,26 @@ class ManifestStore:
     def exists(self) -> bool:
         return bool(self.versions())
 
+    def foreign_entries(self) -> list[str]:
+        """Store-relative names under the path that this protocol never
+        writes: anything besides ``data/<uuid>`` dirs, published
+        manifests and dot-prefixed publish staging.  Empty for a real
+        store, an absent path, or the prefix a died initializer left
+        (orphan data, staging debris).  A caller about to act on a
+        path with no published manifest checks this first, so a
+        mistyped path — a plain parquet table, a leftover
+        rename-layout store, a project dir with its own ``data/`` —
+        is refused instead of overlaid or swept."""
+        out = [n for n in self.fs.listdir(self.path)
+               if n not in (DATA_DIR, MANIFEST_DIR)]
+        out += [f"{DATA_DIR}/{n}"
+                for n in self.fs.listdir(os.path.join(self.path, DATA_DIR))
+                if not _DATA_NAME_RE.match(n)]
+        out += [f"{MANIFEST_DIR}/{n}"
+                for n in self.fs.listdir(self._mdir())
+                if not (n.startswith(".") or _VERSION_RE.match(n))]
+        return sorted(out)
+
     def read_version(self, version: int) -> dict:
         return json.loads(
             self.fs.read_text(
@@ -232,10 +256,10 @@ class ManifestStore:
                dry_run: bool = False) -> list[str]:
         """Remove data dirs no RETAINED manifest references (orphans
         from died writers, plus dirs released by
-        :meth:`expire_versions`).  Age-guarded like ``mor_vacuum``: a
-        younger dir may be a live writer's staged-but-unpublished
-        commit.  Manifests themselves are never touched here.
-        ``dry_run=True`` reports without removing."""
+        :meth:`expire_versions`).  Age-guarded: a younger dir may be
+        a live writer's staged-but-unpublished commit.  Manifests
+        themselves are never touched here.  ``dry_run=True`` reports
+        without removing."""
         refs = self._referenced()
         removed = []
         now = time.time()

@@ -4,111 +4,50 @@ The copy-on-write sinks (``writers.merge_upsert`` / ``delete_keys``)
 rewrite every touched partition — correct, but the wrong cost model
 for their own flagship use case: a right-to-be-forgotten delete of a
 handful of keys against a 100 TB table should cost O(keys), not
-O(partitions touched).  This module is the log-structured alternative:
-
-    <store>/
-        base/                   immutable parquet snapshot
-        deltas/epoch=<N>/       one parquet batch per write (upserts
-                                + tombstones, epoch-ordered)
-        _mor_meta.json          keys + schema contract sidecar
+O(partitions touched).  This module is the log-structured
+alternative, committed through the manifest-pointer protocol
+(:mod:`cosmap_spark.sinks.commit`): the store's manifest names an
+immutable base snapshot, the delta epochs (one parquet batch per
+write — upserts + tombstones, epoch-ordered) and the keys + schema
+contract.
 
 Writes (:func:`mor_append`, :func:`mor_delete_keys`) only ever ADD a
-delta directory — base files are never opened (pinned by file-mtime in
-tests/test_mor.py).  Reads (:func:`mor_read`) reconcile in-plan via
+delta data dir and publish the next manifest — base files are never
+opened (pinned by file-mtime in tests/test_mor.py).  Reads
+(:func:`mor_read`) reconcile in-plan via
 :func:`cosmap_spark.operators.merge.mor_reconcile`: one batch-sized
 winner window over the deltas + one broadcast anti equi-join, so the
 base never shuffles.  :func:`mor_compact` folds the stack back into a
 fresh base when the delta tax on reads grows past taste.
 
-Crash discipline (the store-machinery rules of this package):
-
-* every delta lands fully in a dot-prefixed temp directory (invisible
-  to Spark's file listing) and enters the log by ONE ``os.rename`` —
-  a torn write can never be read;
-* the store itself is created by one rename
-  (``writers._bootstrap_store`` discipline — data and meta sidecar
-  appear together or not at all);
-* compaction swaps the new base in FIRST (``writers._swap_in``'s
-  backup dance), then clears delta epochs OLDEST-FIRST: re-applying a
-  SUFFIX of the delta stack onto the folded base is a no-op (the
-  mor_reconcile idempotence law), so a crash anywhere in the sequence
-  leaves every subsequent read correct.  Clearing NEWEST-first would
-  not be safe: it could leave an old epoch to re-apply stale values
-  over the folded result.
-
-Two commit backends share everything above the commit boundary (the
-reconcile algebra, the null/dup/reserved-name contracts, the read
-plan):
-
-* ``backend="rename"`` (default): the original local-filesystem layout
-  — ``base/`` + ``deltas/epoch=<N>/`` + a ``_mor_meta.json`` sidecar,
-  committed by directory renames.  Single-writer is now ENFORCED, not
-  assumed: the epoch commit is ``os.rename`` onto a path a concurrent
-  winner would already occupy NON-EMPTY, which POSIX rename refuses —
-  the loser gets a loud ValueError instead of silently violating the
-  within-epoch key-uniqueness contract the read-side winner window
-  rests on (round-9 verdict task #3).
-* ``backend="manifest"``: the object-store-shaped layout
-  (:mod:`cosmap_spark.sinks.commit`) — immutable ``data/<uuid>``
-  parquet dirs plus one versioned manifest naming (base, epochs);
-  commit = CAS-publishing the next manifest version; NO data rename
-  anywhere, concurrent writers serialized by the CAS, and every
-  historical version remains readable (``mor_read(version=)``).
-  Filesystem access rides the five-call ``CommitFS`` seam, so the same
-  code targets an object store once those five calls are implemented.
+Crash discipline: every data dir is written in full before ONE
+CAS publish of the next manifest version makes it visible, so a died
+writer leaks only an unreferenced dir (:func:`mor_vacuum` reclaims
+it) and concurrent writers serialize on the CAS.  There is no data
+rename anywhere, every historical version stays readable
+(``mor_read(version=)``, :func:`mor_changes`, :func:`mor_restore`)
+until :meth:`~cosmap_spark.sinks.commit.ManifestStore.expire_versions`,
+and filesystem access rides the five-call ``CommitFS`` seam, so the
+same code targets an object store once those five calls are
+implemented.
 
 The reference has no mutation story at all (read-only immutable
 catalogs, /root/reference/src/cosmap/dataset/__init__.py);
 merge-on-read is the published Delta/Iceberg design re-expressed as
-DataFrame algebra plus a directory log / manifest pointer.
+DataFrame algebra plus a manifest pointer.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import re
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cosmap_spark.sinks.writers import (
-    _refuse_interrupted_swap,
-    _require_local,
-    _swap_in,
-)
+from cosmap_spark.sinks.commit import CommitConflict, ManifestStore
 
-META_NAME = "_mor_meta.json"
 DELETE_COL = "__deleted"
-_EPOCH_RE = re.compile(r"^epoch=(\d+)$")
-
-
-def _manifest_store(path: str, fs=None):
-    from cosmap_spark.sinks.commit import ManifestStore
-
-    return ManifestStore(path, fs)
-
-
-def _store_kind(path: str, fs=None) -> str:
-    """Which commit backend owns the store at ``path`` — probed from
-    the layout itself (a ``_mor_meta.json`` sidecar vs a published
-    manifest), so readers need no out-of-band knowledge."""
-    if fs is None and os.path.exists(os.path.join(path, META_NAME)):
-        return "rename"
-    if _manifest_store(path, fs).exists():
-        return "manifest"
-    if fs is None and os.path.exists(path):
-        raise ValueError(
-            f"{path!r} exists but is neither a rename-backend "
-            f"({META_NAME}) nor a manifest-backend (_manifests/) "
-            "merge-on-read store"
-        )
-    raise ValueError(
-        f"{path!r} is not a merge-on-read store — create one with "
-        "mor_init"
-    )
 
 
 def _check_base_columns(df: DataFrame, keys: list[str], op: str) -> None:
@@ -163,98 +102,66 @@ def _require_mor_manifest(man: dict, path: str, op: str) -> None:
         )
 
 
-def _base_dir(path: str) -> str:
-    return os.path.join(path, "base")
-
-
-def _deltas_dir(path: str) -> str:
-    return os.path.join(path, "deltas")
-
-
-def _load_meta(path: str) -> dict:
-    meta_path = os.path.join(path, META_NAME)
-    if not os.path.exists(meta_path):
+def _latest(path: str, fs, op: str) -> tuple[ManifestStore, int, dict]:
+    """The store at ``path`` and its latest manifest, refusing loudly
+    when ``path`` holds no merge-on-read store."""
+    ms = ManifestStore(path, fs)
+    if not ms.exists():
         raise ValueError(
-            f"{path!r} is not a merge-on-read store ({META_NAME} "
-            "missing) — create one with mor_init"
+            f"{op}: {path!r} is not a merge-on-read store (no published "
+            "manifest) — create one with mor_init"
         )
-    with open(meta_path) as f:
-        return json.load(f)
+    version, man = ms.latest()
+    _require_mor_manifest(man, path, op)
+    return ms, version, man
 
 
-def _epochs(path: str) -> list[int]:
-    """Committed delta epochs, ascending.  Dot-prefixed temp dirs from
-    torn writes are structurally excluded by the name pattern."""
-    d = _deltas_dir(path)
-    if not os.path.isdir(d):
-        return []
-    out = []
-    for name in os.listdir(d):
-        m = _EPOCH_RE.match(name)
-        if m:
-            out.append(int(m.group(1)))
-    return sorted(out)
+def _refuse_foreign(ms: ManifestStore, path: str, op: str) -> None:
+    """A path with no published manifest is written or swept only when
+    it holds nothing the commit protocol did not put there (nothing
+    at all, or a died init's orphan data and publish staging).
+    Anything else — a plain parquet table, a leftover rename-layout
+    store — refuses: ``mor_init`` would overlay it, ``mor_vacuum``
+    would delete its ``data/``."""
+    foreign = ms.foreign_entries()
+    if foreign:
+        raise ValueError(
+            f"{op}: {path!r} is not a merge-on-read store (no published "
+            f"manifest, and it holds {foreign[:3]}) — refusing to touch it"
+        )
 
 
 def mor_init(df: DataFrame, path: str, keys: list[str], *,
-             backend: str = "rename", fs=None) -> None:
+             fs=None) -> None:
     """Create a merge-on-read store at ``path`` with ``df`` as the
-    base snapshot.
-
-    ``backend="rename"`` (default) refuses an existing path (stores
-    are never silently re-initialized — the _require_local lesson) and
-    stages the whole layout (base parquet, empty delta log, meta
-    sidecar) in a temp directory entering existence by ONE rename.
-
-    ``backend="manifest"`` writes the base to an immutable
-    ``data/<uuid>`` dir and CAS-publishes manifest v1
-    (:mod:`cosmap_spark.sinks.commit`): refusal is on a PUBLISHED
-    manifest, not on the path existing — on an object store a prefix
-    holding only orphan data from a died init is not a store, and two
-    racing initializers are serialized by the CAS (exactly one v1
-    wins)."""
-    if backend not in ("rename", "manifest"):
-        raise ValueError(f"mor_init: unknown backend {backend!r}")
+    base snapshot: the base lands in an immutable data dir and
+    manifest v1 is CAS-published (:mod:`cosmap_spark.sinks.commit`).
+    Stores are never silently re-initialized: refusal is on a
+    PUBLISHED manifest, or on anything at the path the protocol did
+    not write — a prefix holding only orphan data from a died init is
+    not a store and may be re-initialized, and two racing
+    initializers are serialized by the CAS (exactly one v1 wins)."""
     _check_base_columns(df, list(keys), "mor_init")
-    meta = {
-        "version": 1,
-        "min_reader_version": 1,
-        "keys": list(keys),
-        "schema": json.loads(df.schema.json()),
-    }
-    if backend == "manifest":
-        ms = _manifest_store(path, fs)
-        if ms.exists():
-            raise ValueError(
-                f"mor_init: {path!r} already has a published manifest"
-            )
-        if fs is None and os.path.exists(os.path.join(path, META_NAME)):
-            raise ValueError(
-                f"mor_init: {path!r} is an existing rename-backend "
-                "store — refusing to overlay a manifest store on it"
-            )
-        _refuse_null_keys(df, list(keys), "mor_init")
-        rel, target = ms.new_data_dir()
-        df.write.mode("overwrite").parquet(target)
-        ms.publish(
-            {**meta, "base": rel, "epochs": [], "max_epoch": 0,
-             "data_dirs": [rel]},
-            expected_version=0,
+    ms = ManifestStore(path, fs)
+    if ms.exists():
+        raise ValueError(
+            f"mor_init: {path!r} already exists (it has a published "
+            "manifest)"
         )
-        return
-    _require_local(path, "mor_init")
-    if os.path.exists(path):
-        raise ValueError(f"mor_init: {path!r} already exists")
+    _refuse_foreign(ms, path, "mor_init")
     _refuse_null_keys(df, list(keys), "mor_init")
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    tmp = f"{path}.__init_tmp_{uuid.uuid4().hex}"
-    df.write.mode("overwrite").parquet(os.path.join(tmp, "base"))
-    os.makedirs(os.path.join(tmp, "deltas"))
-    with open(os.path.join(tmp, META_NAME), "w") as f:
-        # schema rides the sidecar so writes never open a base footer
-        # (the O(batch) write contract, mtime-pinned in tests)
-        json.dump(meta, f)
-    os.rename(tmp, path)
+    rel, target = ms.new_data_dir()
+    df.write.mode("overwrite").parquet(target)
+    ms.publish(
+        {
+            "min_reader_version": 1,
+            "keys": list(keys),
+            "schema": json.loads(df.schema.json()),
+            "base": rel, "epochs": [], "max_epoch": 0,
+            "data_dirs": [rel],
+        },
+        expected_version=0,
+    )
 
 
 SUPPORTED_READER_VERSION = 2  # bumped by schema widening (round 10)
@@ -322,10 +229,10 @@ def _widened_schema(meta: dict, batch: DataFrame, op: str) -> dict:
 
 def _align_batch(batch: DataFrame, meta: dict, keys: list[str],
                  assume_unique: bool) -> DataFrame:
-    """The backend-shared write-side contract: cast to the store
-    schema (schema drift would poison the log with mixed parquet
-    schemas), coalesce the tombstone flag, refuse NULL keys (even
-    under ``assume_unique`` — tombstone batches carry caller-supplied
+    """The write-side contract: cast to the store schema (schema
+    drift would poison the log with mixed parquet schemas), coalesce
+    the tombstone flag, refuse NULL keys (even under
+    ``assume_unique`` — tombstone batches carry caller-supplied
     keys too), refuse duplicate keys (one eager batch-sized job;
     duplicates within one epoch would make the read-side winner
     partition-order dependent).
@@ -383,26 +290,14 @@ def mor_append(
     :data:`DELETE_COL` column are tombstones) as the next epoch.
     Returns the epoch number.
 
-    Cost: O(batch) on either backend — no base file is ever opened
-    (the schema rides the meta sidecar / manifest).
-
-    Rename backend: the batch lands in a dot-prefixed temp dir and
-    commits by ONE rename onto ``epoch=<N>``.  That rename is ALSO the
-    single-writer enforcement (round-9 verdict task #3): a concurrent
-    writer that committed N first left the target a NON-EMPTY
-    directory, which POSIX ``rename`` refuses (ENOTEMPTY/EEXIST) — the
-    loser's staging dir is cleaned up and the collision surfaces as a
-    loud ValueError instead of two writers silently sharing an epoch
-    (which would break the within-epoch key-uniqueness contract the
-    read-side winner determinism rests on, merge.py:148).
-
-    Manifest backend: the batch (with an explicit ``epoch`` LONG
-    column — manifests name dirs, so the epoch cannot ride a partition
-    path) lands in an immutable ``data/<uuid>`` dir and commits by
-    CAS-publishing the next manifest.  Losing the CAS to a concurrent
-    committer self-heals with a bounded retry (re-read, re-align,
-    REWRITE under the next epoch number — the number is baked into the
-    parquet — and re-publish; five attempts, then a loud
+    Cost: O(batch) — no base file is ever opened (the schema rides
+    the manifest).  The batch (with an explicit ``epoch`` LONG column —
+    manifests name dirs, so the epoch cannot ride a partition path)
+    lands in an immutable data dir and commits by CAS-publishing the
+    next manifest.  Losing the CAS to a concurrent committer self-heals
+    with a bounded retry (re-read, re-align, REWRITE under the next
+    epoch number — the number is baked into the parquet — and
+    re-publish; five attempts, then a loud
     :class:`cosmap_spark.sinks.commit.CommitConflict`); lost attempts
     leak only vacuumable orphan dirs.  Epoch numbers ride a monotone
     ``max_epoch`` watermark, so they never recycle across compactions
@@ -417,145 +312,62 @@ def mor_append(
     the store instead of misreading it.  A column absent from any
     LATER batch writes NULL (rows replace wholesale — the upsert
     contract)."""
-    kind = _store_kind(path, fs)
-    if kind == "manifest":
-        from cosmap_spark.sinks.commit import CommitConflict
-
-        ms = _manifest_store(path, fs)
-        # bounded CAS-retry (mor_compact's loop, mirrored): losing the
-        # publish race means OUR manifest never landed, so re-reading
-        # the latest state, re-aligning and re-publishing is always
-        # safe — the lost attempt's data dir becomes a vacuumable
-        # orphan.  Each retry REWRITES the batch: the epoch number is
-        # baked into the parquet, so a stale staging dir cannot be
-        # republished under a new number.
-        last: Exception | None = None
-        for _ in range(5):
-            version, man = ms.latest()
-            _require_mor_manifest(man, path, "mor_append")
-            _check_reader_version(man, "mor_append")
-            keys = man["keys"]
-            schema_json = man["schema"]
-            min_reader = int(man.get("min_reader_version", 1))
-            if allow_new_columns:
-                schema_json = _widened_schema(man, batch, "mor_append")
-                if schema_json != man["schema"]:
-                    min_reader = max(min_reader, 2)
-            aligned = _align_batch(
-                batch, {**man, "schema": schema_json}, keys, assume_unique
-            )
-            # monotone epoch watermark: numbers NEVER recycle across
-            # compactions on this backend (pre-watermark behavior was
-            # max(live list) + 1, which restarts at 1 after a fold), so
-            # epoch order == commit order globally — what mor_changes'
-            # feed ordering rests on.  Old manifests without the field
-            # fall back to the live list's max.
-            epochs = [e["epoch"] for e in man["epochs"]]
-            epoch = int(man.get("max_epoch", max(epochs, default=0))) + 1
-            rel, target = ms.new_data_dir()
-            aligned.withColumn(
-                "epoch", F.lit(epoch).cast("long")
-            ).write.mode("overwrite").parquet(target)
-            new_man = {
-                **{k: man[k] for k in ("keys", "base")},
-                "schema": schema_json,
-                "min_reader_version": min_reader,
-                "max_epoch": epoch,
-                "epochs": man["epochs"] + [{"epoch": epoch, "dir": rel}],
-                "data_dirs": man["data_dirs"] + [rel],
-            }
-            try:
-                ms.publish(new_man, expected_version=version)
-                return epoch
-            except CommitConflict as e:
-                last = e
-        raise CommitConflict(
-            "mor_append: lost the publish CAS 5 times in a row to "
-            "concurrent writers — the store is commit-hot; retry later "
-            "(the staged batches are vacuumable orphans)"
-        ) from last
-    _require_local(path, "mor_append")
-    meta = _load_meta(path)
-    _check_reader_version(meta, "mor_append")
-    keys = meta["keys"]
-    widen_lock = None
-    if allow_new_columns:
-        widened = _widened_schema(meta, batch, "mor_append")
-        if widened != meta["schema"]:
-            # widening is a read-modify-write of the meta sidecar, so
-            # two concurrent WIDENERS could clobber each other's column
-            # additions BEFORE the epoch-commit rename enforcement
-            # fires (round-10 self-review) — serialize wideners with an
-            # exclusive-create lock dir.  Plain appends never take it
-            # (they don't touch meta; an old-shaped epoch under a
-            # widened meta is the normal NULL-fill case).
-            widen_lock = os.path.join(path, ".widen_lock")
-            try:
-                os.mkdir(widen_lock)
-            except FileExistsError:
-                raise ValueError(
-                    "mor_append: another schema-widening append holds "
-                    f"{widen_lock!r} (or a crashed widener leaked it — "
-                    "mor_vacuum sweeps stale locks, or remove it after "
-                    "confirming no writer is live)"
-                )
-            # re-read under the lock: a previous widener may have
-            # added columns after our first read
-            meta = _load_meta(path)
-            widened = _widened_schema(meta, batch, "mor_append")
-            meta = {
-                **meta, "schema": widened,
-                "min_reader_version": max(
-                    int(meta.get("min_reader_version", 1)), 2
-                ),
-            }
-            # meta update FIRST, atomically (one-file os.replace): if
-            # the epoch commit below dies, a widened meta over an
-            # unwidened log is harmless (read-side NULL fill), while
-            # the reverse — a widened epoch under an old meta — would
-            # silently drop the new columns on every read
-            tmp = os.path.join(path, f".{META_NAME}.{uuid.uuid4().hex}")
-            with open(tmp, "w") as f:
-                json.dump(meta, f)
-            os.replace(tmp, os.path.join(path, META_NAME))
-    try:
-        aligned = _align_batch(batch, meta, keys, assume_unique)
-        epochs = _epochs(path)
-        epoch = (epochs[-1] + 1) if epochs else 1
-        d = _deltas_dir(path)
-        os.makedirs(d, exist_ok=True)
-        tmp = os.path.join(d, f".tmp_{uuid.uuid4().hex}")
-        aligned.write.mode("overwrite").parquet(tmp)
-        final = os.path.join(d, f"epoch={epoch}")
+    # bounded CAS-retry (mor_compact's loop, mirrored): losing the
+    # publish race means OUR manifest never landed, so re-reading
+    # the latest state, re-aligning and re-publishing is always
+    # safe — the lost attempt's data dir becomes a vacuumable
+    # orphan.  Each retry REWRITES the batch: the epoch number is
+    # baked into the parquet, so a stale staging dir cannot be
+    # republished under a new number.
+    last: Exception | None = None
+    for _ in range(5):
+        ms, version, man = _latest(path, fs, "mor_append")
+        _check_reader_version(man, "mor_append")
+        keys = man["keys"]
+        schema_json = man["schema"]
+        min_reader = int(man.get("min_reader_version", 1))
+        if allow_new_columns:
+            schema_json = _widened_schema(man, batch, "mor_append")
+            if schema_json != man["schema"]:
+                min_reader = max(min_reader, 2)
+        aligned = _align_batch(
+            batch, {**man, "schema": schema_json}, keys, assume_unique
+        )
+        # monotone epoch watermark: numbers NEVER recycle across
+        # compactions (pre-watermark behavior was max(live list) + 1,
+        # which restarts at 1 after a fold), so epoch order == commit
+        # order globally — what mor_changes' feed ordering rests on.
+        # Old manifests without the field fall back to the live
+        # list's max.
+        epochs = [e["epoch"] for e in man["epochs"]]
+        epoch = int(man.get("max_epoch", max(epochs, default=0))) + 1
+        rel, target = ms.new_data_dir()
+        aligned.withColumn(
+            "epoch", F.lit(epoch).cast("long")
+        ).write.mode("overwrite").parquet(target)
+        new_man = {
+            **{k: man[k] for k in ("keys", "base")},
+            "schema": schema_json,
+            "min_reader_version": min_reader,
+            "max_epoch": epoch,
+            "epochs": man["epochs"] + [{"epoch": epoch, "dir": rel}],
+            "data_dirs": man["data_dirs"] + [rel],
+        }
         try:
-            os.rename(tmp, final)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise ValueError(
-                f"mor_append: epoch {epoch} was committed by a "
-                "concurrent writer between this append's epoch listing "
-                "and its commit — the rename backend serializes writers "
-                "per epoch; retry the append (it will claim the next "
-                "epoch), or use backend='manifest' for CAS-serialized "
-                "concurrent commits"
-            )
-        return epoch
-    finally:
-        if widen_lock is not None:
-            try:
-                os.rmdir(widen_lock)
-            except OSError:
-                pass
+            ms.publish(new_man, expected_version=version)
+            return epoch
+        except CommitConflict as e:
+            last = e
+    raise CommitConflict(
+        "mor_append: lost the publish CAS 5 times in a row to "
+        "concurrent writers — the store is commit-hot; retry later "
+        "(the staged batches are vacuumable orphans)"
+    ) from last
 
 
 def _meta_for(path: str, fs=None) -> dict:
-    """The store contract (keys + schema) from whichever backend owns
-    ``path`` — rename sidecar or latest manifest."""
-    if _store_kind(path, fs) == "manifest":
-        man = _manifest_store(path, fs).latest()[1]
-        _require_mor_manifest(man, path, "mor store access")
-        return man
-    return _load_meta(path)
+    """The store contract (keys + schema): the latest manifest."""
+    return _latest(path, fs, "mor store access")[2]
 
 
 def mor_delete_keys(spark, path: str, keys_df: DataFrame, *,
@@ -616,73 +428,36 @@ def mor_read(spark, path: str, *, version: int | None = None,
     shuffles (plan-gated in tests/test_mor.py).  With an empty delta
     log this is exactly the base scan.
 
-    ``version=`` (manifest backend only) pins the read to a historical
-    manifest — time travel, free because manifests are immutable and
-    retained until :meth:`~cosmap_spark.sinks.commit.ManifestStore.
-    expire_versions`."""
+    ``version=`` pins the read to a historical manifest — time
+    travel, free because manifests are immutable and retained until
+    :meth:`~cosmap_spark.sinks.commit.ManifestStore.expire_versions`."""
     from cosmap_spark.operators.merge import mor_reconcile
 
-    kind = _store_kind(path, fs)
-    if kind == "manifest":
-        ms = _manifest_store(path, fs)
-        if version is None:
-            _, man = ms.latest()
-        else:
-            man = ms.read_version(version)
+    if version is None:
+        ms, _, man = _latest(path, fs, "mor_read")
+    else:
+        ms = ManifestStore(path, fs)
+        man = ms.read_version(version)
         _require_mor_manifest(man, path, "mor_read")
-        _check_reader_version(man, "mor_read")
-        # old base / old epochs NULL-fill the widened columns
-        base = _fill_to_schema(
-            spark.read.parquet(ms.data_path(man["base"])), man["schema"]
-        )
-        if not man["epochs"]:
-            return base
-        # the epoch column was written INTO each delta (long literal),
-        # so one multi-dir read needs no partition discovery and no
-        # INT-degradation cast (the partitionBy round-trip footgun);
-        # mergeSchema unions pre- and post-widening epoch schemas
-        deltas = spark.read.option("mergeSchema", "true").parquet(
-            *[ms.data_path(e["dir"]) for e in man["epochs"]]
-        )
-        return mor_reconcile(
-            base,
-            _fill_to_schema(deltas, man["schema"],
-                            extra=[DELETE_COL, "epoch"]),
-            man["keys"], epoch_col="epoch", delete_col=DELETE_COL,
-        )
-    if version is not None:
-        raise ValueError(
-            "mor_read: version-pinned reads need the manifest backend "
-            "(the rename backend keeps no history)"
-        )
-    _require_local(path, "mor_read")
-    meta = _load_meta(path)
-    _check_reader_version(meta, "mor_read")
-    _refuse_interrupted_swap(_base_dir(path))
+    _check_reader_version(man, "mor_read")
+    # old base / old epochs NULL-fill the widened columns
     base = _fill_to_schema(
-        spark.read.parquet(_base_dir(path)), meta["schema"]
+        spark.read.parquet(ms.data_path(man["base"])), man["schema"]
     )
-    epochs = _epochs(path)
-    if not epochs:
+    if not man["epochs"]:
         return base
-    deltas = (
-        spark.read.option("mergeSchema", "true")
-        .option("basePath", _deltas_dir(path)).parquet(
-            *[
-                os.path.join(_deltas_dir(path), f"epoch={e}")
-                for e in epochs
-            ]
-        )
+    # the epoch column was written INTO each delta (long literal), so
+    # one multi-dir read needs no partition discovery and no
+    # INT-degradation cast (the partitionBy round-trip footgun);
+    # mergeSchema unions pre- and post-widening epoch schemas
+    deltas = spark.read.option("mergeSchema", "true").parquet(
+        *[ms.data_path(e["dir"]) for e in man["epochs"]]
     )
-    # partition discovery types epoch as INT; the winner window wants
-    # a stable LONG regardless of epoch magnitude (the partitionBy
-    # round-trip degradation footgun, CLAUDE.md)
-    deltas = deltas.withColumn("epoch", F.col("epoch").cast("long"))
     return mor_reconcile(
         base,
-        _fill_to_schema(deltas, meta["schema"],
+        _fill_to_schema(deltas, man["schema"],
                         extra=[DELETE_COL, "epoch"]),
-        meta["keys"], epoch_col="epoch", delete_col=DELETE_COL,
+        man["keys"], epoch_col="epoch", delete_col=DELETE_COL,
     )
 
 
@@ -698,8 +473,7 @@ def mor_changes(spark, path: str, *, from_version: int,
     ``mor_read(version=to_version)``, tagged by :data:`CHANGE_TYPE_COL`
     in Delta's vocabulary — ``insert``, ``update_preimage`` /
     ``update_postimage`` (one row each per updated key), ``delete``
-    (the pre-image).  Manifest backend only (the rename backend keeps
-    no history).
+    (the pre-image).
 
     NET means one verdict per key across the whole range: a key
     upserted then tombstoned inside the range surfaces as a single
@@ -726,12 +500,7 @@ def mor_changes(spark, path: str, *, from_version: int,
     change_feed` (gated hash-exact as q_setops' ``morc`` branch)."""
     from cosmap_spark.operators.merge import change_feed
 
-    if _store_kind(path, fs) != "manifest":
-        raise ValueError(
-            "mor_changes: the change feed needs the manifest backend "
-            "(the rename backend keeps no version history)"
-        )
-    ms = _manifest_store(path, fs)
+    ms = _latest(path, fs, "mor_changes")[0]
     published = ms.versions()
     if from_version < 1:
         raise ValueError(
@@ -806,7 +575,6 @@ def mor_sync(
     src_path: str,
     dst_path: str,
     *,
-    dst_backend: str = "rename",
     src_fs=None,
     dst_fs=None,
 ) -> dict:
@@ -835,29 +603,14 @@ def mor_sync(
     * two concurrent syncs serialize on the cursor CAS (the loser
       must re-read; its duplicate epoch, if any, is again a no-op).
 
-    The source must be a manifest-backend store (the feed needs
-    history); the destination may use either backend
-    (``dst_backend`` applies only at bootstrap).  Source schema
-    widening flows through (``allow_new_columns``).  Returns
+    Source schema widening flows through (``allow_new_columns``).
+    Returns
     ``{"from_version", "to_version", "applied"}`` — ``applied`` is
     False for an up-to-date or pure-compaction range."""
-    from cosmap_spark.sinks.commit import ManifestStore
-
-    if _store_kind(src_path, src_fs) != "manifest":
-        raise ValueError(
-            "mor_sync: the source must be a manifest-backend store "
-            "(the change feed needs version history)"
-        )
-    src = _manifest_store(src_path, src_fs)
-    src_version, src_man = src.latest()
+    src, src_version, src_man = _latest(src_path, src_fs, "mor_sync")
     src_key = _src_key(src_path, src_fs)
     cursor = ManifestStore(dst_path.rstrip("/") + ".sync", dst_fs)
-
-    dst_exists = True
-    try:
-        _store_kind(dst_path, dst_fs)
-    except ValueError:
-        dst_exists = False
+    dst_exists = ManifestStore(dst_path, dst_fs).exists()
 
     if not cursor.exists():
         if dst_exists:
@@ -886,7 +639,7 @@ def mor_sync(
         # catches up incrementally)
         mor_init(
             mor_read(spark, src_path, version=synced, fs=src_fs),
-            dst_path, src_man["keys"], backend=dst_backend, fs=dst_fs,
+            dst_path, src_man["keys"], fs=dst_fs,
         )
         return {"from_version": None, "to_version": synced,
                 "applied": True}
@@ -993,7 +746,7 @@ def mor_sync_agg(
     a materialized ``GROUP BY`` view refreshed at **O(changes +
     aggregate-touched)** per call, never re-scanning the source table
     (the IVM twin of :func:`mor_sync`, which replicates rows).  The
-    destination is itself a manifest-backend MOR store keyed by
+    destination is itself a MOR store keyed by
     ``group_by`` whose current view always equals
     ``operators.merge.agg_snapshot(mor_read(src), group_by, aggs)``
     (the law pinned in tests/test_mor.py).  ``aggs`` follows
@@ -1015,8 +768,7 @@ def mor_sync_agg(
       version) and appends them again: an idempotent upsert, so the
       view is unchanged — exactly-once EFFECT, at-least-once epochs.
       A delta-valued epoch would double-apply here, which is why the
-      destination must be manifest-backend (the replay needs
-      ``mor_read(version=)``);
+      replay reads the destination through ``mor_read(version=)``;
     * bootstrap publishes the cursor FIRST (source version pinned),
       then initializes the destination with the full aggregate at that
       version — each crash point replays deterministically, same
@@ -1034,15 +786,8 @@ def mor_sync_agg(
     from cosmap_spark.operators.merge import (
         _agg_deltas, _check_agg_spec, agg_snapshot,
     )
-    from cosmap_spark.sinks.commit import ManifestStore
 
-    if _store_kind(src_path, src_fs) != "manifest":
-        raise ValueError(
-            "mor_sync_agg: the source must be a manifest-backend "
-            "store (the change feed needs version history)"
-        )
-    src = _manifest_store(src_path, src_fs)
-    src_version, src_man = src.latest()
+    _, src_version, src_man = _latest(src_path, src_fs, "mor_sync_agg")
     src_key = _src_key(src_path, src_fs)
     src_cols = [f["name"] for f in src_man["schema"]["fields"]]
     _check_agg_spec(src_cols, group_by, aggs)
@@ -1054,15 +799,11 @@ def mor_sync_agg(
         )
     spec = _canon_agg_spec(group_by, aggs)
     cursor = ManifestStore(dst_path.rstrip("/") + ".aggsync", dst_fs)
-
-    dst_exists = True
-    try:
-        _store_kind(dst_path, dst_fs)
-    except ValueError:
-        dst_exists = False
+    dst = ManifestStore(dst_path, dst_fs)
+    dst_exists = dst.exists()
 
     def dst_version_now() -> int:
-        return _manifest_store(dst_path, dst_fs).latest()[0]
+        return dst.latest()[0]
 
     if not cursor.exists():
         if dst_exists:
@@ -1098,8 +839,7 @@ def mor_sync_agg(
                 mor_read(spark, src_path, version=synced, fs=src_fs),
                 list(group_by), aggs,
             )
-            mor_init(snap0, dst_path, list(group_by),
-                     backend="manifest", fs=dst_fs)
+            mor_init(snap0, dst_path, list(group_by), fs=dst_fs)
         cursor.publish(
             {"src_version": synced, "dst_version": dst_version_now(),
              "spec": spec, "src_path": src_key},
@@ -1222,71 +962,27 @@ def _any_null(cols: list[str]):
 
 def mor_vacuum(path: str, *, min_age_seconds: float = 3600.0,
                dry_run: bool = False, fs=None) -> list[str]:
-    """Remove crash debris — temp directories a died writer leaked
-    (``<store>.__init_tmp_*`` siblings, ``deltas/.tmp_*``,
-    ``base.__merge_tmp_*``) — returning the removed paths.  Debris is
-    INVISIBLE to readers by construction (dot-prefixed / non-``epoch=``
-    names), so vacuuming is purely a disk-space concern and safe to
-    run any time older than ``min_age_seconds`` (the age guard keeps a
-    LIVE writer's in-flight temp dir out of the blast radius; pass 0
-    only when no writer can be running).  A pending
-    ``base.__merge_backup`` is NEVER touched: it is either the
-    interrupted-swap recovery copy (the refusal path tells the
-    operator to restore it) or a completed swap's stale backup that
-    the next swap clears itself.
+    """Remove crash debris — data dirs no retained manifest references
+    (died-before-publish orphans, including a died :func:`mor_init`'s
+    base, and dirs released by history expiry) plus publish staging
+    debris — returning the removed paths.  This is the commit layer's
+    reachability vacuum (:meth:`~cosmap_spark.sinks.commit.
+    ManifestStore.vacuum`).  Debris is INVISIBLE to readers by
+    construction, so vacuuming is purely a disk-space concern and safe
+    to run any time older than ``min_age_seconds`` (the age guard
+    keeps a LIVE writer's staged-but-unpublished dir out of the blast
+    radius; pass 0 only when no writer can be running).
 
-    Works even when the store itself never came into existence — a
-    died ``mor_init`` leaves ONLY the ``<store>.__init_tmp_*`` sibling
-    (the exact crash class this function exists for; round-9 review
-    finding: requiring the meta here made that debris unvacuumable);
-    the inside-the-store sweeps simply find nothing.
-
-    Manifest-backend stores delegate to the commit layer's
-    reachability vacuum (data dirs no retained manifest references —
-    died-before-publish orphans and dirs released by history expiry),
-    same age guard.
+    A path with no published manifest is vacuumed only when it holds
+    nothing but what a died init leaves; any other path refuses
+    loudly, so a mistyped path never loses its ``data/``.
 
     ``dry_run=True`` only REPORTS what would be removed (the
     store-health readout's debris count) — nothing is touched."""
-    import time
-
-    if fs is not None or (
-        os.path.exists(path)
-        and not os.path.exists(os.path.join(path, META_NAME))
-        and _manifest_store(path, fs).exists()
-    ):
-        return _manifest_store(path, fs).vacuum(
-            min_age_seconds=min_age_seconds, dry_run=dry_run
-        )
-    _require_local(path, "mor_vacuum")
-    if os.path.exists(path):
-        _load_meta(path)  # an existing non-store path refuses loudly
-    now = time.time()
-    removed = []
-
-    def sweep(parent: str, match) -> None:
-        if not os.path.isdir(parent):
-            return
-        for name in os.listdir(parent):
-            full = os.path.join(parent, name)
-            if not match(name) or not os.path.isdir(full):
-                continue
-            if now - os.stat(full).st_mtime < min_age_seconds:
-                continue
-            if not dry_run:
-                shutil.rmtree(full)
-            removed.append(full)
-
-    # a died mor_init leaves `<store>.__init_tmp_*` as a SIBLING of
-    # the store path; compaction temp dirs live inside it
-    parent = os.path.dirname(os.path.abspath(path)) or "."
-    stem = os.path.basename(os.path.abspath(path))
-    sweep(parent, lambda n: n.startswith(f"{stem}.__init_tmp_"))
-    sweep(path, lambda n: "__merge_tmp_" in n)
-    # a crashed schema-widening append leaks its exclusivity lock
-    sweep(path, lambda n: n == ".widen_lock")
-    sweep(_deltas_dir(path), lambda n: n.startswith(".tmp_"))
-    return removed
+    ms = ManifestStore(path, fs)
+    if not ms.exists():
+        _refuse_foreign(ms, path, "mor_vacuum")
+    return ms.vacuum(min_age_seconds=min_age_seconds, dry_run=dry_run)
 
 
 def mor_restore(spark, path: str, *, version: int, fs=None) -> dict:
@@ -1314,21 +1010,13 @@ def mor_restore(spark, path: str, *, version: int, fs=None) -> dict:
     since).  A store whose schema WIDENED since ``version`` keeps the
     widened schema; the restored rows surface NULL in the new columns
     (the value they had at ``version``).  Idempotent: restoring to
-    the current content appends nothing.  Manifest backend only
-    (``mor_read(version=)`` needs history); an expired ``version``
+    the current content appends nothing.  An expired ``version``
     refuses loudly through the manifest store.
 
     Returns ``{"restored_to", "head_before", "applied"}``."""
     from cosmap_spark.operators.merge import snapshot_cdc
 
-    if _store_kind(path, fs) != "manifest":
-        raise ValueError(
-            "mor_restore: time travel needs the manifest backend "
-            "(the rename backend keeps no version history)"
-        )
-    ms = _manifest_store(path, fs)
-    head, man = ms.latest()
-    _require_mor_manifest(man, path, "mor_restore")
+    _, head, man = _latest(path, fs, "mor_restore")
     _check_reader_version(man, "mor_restore")
     keys = list(man["keys"])
     current = mor_read(spark, path, fs=fs)
@@ -1359,10 +1047,10 @@ def mor_maintain(
     """One maintenance call applying the store-health page's advice
     (``streaming.ops.store_health`` flags → actions): compact when the
     delta stack is ≥ ``compact_after`` epochs deep, expire manifest
-    history to ``expire_keep_last`` versions (manifest backend only;
-    ``None`` keeps everything — expiry cuts off ``mor_read(version=)``
-    time travel and ``mor_changes`` feeds older than the horizon, so
-    it is opt-in), then vacuum debris/orphans older than
+    history to ``expire_keep_last`` versions (``None`` keeps
+    everything — expiry cuts off ``mor_read(version=)`` time travel
+    and ``mor_changes`` feeds older than the horizon, so it is
+    opt-in), then vacuum debris/orphans older than
     ``vacuum_age_seconds``.  Ordering matters: expiry BEFORE vacuum so
     dirs released by dropped versions are reclaimed in the same call.
     Each step is individually crash-safe (their own contracts), so
@@ -1370,20 +1058,16 @@ def mor_maintain(
     ``{"compacted_epochs", "expired_versions", "vacuumed"}``."""
     out = {"compacted_epochs": 0, "expired_versions": [],
            "vacuumed": []}
-    kind = _store_kind(path, fs)
-    if kind == "manifest":
-        _, man = _manifest_store(path, fs).latest()
-        depth = len(man["epochs"])
-    else:
-        depth = len(_epochs(path))
-    if depth >= compact_after:
+    ms, _, man = _latest(path, fs, "mor_maintain")
+    if len(man["epochs"]) >= compact_after:
         out["compacted_epochs"] = mor_compact(
             spark, path, zorder_cols=zorder_cols, num_files=num_files,
             fs=fs,
         )
-    if expire_keep_last is not None and kind == "manifest":
-        out["expired_versions"] = _manifest_store(path, fs) \
-            .expire_versions(keep_last=expire_keep_last)
+    if expire_keep_last is not None:
+        out["expired_versions"] = ms.expire_versions(
+            keep_last=expire_keep_last
+        )
     out["vacuumed"] = mor_vacuum(
         path, min_age_seconds=vacuum_age_seconds, fs=fs
     )
@@ -1396,124 +1080,79 @@ def mor_compact(spark, path: str, *,
                 num_files: int | None = None,
                 fs=None) -> int:
     """Fold the delta stack into a fresh base; returns the number of
-    epochs folded.  Sequence (each step crash-safe, see module
-    docstring): materialize the reconciled view to a temp dir, swap it
-    in as the new base (``_swap_in``'s backup dance — read-before-
-    delete), then remove the folded epochs OLDEST-FIRST.  A crash
-    after the swap leaves epochs that re-apply as no-ops (the
-    mor_reconcile idempotence law); a crash before it leaves the store
-    untouched.  Epochs appended AFTER the fold started are not
-    touched (single-writer stores make this moot, but the guard costs
-    one sorted list).
+    epochs folded.  The fold is crash-safe by construction: the
+    reconciled view lands in a fresh immutable dir and ONE CAS publish
+    flips the store to {base: new, epochs: []} (old dirs stay
+    reachable through history until ``expire_versions`` + vacuum
+    reclaim them).  A concurrent append between the fold's read and
+    its publish loses nothing: the publish CAS fails and the
+    compaction retries against the newer manifest, keeping the
+    appended epochs as the new base's suffix.
 
     ``zorder_cols`` makes compaction the OPTIMIZE-with-ZORDER pass
     (the ``compact_parquet`` move): the folded view is clustered on a
     Morton key via ``operators.layout.write_zordered`` (quantile-rank
-    strategy — skew-robust) into ``num_files`` files before the same
-    swap, so folding the log and restoring min/max scan selectivity
-    are ONE base rewrite instead of two.  With ``zorder_cols=None``
-    a ``num_files`` alone coalesces the fold (small-file control).
-
-    Manifest backend: the fold is trivially crash-safe — the folded
-    view lands in a fresh immutable dir and ONE CAS publish flips the
-    store to {base: new, epochs: []}; no swap dance, no oldest-first
-    epoch removal (old dirs stay reachable through history until
-    ``expire_versions`` + vacuum reclaim them).  A concurrent append
-    between the fold's read and its publish loses nothing: the publish
-    CAS fails loudly and the compaction retries against the newer
-    manifest."""
-    kind = _store_kind(path, fs)
-    if kind == "manifest":
-        from cosmap_spark.sinks.commit import CommitConflict
-
-        ms = _manifest_store(path, fs)
-        version, man = ms.latest()
-        _require_mor_manifest(man, path, "mor_compact")
-        if not man["epochs"]:
-            return 0
-        folded = mor_read(spark, path, version=version, fs=fs)
-        folded_max = max(e["epoch"] for e in man["epochs"])
-        rel, target = ms.new_data_dir()
-        if zorder_cols is not None:
-            from cosmap_spark.operators.layout import write_zordered
-
-            write_zordered(folded, target, zorder_cols, bits=bits,
-                           num_files=num_files or 64)
-        else:
-            if num_files is not None:
-                folded = folded.coalesce(int(num_files))
-            folded.write.mode("overwrite").parquet(target)
-        # publish with a bounded CAS-retry: a concurrent append that
-        # won the version race is NOT lost — the retry re-reads the
-        # latest manifest and keeps every epoch the fold did not cover
-        # as the new base's suffix (applying a suffix to the folded
-        # view is exactly the reconcile idempotence story), and adopts
-        # the latest schema/min_reader (the append may have widened;
-        # the folded base then reads back NULL-filled).  The suffix is
-        # identified by immutable DIR NAME, not epoch number: on a
-        # pre-watermark store numbers recycle after a fold, so an
-        # `epoch > folded_max` test against an INTERLEAVED concurrent
-        # compaction's renumbered appends would silently DROP them from
-        # the retry's publish (round-10 self-review data-loss fix,
-        # regression-pinned in tests/test_mor.py).
-        folded_dirs = {e["dir"] for e in man["epochs"]}
-        cur_version, cur = version, man
-        for _ in range(5):
-            suffix = [e for e in cur["epochs"]
-                      if e["dir"] not in folded_dirs]
-            try:
-                ms.publish(
-                    {
-                        "keys": cur["keys"],
-                        "schema": cur["schema"],
-                        "min_reader_version": int(
-                            cur.get("min_reader_version", 1)
-                        ),
-                        "max_epoch": int(cur.get(
-                            "max_epoch",
-                            max([e["epoch"] for e in cur["epochs"]],
-                                default=folded_max),
-                        )),
-                        "base": rel,
-                        "epochs": suffix,
-                        "data_dirs": [rel] + [e["dir"] for e in suffix],
-                    },
-                    expected_version=cur_version,
-                )
-                return len(man["epochs"])
-            except CommitConflict:
-                cur_version, cur = ms.latest()
-        raise CommitConflict(
-            "mor_compact: lost the publish CAS 5 times in a row to "
-            "concurrent writers — the store is append-hot; retry "
-            "compaction later (the staged fold is a vacuumable orphan)"
-        )
-    _require_local(path, "mor_compact")
-    _load_meta(path)
-    _refuse_interrupted_swap(_base_dir(path))
-    epochs = _epochs(path)
-    if not epochs:
+    strategy — skew-robust) into ``num_files`` files, so folding the
+    log and restoring min/max scan selectivity are ONE base rewrite
+    instead of two.  With ``zorder_cols=None`` a ``num_files`` alone
+    coalesces the fold (small-file control)."""
+    ms, version, man = _latest(path, fs, "mor_compact")
+    if not man["epochs"]:
         return 0
-    folded = mor_read(spark, path)
+    folded = mor_read(spark, path, version=version, fs=fs)
+    folded_max = max(e["epoch"] for e in man["epochs"])
+    rel, target = ms.new_data_dir()
     if zorder_cols is not None:
-        # stage the clustered rewrite ourselves (the z-order shuffle
-        # needs the layout writer, not _swap_in's plain parquet write),
-        # then the SHARED backup-rename back half — identical crash
-        # windows, one implementation (writers._swap_dir_in)
-        import uuid
-
         from cosmap_spark.operators.layout import write_zordered
-        from cosmap_spark.sinks.writers import _swap_dir_in
 
-        base = _base_dir(path)
-        tmp = f"{base}.__merge_tmp_{uuid.uuid4().hex}"
-        write_zordered(folded, tmp, zorder_cols, bits=bits,
+        write_zordered(folded, target, zorder_cols, bits=bits,
                        num_files=num_files or 64)
-        _swap_dir_in(base, tmp)
     else:
         if num_files is not None:
             folded = folded.coalesce(int(num_files))
-        _swap_in(_base_dir(path), folded)
-    for e in epochs:  # ascending: only ever leave a SUFFIX behind
-        shutil.rmtree(os.path.join(_deltas_dir(path), f"epoch={e}"))
-    return len(epochs)
+        folded.write.mode("overwrite").parquet(target)
+    # publish with a bounded CAS-retry: a concurrent append that
+    # won the version race is NOT lost — the retry re-reads the
+    # latest manifest and keeps every epoch the fold did not cover
+    # as the new base's suffix (applying a suffix to the folded
+    # view is exactly the reconcile idempotence story), and adopts
+    # the latest schema/min_reader (the append may have widened;
+    # the folded base then reads back NULL-filled).  The suffix is
+    # identified by immutable DIR NAME, not epoch number: on a
+    # pre-watermark store numbers recycle after a fold, so an
+    # `epoch > folded_max` test against an INTERLEAVED concurrent
+    # compaction's renumbered appends would silently DROP them from
+    # the retry's publish (round-10 self-review data-loss fix,
+    # regression-pinned in tests/test_mor.py).
+    folded_dirs = {e["dir"] for e in man["epochs"]}
+    cur_version, cur = version, man
+    for _ in range(5):
+        suffix = [e for e in cur["epochs"]
+                  if e["dir"] not in folded_dirs]
+        try:
+            ms.publish(
+                {
+                    "keys": cur["keys"],
+                    "schema": cur["schema"],
+                    "min_reader_version": int(
+                        cur.get("min_reader_version", 1)
+                    ),
+                    "max_epoch": int(cur.get(
+                        "max_epoch",
+                        max([e["epoch"] for e in cur["epochs"]],
+                            default=folded_max),
+                    )),
+                    "base": rel,
+                    "epochs": suffix,
+                    "data_dirs": [rel] + [e["dir"] for e in suffix],
+                },
+                expected_version=cur_version,
+            )
+            return len(man["epochs"])
+        except CommitConflict:
+            cur_version, cur = ms.latest()
+    raise CommitConflict(
+        "mor_compact: lost the publish CAS 5 times in a row to "
+        "concurrent writers — the store is append-hot; retry "
+        "compaction later (the staged fold is a vacuumable orphan)"
+    )

@@ -335,35 +335,6 @@ def _bootstrap_store(
     os.rename(tmp, path)
 
 
-def _swap_dir_in(path: str, tmp: str) -> None:
-    """The backup-rename swap on an ALREADY-STAGED temp directory —
-    the shared crash-critical back half of :func:`_swap_in` and of
-    every store that stages its own temp contents (``mor_compact``'s
-    z-ordered rewrite, the plaid token bags): clear a stale backup,
-    rename live→backup, tmp→live (restoring live if that rename
-    fails), drop the backup.  One implementation so a future
-    hardening (fsync, different restore policy) cannot silently miss
-    a hand-rolled copy (the round-9 review finding).  Uses the
-    standard ``.__merge_backup`` suffix, so
-    :func:`_refuse_interrupted_swap` covers every caller."""
-    import os
-    import shutil
-
-    backup = f"{path}.__merge_backup"
-    if os.path.exists(backup):
-        # the live path exists (callers checked _refuse_interrupted_swap)
-        # so the previous swap COMPLETED and only its cleanup was lost —
-        # the backup is stale and safe to clear
-        shutil.rmtree(backup)
-    os.rename(path, backup)
-    try:
-        os.rename(tmp, path)
-    except BaseException:
-        os.rename(backup, path)  # restore the live table, then re-raise
-        raise
-    shutil.rmtree(backup)
-
-
 def _swap_in(
     path: str,
     replacement: DataFrame,
@@ -378,8 +349,14 @@ def _swap_in(
     directory before the swap, so sidecar metadata and data replace
     together or not at all — the streaming Misra-Gries store rides its
     epoch stamp on this (underscore-prefixed names are invisible to
-    Spark's parquet reader)."""
+    Spark's parquet reader).
+
+    The swap itself: clear a stale backup, rename live→backup,
+    tmp→live (restoring live if that rename fails), drop the backup.
+    It uses the standard ``.__merge_backup`` suffix, so
+    :func:`_refuse_interrupted_swap` covers every caller."""
     import os
+    import shutil
     import uuid
 
     tmp = f"{path}.__merge_tmp_{uuid.uuid4().hex}"
@@ -387,7 +364,19 @@ def _swap_in(
     for name, content in (extra_files or {}).items():
         with open(os.path.join(tmp, name), "w") as f:
             f.write(content)
-    _swap_dir_in(path, tmp)
+    backup = f"{path}.__merge_backup"
+    if os.path.exists(backup):
+        # the live path exists (callers checked _refuse_interrupted_swap)
+        # so the previous swap COMPLETED and only its cleanup was lost —
+        # the backup is stale and safe to clear
+        shutil.rmtree(backup)
+    os.rename(path, backup)
+    try:
+        os.rename(tmp, path)
+    except BaseException:
+        os.rename(backup, path)  # restore the live table, then re-raise
+        raise
+    shutil.rmtree(backup)
 
 
 def delete_keys(spark, path: str, keys_df: DataFrame, key_cols: list[str]) -> int:

@@ -1910,13 +1910,12 @@ def store_health(spark: SparkSession, stores: dict[str, str], *,
 
     Facts by store kind (probed from the layout):
 
-    - merge-on-read (either commit backend): ``mor_epochs`` (delta
-      stack depth; significant once ≥ ``compact_after`` — compact me),
-      ``mor_oldest_delta_age_s``, ``debris_dirs`` (vacuum dry-run;
-      significant when > 0 — vacuum me), ``manifest_versions`` /
-      ``orphan_data_dirs`` on the manifest backend (orphans
-      significant — expire/vacuum me);
-    - any rename-machinery store: ``pending_interrupted_swap``
+    - any manifest store: ``manifest_versions`` / ``orphan_data_dirs``
+      (vacuum dry-run; orphans significant — expire/vacuum me); a
+      merge-on-read store adds ``mor_epochs`` (delta stack depth;
+      significant once ≥ ``compact_after`` — compact me) and
+      ``mor_oldest_delta_age_s``;
+    - any rename-swap streaming store: ``pending_interrupted_swap``
       (backup present with the live dir MISSING — significant, the
       one state needing a manual restore), ``ledger_last_epoch``;
     - monitor stores additionally report ``rows:<subdir>`` per state
@@ -1932,8 +1931,9 @@ def store_health(spark: SparkSession, stores: dict[str, str], *,
     Everything else is driver-local filesystem listings — zero Spark
     jobs except the small state-table counts."""
     import os as _os
+    import time as _time
 
-    from cosmap_spark.sinks.mor import META_NAME, mor_vacuum
+    from cosmap_spark.sinks.commit import ManifestStore
 
     rows: list[tuple] = []
 
@@ -1959,78 +1959,46 @@ def store_health(spark: SparkSession, stores: dict[str, str], *,
         # cursor BESIDE the store (<path>.sync / <path>.aggsync); the
         # round-10 src_path stamp lets health compute staleness —
         # source head minus synced version, significant when behind
-        from cosmap_spark.sinks.commit import ManifestStore
-
         for suffix in (".sync", ".aggsync"):
-            cpath = path.rstrip("/") + suffix
-            if not _os.path.isdir(_os.path.join(cpath, "_manifests")):
+            cursor = ManifestStore(path.rstrip("/") + suffix)
+            if not cursor.exists():
                 continue
-            cur = ManifestStore(cpath).latest()[1]
+            cur = cursor.latest()[1]
             synced = int(cur["src_version"])
             kind = suffix[1:]
             fact(name, f"{kind}_src_version", synced, False)
             sp = cur.get("src_path")
-            if sp and _os.path.isdir(_os.path.join(sp, "_manifests")):
-                head = ManifestStore(sp).versions()[-1]
+            try:
+                src_versions = ManifestStore(sp).versions() if sp else []
+            except ValueError:
+                # a source synced through a custom CommitFS is recorded
+                # by its URI; without that fs its head is unknown here
+                src_versions = []
+            if src_versions:
+                head = src_versions[-1]
                 fact(name, f"{kind}_lag_versions", head - synced,
                      head > synced)
 
     for name, path in stores.items():
         sync_facts(name, path)
-        is_mor_rename = _os.path.exists(_os.path.join(path, META_NAME))
-        is_mor_manifest = (
-            not is_mor_rename
-            and _os.path.isdir(_os.path.join(path, "_manifests"))
-        )
-        if is_mor_rename or is_mor_manifest:
-            from cosmap_spark.sinks.commit import ManifestStore
-            from cosmap_spark.sinks.mor import _epochs
-
-            if is_mor_manifest:
-                ms = ManifestStore(path)
-                _, man = ms.latest()
-                # non-MOR manifest stores (e.g. the plaid index) carry
-                # no epoch log — they still report versions + orphans
-                man_epochs = man.get("epochs", [])
-                epochs = [e["epoch"] for e in man_epochs]
-                fact(name, "manifest_versions", len(ms.versions()), False)
-                orphans = ms.vacuum(dry_run=True)  # default age guard
-                fact(name, "orphan_data_dirs", len(orphans),
-                     len(orphans) > 0)
-                oldest_age = None
-                if man_epochs:
-                    import time as _time
-
-                    oldest = min(
-                        _os.stat(ms.data_path(e["dir"])).st_mtime
-                        for e in man_epochs
-                    )
-                    oldest_age = _time.time() - oldest
-                if "epochs" not in man:
-                    continue  # no delta-log facts for non-MOR manifests
-            else:
-                epochs = _epochs(path)
-                debris = mor_vacuum(path, dry_run=True)  # age-guarded
-                fact(name, "debris_dirs", len(debris), len(debris) > 0)
-                oldest_age = None
-                if epochs:
-                    import time as _time
-
-                    oldest = _os.stat(_os.path.join(
-                        path, "deltas", f"epoch={epochs[0]}"
-                    )).st_mtime
-                    oldest_age = _time.time() - oldest
-                base = _os.path.join(path, "base")
-                fact(name, "pending_interrupted_swap",
-                     int(_os.path.exists(f"{base}.__merge_backup")
-                         and not _os.path.exists(base)),
-                     _os.path.exists(f"{base}.__merge_backup")
-                     and not _os.path.exists(base))
+        ms = ManifestStore(path)
+        if ms.exists():
+            _, man = ms.latest()
+            fact(name, "manifest_versions", len(ms.versions()), False)
+            orphans = ms.vacuum(dry_run=True)  # default age guard
+            fact(name, "orphan_data_dirs", len(orphans), len(orphans) > 0)
+            if "epochs" not in man:
+                continue  # no delta-log facts for index stores
+            epochs = man["epochs"]
             fact(name, "mor_epochs", len(epochs),
                  len(epochs) >= compact_after)
-            if oldest_age is not None:
+            if epochs:
+                oldest = min(
+                    _os.stat(ms.data_path(e["dir"])).st_mtime
+                    for e in epochs
+                )
                 fact(name, "mor_oldest_delta_age_s",
-                     round(oldest_age, 1), False)
+                     round(_time.time() - oldest, 1), False)
             le = ledger_last(path)
             if le is not None:
                 fact(name, "ledger_last_epoch", le, False)
@@ -2305,8 +2273,8 @@ def lex_ingest_stream(doc_stream: DataFrame, index_path: str,
     APPEND-ONLY contract on disk, like the vector twin: resubmitted
     doc ids land as a NEW epoch without touching history, and
     :func:`load_appended_lex` resolves them LAST-WRITER-WINS at read
-    time (the batch path ``index_store.lex_append`` instead rewrites
-    in place); periodic compaction = ``save_lex_index`` over the
+    time (the batch path ``index_store.lex_append`` instead publishes
+    one segment per batch); periodic compaction = ``save_lex_index`` over the
     folded index, which also restores the term-sorted pruning layout
     appends lack."""
     from cosmap_spark.operators.retrieval import build_lex_index
@@ -2352,9 +2320,10 @@ def load_appended_lex(spark: SparkSession, index_path: str) -> dict:
     import os
 
     from cosmap_spark.operators.index_store import load_lex_index
+    from cosmap_spark.sinks.commit import ManifestStore
 
     parts_tf, parts_lens = [], []
-    if os.path.exists(os.path.join(index_path, "manifest.json")):
+    if ManifestStore(index_path).exists():
         base = load_lex_index(spark, index_path)
         parts_tf.append(
             base["tf"].select("__d", "term", "tf")
@@ -2398,9 +2367,9 @@ def mor_ingest_stream(changes: DataFrame, store_path: str,
     """Streaming CDC into a merge-on-read store — the MOR twin of
     :func:`upsert_stream`: each micro-batch APPENDS one delta epoch
     (``sinks.mor.mor_append`` — O(batch), no base file opened, one
-    rename) instead of rewriting the table; reads reconcile via
-    ``mor_read`` and ``mor_compact`` folds the log on whatever cadence
-    taste dictates.  The change envelope is the store schema plus the
+    manifest publish) instead of rewriting the table; reads reconcile
+    via ``mor_read`` and ``mor_compact`` folds the log on whatever
+    cadence taste dictates.  The change envelope is the store schema plus the
     optional ``__deleted`` tombstone flag and an optional ``seq_col``
     (collapses within-batch duplicate keys to the latest —
     ``latest_per_key``; without it batches must be key-unique, which
@@ -2426,9 +2395,9 @@ def mor_ingest_stream(changes: DataFrame, store_path: str,
     from cosmap_spark.sinks.mor import _meta_for, mor_append
     from cosmap_spark.sinks.writers import _require_local
 
-    # the epoch LEDGER here is os-based regardless of the store's own
-    # commit backend (both backends work for the appends themselves) —
-    # a remote store with a CommitFS still needs its ledger local
+    # the epoch LEDGER here is os-based, unlike the store's own commit
+    # protocol — a remote store with a CommitFS still needs its ledger
+    # local
     _require_local(store_path, "mor_ingest_stream")
     keys = _meta_for(store_path)["keys"]
 

@@ -187,13 +187,15 @@ def main() -> None:
         # (round 9: the copy-on-write path above rewrites touched
         # partitions; the MOR store only APPENDS a delta epoch — the
         # right-to-be-forgotten shape at 100 TB)
+        from cosmap_spark.sinks.commit import ManifestStore
         from cosmap_spark.sinks.mor import (
             mor_compact, mor_delete_keys, mor_init, mor_read, mor_vacuum,
         )
 
         mstore = os.path.join(root, "mor_table")
         mor_init(snap, mstore, ["c_custkey"])
-        base_dir = os.path.join(mstore, "base")
+        ms = ManifestStore(mstore)
+        base_dir = ms.data_path(ms.latest()[1]["base"])
         before = {f: os.stat(os.path.join(base_dir, f)).st_mtime_ns
                   for f in os.listdir(base_dir)}
         forget = spark.createDataFrame([(upd_key,)], "c_custkey long")
@@ -213,14 +215,13 @@ def main() -> None:
               f"compaction folded {n_folded} epoch(s); vacuum removed "
               f"{len(debris)} debris dir(s)")
 
-        # 7. manifest-pointer backend + the store-health page -----------
+        # 7. time travel + the store-health page ------------------------
         # (round 10: the object-store-shaped commit — immutable data
         # dirs, one CAS-published manifest per commit, time travel)
-        from cosmap_spark.sinks.commit import ManifestStore
         from cosmap_spark.streaming.ops import store_health
 
         vstore = os.path.join(root, "mor_versioned")
-        mor_init(snap, vstore, ["c_custkey"], backend="manifest")
+        mor_init(snap, vstore, ["c_custkey"])
         mor_delete_keys(spark, vstore, forget)
         assert mor_read(spark, vstore).where(
             F.col("c_custkey") == upd_key
@@ -230,9 +231,8 @@ def main() -> None:
             F.col("c_custkey") == upd_key
         ).count() == 1
         mor_compact(spark, vstore)
-        ms = ManifestStore(vstore)
-        print(f"manifest store: {len(ms.versions())} versions published, "
-              "no data rename anywhere")
+        print(f"manifest store: {len(ManifestStore(vstore).versions())} "
+              "versions published, no data rename anywhere")
 
         # 8. change feed + incremental downstream sync -------------------
         # (round 10: mor_changes is the Delta-CDF analog — net

@@ -111,7 +111,6 @@ SLOW_TESTS = {
     "test_mor.py::test_mor_changes_schema_widening",
     "test_mor.py::test_mor_compact_preserves_view_and_clears_log",
     "test_mor.py::test_mor_compact_zordered",
-    "test_mor.py::test_mor_concurrent_wideners_serialized",
     "test_mor.py::test_mor_delete_is_o_batch_and_idempotent",
     "test_mor.py::test_mor_ingest_stream",
     "test_mor.py::test_mor_maintain_policy",
@@ -130,7 +129,6 @@ SLOW_TESTS = {
     "test_mor.py::test_mor_round_trip_law",
     "test_mor.py::test_mor_schema_alignment",
     "test_mor.py::test_mor_schema_evolution",
-    "test_mor.py::test_mor_suffix_reapplication_is_noop",
     "test_mor.py::test_mor_sync_agg_law_and_incremental",
     "test_mor.py::test_mor_sync_agg_replay_windows",
     "test_mor.py::test_mor_sync_bootstrap_and_incremental",
@@ -207,6 +205,15 @@ def pytest_collection_modifyitems(config, items):
     when ``COSMAP_RUN_SLOW=1`` — the full ~55 min tier, run at round
     close.  The round-10 suite had grown ~10× past the driver's gate
     budget and its pytest run truncated un-inspectably at 36%."""
+    gate = sorted(
+        e for e in SLOW_TESTS
+        if e.split("::")[0] in ("test_parity.py", "test_plan_audit.py")
+    )
+    if gate:
+        raise pytest.UsageError(
+            f"SLOW_TESTS must not list the parity mirror or the plan "
+            f"audit (they are the gate tier): {gate}"
+        )
     run_slow = bool(os.environ.get("COSMAP_RUN_SLOW"))
     skip = pytest.mark.skip(
         reason="slow tier (set COSMAP_RUN_SLOW=1 to run)"

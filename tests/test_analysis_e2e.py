@@ -154,3 +154,34 @@ def test_quickstart_sql_node_equivalent(spark, analysis_dir: Path):
         loaded["parameters"], sql_transforms, loaded["implementations"]
     ).build(spark, catalog).collect()
     assert sorted(map(tuple, base)) == sorted(map(tuple, via_sql))
+
+
+def test_run_writes_through_the_sink_formats(
+    spark, analysis_dir: Path, tmp_path: Path
+):
+    """Analysis.run writes through sinks.writers.write_output: an orc
+    output is really orc, and an unknown format refuses before any
+    output exists instead of silently writing parquet."""
+    from cosmap_spark.tables import catalog_df
+
+    from .conftest import SF_DIR
+
+    loaded = manage.load_analysis_files(analysis_dir)
+    catalog = catalog_df(spark, SF_DIR)
+
+    def run(fmt: str, out: Path):
+        params = {**loaded["parameters"],
+                  "output_parameters": {"path": str(out), "format": fmt}}
+        return Analysis(
+            params, loaded["transformations"], loaded["implementations"]
+        ).run(spark, catalog)
+
+    orc_out = tmp_path / "out_orc"
+    result = run("orc", orc_out)
+    assert sorted(map(tuple, spark.read.orc(str(orc_out)).collect())) == \
+        sorted(map(tuple, result.collect()))
+
+    bad_out = tmp_path / "out_bad"
+    with pytest.raises(ValueError, match="unsupported sink format 'xml'"):
+        run("xml", bad_out)
+    assert not bad_out.exists()

@@ -443,13 +443,13 @@ def test_stale_backup_cleared_after_completed_swap(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# manifest-backend column: mor_ingest_stream into a manifest-pointer
+# manifest-pointer column: mor_ingest_stream into a merge-on-read
 # store (sinks/commit.py), killed inside the commit protocol
 # ---------------------------------------------------------------------------
 
 @pytest.mark.parametrize("step", ["before_publish", "before_marker"])
 def test_mor_manifest_ingest_kill_matrix(spark, tmp_path, step):
-    """The manifest backend's two ordered crash windows under the
+    """The merge-on-read store's two ordered crash windows under the
     streaming CDC ingest, restart-equality against a golden no-crash
     run (the kill-matrix discipline):
 
@@ -461,8 +461,7 @@ def test_mor_manifest_ingest_kill_matrix(spark, tmp_path, step):
       before_marker   publish complete, death before the ledger
                       marker — resume re-delivers and appends a SECOND
                       identical epoch, a view no-op by the suffix-
-                      idempotence law (the rename backend's
-                      crash-after-append window, same contract).
+                      idempotence law.
     """
     import cosmap_spark.sinks.commit as C
     import cosmap_spark.streaming.ops as SO
@@ -488,7 +487,7 @@ def test_mor_manifest_ingest_kill_matrix(spark, tmp_path, step):
     def init(store):
         mor_init(
             spark.createDataFrame([(0, 0, 0)], schema), str(store),
-            ["k"], backend="manifest",
+            ["k"],
         )
 
     def view(store):

@@ -4,8 +4,6 @@ for the same centroids; manifest records components/params."""
 
 from __future__ import annotations
 
-import json
-
 from pyspark.sql import functions as F
 
 from cosmap_spark.operators.index_store import (
@@ -16,6 +14,7 @@ from cosmap_spark.operators.index_store import (
 from cosmap_spark.operators.knn import ivf_build, lsh_build
 from cosmap_spark.operators.pq import pq_encode, pq_train
 from cosmap_spark.queries.llm_ops import knn_ann_union
+from cosmap_spark.sinks.commit import ManifestStore
 from cosmap_spark.tables import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -83,7 +82,7 @@ def test_save_load_serve_identical(spark, tmp_path):
     disk = knn_ann_union(spark, SF, tsearch=False, **loaded, **opq_art)
     assert _rows(mem) == _rows(disk) and mem.count() > 0
 
-    manifest = json.load(open(p + "/manifest.json"))
+    manifest = ManifestStore(p).latest()[1]
     assert manifest["nlist"] == 16 and manifest["m"] == 16
     assert manifest["ksub"] == 64
 
@@ -322,9 +321,7 @@ def test_lex_append_fresh_ids_equals_rebuild(spark, tmp_path):
     rebuilt = bm25_search(_corpus(spark, _BASE + batch), QUERIES, top_n=4)
     served = bm25_search(None, QUERIES, top_n=4, prebuilt=loaded)
     assert _bm25_rows(served) == _bm25_rows(rebuilt)
-    import json as _json
-    import os as _os
-    man = _json.load(open(_os.path.join(p, "manifest.json")))
+    man = ManifestStore(p).latest()[1]
     assert man["n_docs"] == 7
     # total token count over the merged corpus
     want = sum(len(t.split(" ")) for _, t in _BASE + batch)
@@ -425,7 +422,7 @@ def test_opq_save_load_serve_identical(spark, tmp_path):
         == [r for r in _rows(disk) if r[0] == "opq"]
     )
     assert mem.where(F.col("method") == "opq").count() > 0
-    manifest = json.load(open(p + "/manifest.json"))
+    manifest = ManifestStore(p).latest()[1]
     assert manifest["opq_m"] == 8 and manifest["opq_ksub"] == 16
     assert manifest["opq_dim"] == 64
 
@@ -505,56 +502,17 @@ def test_lex_positional_save_load_append_phrase_identity(spark, tmp_path):
         phrase_search(None, queries, top_n=5, prebuilt=bow)
 
 
-def test_save_token_bags_sweeps_stale_plaid_debris(spark, tmp_path):
-    """Crashed prior saves leave full-size .plaid_tmp_* orphans with no
-    vacuum path (round-10 advice fix): save_token_bags now sweeps
-    stale (>1h) siblings on entry, while a FRESH temp dir — a live
-    writer's in-flight stage under a concurrent-caller mistake — is
-    left alone."""
-    import os
-    import time
-
-    from cosmap_spark.operators.index_store import (
-        load_token_bags,
-        save_token_bags,
-    )
-
-    store = str(tmp_path / "store")
-    os.makedirs(store)
-    stale = os.path.join(store, ".plaid_tmp_deadbeef")
-    os.makedirs(stale)
-    with open(os.path.join(stale, "junk"), "w") as f:
-        f.write("x" * 10)
-    old = time.time() - 7200
-    os.utime(stale, (old, old))
-    fresh = os.path.join(store, ".plaid_tmp_livewriter")
-    os.makedirs(fresh)
-
-    bags = spark.createDataFrame(
-        [(0, [0, 1]), (1, [1])], "nid long, bag array<int>"
-    )
-    save_token_bags(store, [(0, [1.0, 0.0]), (1, [0.0, 1.0])], bags)
-
-    assert not os.path.exists(stale)       # swept
-    assert os.path.exists(fresh)           # age-guarded: kept
-    loaded = load_token_bags(spark, store)
-    assert sorted(r["nid"] for r in loaded["bags"].collect()) == [0, 1]
-
-
 def test_token_bags_manifest_backend(spark, tmp_path):
-    """The plaid index store through the StoreCommit seam (round-10):
-    manifest-backend saves commit by CAS-publishing a version — loaded
-    serving identical to rename-backend loading, re-saves publish the
-    next version with the previous still readable until expiry, a
-    crash before publish leaves the OLD version serving and only a
-    vacuumable orphan, and the two layouts refuse to overlay each
-    other."""
+    """The plaid index store through the commit protocol (round-10):
+    saves commit by CAS-publishing a version — loads return exactly
+    the saved artifacts, re-saves publish the next version with the
+    previous still readable until expiry, and a crash before publish
+    leaves the OLD version serving and only a vacuumable orphan."""
     import os
 
     import pytest
 
     import cosmap_spark.sinks.commit as C
-    from cosmap_spark.sinks.commit import ManifestStore
     from cosmap_spark.operators.index_store import (
         load_token_bags,
         save_token_bags,
@@ -566,19 +524,15 @@ def test_token_bags_manifest_backend(spark, tmp_path):
     cents = [(0, [1.0, 0.0]), (1, [0.0, 1.0])]
 
     mstore = str(tmp_path / "m")
-    save_token_bags(mstore, cents, bags, backend="manifest")
+    save_token_bags(mstore, cents, bags)
     loaded = load_token_bags(spark, mstore)
-    rstore = str(tmp_path / "r")
-    save_token_bags(rstore, cents, bags)
-    ref = load_token_bags(spark, rstore)
-    assert loaded["centroids"] == ref["centroids"]
-    assert loaded["normalize"] is ref["normalize"]
+    assert loaded["centroids"] == cents
+    assert loaded["normalize"] is True
     assert sorted(map(tuple, loaded["bags"].collect())) == \
-        sorted(map(tuple, ref["bags"].collect()))
+        sorted(map(tuple, bags.collect()))
 
     # re-save publishes v2 (normalize flips); no rename happened
-    save_token_bags(mstore, cents, bags, normalize=False,
-                    backend="manifest")
+    save_token_bags(mstore, cents, bags, normalize=False)
     ms = ManifestStore(os.path.join(mstore, "plaid"))
     assert ms.versions() == [1, 2]
     assert load_token_bags(spark, mstore)["normalize"] is False
@@ -592,35 +546,25 @@ def test_token_bags_manifest_backend(spark, tmp_path):
     C.LocalFS.publish_exclusive = dying
     try:
         with pytest.raises(RuntimeError, match="injected crash"):
-            save_token_bags(mstore, cents, bags, backend="manifest")
+            save_token_bags(mstore, cents, bags)
     finally:
         C.LocalFS.publish_exclusive = real
     assert ms.versions() == [1, 2]
     assert load_token_bags(spark, mstore)["normalize"] is False
     assert len(ms.vacuum(min_age_seconds=0)) == 2  # centroids + bags
 
-    # layouts refuse to overlay
-    with pytest.raises(ValueError, match="manifest-layout"):
-        save_token_bags(mstore, cents, bags)
-    with pytest.raises(ValueError, match="rename-layout"):
-        save_token_bags(rstore, cents, bags, backend="manifest")
-
 
 def test_ann_index_manifest_backend(spark, tmp_path):
-    """The ANN index store through the StoreCommit seam (round-10):
-    manifest-backend saves serve row-identically to rename-backend
-    loads; a RE-save publishes a complete new generation atomically —
-    the rename layout's mixed-generation crash hazard (new codebooks
-    under the old coded corpus) structurally cannot happen: a crash
-    before the publish leaves the previous generation serving intact,
-    orphans vacuumable, and the superseded generation stays loadable
-    by version until expiry."""
-    import os
-
+    """The ANN index store through the commit protocol (round-10):
+    loads serve row-identically to the in-memory artifacts; a RE-save
+    publishes a complete new generation atomically — a mix of
+    component generations (new codebooks under the old coded corpus)
+    structurally cannot happen: a crash before the publish leaves the
+    previous generation serving intact, orphans vacuumable, and the
+    superseded generation stays loadable by version until expiry."""
     import pytest
 
     import cosmap_spark.sinks.commit as C
-    from cosmap_spark.sinks.commit import ManifestStore
 
     emb = load_table(spark, SF, "embeddings")
     cents, assigned = ivf_build(emb, nlist=16, iters=1)
@@ -633,13 +577,11 @@ def test_ann_index_manifest_backend(spark, tmp_path):
     art = dict(index=(cents, assigned), codebooks=books,
                lsh_index=lsh_idx, coded=coded)
 
-    rpath, mpath = str(tmp_path / "r"), str(tmp_path / "m")
-    save_ann_index(rpath, **art)
-    save_ann_index(mpath, **art, backend="manifest")
+    mpath = str(tmp_path / "m")
+    save_ann_index(mpath, **art)
 
     opq_art = _opq_artifacts(spark, emb)
-    ref = knn_ann_union(spark, SF, tsearch=False,
-                        **load_ann_index(spark, rpath), **opq_art)
+    ref = knn_ann_union(spark, SF, tsearch=False, **art, **opq_art)
     got = knn_ann_union(spark, SF, tsearch=False,
                         **load_ann_index(spark, mpath), **opq_art)
     assert _rows(ref) == _rows(got) and got.count() > 0
@@ -660,7 +602,7 @@ def test_ann_index_manifest_backend(spark, tmp_path):
         with pytest.raises(RuntimeError, match="injected crash"):
             save_ann_index(mpath, index=(cents, assigned),
                            codebooks=books2, lsh_index=lsh_idx,
-                           coded=coded2, backend="manifest")
+                           coded=coded2)
     finally:
         C.LocalFS.publish_exclusive = real
     ms = ManifestStore(mpath)
@@ -675,52 +617,39 @@ def test_ann_index_manifest_backend(spark, tmp_path):
 
     # a completed RE-save: v2 serves, v1 stays loadable by version
     save_ann_index(mpath, index=(cents, assigned), codebooks=books2,
-                   lsh_index=lsh_idx, coded=coded2, backend="manifest")
+                   lsh_index=lsh_idx, coded=coded2)
     assert ms.versions() == [1, 2]
     assert load_ann_index(spark, mpath)["codebooks"][0].__len__() == 32
     assert len(load_ann_index(spark, mpath, version=1)
                ["codebooks"][0]) == 64
 
-    # layouts refuse to overlay; rename layout refuses version pins
-    with pytest.raises(ValueError, match="manifest-layout"):
-        save_ann_index(mpath, **art)
-    with pytest.raises(ValueError, match="rename-layout"):
-        save_ann_index(rpath, **art, backend="manifest")
-    with pytest.raises(ValueError, match="version-pinned"):
-        load_ann_index(spark, rpath, version=1)
-    assert not os.path.exists(os.path.join(mpath, "manifest.json"))
-
 
 def test_lex_index_manifest_backend(spark, tmp_path):
-    """The lexical index through the commit seam: manifest-backend
-    saves serve identically to rename-backend ones; a crashed RE-save
-    leaves the old generation intact (the rename layout's tf/lens
-    generation-mix hazard cannot happen); lex_append refuses manifest
-    stores loudly (segment-stack maintenance is the documented future
-    path); version-pinned loads work."""
+    """The lexical index through the commit protocol: loads return the
+    saved tf and its corpus stats; a crashed RE-save leaves the old
+    generation intact (a tf/lens generation mix cannot happen);
+    version-pinned loads work."""
     import pytest
 
     import cosmap_spark.sinks.commit as C
     from cosmap_spark.operators.index_store import (
-        lex_append, load_lex_index, save_lex_index,
+        load_lex_index, save_lex_index,
     )
     from cosmap_spark.operators.retrieval import build_lex_index
-    from cosmap_spark.sinks.commit import ManifestStore
 
     docs = spark.createDataFrame(
         [(1, "red fox jumps high"), (2, "lazy dog sleeps")],
         "doc_id long, text string",
     )
-    tf, _ = build_lex_index(docs, id_col="doc_id", text_col="text")
+    tf, lens = build_lex_index(docs, id_col="doc_id", text_col="text")
 
-    rpath, mpath = str(tmp_path / "r"), str(tmp_path / "m")
-    save_lex_index(rpath, tf)
-    save_lex_index(mpath, tf, backend="manifest")
-    ref, got = load_lex_index(spark, rpath), load_lex_index(spark, mpath)
+    mpath = str(tmp_path / "m")
+    save_lex_index(mpath, tf)
+    got = load_lex_index(spark, mpath)
     assert sorted(map(tuple, got["tf"].collect())) == \
-        sorted(map(tuple, ref["tf"].collect()))
-    assert got["n_docs"] == ref["n_docs"] == 2
-    assert got["avgdl"] == ref["avgdl"]
+        sorted(map(tuple, tf.collect()))
+    assert got["n_docs"] == 2
+    assert got["avgdl"] == lens.agg(F.avg("dl")).collect()[0][0]
 
     # crashed re-save: old generation serves, version count unchanged
     docs2 = docs.union(spark.createDataFrame(
@@ -734,7 +663,7 @@ def test_lex_index_manifest_backend(spark, tmp_path):
     C.LocalFS.publish_exclusive = dying
     try:
         with pytest.raises(RuntimeError, match="injected crash"):
-            save_lex_index(mpath, tf2, backend="manifest")
+            save_lex_index(mpath, tf2)
     finally:
         C.LocalFS.publish_exclusive = real
     ms = ManifestStore(mpath)
@@ -742,25 +671,13 @@ def test_lex_index_manifest_backend(spark, tmp_path):
     assert load_lex_index(spark, mpath)["n_docs"] == 2
 
     # completed re-save: v2 serves, v1 pinnable
-    save_lex_index(mpath, tf2, backend="manifest")
+    save_lex_index(mpath, tf2)
     assert load_lex_index(spark, mpath)["n_docs"] == 3
     assert load_lex_index(spark, mpath, version=1)["n_docs"] == 2
 
-    # overlay refusals both ways; manifest widening refuses with
-    # guidance (segments must share one schema)
-    with pytest.raises(ValueError, match="manifest-layout"):
-        save_lex_index(mpath, tf)
-    with pytest.raises(ValueError, match="rename-layout"):
-        save_lex_index(rpath, tf, backend="manifest")
-    more = spark.createDataFrame([(4, "new doc")],
-                                 "doc_id long, text string")
-    with pytest.raises(ValueError, match="rename-backend-only"):
-        lex_append(spark, mpath, more, id_col="doc_id",
-                   text_col="text", allow_new_columns=True)
-
 
 def test_lex_segment_stack_appends_equal_rebuild(spark, tmp_path):
-    """Manifest-backend incremental maintenance — the segment stack
+    """Incremental maintenance — the segment stack
     (round-10): appends write ONE immutable segment each (tf + lens +
     drop list) and the reconciled view equals an index rebuilt from
     scratch on the merged corpus, through fresh ids, a re-submitted
@@ -782,7 +699,7 @@ def test_lex_segment_stack_appends_equal_rebuild(spark, tmp_path):
     )
     path = str(tmp_path / "seg")
     tf1, _ = build_lex_index(d1, id_col="doc_id", text_col="text")
-    save_lex_index(path, tf1, backend="manifest")
+    save_lex_index(path, tf1)
 
     # fresh-id append
     d2 = spark.createDataFrame([(3, "quick red dog barks")],
@@ -821,7 +738,7 @@ def test_lex_segment_stack_appends_equal_rebuild(spark, tmp_path):
     # segments, same view; old versions expire + vacuum cleanly
     want_rows = lex_rows(got)  # materialize BEFORE vacuuming the
     # segment dirs this frame's lineage reads
-    save_lex_index(path, got["tf"], backend="manifest")
+    save_lex_index(path, got["tf"])
     folded = load_lex_index(spark, path)
     assert lex_rows(folded) == want_rows
     assert "segments" not in ms.latest()[1] \
@@ -836,8 +753,8 @@ def test_lex_append_refuses_null_doc_ids(spark, tmp_path):
     """A NULL doc id is unaddressable (doc-keyed equi-joins never
     match NULL): without the guard each append would silently
     accumulate another copy of the NULL-id postings that no re-submit
-    or retraction could ever replace.  Refused on BOTH backends; a
-    NULL-TEXT row with a real id (the retraction form) stays legal."""
+    or retraction could ever replace.  Refused; a NULL-TEXT row with a
+    real id (the retraction form) stays legal."""
     import pytest
 
     from cosmap_spark.operators.index_store import lex_append, save_lex_index
@@ -848,11 +765,10 @@ def test_lex_append_refuses_null_doc_ids(spark, tmp_path):
     )
     bad = spark.createDataFrame([(None, "ghost doc")],
                                 "doc_id long, text string")
-    for backend, name in (("rename", "lex_r"), ("manifest", "lex_m")):
-        p = str(tmp_path / name)
-        save_lex_index(p, *build_lex_index(base), backend=backend)
-        with pytest.raises(ValueError, match="NULL values in id column"):
-            lex_append(spark, p, bad)
-        # a retraction (real id, NULL text) still goes through
-        lex_append(spark, p, spark.createDataFrame(
-            [(1, None)], "doc_id long, text string"))
+    p = str(tmp_path / "lex")
+    save_lex_index(p, *build_lex_index(base))
+    with pytest.raises(ValueError, match="NULL values in id column"):
+        lex_append(spark, p, bad)
+    # a retraction (real id, NULL text) still goes through
+    lex_append(spark, p, spark.createDataFrame(
+        [(1, None)], "doc_id long, text string"))

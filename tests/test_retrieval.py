@@ -1157,29 +1157,20 @@ def test_maxsim_plaid_token_bags(spark, tmp_path):
         maxsim_rerank_plaid(dense, ddf, q0, bags, [], prune_k=5)
 
     # round-9 review finding: a crash mid-RE-save must never leave new
-    # data under the old manifest — the whole plaid dir swaps as one
-    # unit, and a failed swap restores the previous version intact
-    import os as _os
+    # data under the old manifest — the new centroids and bags are
+    # written, the publish dies, and the previous version serves intact
+    from cosmap_spark.sinks.commit import LocalFS
 
-    real_rename = _os.rename
-    calls = {"n": 0}
+    def dying_publish(self, p, content):
+        raise RuntimeError("injected crash before publish")
 
-    def dying_rename(a, b):
-        # the FIRST rename targeting the live dir is tmp→live (die
-        # there, mid-window); the second is the except-path restore
-        # backup→live (must succeed)
-        if str(b).endswith("/plaid"):
-            calls["n"] += 1
-            if calls["n"] == 1:
-                raise RuntimeError("injected crash at swap")
-        return real_rename(a, b)
-
-    _os.rename = dying_rename
+    real_publish = LocalFS.publish_exclusive
+    LocalFS.publish_exclusive = dying_publish
     try:
         with pytest.raises(RuntimeError, match="injected crash"):
             save_token_bags(store, tcents, bags, normalize=False)
     finally:
-        _os.rename = real_rename
+        LocalFS.publish_exclusive = real_publish
     restored = load_token_bags(spark, store)
     assert restored["normalize"] is True  # the OLD save, intact
     assert sorted(r["nid"] for r in restored["bags"].limit(3).collect())

@@ -1249,6 +1249,37 @@ def test_lex_ingest_stream_matches_batch_rebuild(spark, tmp_path):
     assert served.count() > 0
 
 
+def test_load_appended_lex_keeps_manifest_base(spark, tmp_path):
+    """The folded index must find its saved base through the index's
+    manifest: 2 base docs plus 1 streamed doc serve 3 docs, not just
+    the streamed one."""
+    from cosmap_spark.operators.index_store import save_lex_index
+    from cosmap_spark.operators.retrieval import build_lex_index
+    from cosmap_spark.sinks.commit import ManifestStore
+    from cosmap_spark.streaming.ops import (
+        lex_ingest_stream,
+        load_appended_lex,
+    )
+
+    base = spark.createDataFrame(
+        [(1, "alpha beta"), (2, "alpha gamma")], "doc_id long, text string"
+    )
+    p = str(tmp_path / "lexidx")
+    save_lex_index(p, *build_lex_index(base))
+    assert ManifestStore(p).exists()
+    land = tmp_path / "doc_landing"
+    spark.createDataFrame(
+        [(3, "delta alpha")], "doc_id long, text string"
+    ).coalesce(1).write.parquet(str(land))
+    lex_ingest_stream(
+        spark.readStream.schema("doc_id long, text string").parquet(str(land)),
+        p, str(tmp_path / "lexckpt"),
+    ).awaitTermination(180)
+    loaded = load_appended_lex(spark, p)
+    assert loaded["n_docs"] == 3
+    assert sorted(r["__d"] for r in loaded["lens"].collect()) == [1, 2, 3]
+
+
 def test_sketch_stream_kmv_bit_stable(spark, tmp_path):
     """KMV mode's stronger contract: after two micro-batches the store
     sketches are BIT-identical to a one-shot batch build over all the
@@ -2470,9 +2501,9 @@ def test_fingerprint_marker_write_is_atomic(tmp_path):
 def test_store_health_page(spark, tmp_path):
     """store_health (round-10): one maintenance table in
     monitor_report's schema — epoch depth (significant at the
-    compact_after threshold), debris / orphan counts (significant when
-    > 0), the interrupted-swap flag, ledger last-epoch, and per-state
-    row counts for monitor stores; MOR bases are never scanned."""
+    compact_after threshold), orphan counts (significant when > 0),
+    the interrupted-swap flag, ledger last-epoch, and per-state row
+    counts for monitor stores; MOR bases are never scanned."""
     import os
 
     from pyspark.sql import functions as F
@@ -2489,15 +2520,8 @@ def test_store_health_page(spark, tmp_path):
         [(1, 99, False)], f"k long, v long, {DELETE_COL} boolean"
     )
 
-    rstore = str(tmp_path / "r")
-    mor_init(base, rstore, ["k"])
-    mor_append(spark, rstore, batch)
-    dead = os.path.join(rstore, "deltas", ".tmp_dead")
-    os.makedirs(dead)
-    os.utime(dead, (1, 1))  # age past the vacuum guard
-
     mstore = str(tmp_path / "m")
-    mor_init(base, mstore, ["k"], backend="manifest")
+    mor_init(base, mstore, ["k"])
     mor_append(spark, mstore, batch)
     # orphan data dir (died-before-publish)
     orphan = os.path.join(mstore, "data", "orphan123")
@@ -2515,18 +2539,12 @@ def test_store_health_page(spark, tmp_path):
     os.rename(os.path.join(mon, "state"),
               os.path.join(mon, "state.__merge_backup"))
 
-    h = store_health(
-        spark, {"r": rstore, "m": mstore, "mon": mon}, compact_after=1
-    )
+    h = store_health(spark, {"m": mstore, "mon": mon}, compact_after=1)
     rows = {(r["subject"], r["statistic"]): (r["value"], r["significant"])
             for r in h.collect()}
 
-    assert rows[("r", "mor_epochs")] == (1.0, True)  # >= compact_after
-    assert rows[("r", "debris_dirs")] == (1.0, True)
-    assert rows[("r", "pending_interrupted_swap")] == (0.0, False)
-    assert ("r", "mor_oldest_delta_age_s") in rows
-
-    assert rows[("m", "mor_epochs")] == (1.0, True)
+    assert rows[("m", "mor_epochs")] == (1.0, True)  # >= compact_after
+    assert ("m", "mor_oldest_delta_age_s") in rows
     assert rows[("m", "manifest_versions")] == (2.0, False)
     assert rows[("m", "orphan_data_dirs")] == (1.0, True)
 
@@ -2535,7 +2553,7 @@ def test_store_health_page(spark, tmp_path):
         == (1.0, True)
 
     # monitor_report unions the health rows in the same schema
-    rep = monitor_report(spark, health_stores={"r": rstore})
+    rep = monitor_report(spark, health_stores={"m": mstore})
     assert rep.columns == ["monitor", "subject", "statistic", "value",
                            "p_value", "significant"]
     assert rep.where(F.col("monitor") == "health").count() >= 3
@@ -2565,7 +2583,7 @@ def test_store_health_sync_staleness(spark, tmp_path):
         F.col("id").alias("k"), F.lit("a").alias("g"),
         (F.col("id") * 2).alias("v"),
     )
-    mor_init(base, src, ["k"], backend="manifest")
+    mor_init(base, src, ["k"])
     rep = str(tmp_path / "rep")
     agg = str(tmp_path / "agg")
     mor_sync(spark, src, rep)
@@ -2589,6 +2607,20 @@ def test_store_health_sync_staleness(spark, tmp_path):
     mor_sync(spark, src, rep)
     assert lag(rep)["sync_lag_versions"] == (0.0, False)
 
+    # a source synced through a custom CommitFS is recorded by its URI;
+    # health cannot resolve that head, so it reports the cursor only
+    from cosmap_spark.sinks.commit import ManifestStore
+
+    remote_rep = str(tmp_path / "remote_rep")
+    ManifestStore(remote_rep + ".sync").publish(
+        {"src_version": 3, "dst_version": 1, "spec": None,
+         "src_path": "s3://bucket/src"},
+        expected_version=0,
+    )
+    facts = lag(remote_rep)
+    assert facts["sync_src_version"] == (3.0, False)
+    assert "sync_lag_versions" not in facts
+
 
 def test_mor_sync_cross_source_refused(spark, tmp_path):
     """A destination tracks ONE source: syncing it from a different
@@ -2605,8 +2637,8 @@ def test_mor_sync_cross_source_refused(spark, tmp_path):
     )
     a = str(tmp_path / "a")
     b = str(tmp_path / "b")
-    mor_init(base, a, ["k"], backend="manifest")
-    mor_init(base, b, ["k"], backend="manifest")
+    mor_init(base, a, ["k"])
+    mor_init(base, b, ["k"])
 
     rep = str(tmp_path / "rep")
     mor_sync(spark, a, rep)
