@@ -371,9 +371,10 @@ def opq_train(
 
 
 #: the ledger's OPQ configuration — ONE source of truth shared by the
-#: q_knn_ann opq branch, bench.py's train/serve split, the persistence
-#: tests, and the vectorindex example (they must train IDENTICAL
-#: artifacts for "same params as the gate" claims to stay true)
+#: q_knn_ann opq branch, the persistence tests, and the vectorindex
+#: example: an artifact trained elsewhere and injected into
+#: ``knn_ann_union`` must be IDENTICAL to the one the gate trains, or
+#: its results are not the gate's results
 GATE_OPQ_PARAMS = {
     "m": 8, "ksub": 16, "iters": 2, "pq_iters": 1, "dim": 64, "seed": 41,
 }

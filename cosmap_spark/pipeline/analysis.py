@@ -105,6 +105,16 @@ class Analysis:
         sp = self.config.sampling_parameters
 
         def _default_sampler(spark_, sampling):
+            # the only draw this sampler makes; other values are for a
+            # registered generate_samples plugin to handle
+            if (sampling.sample_type, sampling.sample_shape) != ("Random", "Circle"):
+                raise ValueError(
+                    "the default sampler draws sample_type 'Random', "
+                    "sample_shape 'Circle'; got sample_type "
+                    f"{sampling.sample_type!r}, sample_shape "
+                    f"{sampling.sample_shape!r} (register a "
+                    "generate_samples plugin for other samplers)"
+                )
             return uniform_sphere_samples(
                 spark_,
                 sampling.n_samples,

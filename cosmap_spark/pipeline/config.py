@@ -175,6 +175,25 @@ class SamplingParameters(BaseModel):
     def _norm_dims(cls, v: Any) -> float:
         return quantity_to_deg(v)
 
+    # A radius that is not a positive number matches no catalog row, so
+    # the run would write an empty output with no error; a declination
+    # outside the sphere folds back through asin(sin dec) and breaks the
+    # area-uniform draw.  RA stays unchecked: a wrap patch is written
+    # with a negative lower bound.
+    @field_validator("sample_dimensions")
+    @classmethod
+    def _positive_dims(cls, v: float) -> float:
+        if not v > 0:
+            raise ValueError(f"sample_dimensions must be > 0 degrees, got {v}")
+        return v
+
+    @field_validator("dec_bounds")
+    @classmethod
+    def _dec_on_sphere(cls, v: tuple[float, float]) -> tuple[float, float]:
+        if not all(-90.0 <= d <= 90.0 for d in v):
+            raise ValueError(f"dec_bounds must lie within [-90, 90], got {v}")
+        return v
+
 
 class DatasetParameters(BaseModel):
     """Reference src/cosmap/config/analysis.py:96-111."""

@@ -613,8 +613,9 @@ def knn_serve_stream(query_stream: DataFrame, index: DataFrame,
     """Streaming vector-search serve: micro-batches of query vectors
     against a PREBUILT corpus LSH index (`lsh_build` result — at scale
     a persisted table ``partitionBy("tbl", pmod(bucket, P))``, so each
-    probe prunes to its bucket partitions).  The online half of the
-    train-once/serve-many split `bench.py` measures for the batch path.
+    probe prunes to its bucket partitions).  The index is built once
+    and served to every micro-batch, the streaming counterpart of
+    ``knn_ann_union`` with injected artifacts.
 
     Each epoch re-bucketizes only the arriving queries (the plane
     normals are seed-derived constants, so any session reproduces the

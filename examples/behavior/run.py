@@ -106,8 +106,7 @@ def main() -> None:
         stream_dir = os.path.join(tmp, "stream")
         src = os.path.join(sf_dir, "events.parquet")
         if os.path.isdir(src):
-            # Spark-written layout (e.g. bench.py's scaled replicas):
-            # a directory of part files
+            # Spark-written layout: a directory of part files
             shutil.copytree(src, stream_dir)
         else:
             os.makedirs(stream_dir)

@@ -144,7 +144,7 @@ def main() -> None:
 
         # opq_train_gate is the SINGLE source of the gate sample +
         # params (CLAUDE.md: never re-type them at a call site) — the
-        # example must train IDENTICAL artifacts to the gate/bench
+        # example must train IDENTICAL artifacts to the gate
         rot, obooks, errs = opq_train_gate(emb, return_stats=True)
         print(f"== OPQ objective per iteration (monotone): "
               f"{[round(e, 4) for e in errs]} ==")

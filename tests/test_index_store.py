@@ -76,10 +76,10 @@ def test_save_load_serve_identical(spark, tmp_path):
     opq_art = _opq_artifacts(spark, emb)
     mem = knn_ann_union(
         spark, SF, index=(cents, assigned), codebooks=books,
-        lsh_index=lsh_idx, coded=coded, tsearch=False, bq_bits=bits,
+        lsh_index=lsh_idx, coded=coded, bq_bits=bits,
         **opq_art,
     )
-    disk = knn_ann_union(spark, SF, tsearch=False, **loaded, **opq_art)
+    disk = knn_ann_union(spark, SF, **loaded, **opq_art)
     assert _rows(mem) == _rows(disk) and mem.count() > 0
 
     manifest = ManifestStore(p).latest()[1]
@@ -115,10 +115,10 @@ def test_residual_flag_round_trips_and_serves(spark, tmp_path):
     opq_art = _opq_artifacts(spark, emb)
     mem = knn_ann_union(
         spark, SF, index=(cents, assigned), codebooks=books,
-        lsh_index=lsh_idx, coded=coded, residual=True, tsearch=False,
+        lsh_index=lsh_idx, coded=coded, residual=True,
         **opq_art,
     )
-    disk = knn_ann_union(spark, SF, tsearch=False, **loaded, **opq_art)
+    disk = knn_ann_union(spark, SF, **loaded, **opq_art)
     assert _rows(mem) == _rows(disk) and mem.count() > 0
     # a raw-layout save has no flag at all
     p2 = str(tmp_path / "raw_index")
@@ -415,8 +415,8 @@ def test_opq_save_load_serve_identical(spark, tmp_path):
     assert loaded["opq_books"] == [
         [list(map(float, c)) for c in s] for s in art["opq_books"]
     ]
-    mem = knn_ann_union(spark, SF, tsearch=False, **art)
-    disk = knn_ann_union(spark, SF, tsearch=False, **loaded)
+    mem = knn_ann_union(spark, SF, **art)
+    disk = knn_ann_union(spark, SF, **loaded)
     assert (
         [r for r in _rows(mem) if r[0] == "opq"]
         == [r for r in _rows(disk) if r[0] == "opq"]
@@ -581,9 +581,9 @@ def test_ann_index_manifest_backend(spark, tmp_path):
     save_ann_index(mpath, **art)
 
     opq_art = _opq_artifacts(spark, emb)
-    ref = knn_ann_union(spark, SF, tsearch=False, **art, **opq_art)
-    got = knn_ann_union(spark, SF, tsearch=False,
-                        **load_ann_index(spark, mpath), **opq_art)
+    ref = knn_ann_union(spark, SF, **art, **opq_art)
+    got = knn_ann_union(
+        spark, SF, **load_ann_index(spark, mpath), **opq_art)
     assert _rows(ref) == _rows(got) and got.count() > 0
 
     # a crashed RE-save (new components written, publish dies) leaves

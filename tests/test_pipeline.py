@@ -17,7 +17,7 @@ from cosmap_spark.pipeline import (
     compile_pipeline,
     topo_order,
 )
-from cosmap_spark.pipeline.analysis import run_setup_block
+from cosmap_spark.pipeline.analysis import Analysis, run_setup_block
 from cosmap_spark.pipeline.config import (
     load_config,
     quantity_to_deg,
@@ -157,6 +157,47 @@ def test_config_validates_sampling_units():
         }
     )
     assert cfg.sampling_parameters.sample_dimensions == pytest.approx(2.0)
+
+
+@pytest.mark.parametrize(
+    "field,value",
+    [
+        ("sample_dimensions", 0),
+        ("sample_dimensions", -1.0),
+        ("sample_dimensions", float("nan")),
+        ("sample_dimensions", {"value": -30, "units": "arcmin"}),
+        ("dec_bounds", [-95.0, 10.0]),
+        ("dec_bounds", [10.0, 90.5]),
+        ("dec_bounds", [float("nan"), 10.0]),
+    ],
+)
+def test_config_rejects_bad_sampling(field, value):
+    """A non-positive or NaN radius would match no catalog row and a
+    declination off the sphere would fold the patch back: both refuse at
+    load, naming the field, instead of writing a silently wrong run."""
+    with pytest.raises(ValueError, match=field):
+        load_config({"sampling_parameters": {field: value}})
+
+
+def test_config_keeps_negative_ra_for_wrap_patches():
+    cfg = load_config({"sampling_parameters": {"ra_bounds": [-20.0, 20.0]}})
+    assert cfg.sampling_parameters.ra_bounds == (-20.0, 20.0)
+
+
+@pytest.mark.parametrize(
+    "field,value", [("sample_shape", "Rectangle"), ("sample_type", "Grid")]
+)
+def test_default_sampler_refuses_what_it_does_not_draw(field, value):
+    """The default sampler draws random circles only; any other
+    sample_type or sample_shape refuses at build time, on the driver,
+    before Spark is touched (hence no session here)."""
+    analysis = Analysis(
+        {"sampling_parameters": {field: value}},
+        {"t": {"needed-data": ["catalog"], "is-output": True}},
+        {"t": lambda catalog: catalog},
+    )
+    with pytest.raises(ValueError, match=field):
+        analysis.build(None, None)
 
 
 # --- variant overlay (reference manage.py:206-332 semantics) --------------

@@ -37,19 +37,27 @@ def test_default_fallback():
 
 def test_sampler_hook_overrides_analysis(spark):
     """A registered generate_samples plugin replaces the uniform sampler
-    inside Analysis.build (the reference's plugin use-case)."""
+    inside Analysis.build (the reference's plugin use-case).  It gets the
+    sampling parameters as configured, including a sample_shape the
+    default sampler refuses."""
     from cosmap_spark.pipeline.analysis import Analysis
     from cosmap_spark.tables import catalog_df
 
+    seen = []
+
     @plugins.register("generate_samples")
     def fixed_grid(spark_, sampling):
+        seen.append(sampling.sample_shape)
         return spark_.createDataFrame(
             [(0, 137.508, 13.654584745987911, 5.0)],
             "sample_id long, ra double, dec double, radius_deg double",
         )
 
     analysis = Analysis(
-        {"name": "hooked", "sampling_parameters": {"n_samples": 999}},
+        {
+            "name": "hooked",
+            "sampling_parameters": {"n_samples": 999, "sample_shape": "Rectangle"},
+        },
         {
             "count_objects": {
                 "needed-data": ["catalog"],
@@ -65,6 +73,7 @@ def test_sampler_hook_overrides_analysis(spark):
     ).collect()
     # one fixed sample centered exactly on object 1's position
     assert len(rows) == 1 and rows[0]["sample_id"] == 0 and rows[0]["count"] >= 1
+    assert seen == ["Rectangle"]
 
 
 def test_toml_run_config(tmp_path):
