@@ -415,7 +415,7 @@ def incremental_minhash_dedup(
     # loud refusal for remote URIs: os.path.exists is ALWAYS False for
     # s3a:// / hdfs:// paths, so an existing store would silently be
     # treated as first-batch and dedup history would restart from empty
-    _require_local(store_path, "incremental_minhash_dedup")
+    store_path = _require_local(store_path, "incremental_minhash_dedup")
     if num_hashes % bands:
         raise ValueError(
             f"num_hashes ({num_hashes}) must be divisible by bands "

@@ -26,9 +26,8 @@ Two bucketing strategies, one interleave:
   range, but outliers clamp to the boundary cells and heavy skew
   concentrates rows in few cells (the SCALE.md trade-off note).
 
-This module is the CANONICAL z-order/layout implementation;
-``sinks.writers.write_zordered`` / ``describe_layout`` delegate here
-(the sink layer adds path-level concerns only).  The reference has no
+This module is the one z-order/layout implementation in the package.
+The reference has no
 layout story (its catalogs are fixed HDF5 —
 /root/reference/src/cosmap/dataset/opencosmo.py); this module is part
 of the beyond-reference pipeline surface.
@@ -187,9 +186,8 @@ def describe_layout(path: str, columns: list[str]) -> list[dict]:
 
     Use it to answer "is this table worth re-clustering?": for a
     predicate box, the fraction of row groups whose bounds intersect
-    it IS the scan fraction a filtered query will pay.  (Re-exported
-    as ``sinks.writers.describe_layout``; this is the one footer
-    reader in the engine.)"""
+    it IS the scan fraction a filtered query will pay.  (This is the
+    one footer reader in the engine.)"""
     import glob as _glob
 
     import pyarrow.parquet as pq

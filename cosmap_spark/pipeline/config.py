@@ -222,7 +222,6 @@ class AnalysisConfig(BaseModel):
     model_config = ConfigDict(extra="allow")
 
     name: str = "analysis"
-    threads: int = Field(default=1, ge=1)
     sampling_parameters: SamplingParameters = SamplingParameters()
     dataset_parameters: DatasetParameters = DatasetParameters()
     output_parameters: OutputParameters = OutputParameters()

@@ -25,27 +25,24 @@ from cosmap_spark.pipeline.errors import CosmapSparkError
 #: files an analysis directory must provide (reference files.json)
 REQUIRED_FILES = ("transformations.json", "parameters.json", "transformations.py")
 
-def _default_registry() -> Path:
-    """Resolve the registry path AT CALL TIME: a module-import-time read
-    of COSMAP_SPARK_REGISTRY would freeze into every default argument,
-    so a test (or wrapper) setting the env var after import would
-    silently write to the user's real ~/.cosmap_spark registry."""
-    return Path(
-        os.environ.get(
-            "COSMAP_SPARK_REGISTRY",
-            str(Path.home() / ".cosmap_spark" / "known_analyses.json"),
-        )
-    )
+def _default_registry(env: str = "COSMAP_SPARK_REGISTRY",
+                      name: str = "known_analyses.json") -> Path:
+    """Resolve a registry path AT CALL TIME: a module-import-time read
+    of the env var would freeze into every default argument, so a test
+    (or wrapper) setting it after import would silently write to the
+    user's real ~/.cosmap_spark registry.  The dataset registry
+    (sources/datasets.py) resolves its own env var and file here too."""
+    return Path(os.environ.get(env, str(Path.home() / ".cosmap_spark" / name)))
 
 
-def _read_registry(path: Path | None = None) -> dict[str, str]:
+def _read_registry(path: Path | None = None) -> dict:
     path = path or _default_registry()
     if path.exists():
         return json.loads(path.read_text())
     return {}
 
 
-def _write_registry(reg: dict[str, str], path: Path | None = None) -> None:
+def _write_registry(reg: dict, path: Path | None = None) -> None:
     path = path or _default_registry()
     path.parent.mkdir(parents=True, exist_ok=True)
     path.write_text(json.dumps(reg, indent=2, sort_keys=True))

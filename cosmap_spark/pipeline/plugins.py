@@ -6,7 +6,9 @@ unique, requested by name (reference src/cosmap/plugins/manage.py:24-58,
 specs src/cosmap/analysis/plugins.py:8-45, registry
 src/cosmap/plugins/plugins.json:1-11).  Here the same contract is a
 lightweight registry (no pluggy dependency): one implementation per hook
-name, firstresult semantics, defaults provided by the engine.
+name, firstresult semantics, defaults provided by the engine.  Only
+hooks the engine calls are known: registering ``generate_tasks`` (no
+task loop here — Spark schedules the work) raises.
 
 Spark-relevant hooks:
 
@@ -28,7 +30,7 @@ from cosmap_spark.pipeline.errors import CosmapSparkError
 #: reference's ``unique=True`` hookspecs)
 _HOOKS: dict[str, Callable] = {}
 
-KNOWN_HOOKS = ("generate_samples", "cone_strategy", "generate_tasks")
+KNOWN_HOOKS = ("generate_samples", "cone_strategy")
 
 
 def register(hook: str, fn: Callable | None = None, *, replace: bool = False):

@@ -17,13 +17,11 @@ from cosmap_spark.sinks.mor import (  # noqa: F401
     mor_vacuum,
 )
 from cosmap_spark.sinks.writers import (  # noqa: F401
-    append_csv,
     compact_parquet,
     delete_keys,
-    describe_layout,
     merge_upsert,
     merge_upsert_partitioned,
     multi_output,
+    publish,
     write_output,
-    write_zordered,
 )

@@ -4,9 +4,9 @@ versioned store in this package: the merge-on-read table
 indexes (:mod:`cosmap_spark.operators.index_store`).  This module is
 the only one that knows their on-disk layout.
 
-A directory rename (``writers._swap_in`` / ``_bootstrap_store``, kept
-for the plain parquet directories any Spark reader must be able to
-read directly) is atomic-enough on a local filesystem but the wrong
+A directory rename (``writers.publish``, kept for the plain
+directories any Spark reader must be able to read directly) is
+atomic-enough on a local filesystem but the wrong
 primitive for the stated 100 TB target, where stores live on an
 object store and a directory "rename" is a non-atomic O(files) copy.
 The public fix — Delta Lake's ``_delta_log`` and Iceberg's metadata

@@ -14,29 +14,34 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def append_csv(df: DataFrame, path: str, *, header: bool = True) -> None:
-    """Append-mode CSV sink (reference dataframeCsvWriter semantics:
-    header on first write — Spark writes one header per file, which is
-    the distributed-correct reading of that contract)."""
-    df.write.mode("append").option("header", header).csv(path)
+_FORMATS = ("parquet", "csv", "json", "orc")
+
+
+def _writer(df: DataFrame, fmt: str, mode: str,
+            partition_by: list[str] | None):
+    """The one format switch of the sinks: a configured writer, ready
+    for ``.save(path)``.  CSV gets one header per file — the
+    distributed reading of the reference's header-on-first-write."""
+    if fmt not in _FORMATS:
+        raise ValueError(f"unsupported sink format {fmt!r}")
+    writer = df.write.mode(mode).format(fmt)
+    if fmt == "csv":
+        writer = writer.option("header", True)
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    return writer
 
 
 def write_output(df: DataFrame, path: str, *, fmt: str = "parquet",
                  mode: str = "append", partition_by: list[str] | None = None) -> None:
-    """General sink: parquet (primary), csv, json; optional partitioning."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    if fmt == "csv":
-        writer.option("header", True).csv(path)
-    elif fmt == "json":
-        writer.json(path)
-    elif fmt == "parquet":
-        writer.parquet(path)
-    elif fmt == "orc":
-        writer.orc(path)
+    """General sink: parquet (primary), csv, json, orc; optional
+    partitioning.  ``mode="overwrite"`` goes through :func:`publish`,
+    so a failed or killed write leaves the previous output in place;
+    every other mode is Spark's own."""
+    if mode.lower() == "overwrite":  # Spark's mode names are case-blind
+        publish(path, df, fmt=fmt, partition_by=partition_by)
     else:
-        raise ValueError(f"unsupported sink format {fmt!r}")
+        _writer(df, fmt, mode, partition_by).save(path)
 
 
 def multi_output(outputs: dict[str, DataFrame], base_path: str,
@@ -58,8 +63,10 @@ def compact_parquet(spark, src_path: str, dst_path: str,
     Small files are the classic landing-zone pathology at scale — a
     100 TB table written in 1 MB files means 10⁸ parquet footers per
     scan.  ``coalesce`` (not ``repartition``) avoids a shuffle: it only
-    merges read-splits.  With ``zorder_cols`` the rewrite instead goes
-    through :func:`cosmap_spark.operators.layout.write_zordered` —
+    merges read-splits.  The plain rewrite goes through
+    :func:`publish`, so ``dst_path`` may equal ``src_path``.  With
+    ``zorder_cols`` the rewrite instead goes through
+    :func:`cosmap_spark.operators.layout.write_zordered` —
     compaction and clustering in the same (range-shuffled) pass, the
     OPTIMIZE-with-ZORDER move.  Run per-partition-directory for
     partitioned tables so partition pruning is preserved."""
@@ -74,56 +81,8 @@ def compact_parquet(spark, src_path: str, dst_path: str,
     if zorder_cols:
         _wz(df, dst_path, zorder_cols, bits=bits, num_files=n_files)
     else:
-        df.coalesce(n_files).write.mode("overwrite").parquet(dst_path)
+        publish(dst_path, df.coalesce(n_files))
     return n_files
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    *,
-    cols: list[str],
-    ranges: dict[str, tuple[float, float]] | None = None,
-    bits: int = 16,
-    num_files: int = 64,
-    mode: str = "overwrite",
-) -> None:
-    """Write parquet clustered on a Z-order (Morton) space-filling curve
-    over ``cols`` — the multi-dimensional row-group-pruning layout.
-
-    Partition pruning handles ONE leading dimension; Z-ordering makes
-    parquet min/max stats selective in EVERY interleaved dimension at
-    once (the Delta/Iceberg OPTIMIZE ZORDER move).  Sink-layer wrapper
-    preserving this module's historical fixed-range signature; the
-    implementation (both bucketing strategies, the interleave, the
-    range shuffle) is canonical in
-    :mod:`cosmap_spark.operators.layout` — this wrapper keeps the
-    ``range`` strategy (given or min/max-derived [lo, hi) ranges,
-    outliers clamped) for reproducible layouts across independent
-    writes of the same declared range; use the operator directly for
-    the skew-robust quantile-rank strategy."""
-    from cosmap_spark.operators.layout import write_zordered as _wz
-
-    _wz(
-        df,
-        path,
-        cols,
-        bits=bits,
-        num_files=num_files,
-        mode=mode,
-        strategy="range",
-        ranges=ranges,
-    )
-
-
-def describe_layout(path: str, columns: list[str]) -> list[dict]:
-    """Row-group-level min/max layout report — delegates to the
-    canonical footer reader in
-    :func:`cosmap_spark.operators.layout.describe_layout` (see there;
-    kept here because layout reports are a sink-side ops concern)."""
-    from cosmap_spark.operators.layout import describe_layout as _dl
-
-    return _dl(path, columns)
 
 
 def merge_upsert(spark, path: str, updates: DataFrame, keys: list[str],
@@ -143,16 +102,12 @@ def merge_upsert(spark, path: str, updates: DataFrame, keys: list[str],
     appending fresh signature ids) the rewrite is skipped entirely and
     the new rows append as new files: O(batch), not O(table).
 
-    Rewrites land fully in a temp directory BEFORE the live directory
-    is swapped (read-before-delete), then swap by two renames.  The
-    swap is NOT atomic: a reader racing the μs window between the
-    renames can see a missing path, and a crash inside it leaves the
-    data under ``<path>.__merge_backup`` (deterministic name — restore
-    by renaming it back).  Directory renames cannot be made atomic on a
-    plain filesystem; a log-backed format (Delta/Iceberg) is the real
-    fix at production scale, and this helper is the format-free
-    approximation.  At scale with a partitioned table, run
-    per-partition so only touched partitions rewrite.
+    The first write and every rewrite go through :func:`publish`: the
+    new table lands fully in a staging directory BEFORE the live one
+    is replaced (read-before-delete; see there for the rename window
+    and the restore a crash inside it needs).  At scale with a
+    partitioned table, run per-partition so only touched partitions
+    rewrite.
 
     ``allow_new_columns=True`` is ADD-only schema evolution: update
     columns the table lacks widen it (existing rows read back NULL
@@ -164,10 +119,9 @@ def merge_upsert(spark, path: str, updates: DataFrame, keys: list[str],
 
     from cosmap_spark.operators.merge import merge_upsert as _merge_plan
 
-    _require_local(path, "merge_upsert")
-    _refuse_interrupted_swap(path)
+    path = _require_local(path, "merge_upsert")
     if not os.path.exists(path):
-        updates.write.mode("overwrite").parquet(path)
+        publish(path, updates)
         return
     existing = spark.read.parquet(path)
     if allow_new_columns:
@@ -189,10 +143,7 @@ def merge_upsert(spark, path: str, updates: DataFrame, keys: list[str],
                 *[F.col(f.name).cast(f.dataType)
                   for f in existing.schema.fields]
             )
-            _swap_in(
-                path,
-                _merge_plan(existing, updates, keys, assume_unique=True),
-            )
+            publish(path, _merge_plan(existing, updates, keys, assume_unique=True))
             return
     # align updates to the EXISTING column order AND types: appending
     # files with wider types (e.g. long keys into an int table) would
@@ -204,7 +155,7 @@ def merge_upsert(spark, path: str, updates: DataFrame, keys: list[str],
     if existing.join(F.broadcast(upd_keys), keys, "left_semi").limit(1).count() == 0:
         updates.write.mode("append").parquet(path)
         return
-    _swap_in(path, _merge_plan(existing, updates, keys, assume_unique=True))
+    publish(path, _merge_plan(existing, updates, keys, assume_unique=True))
 
 
 def merge_upsert_partitioned(
@@ -238,9 +189,9 @@ def merge_upsert_partitioned(
     import os
     import re
 
-    _require_local(path, "merge_upsert_partitioned")
+    path = _require_local(path, "merge_upsert_partitioned")
     if not os.path.exists(path):
-        updates.write.mode("overwrite").partitionBy(partition_col).parquet(path)
+        publish(path, updates, partition_by=[partition_col])
         return
     touched = [
         r["p"] for r in updates.select(
@@ -269,36 +220,49 @@ def merge_upsert_partitioned(
         merge_upsert(spark, part_dir, slice_df, keys)
 
 
-def _require_local(path: str, op: str) -> None:
-    """The swap/ledger machinery here is built on ``os.rename`` /
+def _require_local(path: str, op: str) -> str:
+    """The publish/ledger machinery here is built on ``os.rename`` /
     ``os.path`` — driver-local filesystem semantics.  A remote URI
     (``s3a://``, ``hdfs://``…) would not fail loudly: ``os.path.exists``
     is simply always False there, so an EXISTING store would be treated
     as absent and silently reinitialized from one batch — permanent
     data/history loss with no error.  Refuse up front; object stores
-    want a log-backed table format (Delta/Iceberg), not rename dances."""
+    want a log-backed table format (Delta/Iceberg), not rename dances.
+
+    Returns the local path to use for EVERY later call, ``os`` and
+    Spark alike: a ``file:`` URI loses its scheme (``os.path`` would
+    otherwise see a relative name that never exists), and a trailing
+    slash is dropped so sibling names stay siblings."""
+    import os
     from urllib.parse import urlparse
 
-    scheme = urlparse(path).scheme
+    parsed = urlparse(path)
+    if parsed.scheme == "file":
+        return os.path.normpath(parsed.path)
     # len > 1 excludes Windows drive letters ("C:\...")
-    if scheme and scheme != "file" and len(scheme) > 1:
+    if parsed.scheme and len(parsed.scheme) > 1:
         raise ValueError(
             f"{op} maintains its store with local-filesystem renames; "
-            f"got {path!r} ({scheme}://).  Use a local path, or a "
+            f"got {path!r} ({parsed.scheme}://).  Use a local path, or a "
             "log-backed table format for object stores"
         )
+    return os.path.normpath(path)
+
+
+#: where :func:`publish` parks the live directory during its swap
+_BACKUP_SUFFIX = ".__merge_backup"
 
 
 def _refuse_interrupted_swap(path: str) -> None:
-    """A crash between ``_swap_in``'s two renames leaves the live path
-    MISSING and the whole table under the backup name.  The next merge
-    must not fall into the it's-a-new-table branch (it would rewrite
-    the table as just the update batch, and a later successful swap
-    would delete the backup holding the only full copy) — refuse and
-    tell the operator how to restore."""
+    """A crash between :func:`publish`'s two swap renames leaves the
+    live path MISSING and the whole table under the backup name.  The
+    next write must not fall into the it's-a-new-table branch (it would
+    rewrite the table as just the update batch, and a later successful
+    swap would delete the backup holding the only full copy) — refuse
+    and tell the operator how to restore."""
     import os
 
-    backup = f"{path}.__merge_backup"
+    backup = path + _BACKUP_SUFFIX
     if os.path.exists(backup) and not os.path.exists(path):
         raise RuntimeError(
             f"interrupted merge swap: {path!r} is missing but the "
@@ -309,70 +273,68 @@ def _refuse_interrupted_swap(path: str) -> None:
         )
 
 
-def _bootstrap_store(
+def publish(
     path: str,
     df: DataFrame,
     *,
+    fmt: str = "parquet",
+    partition_by: list[str] | None = None,
     extra_files: dict[str, str] | None = None,
 ) -> None:
-    """First-write sibling of :func:`_swap_in` for the streaming
-    stores: write the frame AND its sidecar files into a temp
-    directory, then ONE rename into place — the sidecars can never
-    exist without the data nor the data without its sidecars (a
-    sidecar written AFTER the store once left a crash window where a
-    mismatched-parameter resume passed validation and silently
-    corrupted history — the sketch_stream k lesson).  The parent
-    directory is created if needed."""
-    import os
-    import uuid
+    """Replace the plain directory at ``path`` with ``df`` — the one
+    commit step of every such directory in the package: the overwrite
+    sink, ``merge_upsert``/``delete_keys``, compaction and the
+    streaming monitor stores.  (Versioned stores commit through
+    :mod:`cosmap_spark.sinks.commit` instead.)
 
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    tmp = f"{path}.__init_tmp_{uuid.uuid4().hex}"
-    df.write.mode("overwrite").parquet(tmp)
-    for name, content in (extra_files or {}).items():
-        with open(os.path.join(tmp, name), "w") as f:
-            f.write(content)
-    os.rename(tmp, path)
+    In order: refuse a non-local path (:func:`_require_local`) and an
+    interrupted swap (:func:`_refuse_interrupted_swap`); write the
+    frame, then its ``extra_files`` sidecars (name → text;
+    ``_``-prefixed names are invisible to Spark readers), into a hidden
+    sibling staging directory; make it live — with ONE rename when
+    ``path`` does not exist yet, else by the backup swap: clear a stale
+    backup, rename live → ``<path>.__merge_backup``, staging → live
+    (restoring live if that rename fails), drop the backup.  If the
+    staged write raises, the staging directory is removed and ``path``
+    is untouched.  Data and sidecars therefore replace together or not
+    at all (a sidecar written after its store once let a
+    mismatched-parameter resume pass validation).
 
-
-def _swap_in(
-    path: str,
-    replacement: DataFrame,
-    *,
-    extra_files: dict[str, str] | None = None,
-) -> None:
-    """Write ``replacement`` fully to a temp directory, then swap it in
-    via the backup-rename dance shared by merge_upsert/delete_keys (see
-    merge_upsert's docstring for the atomicity caveats).
-
-    ``extra_files`` (name → text content) land INSIDE the temp
-    directory before the swap, so sidecar metadata and data replace
-    together or not at all — the streaming Misra-Gries store rides its
-    epoch stamp on this (underscore-prefixed names are invisible to
-    Spark's parquet reader).
-
-    The swap itself: clear a stale backup, rename live→backup,
-    tmp→live (restoring live if that rename fails), drop the backup.
-    It uses the standard ``.__merge_backup`` suffix, so
-    :func:`_refuse_interrupted_swap` covers every caller."""
+    The swap is NOT atomic: a reader racing the μs window between its
+    renames finds no directory, and a crash inside it leaves the data
+    under the backup name — the next publish refuses and names the
+    restore.  Directory renames cannot be made atomic on a plain
+    filesystem; a log-backed format is the real fix at production
+    scale."""
     import os
     import shutil
     import uuid
 
-    tmp = f"{path}.__merge_tmp_{uuid.uuid4().hex}"
-    replacement.write.mode("overwrite").parquet(tmp)
-    for name, content in (extra_files or {}).items():
-        with open(os.path.join(tmp, name), "w") as f:
-            f.write(content)
-    backup = f"{path}.__merge_backup"
+    path = _require_local(path, "publish")
+    _refuse_interrupted_swap(path)
+    writer = _writer(df, fmt, "overwrite", partition_by)
+    parent, name = os.path.split(path)
+    os.makedirs(parent or ".", exist_ok=True)
+    staged = os.path.join(parent, f".{name}.__publish_{uuid.uuid4().hex}")
+    try:
+        writer.save(staged)
+        for fname, content in (extra_files or {}).items():
+            with open(os.path.join(staged, fname), "w") as f:
+                f.write(content)
+    except BaseException:
+        shutil.rmtree(staged, ignore_errors=True)
+        raise
+    if not os.path.exists(path):
+        os.rename(staged, path)
+        return
+    backup = path + _BACKUP_SUFFIX
     if os.path.exists(backup):
-        # the live path exists (callers checked _refuse_interrupted_swap)
-        # so the previous swap COMPLETED and only its cleanup was lost —
-        # the backup is stale and safe to clear
+        # the live path exists, so the previous swap COMPLETED and only
+        # its cleanup was lost — the backup is stale and safe to clear
         shutil.rmtree(backup)
     os.rename(path, backup)
     try:
-        os.rename(tmp, path)
+        os.rename(staged, path)
     except BaseException:
         os.rename(backup, path)  # restore the live table, then re-raise
         raise
@@ -382,7 +344,7 @@ def _swap_in(
 def delete_keys(spark, path: str, keys_df: DataFrame, key_cols: list[str]) -> int:
     """Propagate deletions into a parquet table — the
     right-to-be-forgotten primitive: every row whose key appears in
-    ``keys_df`` is removed, via the same copy-on-write swap as
+    ``keys_df`` is removed, via the same :func:`publish` rewrite as
     ``merge_upsert``.  Returns the number of rows removed; a no-match
     call is a NO-OP (no rewrite — idempotent re-runs after a partial
     propagation are free).  Run against every derived table holding the
@@ -390,7 +352,8 @@ def delete_keys(spark, path: str, keys_df: DataFrame, key_cols: list[str]) -> in
     deletion end-to-end."""
     import os
 
-    _require_local(path, "delete_keys")
+    path = _require_local(path, "delete_keys")
+    # a table parked under the backup name is not "nothing to delete"
     _refuse_interrupted_swap(path)
     if not os.path.exists(path):
         return 0
@@ -399,5 +362,5 @@ def delete_keys(spark, path: str, keys_df: DataFrame, key_cols: list[str]) -> in
     n_hit = existing.join(F.broadcast(dk), key_cols, "left_semi").count()
     if n_hit == 0:
         return 0
-    _swap_in(path, existing.join(F.broadcast(dk), key_cols, "left_anti"))
+    publish(path, existing.join(F.broadcast(dk), key_cols, "left_anti"))
     return n_hit

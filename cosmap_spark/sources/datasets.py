@@ -15,33 +15,26 @@ never see the registry.
 
 from __future__ import annotations
 
-import json
-import os
 from pathlib import Path
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
 from cosmap_spark.pipeline.errors import CosmapSparkError
+from cosmap_spark.pipeline.manage import (
+    _default_registry,
+    _read_registry,
+    _write_registry,
+)
 from cosmap_spark.sources.readers import read_catalog_source, read_hdf5_directory
 
-_DEFAULT_REGISTRY = Path(
-    os.environ.get(
-        "COSMAP_SPARK_DATASETS",
-        str(Path.home() / ".cosmap_spark" / "known_datasets.json"),
+
+def _registry(registry: Path | None) -> Path:
+    """The given registry, else ``$COSMAP_SPARK_DATASETS``, else
+    ``~/.cosmap_spark/known_datasets.json`` — resolved per call."""
+    return registry or _default_registry(
+        "COSMAP_SPARK_DATASETS", "known_datasets.json"
     )
-)
-
-
-def _read(path: Path) -> dict[str, dict[str, Any]]:
-    if path.exists():
-        return json.loads(path.read_text())
-    return {}
-
-
-def _write(reg: dict[str, dict[str, Any]], path: Path) -> None:
-    path.parent.mkdir(parents=True, exist_ok=True)
-    path.write_text(json.dumps(reg, indent=2, sort_keys=True))
 
 
 def register_dataset(
@@ -67,8 +60,8 @@ def register_dataset(
         )
     if fmt == "hdf5" and not schema:
         raise CosmapSparkError("hdf5 datasets must declare a schema at registration")
-    registry = registry or _DEFAULT_REGISTRY
-    reg = _read(registry)
+    registry = _registry(registry)
+    reg = _read_registry(registry)
     if name in reg:
         raise CosmapSparkError(f"dataset {name!r} is already registered")
     entry: dict[str, Any] = {"path": str(path), "format": fmt}
@@ -77,24 +70,24 @@ def register_dataset(
     if schema:
         entry["schema"] = schema
     reg[name] = entry
-    _write(reg, registry)
+    _write_registry(reg, registry)
 
 
 def unregister_dataset(name: str, *, registry: Path | None = None) -> None:
-    registry = registry or _DEFAULT_REGISTRY
-    reg = _read(registry)
+    registry = _registry(registry)
+    reg = _read_registry(registry)
     if name not in reg:
         raise CosmapSparkError(f"dataset {name!r} is not registered")
     del reg[name]
-    _write(reg, registry)
+    _write_registry(reg, registry)
 
 
 def list_datasets(*, registry: Path | None = None) -> dict[str, dict[str, Any]]:
-    return _read(registry or _DEFAULT_REGISTRY)
+    return _read_registry(_registry(registry))
 
 
 def resolve_dataset(name: str, *, registry: Path | None = None) -> dict[str, Any]:
-    reg = _read(registry or _DEFAULT_REGISTRY)
+    reg = _read_registry(_registry(registry))
     if name not in reg:
         raise CosmapSparkError(f"dataset {name!r} is not registered")
     return reg[name]
@@ -114,7 +107,7 @@ def open_dataset(
     A caller column outside the registered projection is refused — the
     registration may exist precisely to hide columns (PII, unstable
     fields), and silently widening past it would defeat that."""
-    reg = _read(registry or _DEFAULT_REGISTRY)
+    reg = _read_registry(_registry(registry))
     if name_or_path in reg:
         entry = reg[name_or_path]
         registered = entry.get("columns")

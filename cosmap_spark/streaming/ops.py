@@ -757,12 +757,13 @@ def _ledgered_loop(stream_df: DataFrame, store_path: str, checkpoint: str,
                    pre_epoch=None):
     """The shared exactly-once store driver every batch-twin monitor
     rides (sketch_stream, drift_stream, category_drift_stream,
-    abtest_stream; heavy_hitters_stream keeps its bespoke copy because
-    its sidecar carries batch-dependent state — the running N):
-    per micro-batch, ``batch_state(batch_df)`` reduces the batch to
-    its bounded state frame, ``merge_state(old, batch)`` folds it into
-    the persisted store at ``store_path/subdir``, and the store is
-    atomically swapped (``_swap_in``/``_bootstrap_store``).
+    abtest_stream, ks_stream, reservoir_stream; heavy_hitters_stream
+    keeps its own ledger because its sidecar carries batch-dependent
+    state — the running N): per micro-batch, ``batch_state(batch_df)``
+    reduces the batch to its bounded state frame, ``merge_state(old,
+    batch)`` folds it into the persisted store at ``store_path/subdir``,
+    and the result replaces the store through
+    :func:`cosmap_spark.sinks.writers.publish`.
 
     Exactly-once is TWO-layered:
 
@@ -786,14 +787,9 @@ def _ledgered_loop(stream_df: DataFrame, store_path: str, checkpoint: str,
     ``sketch_stream``."""
     import os
 
-    from cosmap_spark.sinks.writers import (
-        _bootstrap_store,
-        _refuse_interrupted_swap,
-        _require_local,
-        _swap_in,
-    )
+    from cosmap_spark.sinks.writers import _require_local, publish
 
-    _require_local(store_path, op)
+    store_path = _require_local(store_path, op)
     store = os.path.join(store_path, subdir)
     stamp_file = os.path.join(store, "_last_epoch")
 
@@ -805,7 +801,6 @@ def _ledgered_loop(stream_df: DataFrame, store_path: str, checkpoint: str,
             return  # replayed epoch: state already includes it
         if pre_epoch is not None:
             pre_epoch()
-        _refuse_interrupted_swap(store)
         os.makedirs(ledger, exist_ok=True)
         if os.path.exists(stamp_file):
             with open(stamp_file) as f:
@@ -822,10 +817,8 @@ def _ledgered_loop(stream_df: DataFrame, store_path: str, checkpoint: str,
         extra["_last_epoch"] = str(epoch_id)
         batch = batch_state(batch_df)
         if os.path.exists(store):
-            old = spark.read.parquet(store)
-            _swap_in(store, merge_state(old, batch), extra_files=extra)
-        else:
-            _bootstrap_store(store, batch, extra_files=extra)
+            batch = merge_state(spark.read.parquet(store), batch)
+        publish(store, batch, extra_files=extra)
         with open(done_marker, "w") as f:
             f.write("ok")
 
@@ -899,7 +892,7 @@ def sketch_stream(stream_df: DataFrame, store_path: str, checkpoint: str,
         raise ValueError(f"kind must be 'hll' or 'kmv'; got {kind!r}")
     from cosmap_spark.sinks.writers import _require_local
 
-    _require_local(store_path, "sketch_stream")
+    store_path = _require_local(store_path, "sketch_stream")
 
     def check_k() -> None:
         # the k sidecar lives INSIDE the sketches dir (written by the
@@ -995,7 +988,7 @@ def drift_stream(stream_df: DataFrame, store_path: str, checkpoint: str,
     from cosmap_spark.operators.diff import drift_bin_counts, drift_reference
     from cosmap_spark.sinks.writers import _require_local
 
-    _require_local(store_path, "drift_stream")
+    store_path = _require_local(store_path, "drift_stream")
     ref_dir = os.path.join(store_path, "ref")
     meta_file = os.path.join(ref_dir, "_drift_meta")
     if os.path.exists(ref_dir):
@@ -1017,9 +1010,9 @@ def drift_stream(stream_df: DataFrame, store_path: str, checkpoint: str,
         bounds, ref_counts = drift_reference(
             reference, cols, bins=bins, relative_error=relative_error
         )
-        from cosmap_spark.sinks.writers import _bootstrap_store
+        from cosmap_spark.sinks.writers import publish
 
-        _bootstrap_store(
+        publish(
             ref_dir, ref_counts,
             extra_files={"_drift_meta": _json.dumps(
                 {"cols": list(cols), "bins": bins, "bounds": bounds}
@@ -1159,7 +1152,7 @@ def category_drift_stream(stream_df: DataFrame, store_path: str,
     )
     from cosmap_spark.sinks.writers import _require_local
 
-    _require_local(store_path, "category_drift_stream")
+    store_path = _require_local(store_path, "category_drift_stream")
     if other_label == null_label:
         raise ValueError(
             "category_drift_stream: other_label and null_label must differ"
@@ -1273,9 +1266,9 @@ def category_drift_stream(stream_df: DataFrame, store_path: str,
                 "column string, category string, n long",
             )
             source = "reference_top_n"
-        from cosmap_spark.sinks.writers import _bootstrap_store
+        from cosmap_spark.sinks.writers import publish
 
-        _bootstrap_store(
+        publish(
             ref_dir, ref_counts,
             extra_files={"_catdrift_meta": _json.dumps({
                 "cols": list(cols), "top_n": top_n,
@@ -1448,7 +1441,7 @@ def abtest_stream(stream_df: DataFrame, store_path: str, checkpoint: str,
 
     from cosmap_spark.sinks.writers import _require_local
 
-    _require_local(store_path, "abtest_stream")
+    store_path = _require_local(store_path, "abtest_stream")
     scale = float(10 ** quantize_dp)
 
     def check_dp() -> None:
@@ -1550,9 +1543,9 @@ def ks_stream(stream_df: DataFrame, store_path: str, checkpoint: str,
     from cosmap_spark.operators.stats_tests import (
         one_side_quantized_counts,
     )
-    from cosmap_spark.sinks.writers import _bootstrap_store, _require_local
+    from cosmap_spark.sinks.writers import _require_local, publish
 
-    _require_local(store_path, "ks_stream")
+    store_path = _require_local(store_path, "ks_stream")
     ref_dir = os.path.join(store_path, "ref")
     meta_file = os.path.join(ref_dir, "_ks_meta")
     if os.path.exists(ref_dir):
@@ -1574,7 +1567,7 @@ def ks_stream(stream_df: DataFrame, store_path: str, checkpoint: str,
         ref_counts = one_side_quantized_counts(
             reference, cols, quantize_dp, "ks_stream"
         )
-        _bootstrap_store(
+        publish(
             ref_dir, ref_counts,
             extra_files={"_ks_meta": _json.dumps(
                 {"cols": list(cols), "quantize_dp": quantize_dp}
@@ -1935,6 +1928,7 @@ def store_health(spark: SparkSession, stores: dict[str, str], *,
     import time as _time
 
     from cosmap_spark.sinks.commit import ManifestStore
+    from cosmap_spark.sinks.writers import _BACKUP_SUFFIX
 
     rows: list[tuple] = []
 
@@ -2014,8 +2008,8 @@ def store_health(spark: SparkSession, stores: dict[str, str], *,
                 full = _os.path.join(path, sub)
                 if sub.startswith(("_", ".")) or not _os.path.isdir(full):
                     continue
-                if sub.endswith("__merge_backup"):
-                    live = full[: -len(".__merge_backup")]
+                if sub.endswith(_BACKUP_SUFFIX):
+                    live = full[: -len(_BACKUP_SUFFIX)]
                     interrupted = not _os.path.exists(live)
                     fact(name, f"pending_interrupted_swap:{sub}",
                          int(interrupted), interrupted)
@@ -2075,10 +2069,9 @@ def heavy_hitters_stream(stream_df: DataFrame, store_path: str,
     import os
 
     from cosmap_spark.operators.sketch import merge_mg_tables, mg_summary
+    from cosmap_spark.sinks.writers import _require_local, publish
 
-    from cosmap_spark.sinks.writers import _require_local
-
-    _require_local(store_path, "heavy_hitters_stream")
+    store_path = _require_local(store_path, "heavy_hitters_stream")
     store = os.path.join(store_path, "counters")
     # meta lives INSIDE the counters dir so the swap replaces both
     # atomically; the legacy location (store_path root) is read as a
@@ -2106,12 +2099,6 @@ def heavy_hitters_stream(stream_df: DataFrame, store_path: str,
         done_marker = os.path.join(ledger, f"epoch-{epoch_id}")
         if os.path.exists(done_marker):
             return  # replayed epoch: counters already include it
-        from cosmap_spark.sinks.writers import (
-            _refuse_interrupted_swap,
-            _swap_in,
-        )
-
-        _refuse_interrupted_swap(store)
         meta = read_meta()
         if meta["k"] != k:
             raise ValueError(
@@ -2132,16 +2119,8 @@ def heavy_hitters_stream(stream_df: DataFrame, store_path: str,
             {"k": k, "n": meta["n"] + n_batch, "last_epoch": epoch_id}
         )
         if os.path.exists(store):
-            old = spark.read.parquet(store)
-            _swap_in(
-                store, merge_mg_tables(old, batch, k=k),
-                extra_files={meta_name: new_meta},
-            )
-        else:
-            from cosmap_spark.sinks.writers import _bootstrap_store
-
-            _bootstrap_store(store, batch,
-                             extra_files={meta_name: new_meta})
+            batch = merge_mg_tables(spark.read.parquet(store), batch, k=k)
+        publish(store, batch, extra_files={meta_name: new_meta})
         with open(done_marker, "w") as f:
             f.write("ok")
 
@@ -2399,7 +2378,7 @@ def mor_ingest_stream(changes: DataFrame, store_path: str,
     # the epoch LEDGER here is os-based, unlike the store's own commit
     # protocol — a remote store with a CommitFS still needs its ledger
     # local
-    _require_local(store_path, "mor_ingest_stream")
+    store_path = _require_local(store_path, "mor_ingest_stream")
     keys = _meta_for(store_path)["keys"]
 
     def run(batch_df: DataFrame, epoch_id: int) -> None:
@@ -2533,27 +2512,27 @@ def upsert_stream(changes: DataFrame, table_path: str, checkpoint: str,
     import shutil
 
     from cosmap_spark.operators.merge import merge_upsert as _merge_plan
+    from cosmap_spark.sinks.writers import (
+        _refuse_interrupted_swap,
+        _require_local,
+        publish,
+    )
 
-    from cosmap_spark.sinks.writers import _require_local
-
-    _require_local(table_path, "upsert_stream")
+    table_path = _require_local(table_path, "upsert_stream")
     drop_cols = [c for c in (seq_col, delete_col) if c is not None]
     # the ledger is a SIBLING named after the table directory itself:
     # two streams under one parent never share markers, and the ledger
     # dies with the table name it describes
-    ledger = f"{table_path.rstrip('/')}.__upsert_epochs"
+    ledger = f"{table_path}.__upsert_epochs"
 
     fingerprint = _batch_fingerprint
 
     def run(batch_df: DataFrame, epoch_id: int) -> None:
-        from cosmap_spark.sinks.writers import _refuse_interrupted_swap
-
         spark = batch_df.sparkSession
         done_marker = os.path.join(ledger, f"epoch-{epoch_id}")
         # a crash inside a previous epoch's swap leaves the table
         # missing with only the backup: the bootstrap branch below
-        # would wipe the ledger and rebuild the table from ONE batch —
-        # refuse until the operator restores the backup
+        # would wipe the ledger before publish refuses — refuse first
         _refuse_interrupted_swap(table_path)
         fp = fingerprint(batch_df)  # one batch-sized job
         if os.path.exists(table_path):
@@ -2581,14 +2560,9 @@ def upsert_stream(changes: DataFrame, table_path: str, checkpoint: str,
             existing = spark.createDataFrame(
                 [], batch_df.drop(*drop_cols).schema
             )
-        merged = _merge_plan(existing, batch_df, keys,
-                             seq_col=seq_col, delete_col=delete_col)
-        if os.path.exists(table_path):
-            from cosmap_spark.sinks.writers import _swap_in
-
-            _swap_in(table_path, merged)
-        else:
-            merged.write.mode("overwrite").parquet(table_path)
+        publish(table_path, _merge_plan(existing, batch_df, keys,
+                                        seq_col=seq_col,
+                                        delete_col=delete_col))
         os.makedirs(ledger, exist_ok=True)
         _write_marker_atomic(done_marker, fp)
 

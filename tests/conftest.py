@@ -62,7 +62,7 @@ SLOW_TESTS = {
     "test_empty_inputs.py::test_operator_sweep",
     "test_fault_injection.py::test_kill_point_matrix",
     "test_fault_injection.py::test_mor_manifest_ingest_kill_matrix",
-    "test_fault_injection.py::test_sink_swap_interrupted_window",
+    "test_fault_injection.py::test_merge_upsert_interrupted_window",
     "test_funnel.py::test_attribution_credit_conservation_property",
     "test_funnel.py::test_cohort_retention_month_boundary_property",
     "test_funnel.py::test_sliding_randomized_differential",

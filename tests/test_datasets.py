@@ -65,7 +65,7 @@ def test_hdf5_dataset_requires_schema(registry):
 def test_cli_dataset_commands(registry, monkeypatch, capsys):
     from cosmap_spark.pipeline import cli
 
-    monkeypatch.setattr(datasets, "_DEFAULT_REGISTRY", registry)
+    monkeypatch.setenv("COSMAP_SPARK_DATASETS", str(registry))
     assert cli.main([
         "register-dataset", "survey", "/root/testdata/sf0.001/customer.parquet",
     ]) == 0
@@ -108,3 +108,17 @@ def test_open_dataset_projection_narrows_not_widens(spark, tmp_path):
     ).columns == ["a"]
     with pytest.raises(CosmapSparkError, match="outside that projection"):
         open_dataset(spark, "vis", columns=["a", "pii"], registry=reg)
+
+
+def test_dataset_registry_env_var_read_at_call_time(tmp_path, monkeypatch):
+    """COSMAP_SPARK_DATASETS set AFTER import must be honored — an
+    import-time default silently wrote to the user's real registry."""
+    reg = tmp_path / "datasets.json"
+    monkeypatch.setenv("COSMAP_SPARK_DATASETS", str(reg))
+    datasets.register_dataset("envtest", "/data/survey.parquet")
+    assert reg.exists()
+    assert datasets.list_datasets() == {
+        "envtest": {"path": "/data/survey.parquet", "format": "parquet"}
+    }
+    datasets.unregister_dataset("envtest")
+    assert datasets.list_datasets() == {}

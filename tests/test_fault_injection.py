@@ -1,37 +1,37 @@
 """Kill-point matrix for every persisted-store crash window.
 
-The exactly-once story of the streaming monitors rests on WHERE the
-epoch stamp rides relative to the store swap
-(streaming/ops.py::_ledgered_loop, heavy_hitters_stream's bespoke
-copy) and on the writers' backup-swap sequence
-(sinks/writers.py::_swap_in).  This suite stops reasoning about it in
-comments and PROVES it: a harness injects a simulated process death at
-each ordered step of the swap, restarts the stream on the same
-checkpoint, and asserts the final store state equals a golden no-crash
-run.  Because the monitor states are exact integers (counts, moment
-sums, MG counters), equality is a SHARP double-merge detector — a
-re-merged epoch inflates them.  (The HLL sketch monitor's estimates
-are union-idempotent, so its rows exercise crash-resume mechanics
-while the integer monitors carry the double-merge sharpness.)
+Every plain directory in the package is replaced by one step,
+sinks/writers.py::publish: the overwrite sink that Analysis.run and
+both benchmark workloads end in, the merge/delete rewrites and the
+streaming monitor stores.  The exactly-once story of the monitors also
+rests on WHERE the epoch stamp rides relative to that replace
+(streaming/ops.py::_ledgered_loop, heavy_hitters_stream's own ledger).
+This suite stops reasoning about it in comments and PROVES it: a
+harness injects a simulated process death at each ordered step of
+publish, restarts on the same checkpoint, and asserts the final state
+equals a golden no-crash run.  Because the monitor states are exact
+integers (counts, moment sums, MG counters), equality is a SHARP
+double-merge detector — a re-merged epoch inflates them.  (The HLL
+sketch monitor's estimates are union-idempotent, so its rows exercise
+crash-resume mechanics while the integer monitors carry the
+double-merge sharpness.)
 
-Kill points, in the order the code runs them
-(writers.py::_swap_in sequence cited per step):
+Kill points, in the order publish runs them:
 
-  after_tmp       replacement tmp dir fully written, death before ANY
-                  rename (writers.py tmp write) — store untouched,
-                  tmp leaked and invisible; resume re-merges.
-  between_renames live store renamed to .__merge_backup, death before
-                  the tmp rename (the non-atomic window _swap_in
-                  documents) — the next start must REFUSE loudly
-                  (_refuse_interrupted_swap) and the documented
+  after_tmp       staged directory fully written, death before ANY
+                  rename — the live directory untouched, the staging
+                  directory leaked under a hidden name; resume
+                  re-merges.
+  between_renames live directory renamed to .__merge_backup, death
+                  before the staging rename (the non-atomic window
+                  publish documents) — the next start must REFUSE
+                  loudly (_refuse_interrupted_swap) and the documented
                   manual restore must lead back to the golden state.
   after_swap      swap fully complete (stamp INSIDE the store), death
-                  before the ledger marker write — the round-8
-                  closure: resume must restore the marker WITHOUT
-                  re-merging.
-  after_bootstrap the first-epoch twin of after_swap
-                  (_bootstrap_store's single rename done, marker
-                  missing).
+                  before the ledger marker write — resume must restore
+                  the marker WITHOUT re-merging.
+  after_bootstrap the first-write twin of after_swap (publish's single
+                  rename done, marker missing).
 """
 
 from __future__ import annotations
@@ -53,53 +53,55 @@ class KillPoint(Exception):
 
 @contextmanager
 def kill_at(step: str, subdir: str, *, nth: int = 1):
-    """Patch writers._swap_in/_bootstrap_store so the ``nth`` call
-    whose target directory's basename is ``subdir`` dies at ``step``.
-    Discrimination by basename keeps construction-time sidecar
-    bootstraps (drift/ks reference freezes under ``ref/``) out of the
-    blast radius.  The mid-sequence steps replicate _swap_in's exact
-    ordering (write tmp → rename live→backup → rename tmp→live) so
-    the death lands INSIDE the real window, not at a call boundary."""
+    """Patch writers.publish so the ``nth`` call whose target
+    directory's basename is ``subdir`` dies at ``step``.  Discrimination
+    by basename keeps construction-time sidecar freezes (drift/ks
+    references under ``ref/``) out of the blast radius; the swap steps
+    count only calls onto an existing directory, after_bootstrap only
+    first writes.  The mid-swap deaths run the REAL publish with
+    ``os.rename`` dying from its first (after_tmp) or second
+    (between_renames) call on — later renames die too, since a dead
+    process restores nothing — so the death lands inside publish's own
+    window, not at a call boundary."""
     import cosmap_spark.sinks.writers as W
 
-    real_swap, real_boot = W._swap_in, W._bootstrap_store
-    swap_steps = {"after_tmp", "between_renames", "after_swap"}
+    real_publish, real_rename = W.publish, os.rename
     seen = {"n": 0}
 
-    def fire(path: str, here: bool) -> bool:
-        # count only calls of the kind this step targets: the swap
-        # steps must not be consumed by the epoch-0 bootstrap call
-        if not here or os.path.basename(path) != subdir:
-            return False
+    def dying_rename(die_at: int):
+        calls = {"n": 0}
+
+        def rename(src, dst):
+            calls["n"] += 1
+            if calls["n"] >= die_at:
+                raise KillPoint(step)
+            real_rename(src, dst)
+
+        return rename
+
+    def publish(path, df, **kw):
+        swap = os.path.exists(path)
+        if (os.path.basename(path) != subdir
+                or swap != (step != "after_bootstrap")):
+            return real_publish(path, df, **kw)
         seen["n"] += 1
-        return seen["n"] == nth
-
-    def swap(path, replacement, *, extra_files=None):
-        if not fire(path, step in swap_steps):
-            return real_swap(path, replacement, extra_files=extra_files)
-        if step == "after_tmp":
-            tmp = f"{path}.__merge_tmp_killtest"
-            replacement.write.mode("overwrite").parquet(tmp)
+        if seen["n"] != nth:
+            return real_publish(path, df, **kw)
+        if step in ("after_swap", "after_bootstrap"):
+            real_publish(path, df, **kw)
             raise KillPoint(step)
-        if step == "between_renames":
-            tmp = f"{path}.__merge_tmp_killtest"
-            replacement.write.mode("overwrite").parquet(tmp)
-            os.rename(path, f"{path}.__merge_backup")
-            raise KillPoint(step)
-        real_swap(path, replacement, extra_files=extra_files)
-        raise KillPoint(step)  # after_swap
+        os.rename = dying_rename({"after_tmp": 1, "between_renames": 2}[step])
+        try:
+            real_publish(path, df, **kw)
+        finally:
+            os.rename = real_rename
+        raise AssertionError(f"publish survived {step}")
 
-    def boot(path, df, *, extra_files=None):
-        if not fire(path, step == "after_bootstrap"):
-            return real_boot(path, df, extra_files=extra_files)
-        real_boot(path, df, extra_files=extra_files)
-        raise KillPoint(step)
-
-    W._swap_in, W._bootstrap_store = swap, boot
+    W.publish = publish
     try:
         yield
     finally:
-        W._swap_in, W._bootstrap_store = real_swap, real_boot
+        W.publish = real_publish
 
 
 def _await(q):
@@ -368,8 +370,7 @@ def test_kill_point_matrix(spark, tmp_path, monitor):
         store = tmp_path / f"{step}_store"
         ckpt = tmp_path / f"{step}_ckpt"
         # after_bootstrap kills the FIRST write (epoch 0); the swap
-        # steps kill the first _swap_in (epoch 1, after a clean
-        # bootstrap)
+        # steps kill the first swap (epoch 1, after a clean bootstrap)
         with kill_at(step, subdir):
             err = _await(start(store, ckpt))
         assert err is not None and "KillPoint" in err, (monitor, step, err)
@@ -390,7 +391,7 @@ def test_kill_point_matrix(spark, tmp_path, monitor):
         assert state(store) == golden, (monitor, step)
 
 
-def test_sink_swap_interrupted_window(spark, tmp_path):
+def test_merge_upsert_interrupted_window(spark, tmp_path):
     """The writers-level twin: a death between merge_upsert's two
     renames leaves the table under the backup name; the next merge
     must refuse (never re-init from the batch) and the documented
@@ -426,8 +427,8 @@ def test_sink_swap_interrupted_window(spark, tmp_path):
 def test_stale_backup_cleared_after_completed_swap(spark, tmp_path):
     """A crash AFTER a completed swap but before backup cleanup leaves
     live + backup both present; the next swap must treat the backup as
-    stale (clear it) and proceed — pinned because _swap_in relies on
-    callers' _refuse_interrupted_swap for the other ordering."""
+    stale (clear it) and proceed — pinned because publish relies on
+    its _refuse_interrupted_swap for the other ordering."""
     from cosmap_spark.sinks.writers import merge_upsert
 
     path = str(tmp_path / "table")
@@ -440,6 +441,62 @@ def test_stale_backup_cleared_after_completed_swap(spark, tmp_path):
     assert not os.path.exists(f"{path}.__merge_backup")
     got = {r["k"]: r["v"] for r in spark.read.parquet(path).collect()}
     assert got[1] == 111 and len(got) == 20
+
+
+def test_overwrite_sink_kill_points(spark, tmp_path):
+    """The flagship sink: ``write_output(mode="overwrite")`` replaces
+    its output through publish, so no death or job failure loses the
+    previous output.  First write, death after the staged write, a
+    Spark job failing inside the staged write, and death between the
+    renames (refusal, then the documented restore)."""
+    from cosmap_spark.sinks.writers import write_output
+
+    out = tmp_path / "out"
+    old = spark.range(0, 5).select(F.col("id").alias("k"))
+    new = spark.range(100, 103).select(F.col("id").alias("k"))
+
+    def rows():
+        return sorted(r["k"] for r in spark.read.parquet(str(out)).collect())
+
+    def beside():  # everything next to the output directory
+        return sorted(n for n in os.listdir(tmp_path) if n != "out")
+
+    # first write: the staged directory becomes live by one rename
+    write_output(old, str(out), mode="overwrite")
+    assert rows() == [0, 1, 2, 3, 4] and beside() == []
+
+    # death after the staged write: old rows still readable; the leaked
+    # staging directory is hidden from readers of the parent
+    with kill_at("after_tmp", "out"), pytest.raises(KillPoint):
+        write_output(new, str(out), mode="overwrite")
+    assert rows() == [0, 1, 2, 3, 4]
+    (leak,) = beside()
+    assert leak.startswith(".out.")
+    shutil.rmtree(tmp_path / leak)
+
+    # a Spark job that fails inside the staged write: old rows intact,
+    # no staging directory left
+    bad = spark.range(0, 3).select(
+        F.when(F.col("id") == 2, F.raise_error(F.lit("boom")))
+        .otherwise(F.col("id")).alias("k")
+    )
+    with pytest.raises(Exception, match="boom"):
+        write_output(bad, str(out), mode="overwrite")
+    assert rows() == [0, 1, 2, 3, 4] and beside() == []
+
+    # death between the renames: the next overwrite refuses with the
+    # restore instruction instead of publishing over a missing output
+    with kill_at("between_renames", "out"), pytest.raises(KillPoint):
+        write_output(new, str(out), mode="overwrite")
+    assert not out.exists()
+    with pytest.raises(RuntimeError, match="interrupted merge swap.*Restore"):
+        write_output(new, str(out), mode="overwrite")
+    os.rename(f"{out}.__merge_backup", out)
+    assert rows() == [0, 1, 2, 3, 4]
+    for n in beside():  # the staging directory the death leaked
+        shutil.rmtree(tmp_path / n)
+    write_output(new, str(out), mode="overwrite")
+    assert rows() == [100, 101, 102] and beside() == []
 
 
 # ---------------------------------------------------------------------------

@@ -19,6 +19,10 @@ def clean_hooks():
 def test_unknown_hook_rejected():
     with pytest.raises(CosmapSparkError, match="unknown hook"):
         plugins.register("made_up_hook", lambda: None)
+    # the reference's task-generation hook has no call site in the
+    # engine: registering it must fail, not be silently ignored
+    with pytest.raises(CosmapSparkError, match="unknown hook"):
+        plugins.register("generate_tasks", lambda: None)
 
 
 def test_unique_registration():
@@ -32,7 +36,7 @@ def test_unique_registration():
 def test_default_fallback():
     assert plugins.call("cone_strategy", 1, 2, default=lambda a, b: a + b) == 3
     with pytest.raises(CosmapSparkError, match="no implementation"):
-        plugins.request("generate_tasks")
+        plugins.request("cone_strategy")
 
 
 def test_sampler_hook_overrides_analysis(spark):

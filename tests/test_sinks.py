@@ -4,15 +4,16 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from cosmap_spark.sinks import append_csv, multi_output, write_output
+from cosmap_spark.sinks import multi_output, write_output
 from cosmap_spark.tables import load_table
 
 
 def test_append_csv_roundtrip(spark, tmp_path):
     nation = load_table(spark, "/root/testdata/sf0.001", "nation")
     path = str(tmp_path / "csv_out")
-    append_csv(nation, path)
-    append_csv(nation, path)  # append mode: second write adds rows
+    write_output(nation, path, fmt="csv", mode="append")
+    # append mode: second write adds rows
+    write_output(nation, path, fmt="csv", mode="append")
     back = spark.read.option("header", True).option("inferSchema", True).csv(path)
     assert back.count() == nation.count() * 2
     assert set(back.columns) == set(nation.columns)
@@ -138,13 +139,13 @@ def test_zorder_write_prunes_in_both_dimensions(spark, tmp_path):
 
     import pyarrow.parquet as pq
 
-    from cosmap_spark.sinks.writers import write_zordered
+    from cosmap_spark.operators.layout import describe_layout, write_zordered
     from cosmap_spark.tables import catalog_df
 
     cat = catalog_df(spark, "/root/testdata/sf0.01")
     zpath, bpath = str(tmp_path / "zorder"), str(tmp_path / "byid")
     write_zordered(
-        cat, zpath, cols=["ra", "dec"],
+        cat, zpath, ["ra", "dec"], strategy="range",
         ranges={"ra": (0.0, 360.0), "dec": (-90.0, 90.0)},
         bits=12, num_files=32,
     )
@@ -153,8 +154,6 @@ def test_zorder_write_prunes_in_both_dimensions(spark, tmp_path):
         .sortWithinPartitions("object_id")
         .write.mode("overwrite").parquet(bpath)
     )
-
-    from cosmap_spark.sinks.writers import describe_layout
 
     def frac_hit(path, box):
         (ra_lo, ra_hi), (dec_lo, dec_hi) = box
@@ -291,7 +290,7 @@ def test_catalog_source_formats_roundtrip(spark, tmp_path):
 
 
 def test_merge_upsert_refuses_interrupted_swap(spark, tmp_path):
-    """A crash between _swap_in's renames leaves only the backup; the
+    """A crash between publish's swap renames leaves only the backup; the
     next merge must refuse (reinitializing from the update batch would
     silently drop the table, then delete the backup)."""
     import os
@@ -314,6 +313,30 @@ def test_merge_upsert_refuses_interrupted_swap(spark, tmp_path):
     assert sorted(
         (r["k"], r["v"]) for r in spark.read.parquet(path).collect()
     ) == [(1, "a"), (2, "b"), (3, "c")]
+
+
+def test_merge_and_delete_on_file_uri(spark, tmp_path):
+    """A ``file:`` URI names the same table as its local path: the
+    second upsert merges into the first (it must not take the new-table
+    branch and keep only its own batch), and delete_keys finds rows."""
+    from cosmap_spark.sinks.writers import delete_keys, merge_upsert
+
+    uri = (tmp_path / "t").as_uri()
+    assert uri.startswith("file:///")
+    base = spark.range(10).select(
+        F.col("id").alias("k"), F.lit("a").alias("v")
+    )
+    merge_upsert(spark, uri, base, ["k"])
+    upd = spark.createDataFrame([(3, "b"), (10, "c")], "k long, v string")
+    merge_upsert(spark, uri, upd, ["k"])
+    got = {r["k"]: r["v"] for r in
+           spark.read.parquet(str(tmp_path / "t")).collect()}
+    assert len(got) == 11 and got[3] == "b" and got[10] == "c"
+    gone = spark.createDataFrame([(3,), (10,)], "k long")
+    assert delete_keys(spark, uri, gone, ["k"]) == 2
+    assert sorted(
+        r["k"] for r in spark.read.parquet(str(tmp_path / "t")).collect()
+    ) == [k for k in range(10) if k != 3]
 
 
 def test_merge_upsert_partitioned_null_and_unsafe_values(spark, tmp_path):

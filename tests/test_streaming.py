@@ -1327,13 +1327,13 @@ def test_sketch_stream_kmv_bit_stable(spark, tmp_path):
     assert got == oneshot  # bit-equal, not approx — the KMV contract
     # wholesale re-merge of an arbitrary already-seen batch, ledger
     # bypassed on purpose: the store must not move by a single bit
-    from cosmap_spark.sinks.writers import _swap_in
+    from cosmap_spark.sinks.writers import publish
 
     old = spark.read.parquet(str(store / "sketches"))
     replay = kmv_leaf(
         rows.where(F.col("uid") % 2 == 0), ["grp"], "uid", k=64
     )
-    _swap_in(
+    publish(
         str(store / "sketches"),
         merge_kmv_tables(old, replay, ["grp"], k=64),
         # the k sidecar rides INSIDE the store dir (atomic with the
