@@ -12,6 +12,8 @@ All angles in degrees unless suffixed otherwise.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -78,5 +80,29 @@ def zone_of_dec(dec: Column, zone_height_deg: float) -> Column:
     turns the cone-search theta-join into an equi-join on zone id, which
     Spark executes as a hash join instead of a nested-loop — the property
     that keeps the spatial join scalable when neither side is tiny.
+
+    ``zone_height_deg`` must be a finite positive number: a negative
+    height reverses every zone range, so a ``between(lo, hi)`` over
+    zones would match nothing without an error.
     """
-    return F.floor((dec + F.lit(90.0)) / F.lit(zone_height_deg)).cast("long")
+    h = _zone_height(zone_height_deg)
+    return F.floor((dec + F.lit(90.0)) / F.lit(h)).cast("long")
+
+
+def zone_range(dec_lo: float, dec_hi: float, zone_height_deg: float) -> tuple[int, int]:
+    """The first and last zone ``zone_of_dec`` gives the declinations
+    in ``[dec_lo, dec_hi]``, clamped to [-90, 90].  Driver-side, with
+    the same ``floor((x + 90) / h)`` double arithmetic, so the range
+    holds every zone of a declination inside the interval."""
+    h = _zone_height(zone_height_deg)
+    lo, hi = max(-90.0, dec_lo), min(90.0, dec_hi)
+    return math.floor((lo + 90.0) / h), math.floor((hi + 90.0) / h)
+
+
+def _zone_height(zone_height_deg: float) -> float:
+    h = float(zone_height_deg)
+    if not (math.isfinite(h) and h > 0):
+        raise ValueError(
+            f"zone_height_deg must be a finite number of degrees > 0, got {zone_height_deg!r}"
+        )
+    return h

@@ -23,9 +23,11 @@ small (the common case: samples ≈ 10³–10⁶) or a shuffled hash join
 partitioned by cell otherwise.  Candidate pairs per catalog row are the
 samples in ITS cell only — at 10k samples / 2160 cells that's ~25× less
 residual work than 1-D zoning.  The 100 TB catalog side is never
-nested-loop-scanned and, in the broadcast case, never shuffled; with the
-catalog written zone-partitioned (sources.ingest_catalog) the cell
-predicates also prune parquet partitions/row groups.
+nested-loop-scanned and, in the broadcast case, never shuffled.  The
+join computes each row's ``__zone`` from dec, so it prunes no parquet
+partition or row group by itself: scan pruning is the literal ``zone``
+range filter that ``Analysis.build`` puts on a zone-partitioned catalog
+(sources.ingest_catalog, read through sources.read_catalog_source).
 """
 
 from __future__ import annotations
@@ -42,6 +44,9 @@ from cosmap_spark.functions.spherical import (
 
 DEFAULT_ZONE_DEG = 3.0
 DEFAULT_SECTOR_DEG = 10.0
+#: field-metadata key marking a catalog's stored ``zone`` column with
+#: the zone height it was written with (sources.read_catalog_source)
+ZONE_HEIGHT_KEY = "cosmap.zone_height_deg"
 
 
 def _sector_of_ra(ra: Column, w: float) -> Column:
@@ -63,6 +68,7 @@ def cone_search(
     ``ra, dec, radius_deg``.  All other columns pass through (sample
     coordinates surface as ``s_ra, s_dec``).  When ``sep_col`` is set,
     the output carries the exact separation under that name.
+    ``zone_height_deg`` must be a finite number > 0.
 
     ``sector_width_deg`` is rounded to the nearest width that tiles
     the circle with an INTEGER sector count: the wrap arithmetic

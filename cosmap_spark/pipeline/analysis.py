@@ -18,8 +18,10 @@ from __future__ import annotations
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-from cosmap_spark.operators.cone_search import cone_search
+from cosmap_spark.functions.spherical import zone_range
+from cosmap_spark.operators.cone_search import ZONE_HEIGHT_KEY, cone_search
 from cosmap_spark.operators.sampler import uniform_sphere_samples
 from cosmap_spark.pipeline.config import AnalysisConfig, load_config
 from cosmap_spark.pipeline.dag import topo_order
@@ -96,7 +98,16 @@ class Analysis:
         self.setup_implementations = setup_implementations
 
     def build(self, spark: SparkSession, catalog: DataFrame) -> DataFrame:
-        """Compose the full lazy plan: sample → cone join → pipeline."""
+        """Compose the full lazy plan: sample → cone join → pipeline.
+
+        When ``catalog`` has a ``zone`` column marked with its zone
+        height (a zone catalog read whole through
+        ``sources.read_catalog_source``; ``columns=`` there drops it),
+        the scan reads only the zones that ``dec_bounds`` widened by
+        the cone radius reaches: a literal range filter, so a static
+        partition filter.  It is left off when a ``generate_samples``
+        or ``cone_strategy`` plugin is registered, since either may
+        reach past that band."""
         params: dict = self.config.model_dump()
         if self.setup_block:
             params = run_setup_block(
@@ -133,6 +144,20 @@ class Analysis:
         )
         cols = self.config.dataset_parameters.columns
         has_cone_plugin = plugins._HOOKS.get("cone_strategy") is not None
+        zone = next((f for f in catalog.schema.fields if f.name == "zone"), None)
+        if (
+            zone is not None
+            and ZONE_HEIGHT_KEY in zone.metadata
+            and not has_cone_plugin
+            and plugins._HOOKS.get("generate_samples") is None
+        ):
+            # every cone of the default sampler lies inside dec_bounds;
+            # one more radius of margin keeps the range a superset
+            r = sp.sample_dimensions
+            lo, hi = zone_range(
+                sp.dec_bounds[0] - r, sp.dec_bounds[1] + r, zone.metadata[ZONE_HEIGHT_KEY]
+            )
+            catalog = catalog.where(F.col("zone").between(lo, hi))
         if cols and not has_cone_plugin:
             # O3: source projection → parquet column pruning.  Skipped
             # when a cone_strategy PLUGIN is registered: the plugin may

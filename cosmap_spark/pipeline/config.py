@@ -178,7 +178,8 @@ class SamplingParameters(BaseModel):
     # A radius that is not a positive number matches no catalog row, so
     # the run would write an empty output with no error; a declination
     # outside the sphere folds back through asin(sin dec) and breaks the
-    # area-uniform draw.  RA stays unchecked: a wrap patch is written
+    # area-uniform draw, and a reversed or empty dec band would reach a
+    # sampler plugin as is.  RA stays unchecked: a wrap patch is written
     # with a negative lower bound.
     @field_validator("sample_dimensions")
     @classmethod
@@ -192,6 +193,8 @@ class SamplingParameters(BaseModel):
     def _dec_on_sphere(cls, v: tuple[float, float]) -> tuple[float, float]:
         if not all(-90.0 <= d <= 90.0 for d in v):
             raise ValueError(f"dec_bounds must lie within [-90, 90], got {v}")
+        if not v[0] < v[1]:
+            raise ValueError(f"dec_bounds must be (low, high) with low < high, got {v}")
         return v
 
 

@@ -10,13 +10,23 @@ distributed format — converting beats teaching executors to read it).
 
 from __future__ import annotations
 
+import json
+import math
+import os
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from cosmap_spark.functions.spherical import zone_of_dec
-from cosmap_spark.operators.cone_search import DEFAULT_ZONE_DEG
+from cosmap_spark.operators.cone_search import DEFAULT_ZONE_DEG, ZONE_HEIGHT_KEY
+
+#: what :func:`ingest_catalog` writes next to a zone catalog: its zone
+#: height and written schema.  The ``_`` prefix hides it from Spark.
+CATALOG_SIDECAR = "_cosmap_catalog.json"
+
+_DISCOVERY_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 
 
 def read_catalog_source(
@@ -28,9 +38,22 @@ def read_catalog_source(
 ) -> DataFrame:
     """Read a catalog table with optional source projection (reference
     O3, config-driven column list, src/cosmap/dataset/opencosmo.py:23-24).
-    The projection reaches the parquet reader (ReadSchema pruning)."""
+    The projection reaches the parquet reader (ReadSchema pruning).
+
+    A parquet catalog written by :func:`ingest_catalog` to a local or
+    ``file:`` path carries a sidecar (``CATALOG_SIDECAR``), and then the
+    read launches no Spark job: the stored schema replaces parquet
+    schema inference, and the ``zone=`` directories are listed on the
+    driver (their number is bounded by the zone height).  The ``zone``
+    column comes back as ``long``, marked with its height in the field
+    metadata (``ZONE_HEIGHT_KEY``); :meth:`Analysis.build` reads only
+    the zones its samples can reach from such a frame.  ``columns=``
+    drops ``zone`` unless listed, and with it that pruning.  Without
+    the sidecar the read is Spark's plain one."""
     if fmt == "parquet":
-        df = spark.read.parquet(path)
+        df = _read_zone_catalog(spark, path)
+        if df is None:
+            df = spark.read.parquet(path)
     elif fmt == "csv":
         df = spark.read.option("header", True).option("inferSchema", True).csv(path)
     elif fmt == "json":
@@ -44,6 +67,45 @@ def read_catalog_source(
     if columns:
         df = df.select(*columns)
     return df
+
+
+def _sidecar_dir(path: str) -> str | None:
+    """The local directory a catalog path names; None for a remote URI,
+    where the catalog has no sidecar."""
+    from cosmap_spark.sinks.writers import _require_local
+
+    try:
+        return _require_local(path, "catalog sidecar")
+    except ValueError:
+        return None
+
+
+def _read_zone_catalog(spark: SparkSession, path: str) -> DataFrame | None:
+    """The job-free read of an :func:`ingest_catalog` output, or None
+    when ``path`` has no sidecar."""
+    local = _sidecar_dir(path)
+    if local is None:
+        return None
+    try:
+        with open(os.path.join(local, CATALOG_SIDECAR)) as f:
+            meta = json.load(f)
+    except (FileNotFoundError, NotADirectoryError):
+        return None
+    h = meta["zone_height_deg"]
+    # Spark lists more subdirectories than the threshold with a job;
+    # a zone catalog has at most ceil(180/h)+1 of them.  Raised for
+    # this read only, so other partitioned stores still list in parallel.
+    prior = spark.conf.get(_DISCOVERY_THRESHOLD, None)
+    bound = math.ceil(180.0 / h) + 1
+    spark.conf.set(_DISCOVERY_THRESHOLD, str(max(bound, int(prior or 0))))
+    try:
+        df = spark.read.schema(StructType.fromJson(meta["schema"])).parquet(path)
+    finally:
+        if prior is None:
+            spark.conf.unset(_DISCOVERY_THRESHOLD)
+        else:
+            spark.conf.set(_DISCOVERY_THRESHOLD, prior)
+    return df.withMetadata("zone", {ZONE_HEIGHT_KEY: h})
 
 
 def identify_hdf5_files(path: str | Path) -> list[Path]:
@@ -151,12 +213,21 @@ def ingest_catalog(
     and dec-sorted.
 
     This is the scale-critical half of the cone search (SURVEY.md
-    §4.3.1): with ``zone`` as a partition column and rows sorted by
-    (zone, dec) inside files, a cone query's zone-range and dec-range
-    predicates prune partitions AND row groups via parquet min/max —
-    executors never touch sky regions far from any sample.  At 100 TB
-    this turns full-catalog scans into reads of the touched declination
-    bands only.
+    §4.3.1): with ``zone = floor((dec + 90) / zone_height_deg)`` as a
+    partition column and rows sorted by (zone, dec) inside files, a
+    literal ``zone`` range filter prunes partitions, and a literal
+    ``dec`` range filter can skip row groups via parquet min/max.  The
+    cone join alone prunes nothing (its zone is computed per row);
+    :meth:`Analysis.build` adds the zone filter for a catalog read
+    through :func:`read_catalog_source`.
+
+    After the data, a local or ``file:`` path gets the sidecar
+    ``CATALOG_SIDECAR`` (the zone height and the written schema, with
+    ``zone`` as ``long``), written to a temporary file and renamed into
+    place.  The overwrite is static, so the old sidecar goes with the
+    old data before the write job; a missing sidecar only turns off the
+    fast read.  Remote URIs get no sidecar.  ``zone_height_deg`` must be
+    a finite number > 0.
 
     ``files_per_zone > 1`` splits each zone across up to that many
     write tasks/files (repartition on (zone, dec-range slice) — two
@@ -195,9 +266,22 @@ def ingest_catalog(
     (
         rep.sortWithinPartitions("zone", "dec")
         .write.mode("overwrite")
+        # even under a session's dynamic overwrite mode: zone
+        # directories of an earlier height must not survive next to
+        # the new ones
+        .option("partitionOverwriteMode", "static")
         .partitionBy("zone")
         .parquet(path)
     )
+    local = _sidecar_dir(path)
+    if local is None:
+        return
+    data = [f for f in zoned.schema.fields if f.name != "zone"]
+    schema = StructType(data + [zoned.schema["zone"]])
+    tmp = os.path.join(local, CATALOG_SIDECAR + ".tmp")
+    with open(tmp, "w") as f:
+        json.dump({"zone_height_deg": float(zone_height_deg), "schema": schema.jsonValue()}, f)
+    os.replace(tmp, os.path.join(local, CATALOG_SIDECAR))
 
 
 def read_csv_tolerant(

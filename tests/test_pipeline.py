@@ -169,11 +169,14 @@ def test_config_validates_sampling_units():
         ("dec_bounds", [-95.0, 10.0]),
         ("dec_bounds", [10.0, 90.5]),
         ("dec_bounds", [float("nan"), 10.0]),
+        ("dec_bounds", [20.0, -20.0]),
+        ("dec_bounds", [10.0, 10.0]),
     ],
 )
 def test_config_rejects_bad_sampling(field, value):
-    """A non-positive or NaN radius would match no catalog row and a
-    declination off the sphere would fold the patch back: both refuse at
+    """A non-positive or NaN radius would match no catalog row, a
+    declination off the sphere would fold the patch back, and a reversed
+    dec band would fail later with a misleading message: all refuse at
     load, naming the field, instead of writing a silently wrong run."""
     with pytest.raises(ValueError, match=field):
         load_config({"sampling_parameters": {field: value}})
