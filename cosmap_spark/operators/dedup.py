@@ -20,12 +20,48 @@ no Python UDFs.
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from cosmap_spark.functions.text import shingles_from_tokens, tokens
+from cosmap_spark.functions.text import shingles_sql, tokens
+
+
+def _quote(name: str, what: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier (embedded backticks
+    doubled), for column names put into SQL text."""
+    if not isinstance(name, str) or not name:
+        raise ValueError(f"{what} must be a non-empty column name, got {name!r}")
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _require_int(name: str, value, lo: int = 1, hi: int | None = None) -> int:
+    """Refuse, by name, a parameter that is not an int in [lo, hi] —
+    every one of them is interpolated into SQL text."""
+    if (
+        isinstance(value, bool) or not isinstance(value, int) or value < lo
+        or (hi is not None and value > hi)
+    ):
+        bound = f">= {lo}" if hi is None else f"in [{lo}, {hi}]"
+        raise ValueError(f"{name} must be an int {bound}, got {value!r}")
+    return value
+
+
+def _require_threshold(threshold) -> str:
+    """Refuse a Jaccard threshold that is not finite and in [0, 1] (NaN
+    or > 1 would silently return no pairs); returns it as a DOUBLE SQL
+    literal."""
+    if (
+        isinstance(threshold, bool) or not isinstance(threshold, (int, float))
+        or not math.isfinite(threshold) or not 0 <= threshold <= 1
+    ):
+        raise ValueError(
+            f"threshold must be a finite number in [0, 1], got {threshold!r}"
+        )
+    return f"CAST('{float(threshold)!r}' AS DOUBLE)"
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -71,18 +107,18 @@ def _shingle_sets(df: DataFrame, text_col: str, id_col: str, k: int) -> DataFram
     ``countDistinct``).  Every current caller passes a
     one-row-per-document frame; dedupe upstream before calling with
     anything else.
+
+    Built as SQL text (two ``selectExpr`` calls): the same plan as the
+    ``tokens`` + ``shingles_from_tokens`` column form, in a fraction of
+    its py4j round trips.
     """
-    hashed = F.transform(
-        shingles_from_tokens(F.col("__toks"), k),
-        lambda g: F.xxhash64(g),
+    grams = shingles_sql("__toks", k)
+    return df.selectExpr(
+        f"{_quote(id_col, 'id_col')} AS id",
+        f"split({_quote(text_col, 'text_col')}, ' ') AS __toks",
+    ).selectExpr(
+        "id", f"explode(array_distinct(transform({grams}, g -> xxhash64(g)))) AS shingle"
     )
-    sh = (
-        df.select(
-            F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("__toks")
-        )
-        .select("id", F.explode(F.array_distinct(hashed)).alias("shingle"))
-    )
-    return sh
 
 
 def ngram_jaccard_pairs(
@@ -116,6 +152,7 @@ def ngram_jaccard_pairs(
     storage blocks for the session's lifetime (round-3 VERDICT finding
     #1).  tests/test_dedup_knn.py asserts zero pinned RDDs post-run.
     """
+    _require_threshold(threshold)
     sh = _shingle_sets(df, text_col, id_col, k)
     if max_shingle_df is None:
         # direct path: shared-shingle self-join doubles as the
@@ -245,33 +282,52 @@ def minhash_signatures(
     """(id, minhash[num_hashes]) — each hash function h_i is
     ``xxhash64(shingle, seed, i)``; the signature entry is the min over
     the doc's shingles.  One explode + one groupBy; no UDFs."""
-    sh = _shingle_sets(df, text_col, id_col, k)
-    aggs = [
-        F.min(F.xxhash64(F.col("shingle"), F.lit(seed), F.lit(i))).alias(f"mh_{i}")
-        for i in range(num_hashes)
-    ]
-    sig = sh.groupBy("id").agg(*aggs)
-    return sig.select("id", F.array(*[f"mh_{i}" for i in range(num_hashes)]).alias("minhash"))
+    return _signatures(
+        _shingle_sets(df, text_col, id_col, k), num_hashes=num_hashes, seed=seed
+    )
+
+
+def _signatures(sh: DataFrame, *, num_hashes: int, seed: int) -> DataFrame:
+    """:func:`minhash_signatures` over an ``_shingle_sets`` frame.  The
+    ``num_hashes`` min-aggregates are ONE SQL expression (an ``F.*``
+    built aggregate costs ~60 py4j round trips each).  ``seed`` may be
+    any signed 64-bit long; as a plain SQL literal it is typed exactly
+    as ``F.lit`` typed it (INT when it fits 32 bits, else BIGINT, and INT
+    ``i``) — the literal type is part of the hash, so the hashes, and
+    every signature store written with them, are unchanged."""
+    _require_int("num_hashes", num_hashes)
+    _require_int("seed", seed, -(1 << 63), (1 << 63) - 1)
+    mins = ", ".join(
+        f"min(xxhash64(shingle, {seed}, {i}))" for i in range(num_hashes)
+    )
+    return sh.groupBy("id").agg(F.expr(f"array({mins}) AS minhash"))
 
 
 def _band_signatures(sig: DataFrame, *, bands: int, rows: int) -> DataFrame:
     """(id, band, bhash) rows: each signature contributes one xxhash64
-    per band over its ``rows`` consecutive minhash entries."""
-    return sig.select(
-        "id",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.xxhash64(*[
-                        F.element_at("minhash", b * rows + r + 1)
-                        for r in range(rows)
-                    ]).alias("bhash"),
-                )
-                for b in range(bands)
-            ])
-        ).alias("bh"),
-    ).select("id", "bh.band", "bh.bhash")
+    per band over its ``rows`` consecutive minhash entries — one
+    ``inline`` over an array of ``bands`` structs, as one SQL text."""
+    structs = ", ".join(
+        f"struct({b} AS band, xxhash64("
+        + ", ".join(f"element_at(minhash, {b * rows + r + 1})" for r in range(rows))
+        + ") AS bhash)"
+        for b in range(bands)
+    )
+    return sig.selectExpr("id", f"inline(array({structs}))")
+
+
+def _lsh_rows(num_hashes: int, bands: int) -> int:
+    """Rows per band; refuses parameters the banding cannot honour."""
+    _require_int("num_hashes", num_hashes)
+    _require_int("bands", bands)
+    if num_hashes % bands:
+        raise ValueError(
+            f"num_hashes ({num_hashes}) must be divisible by bands "
+            f"({bands}): the trailing signature entries would be "
+            "silently ignored and the 1-(1-s^r)^b recall curve would "
+            "not be the one the parameters promise"
+        )
+    return num_hashes // bands
 
 
 def minhash_lsh_pairs(
@@ -293,52 +349,44 @@ def minhash_lsh_pairs(
     S-curve crosses 0.5 near s≈0.56.  Candidates are then verified with
     the exact Jaccard of the colliding pair's shingle sets, so precision
     is exact; recall is the LSH S-curve (hence rows-only correctness
-    check, SURVEY.md §2.4)."""
-    if num_hashes % bands:
-        raise ValueError(
-            f"num_hashes ({num_hashes}) must be divisible by bands "
-            f"({bands}): the trailing signature entries would be "
-            "silently ignored and the 1-(1-s^r)^b recall curve would "
-            "not be the one the parameters promise"
-        )
-    rows = num_hashes // bands
-    sig = minhash_signatures(
-        df, text_col=text_col, id_col=id_col, k=k, num_hashes=num_hashes, seed=seed
+    check, SURVEY.md §2.4).
+
+    The plan is built as SQL text from ONE shingle frame (signatures,
+    set sizes and verification all read it): about 150 py4j round
+    trips per call where the ``F.*`` form took 3,518 (budgeted by
+    ``tests/test_dedup_knn.py::test_dedup_plan_build_round_trip_budget``)."""
+    rows = _lsh_rows(num_hashes, bands)
+    thr = _require_threshold(threshold)
+    sh = _shingle_sets(df, text_col, id_col, k)
+    banded = _band_signatures(
+        _signatures(sh, num_hashes=num_hashes, seed=seed), bands=bands, rows=rows
     )
-    banded = _band_signatures(sig, bands=bands, rows=rows)
     cand = (
         banded.alias("a")
         .join(
             banded.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bhash") == F.col("b.bhash"))
-            & (F.col("a.id") < F.col("b.id")),
+            F.expr("a.band = b.band AND a.bhash = b.bhash AND a.id < b.id"),
         )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .selectExpr("a.id AS id_a", "b.id AS id_b")
         .distinct()
     )
     # exact verification of candidates only
-    sh = _shingle_sets(df, text_col, id_col, k)
-    sizes = sh.groupBy("id").agg(F.count("*").alias("n_sh"))
-    a_sh = sh.select(F.col("id").alias("id_a"), F.col("shingle"))
-    b_sh = sh.select(F.col("id").alias("id_b"), F.col("shingle"))
+    sizes = sh.groupBy("id").agg(F.expr("count(*) AS n_sh"))
     inter = (
-        cand.join(a_sh, "id_a").join(b_sh, ["id_b", "shingle"])
+        cand.join(sh.selectExpr("id AS id_a", "shingle"), "id_a")
+        .join(sh.selectExpr("id AS id_b", "shingle"), ["id_b", "shingle"])
         .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("n_inter"))
+        .agg(F.expr("count(*) AS n_inter"))
     )
-    jac = (
-        inter.join(sizes.select(F.col("id").alias("id_a"), F.col("n_sh").alias("n_a")), "id_a")
-        .join(sizes.select(F.col("id").alias("id_b"), F.col("n_sh").alias("n_b")), "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("n_inter").cast("double")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_inter")).cast("double"),
+    return (
+        inter.join(sizes.selectExpr("id AS id_a", "n_sh AS n_a"), "id_a")
+        .join(sizes.selectExpr("id AS id_b", "n_sh AS n_b"), "id_b")
+        .selectExpr(
+            "id_a", "id_b",
+            "CAST(n_inter AS DOUBLE) / CAST(n_a + n_b - n_inter AS DOUBLE) AS jaccard",
         )
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+        .where(f"jaccard >= {thr}")
     )
-    return jac
 
 
 def leakage_safe_split(
@@ -416,14 +464,8 @@ def incremental_minhash_dedup(
     # s3a:// / hdfs:// paths, so an existing store would silently be
     # treated as first-batch and dedup history would restart from empty
     store_path = _require_local(store_path, "incremental_minhash_dedup")
-    if num_hashes % bands:
-        raise ValueError(
-            f"num_hashes ({num_hashes}) must be divisible by bands "
-            f"({bands}): the trailing signature entries would be "
-            "silently ignored and the 1-(1-s^r)^b recall curve would "
-            "not be the one the parameters promise"
-        )
-    rows = num_hashes // bands
+    rows = _lsh_rows(num_hashes, bands)
+    _require_threshold(threshold)
     new_sig = minhash_signatures(
         new_docs, text_col=text_col, id_col=id_col, k=k,
         num_hashes=num_hashes, seed=seed,
@@ -646,21 +688,25 @@ def dedup_clusters(
       paths in tests/test_dedup_knn.py.
 
     Both stop early at their fixpoint and raise loudly if
-    ``max_iterations`` is hit (a silently split component poisons the
-    drop list).  ``_stats``, when a dict, receives ``{"rounds": n}`` —
-    measurement hook, not API.
+    ``max_iterations`` (an int ≥ 1) is hit (a silently split component
+    poisons the drop list).  Each round is ONE eager ``localCheckpoint``
+    and convergence is read from a ``pyspark.sql.Observation`` attached
+    to that checkpoint: the round's own jobs report whether any label
+    (edge set) changed, so no probe job runs between rounds.  The
+    round's frames are SQL text, a few dozen py4j round trips each.
+    ``_stats``, when a dict, receives ``{"rounds": n}`` — measurement
+    hook, not API.
     """
+    _require_int("max_iterations", max_iterations)
+    src, dst = _quote(left_col, "left_col"), _quote(right_col, "right_col")
     if method == "twophase":
         return _cc_twophase(
-            pairs, left_col=left_col, right_col=right_col,
+            pairs, left_col=src, right_col=dst,
             max_iterations=max_iterations, _stats=_stats,
         )
     if method != "hashmin":
         raise ValueError(f"method must be hashmin/twophase, got {method!r}")
-    edges = (
-        pairs.select(F.col(left_col).alias("src"), F.col(right_col).alias("dst"))
-        .where(F.col("src") != F.col("dst"))
-    )
+    edges = pairs.selectExpr(f"{src} AS src", f"{dst} AS dst").where("src != dst")
     # undirected: keep both directions so every node sees all neighbors.
     # Materialized ONCE (eager localCheckpoint): the edge list is joined
     # every round, and its lineage is the caller's whole pair-producing
@@ -670,49 +716,43 @@ def dedup_clusters(
     # ContextCleaner when the frame goes out of scope, unlike cache()
     # (round-3 leak finding).
     sym = (
-        edges.unionByName(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
+        edges.unionByName(edges.selectExpr("dst AS src", "src AS dst"))
         .distinct()
         .localCheckpoint(eager=True)
     )
-    labels = (
-        sym.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("label", F.col("id"))
-    )
+    labels = None
     converged = False
     rounds = 0
     for _ in range(max_iterations):
         rounds += 1
-        neighbor_min = (
-            sym.join(labels, sym.dst == labels.id)
-            .groupBy("src")
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        new_label = F.least(
-            F.col("label"), F.coalesce(F.col("nbr_label"), F.col("label"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, labels.id == neighbor_min.src, "left")
-            .select(
-                "id",
-                new_label.alias("label"),
-                # carried through the checkpoint so convergence is read
-                # off the materialized blocks instead of re-running the
-                # round's join+groupBy a second time
-                (new_label < F.col("label")).cast("int").alias("__chg"),
+        if labels is None:
+            # round 1: every node's label is still its own id, so the
+            # neighbor minimum is min(dst) per src — one groupBy, no
+            # label table to distinct and join (every node is a src)
+            step = sym.groupBy("src").agg(F.expr("min(dst) AS nbr_label")).selectExpr(
+                "src AS id", "src AS label", "nbr_label"
             )
-        )
+        else:
+            neighbor_min = (
+                sym.join(labels.selectExpr("id AS dst", "label"), "dst")
+                .groupBy("src")
+                .agg(F.expr("min(label) AS nbr_label"))
+            )
+            step = labels.join(
+                neighbor_min.selectExpr("src AS id", "nbr_label"), "id", "left"
+            )
+        changed = Observation()
         # localCheckpoint truncates the growing lineage each round —
         # without it the plan doubles per iteration and the driver
-        # spends its time re-optimizing an exponential tree.  It is ALSO
-        # the round's only expensive job: the convergence probe below
-        # scans the checkpointed blocks (no shuffle, no recompute).
-        labels = new_labels.localCheckpoint(eager=True)
-        changed = labels.where(F.col("__chg") == 1).limit(1).count()
-        labels = labels.drop("__chg")
-        if changed == 0:
+        # spends its time re-optimizing an exponential tree.  It is the
+        # round's only action; the observation counts, inside its jobs,
+        # the labels this round lowered.
+        labels = (
+            step.observe(changed, F.expr("count_if(nbr_label < label) AS n"))
+            .selectExpr("id", "least(label, coalesce(nbr_label, label)) AS label")
+            .localCheckpoint(eager=True)
+        )
+        if changed.get["n"] == 0:
             converged = True
             break
     if not converged:
@@ -726,7 +766,22 @@ def dedup_clusters(
         )
     if _stats is not None:
         _stats["rounds"] = rounds
-    return labels.select("id", F.col("label").alias("cluster_id"))
+    return labels.selectExpr("id", "label AS cluster_id")
+
+
+def _checkpoint_with_checksum(e: DataFrame) -> tuple[DataFrame, tuple]:
+    """``e`` eagerly checkpointed, with its (row count, order-independent
+    64-bit XOR fold of row hashes) read from an Observation on the same
+    job.  The XOR fold is overflow-free (a SUM of hashes would wrap — an
+    error under ANSI mode)."""
+    obs = Observation()
+    out = e.observe(
+        obs,
+        F.expr("count(*) AS n"),
+        F.expr("coalesce(bit_xor(xxhash64(lo, hi)), 0) AS h"),
+    ).localCheckpoint(eager=True)
+    r = obs.get
+    return out, (r["n"], r["h"])
 
 
 def _cc_twophase(
@@ -748,80 +803,51 @@ def _cc_twophase(
     Each phase is one groupBy(node) + one join back (two exchanges per
     round); edge count never grows beyond the input.  Fixpoint — every
     node pointing straight at its component min, i.e. a star — is
-    detected when a round leaves the (cheap, checkpointed) edge
-    checksum unchanged; O(log n) rounds on ANY topology, including the
+    detected when a round leaves the edge checksum unchanged; the
+    checksum is an Observation on the round's own eager checkpoint (no
+    separate probe job).  O(log n) rounds on ANY topology, including the
     path graphs where min-propagation needs O(diameter).  At the
     fixpoint the star edges ARE the (id, cluster_id) assignment; roots
     add their own self-row so output matches ``dedup_clusters``'s
-    contract exactly."""
-    edges = (
-        pairs.select(F.col(left_col).alias("a"), F.col(right_col).alias("b"))
-        .where(F.col("a") != F.col("b"))
-        .select(
-            F.least("a", "b").alias("lo"), F.greatest("a", "b").alias("hi")
-        )
+    contract exactly.  ``left_col``/``right_col`` arrive quoted."""
+    edges, sig = _checkpoint_with_checksum(
+        pairs.selectExpr(f"{left_col} AS a", f"{right_col} AS b")
+        .where("a != b")
+        .selectExpr("least(a, b) AS lo", "greatest(a, b) AS hi")
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    if edges.limit(1).count() == 0:
-        return edges.select(
-            F.col("lo").alias("id"), F.col("hi").alias("cluster_id")
-        )
-
-    def checksum(e: DataFrame):
-        # count + order-independent 64-bit XOR fold: overflow-free
-        # (a SUM of hashes would wrap — an error under ANSI mode)
-        r = e.agg(
-            F.count("*").alias("n"),
-            F.coalesce(
-                F.expr("bit_xor(xxhash64(lo, hi))"), F.lit(0)
-            ).alias("h"),
-        ).collect()[0]
-        return r["n"], r["h"]
+    if sig[0] == 0:
+        return edges.selectExpr("lo AS id", "hi AS cluster_id")
 
     def star(e: DataFrame, large: bool) -> DataFrame:
         # symmetric view: every node sees its full neighborhood
-        adj = e.select(F.col("lo").alias("u"), F.col("hi").alias("v")).unionByName(
-            e.select(F.col("hi").alias("u"), F.col("lo").alias("v"))
+        adj = e.selectExpr("lo AS u", "hi AS v").unionByName(
+            e.selectExpr("hi AS u", "lo AS v")
         )
-        m = adj.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
+        m = adj.groupBy("u").agg(F.expr("least(min(v), first(u)) AS m"))
         j = adj.join(m, "u")
         if large:
             # re-parent strictly larger neighbors to the local min
-            out = j.where(F.col("v") > F.col("u")).select(
-                F.col("m").alias("a"), F.col("v").alias("b")
-            )
+            out = j.where("v > u").selectExpr("m AS a", "v AS b")
         else:
             # re-parent smaller-or-equal neighbors AND u itself
-            out = (
-                j.where(F.col("v") <= F.col("u"))
-                .select(F.col("m").alias("a"), F.col("v").alias("b"))
-                .unionByName(
-                    m.select(F.col("m").alias("a"), F.col("u").alias("b"))
-                )
+            out = j.where("v <= u").selectExpr("m AS a", "v AS b").unionByName(
+                m.selectExpr("m AS a", "u AS b")
             )
         return (
-            out.where(F.col("a") != F.col("b"))
-            .select(
-                F.least("a", "b").alias("lo"), F.greatest("a", "b").alias("hi")
-            )
+            out.where("a != b")
+            .selectExpr("least(a, b) AS lo", "greatest(a, b) AS hi")
             .distinct()
         )
 
-    sig = checksum(edges)
     converged = False
     rounds = 0
     for _ in range(max_iterations):
         rounds += 1
-        # lineage truncated per round, same discipline as hashmin; the
-        # checksum probe reads the materialized blocks
-        nxt = star(star(edges, large=True), large=False).localCheckpoint(
-            eager=True
+        # lineage truncated per round, same discipline as hashmin
+        edges, nsig = _checkpoint_with_checksum(
+            star(star(edges, large=True), large=False)
         )
-        nsig = checksum(nxt)
-        edges = nxt
         if nsig == sig:
             converged = True
             break
@@ -836,11 +862,8 @@ def _cc_twophase(
         _stats["rounds"] = rounds
     # fixpoint = star on each component: (hi → lo) IS the assignment;
     # roots (= component mins) get their self-row
-    return (
-        edges.select(F.col("hi").alias("id"), F.col("lo").alias("cluster_id"))
-        .unionByName(
-            edges.select("lo", "lo").toDF("id", "cluster_id").distinct()
-        )
+    return edges.selectExpr("hi AS id", "lo AS cluster_id").unionByName(
+        edges.selectExpr("lo AS id", "lo AS cluster_id").distinct()
     )
 
 

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 
@@ -241,6 +242,31 @@ def pytest_collection_modifyitems(config, items):
             f"SLOW_TESTS entries match no collected test: {sorted(stale)}",
             stacklevel=1,
         )
+
+
+@contextlib.contextmanager
+def jvm_round_trips():
+    """Count the py4j commands the driver sends to the JVM inside the
+    block: ``with jvm_round_trips() as n: ...; n[0]``.  Each ``F.*`` call
+    or DataFrame method is one or more round trips.  Memory-release
+    commands (prefix ``"m\\nd\\n"``) are skipped: Python's GC decides
+    when they are sent, so counting them would make the total vary from
+    run to run."""
+    from py4j.clientserver import ClientServerConnection
+
+    count = [0]
+    send = ClientServerConnection.send_command
+
+    def counting(self, command, *args, **kwargs):
+        if not command.startswith("m\nd\n"):
+            count[0] += 1
+        return send(self, command, *args, **kwargs)
+
+    ClientServerConnection.send_command = counting
+    try:
+        yield count
+    finally:
+        ClientServerConnection.send_command = send
 
 
 @pytest.fixture(scope="session")

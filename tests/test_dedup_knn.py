@@ -630,19 +630,194 @@ def test_ngram_jaccard_pins_no_storage_blocks(spark, corpus_with_dups):
     )
 
 
-def test_dedup_clusters_one_expensive_job_per_round(spark):
-    """The convergence probe must read the round's checkpointed blocks,
-    not re-run the join+groupBy: assert the probe stage count stays flat
-    by checking results only (full job introspection is brittle across
-    Spark versions) AND that convergence still holds on a 2-component
-    graph whose propagation needs multiple rounds."""
+@pytest.mark.parametrize("method", ["hashmin", "twophase"])
+def test_dedup_clusters_one_expensive_job_per_round(spark, monkeypatch, method):
+    """Each round's only jobs are its eager localCheckpoint: convergence
+    is read from an Observation on that checkpoint, so NO job runs
+    between one checkpoint and the next (nor after the last one).  Jobs
+    are told apart by job group: every localCheckpoint runs under one
+    group, everything between them under another."""
+    import uuid
+
+    sc = spark.sparkContext
+    tag = uuid.uuid4().hex[:8]
+    inside, between = f"cc-ckpt-{tag}", f"cc-between-{tag}"
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11), (11, 12)],
         ["id_a", "id_b"],
     )
-    got = {(r["id"], r["cluster_id"]) for r in dedup_clusters(pairs).collect()}
+    cls = type(pairs)
+    real = cls.localCheckpoint
+
+    def grouped(self, *args, **kwargs):
+        sc.setJobGroup(inside, "round checkpoint")
+        try:
+            return real(self, *args, **kwargs)
+        finally:
+            sc.setJobGroup(between, "between checkpoints")
+
+    monkeypatch.setattr(cls, "localCheckpoint", grouped)
+    sc.setJobGroup(between, "between checkpoints")
+    try:
+        stats: dict = {}
+        clusters = dedup_clusters(pairs, method=method, _stats=stats)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    got = {(r["id"], r["cluster_id"]) for r in clusters.collect()}
     assert got == {(1, 1), (2, 1), (3, 1), (4, 1), (5, 1),
                    (10, 10), (11, 10), (12, 10)}
+    assert stats["rounds"] >= 2
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    assert tracker.getJobIdsForGroup(inside)
+    assert list(tracker.getJobIdsForGroup(between)) == []
+
+
+def test_dedup_plan_build_round_trip_budget(spark):
+    """Building the corpus dedup plans costs a few hundred py4j round
+    trips, not thousands (3,518 for minhash_lsh_pairs and 676 for a
+    2-round dedup_clusters when every hash, band and round frame was
+    built with ``F.*`` calls one at a time)."""
+    from tests.conftest import jvm_round_trips
+
+    docs = spark.createDataFrame(
+        [(i, " ".join(f"w{(i * 7 + j) % 50}" for j in range(20))) for i in range(30)],
+        "doc_id long, text string",
+    )
+    # 2 rounds: every label settles in round 1, round 2 sees no change
+    pairs = spark.createDataFrame(
+        [(1, 2), (1, 3), (10, 11)], "id_a long, id_b long"
+    )
+    minhash_lsh_pairs(docs)  # first call pays one-off JVM lookups
+    with jvm_round_trips() as n:
+        minhash_lsh_pairs(docs)
+    assert n[0] <= 400, f"minhash_lsh_pairs build took {n[0]} round trips"
+    stats: dict = {}
+    with jvm_round_trips() as n:
+        dedup_clusters(pairs, _stats=stats)
+    assert stats["rounds"] == 2
+    assert n[0] <= 200, f"2-round dedup_clusters took {n[0]} round trips"
+
+
+def test_minhash_signatures_match_explode_groupby_reference(corpus_with_dups):
+    """Signatures and band hashes equal a plain explode + groupBy
+    reference built column by column — the form that wrote every
+    existing incremental signature store, so stored signatures stay
+    comparable.  The seeds cover the INT and the BIGINT literal type."""
+    from cosmap_spark.functions.text import shingles_from_tokens, tokens
+    from cosmap_spark.operators.dedup import _band_signatures, minhash_signatures
+
+    docs = corpus_with_dups
+    sh = docs.select(
+        F.col("doc_id").alias("id"), tokens(F.col("text")).alias("__toks")
+    ).select(
+        "id",
+        F.explode(F.array_distinct(F.transform(
+            shingles_from_tokens(F.col("__toks"), 3), lambda g: F.xxhash64(g)
+        ))).alias("shingle"),
+    )
+    for seed, num_hashes, bands in ((7, 32, 8), (-(2**40), 6, 3)):
+        rows = num_hashes // bands
+        ref = sh.groupBy("id").agg(F.array(*[
+            F.min(F.xxhash64(F.col("shingle"), F.lit(seed), F.lit(i)))
+            for i in range(num_hashes)
+        ]).alias("minhash"))
+        ref_bands = ref.select("id", F.explode(F.array(*[
+            F.struct(
+                F.lit(b).alias("band"),
+                F.xxhash64(*[
+                    F.element_at("minhash", b * rows + r + 1) for r in range(rows)
+                ]).alias("bhash"),
+            )
+            for b in range(bands)
+        ])).alias("bh")).select("id", "bh.band", "bh.bhash")
+        sig = minhash_signatures(docs, num_hashes=num_hashes, seed=seed)
+        assert sorted(map(tuple, sig.collect())) == sorted(map(tuple, ref.collect()))
+        got = _band_signatures(sig, bands=bands, rows=rows)
+        assert sorted(map(tuple, got.collect())) == sorted(
+            map(tuple, ref_bands.collect())
+        )
+
+
+@pytest.mark.parametrize("k", [0, -1, 2.0, True])
+def test_shingle_k_below_one_refused(spark, tmp_path, k):
+    """k < 1 made every document's only shingle the empty gram, so all
+    pairs of unrelated documents came back with jaccard 1.0 — a drop
+    list that deletes the corpus.  Every shingle operator refuses it."""
+    from cosmap_spark.functions.text import shingles_from_tokens
+    from cosmap_spark.operators.dedup import (
+        contamination_hits,
+        incremental_minhash_dedup,
+        minhash_signatures,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma"), (2, "delta epsilon zeta"),
+         (3, "eta theta iota"), (4, "kappa lambda mu")],
+        "doc_id long, text string",
+    )
+    calls = [
+        lambda: ngram_jaccard_pairs(docs, k=k),
+        lambda: minhash_lsh_pairs(docs, k=k),
+        lambda: minhash_signatures(docs, k=k),
+        lambda: contamination_hits(docs, docs, k=k),
+        lambda: incremental_minhash_dedup(spark, docs, str(tmp_path / "s"), k=k),
+        lambda: shingles_from_tokens(F.col("t"), k),
+    ]
+    for call in calls:
+        with pytest.raises(ValueError, match="k must be an int >= 1"):
+            call()
+    assert not (tmp_path / "s").exists()
+
+
+def test_sql_text_parameters_refused_by_name(spark):
+    """Every parameter the dedup operators write into SQL text is
+    refused, by name, before any plan is built."""
+    docs = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
+    pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
+    bad = [
+        (lambda: minhash_lsh_pairs(docs, num_hashes=0, bands=1), "num_hashes"),
+        (lambda: minhash_lsh_pairs(docs, bands=0), "bands"),
+        (lambda: minhash_lsh_pairs(docs, num_hashes=32.0), "num_hashes"),
+        (lambda: minhash_lsh_pairs(docs, threshold=float("nan")), "threshold"),
+        (lambda: minhash_lsh_pairs(docs, threshold=1.5), "threshold"),
+        (lambda: minhash_lsh_pairs(docs, threshold=-0.1), "threshold"),
+        (lambda: ngram_jaccard_pairs(docs, threshold=float("inf")), "threshold"),
+        (lambda: minhash_lsh_pairs(docs, seed=2**63), "seed"),
+        (lambda: minhash_lsh_pairs(docs, seed=-(2**63) - 1), "seed"),
+        (lambda: minhash_lsh_pairs(docs, text_col=3), "text_col"),
+        (lambda: minhash_lsh_pairs(docs, id_col=""), "id_col"),
+        (lambda: dedup_clusters(pairs, max_iterations=0), "max_iterations"),
+        (lambda: dedup_clusters(pairs, max_iterations=-1), "max_iterations"),
+        (lambda: dedup_clusters(pairs, method="twophase", max_iterations=0),
+         "max_iterations"),
+        (lambda: dedup_clusters(pairs, left_col=None), "left_col"),
+    ]
+    for call, name in bad:
+        with pytest.raises(ValueError, match=name):
+            call()
+    # the extremes of the legal ranges still build
+    minhash_lsh_pairs(docs, threshold=0, seed=-(2**63))
+    minhash_lsh_pairs(docs, threshold=1, seed=2**63 - 1, num_hashes=1, bands=1)
+
+
+def test_quoted_column_names(spark):
+    """Column names go into SQL text backtick-quoted, embedded backticks
+    doubled: a name holding a space and a backtick works like a plain
+    one (the shingle frame every shingle operator reads, and the pair
+    columns of dedup_clusters)."""
+    from cosmap_spark.operators.dedup import _shingle_sets
+
+    plain = spark.createDataFrame(
+        [(1, "a b c d e f"), (2, "a b c d e g")], "doc_id long, text string"
+    )
+    odd = plain.toDF("doc `id", "the text`")
+    assert sorted(map(tuple, _shingle_sets(odd, "the text`", "doc `id", 3).collect())) == sorted(
+        map(tuple, _shingle_sets(plain, "text", "doc_id", 3).collect())
+    )
+    pairs = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
+    got = dedup_clusters(pairs.toDF("left `a", "right b`"), left_col="left `a", right_col="right b`")
+    assert sorted(map(tuple, got.collect())) == [(1, 1), (2, 1), (3, 1)]
 
 
 def test_semantic_dedup_kmeanspp_seeding_recall_and_balance(spark):
