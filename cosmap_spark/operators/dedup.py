@@ -50,18 +50,17 @@ def _require_int(name: str, value, lo: int = 1, hi: int | None = None) -> int:
     return value
 
 
-def _require_threshold(threshold) -> str:
-    """Refuse a Jaccard threshold that is not finite and in [0, 1] (NaN
-    or > 1 would silently return no pairs); returns it as a DOUBLE SQL
-    literal."""
+def _require_fraction(name: str, value) -> str:
+    """Refuse, by name, a fraction that is not a finite number in [0, 1]
+    (a NaN or out-of-range Jaccard threshold silently returns no pairs,
+    a split fraction silently puts every document on one side); returns
+    it as a DOUBLE SQL literal."""
     if (
-        isinstance(threshold, bool) or not isinstance(threshold, (int, float))
-        or not math.isfinite(threshold) or not 0 <= threshold <= 1
+        isinstance(value, bool) or not isinstance(value, (int, float))
+        or not math.isfinite(value) or not 0 <= value <= 1
     ):
-        raise ValueError(
-            f"threshold must be a finite number in [0, 1], got {threshold!r}"
-        )
-    return f"CAST('{float(threshold)!r}' AS DOUBLE)"
+        raise ValueError(f"{name} must be a finite number in [0, 1], got {value!r}")
+    return f"CAST('{float(value)!r}' AS DOUBLE)"
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -151,21 +150,25 @@ def ngram_jaccard_pairs(
     operator returns a lazy frame and can never unpersist — pinned
     storage blocks for the session's lifetime (round-3 VERDICT finding
     #1).  tests/test_dedup_knn.py asserts zero pinned RDDs post-run.
+
+    Both paths are SQL text and end in :func:`minhash_lsh_pairs`' exact
+    verification (``_verified``); ``max_shingle_df``, when given, is an
+    int ≥ 1.
     """
-    _require_threshold(threshold)
+    thr = _require_fraction("threshold", threshold)
+    if max_shingle_df is not None:
+        _require_int("max_shingle_df", max_shingle_df)
     sh = _shingle_sets(df, text_col, id_col, k)
     if max_shingle_df is None:
         # direct path: shared-shingle self-join doubles as the
         # intersection count (one shuffle join + one aggregate)
-        sizes = sh.groupBy("id").agg(F.count("*").alias("n_sh"))
+        sizes = sh.groupBy("id").agg(F.expr("count(*) AS n_sh"))
         inter = (
             sh.alias("a")
-            .join(
-                sh.alias("b"),
-                (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.id") < F.col("b.id")),
-            )
-            .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-            .agg(F.count("*").alias("n_inter"))
+            .join(sh.alias("b"), F.expr("a.shingle = b.shingle AND a.id < b.id"))
+            .selectExpr("a.id AS id_a", "b.id AS id_b")
+            .groupBy("id_a", "id_b")
+            .agg(F.expr("count(*) AS n_inter"))
         )
     else:
         # capped path: hot shingles are dropped BEFORE any posting list
@@ -180,56 +183,49 @@ def ngram_jaccard_pairs(
         # the pair counts ARE the intersection sizes over the capped
         # universe — no vocabulary broadcast.  Work is Σ_kept df² ≤
         # cap · |sh|, linear in the corpus for a fixed cap.
-        ids = F.col("ids")
-        pair_structs = F.filter(
-            F.flatten(
-                F.transform(
-                    ids,
-                    lambda x: F.transform(
-                        ids, lambda y: F.struct(x.alias("a"), y.alias("b"))
-                    ),
-                )
-            ),
-            lambda s: s["a"] < s["b"],
-        )
-        from pyspark.sql import Window as W
-
         kept = (
-            sh.withColumn(
-                "__df", F.count("*").over(W.partitionBy("shingle"))
-            )
-            .where(F.col("__df") <= max_shingle_df)
+            sh.selectExpr("id", "shingle", "count(*) OVER (PARTITION BY shingle) AS __df")
+            .where(f"__df <= {max_shingle_df}")
             .groupBy("shingle")
-            .agg(F.collect_list("id").alias("ids"))
+            .agg(F.expr("collect_list(id) AS ids"))
         )
         sizes = (
-            kept.select(F.explode("ids").alias("id"))
+            kept.selectExpr("explode(ids) AS id")
             .groupBy("id")
-            .agg(F.count("*").alias("n_sh"))
+            .agg(F.expr("count(*) AS n_sh"))
         )
         inter = (
-            kept.select(F.explode(pair_structs).alias("p"))
-            .groupBy(F.col("p.a").alias("id_a"), F.col("p.b").alias("id_b"))
-            .agg(F.count("*").alias("n_inter"))
+            kept.selectExpr(
+                "explode(filter(flatten(transform(ids, x -> transform(ids, y -> "
+                "struct(x AS a, y AS b)))), s -> s.a < s.b)) AS p"
+            )
+            .selectExpr("p.a AS id_a", "p.b AS id_b")
+            .groupBy("id_a", "id_b")
+            .agg(F.expr("count(*) AS n_inter"))
         )
-    sa = sizes.select(F.col("id").alias("id_a"), F.col("n_sh").alias("n_a"))
-    sb = sizes.select(F.col("id").alias("id_b"), F.col("n_sh").alias("n_b"))
-    # no broadcast HINT on the per-document size table: it is
-    # corpus-sized (one row per doc — ~16 GB at 10⁹ docs, past the 8 GB
-    # broadcast hard limit), so the join strategy is left to AQE, which
-    # still broadcasts it while it fits and degrades to a hash join
-    # instead of failing the job when it doesn't
-    jac = (
-        inter.join(sa, "id_a").join(sb, "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("n_inter").cast("double")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_inter")).cast("double"),
+    return _verified(inter, sizes, thr)
+
+
+def _verified(inter: DataFrame, sizes: DataFrame, thr: str) -> DataFrame:
+    """The exact-Jaccard tail every shingle pair operator ends with:
+    candidate intersections ``(id_a, id_b, n_inter)`` joined to both
+    documents' shingle-set sizes ``(id, n_sh)``, scored, and kept at
+    ``jaccard >= thr`` (a :func:`_require_fraction` literal).
+
+    No broadcast HINT on the per-document size table: it is
+    corpus-sized (one row per doc — ~16 GB at 10⁹ docs, past the 8 GB
+    broadcast hard limit), so the join strategy is left to AQE, which
+    still broadcasts it while it fits and degrades to a hash join
+    instead of failing the job when it doesn't."""
+    return (
+        inter.join(sizes.selectExpr("id AS id_a", "n_sh AS n_a"), "id_a")
+        .join(sizes.selectExpr("id AS id_b", "n_sh AS n_b"), "id_b")
+        .selectExpr(
+            "id_a", "id_b",
+            "CAST(n_inter AS DOUBLE) / CAST(n_a + n_b - n_inter AS DOUBLE) AS jaccard",
         )
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+        .where(f"jaccard >= {thr}")
     )
-    return jac
 
 
 def contamination_hits(
@@ -356,7 +352,7 @@ def minhash_lsh_pairs(
     trips per call where the ``F.*`` form took 3,518 (budgeted by
     ``tests/test_dedup_knn.py::test_dedup_plan_build_round_trip_budget``)."""
     rows = _lsh_rows(num_hashes, bands)
-    thr = _require_threshold(threshold)
+    thr = _require_fraction("threshold", threshold)
     sh = _shingle_sets(df, text_col, id_col, k)
     banded = _band_signatures(
         _signatures(sh, num_hashes=num_hashes, seed=seed), bands=bands, rows=rows
@@ -378,15 +374,7 @@ def minhash_lsh_pairs(
         .groupBy("id_a", "id_b")
         .agg(F.expr("count(*) AS n_inter"))
     )
-    return (
-        inter.join(sizes.selectExpr("id AS id_a", "n_sh AS n_a"), "id_a")
-        .join(sizes.selectExpr("id AS id_b", "n_sh AS n_b"), "id_b")
-        .selectExpr(
-            "id_a", "id_b",
-            "CAST(n_inter AS DOUBLE) / CAST(n_a + n_b - n_inter AS DOUBLE) AS jaccard",
-        )
-        .where(f"jaccard >= {thr}")
-    )
+    return _verified(inter, sizes, thr)
 
 
 def leakage_safe_split(
@@ -408,7 +396,9 @@ def leakage_safe_split(
     label each doc, singletons fall back to their own id, and the
     cluster label is hash-thresholded — deterministic and
     partition-independent, same discipline as the samplers.  Adds a
-    ``split`` column ('train' | 'test')."""
+    ``split`` column ('train' | 'test'); ``test_fraction`` must be a
+    finite number in [0, 1]."""
+    _require_fraction("test_fraction", test_fraction)
     # no broadcast hint: the cluster table scales with the corpus dup
     # rate (can be 10-20% of a web corpus) — let AQE pick the strategy
     clusters = dedup_clusters(pairs).withColumnRenamed("id", id_col)
@@ -465,7 +455,7 @@ def incremental_minhash_dedup(
     # treated as first-batch and dedup history would restart from empty
     store_path = _require_local(store_path, "incremental_minhash_dedup")
     rows = _lsh_rows(num_hashes, bands)
-    _require_threshold(threshold)
+    _require_fraction("threshold", threshold)
     new_sig = minhash_signatures(
         new_docs, text_col=text_col, id_col=id_col, k=k,
         num_hashes=num_hashes, seed=seed,
@@ -506,37 +496,27 @@ def _incremental_pairs(
     its shape: the ARRIVING batch's bands broadcast against (store ∪
     new) and the verify joins are hash equi-joins; the checkpoint the
     caller adds would otherwise truncate the auditable lineage."""
+    thr = _require_fraction("threshold", threshold)
     banded_new = _band_signatures(new_sig, bands=bands, rows=rows)
     banded_all = _band_signatures(all_sig, bands=bands, rows=rows)
     cand = (
         banded_all.alias("a")
         .join(
             F.broadcast(banded_new.alias("b")),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bhash") == F.col("b.bhash"))
-            & (F.col("a.id") != F.col("b.id")),
+            F.expr("a.band = b.band AND a.bhash = b.bhash AND a.id != b.id"),
         )
-        .select(
-            F.least("a.id", "b.id").alias("id_a"),
-            F.greatest("a.id", "b.id").alias("id_b"),
-        )
+        .selectExpr("least(a.id, b.id) AS id_a", "greatest(a.id, b.id) AS id_b")
         .distinct()
     )
-    sa = all_sig.select(F.col("id").alias("id_a"), F.col("minhash").alias("ma"))
-    sb = all_sig.select(F.col("id").alias("id_b"), F.col("minhash").alias("mb"))
-    agree = F.size(
-        F.filter(
-            F.zip_with("ma", "mb", lambda x, y: x == y), lambda eq: eq
-        )
-    )
+    agree = "size(filter(zip_with(ma, mb, (x, y) -> x = y), eq -> eq))"
     return (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
+        cand.join(all_sig.selectExpr("id AS id_a", "minhash AS ma"), "id_a")
+        .join(all_sig.selectExpr("id AS id_b", "minhash AS mb"), "id_b")
+        .selectExpr(
             "id_a", "id_b",
-            F.round(agree.cast("double") / num_hashes, 6).alias("est_jaccard"),
+            f"round(CAST({agree} AS DOUBLE) / {num_hashes}, 6) AS est_jaccard",
         )
-        .where(F.col("est_jaccard") >= threshold)
+        .where(f"est_jaccard >= {thr}")
     )
 
 
@@ -656,7 +636,6 @@ def dedup_clusters(
     left_col: str = "id_a",
     right_col: str = "id_b",
     max_iterations: int = 20,
-    method: str = "hashmin",
     _stats: dict | None = None,
 ) -> DataFrame:
     """Connected components over duplicate pairs → cluster assignment.
@@ -668,44 +647,26 @@ def dedup_clusters(
     ``cluster_id`` is the component's minimum member id (canonical doc =
     the one equal to its cluster_id).
 
-    ``method`` picks the round structure (same fixpoint, pinned
-    equivalent on randomized graphs in tests/test_dedup_knn.py):
+    Iterative min-label propagation (the DataFrame form of hash-to-min,
+    cf. Rastogi et al., "Finding Connected Components in Map-Reduce"
+    ICDE'13): each round every node adopts the minimum label in its
+    closed neighborhood, at ONE shuffle per round, so a component needs
+    about as many rounds as its diameter.  Dup clusters are near-cliques
+    (diameter 2-3) and settle in two or three rounds.  A chain-shaped
+    component longer than ``max_iterations`` (an int ≥ 1) — e.g. a
+    boilerplate/template chain in scraped web text — raises a
+    ``RuntimeError`` instead of being silently split (a split component
+    poisons the drop list); raise ``max_iterations`` for such inputs.
 
-    * ``hashmin`` (default) — iterative min-label propagation (the
-      DataFrame form of hash-to-min, cf. Rastogi et al., "Finding
-      Connected Components in Map-Reduce" ICDE'13): each round every
-      node adopts the minimum label in its closed neighborhood;
-      converges in O(diameter) rounds at ONE shuffle per round — dup
-      clusters are near-cliques (diameter 2-3), so this is the cheap
-      path for the workload this operator exists for.
-    * ``twophase`` — alternating large-star/small-star contraction
-      (Kiveris et al., "Connected Components in MapReduce and Beyond",
-      SoCC'14): O(log n) rounds at two grouped passes per round,
-      independent of diameter.  The safety net for degenerate inputs —
-      boilerplate/template chains in scraped web text form long PATHS,
-      where hash-to-min's O(diameter) degenerates (a 200-node path =
-      200 rounds vs ~7); round counts are asserted strictly lower on
-      paths in tests/test_dedup_knn.py.
-
-    Both stop early at their fixpoint and raise loudly if
-    ``max_iterations`` (an int ≥ 1) is hit (a silently split component
-    poisons the drop list).  Each round is ONE eager ``localCheckpoint``
-    and convergence is read from a ``pyspark.sql.Observation`` attached
-    to that checkpoint: the round's own jobs report whether any label
-    (edge set) changed, so no probe job runs between rounds.  The
-    round's frames are SQL text, a few dozen py4j round trips each.
-    ``_stats``, when a dict, receives ``{"rounds": n}`` — measurement
-    hook, not API.
+    Each round is ONE eager ``localCheckpoint`` and convergence is read
+    from a ``pyspark.sql.Observation`` attached to that checkpoint: the
+    round's own jobs report whether any label changed, so no probe job
+    runs between rounds.  The round's frames are SQL text, a few dozen
+    py4j round trips each.  ``_stats``, when a dict, receives
+    ``{"rounds": n}`` — measurement hook, not API.
     """
     _require_int("max_iterations", max_iterations)
     src, dst = _quote(left_col, "left_col"), _quote(right_col, "right_col")
-    if method == "twophase":
-        return _cc_twophase(
-            pairs, left_col=src, right_col=dst,
-            max_iterations=max_iterations, _stats=_stats,
-        )
-    if method != "hashmin":
-        raise ValueError(f"method must be hashmin/twophase, got {method!r}")
     edges = pairs.selectExpr(f"{src} AS src", f"{dst} AS dst").where("src != dst")
     # undirected: keep both directions so every node sees all neighbors.
     # Materialized ONCE (eager localCheckpoint): the edge list is joined
@@ -761,110 +722,11 @@ def dedup_clusters(
         raise RuntimeError(
             f"dedup_clusters did not converge within {max_iterations} "
             "iterations (a duplicate component's diameter exceeds the "
-            "budget); raise max_iterations or use method='twophase' "
-            "(O(log n) rounds)"
+            "budget); raise max_iterations"
         )
     if _stats is not None:
         _stats["rounds"] = rounds
     return labels.selectExpr("id", "label AS cluster_id")
-
-
-def _checkpoint_with_checksum(e: DataFrame) -> tuple[DataFrame, tuple]:
-    """``e`` eagerly checkpointed, with its (row count, order-independent
-    64-bit XOR fold of row hashes) read from an Observation on the same
-    job.  The XOR fold is overflow-free (a SUM of hashes would wrap — an
-    error under ANSI mode)."""
-    obs = Observation()
-    out = e.observe(
-        obs,
-        F.expr("count(*) AS n"),
-        F.expr("coalesce(bit_xor(xxhash64(lo, hi)), 0) AS h"),
-    ).localCheckpoint(eager=True)
-    r = obs.get
-    return out, (r["n"], r["h"])
-
-
-def _cc_twophase(
-    pairs: DataFrame,
-    *,
-    left_col: str,
-    right_col: str,
-    max_iterations: int,
-    _stats: dict | None,
-) -> DataFrame:
-    """Alternating large-star/small-star connected components (Kiveris
-    et al. SoCC'14) on a directed parent-edge multiset:
-
-    * large-star: per node u, every strictly LARGER neighbor re-parents
-      to m = min(Γ(u) ∪ {u});
-    * small-star: per node u, every neighbor ≤ u AND u itself re-parent
-      to m.
-
-    Each phase is one groupBy(node) + one join back (two exchanges per
-    round); edge count never grows beyond the input.  Fixpoint — every
-    node pointing straight at its component min, i.e. a star — is
-    detected when a round leaves the edge checksum unchanged; the
-    checksum is an Observation on the round's own eager checkpoint (no
-    separate probe job).  O(log n) rounds on ANY topology, including the
-    path graphs where min-propagation needs O(diameter).  At the
-    fixpoint the star edges ARE the (id, cluster_id) assignment; roots
-    add their own self-row so output matches ``dedup_clusters``'s
-    contract exactly.  ``left_col``/``right_col`` arrive quoted."""
-    edges, sig = _checkpoint_with_checksum(
-        pairs.selectExpr(f"{left_col} AS a", f"{right_col} AS b")
-        .where("a != b")
-        .selectExpr("least(a, b) AS lo", "greatest(a, b) AS hi")
-        .distinct()
-    )
-    if sig[0] == 0:
-        return edges.selectExpr("lo AS id", "hi AS cluster_id")
-
-    def star(e: DataFrame, large: bool) -> DataFrame:
-        # symmetric view: every node sees its full neighborhood
-        adj = e.selectExpr("lo AS u", "hi AS v").unionByName(
-            e.selectExpr("hi AS u", "lo AS v")
-        )
-        m = adj.groupBy("u").agg(F.expr("least(min(v), first(u)) AS m"))
-        j = adj.join(m, "u")
-        if large:
-            # re-parent strictly larger neighbors to the local min
-            out = j.where("v > u").selectExpr("m AS a", "v AS b")
-        else:
-            # re-parent smaller-or-equal neighbors AND u itself
-            out = j.where("v <= u").selectExpr("m AS a", "v AS b").unionByName(
-                m.selectExpr("m AS a", "u AS b")
-            )
-        return (
-            out.where("a != b")
-            .selectExpr("least(a, b) AS lo", "greatest(a, b) AS hi")
-            .distinct()
-        )
-
-    converged = False
-    rounds = 0
-    for _ in range(max_iterations):
-        rounds += 1
-        # lineage truncated per round, same discipline as hashmin
-        edges, nsig = _checkpoint_with_checksum(
-            star(star(edges, large=True), large=False)
-        )
-        if nsig == sig:
-            converged = True
-            break
-        sig = nsig
-    if not converged:
-        raise RuntimeError(
-            f"dedup_clusters(method='twophase') did not converge within "
-            f"{max_iterations} rounds — not expected for any input of "
-            "size < 2^max_iterations; raise max_iterations"
-        )
-    if _stats is not None:
-        _stats["rounds"] = rounds
-    # fixpoint = star on each component: (hi → lo) IS the assignment;
-    # roots (= component mins) get their self-row
-    return edges.selectExpr("hi AS id", "lo AS cluster_id").unionByName(
-        edges.selectExpr("lo AS id", "lo AS cluster_id").distinct()
-    )
 
 
 def passage_dedup(

@@ -35,8 +35,8 @@ SLOW_TESTS = {
     "test_curation_e2e.py::test_curation_pipeline",
     "test_dedup_knn.py::test_dedup_clusters_one_expensive_job_per_round",
     "test_dedup_knn.py::test_dedup_clusters_raises_when_not_converged",
-    "test_dedup_knn.py::test_dedup_clusters_twophase_empty_and_real_pairs",
-    "test_dedup_knn.py::test_dedup_clusters_twophase_same_fixpoint",
+    "test_dedup_knn.py::test_dedup_clusters_empty_and_real_pairs_match_union_find",
+    "test_dedup_knn.py::test_dedup_clusters_matches_union_find",
     "test_dedup_knn.py::test_embedding_dup_lsh_recall_vs_bruteforce",
     "test_dedup_knn.py::test_hard_negative_pairs_excludes_dups_and_ranks_by_sim",
     "test_dedup_knn.py::test_incremental_minhash_dedup_two_batches",

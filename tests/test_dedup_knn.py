@@ -252,12 +252,33 @@ def test_dedup_clusters_raises_when_not_converged(spark):
     assert set(out.values()) == {1}
 
 
-def test_dedup_clusters_twophase_same_fixpoint(spark):
-    """large-star/small-star must reach EXACTLY hash-to-min's fixpoint:
-    randomized graphs (mixed cliques, chains, stars, isolated pairs)
-    and both methods compared assignment-for-assignment; a 200-node
-    PATH graph — hash-to-min's O(diameter) worst case — must converge
-    in O(log n) rounds, asserted strictly below hash-to-min's count."""
+def _union_find_clusters(edges) -> dict:
+    """{id: component minimum} of the undirected graph ``edges`` by a
+    plain union-find, the reference for ``dedup_clusters``.  Self-pairs
+    are ignored, as ``dedup_clusters`` ignores them."""
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        if a != b:
+            ra, rb = find(a), find(b)
+            # the smaller root wins, so every root is its component's min
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def test_dedup_clusters_matches_union_find(spark):
+    """Hash-to-min reaches a union-find's fixpoint (every node labelled
+    with its component minimum) on randomized graphs — mixed cliques,
+    chains, stars, random edges with self-pairs — and on a 30-node path
+    given enough rounds; a 200-node path raises at 12 rounds instead of
+    being silently split."""
     import random
 
     from cosmap_spark.operators.dedup import dedup_clusters
@@ -281,57 +302,35 @@ def test_dedup_clusters_twophase_same_fixpoint(spark):
             ]
         base += n + rng.randint(1, 5)
     df = spark.createDataFrame(edges, "id_a long, id_b long")
-    a = {r["id"]: r["cluster_id"]
-         for r in dedup_clusters(df, method="hashmin").collect()}
-    b = {r["id"]: r["cluster_id"]
-         for r in dedup_clusters(df, method="twophase").collect()}
-    # self-pairs (random shape may emit (x, x)) are dropped by both;
-    # compare the full assignment maps
-    assert a == b and len(a) > 0
+    got = {r["id"]: r["cluster_id"] for r in dedup_clusters(df).collect()}
+    assert got == _union_find_clusters(edges) and len(got) > 0
+
+    p30 = [(i, i + 1) for i in range(30)]
+    got = {r["id"]: r["cluster_id"] for r in dedup_clusters(
+        spark.createDataFrame(p30, "id_a long, id_b long"), max_iterations=40
+    ).collect()}
+    assert got == _union_find_clusters(p30)
 
     path = spark.createDataFrame(
         [(i, i + 1) for i in range(200)], "id_a long, id_b long"
     )
-    s_tp: dict = {}
-    tp = {r["id"]: r["cluster_id"] for r in dedup_clusters(
-        path, method="twophase", max_iterations=12, _stats=s_tp
-    ).collect()}
-    assert set(tp.values()) == {0} and len(tp) == 201
-    assert s_tp["rounds"] <= 10  # O(log n): ~8 for n=201
-    with pytest.raises(RuntimeError):
+    with pytest.raises(RuntimeError, match="raise max_iterations"):
         # hash-to-min cannot close a 200-path in 12 rounds
-        dedup_clusters(path, method="hashmin", max_iterations=12)
-    # round-count comparison on a 30-path (hashmin needs ~30 rounds —
-    # O(diameter) — vs twophase's ~6; running hashmin on the 200-path
-    # would just burn 200 shuffle rounds to show the same thing)
-    p30 = spark.createDataFrame(
-        [(i, i + 1) for i in range(30)], "id_a long, id_b long"
-    )
-    s_hm: dict = {}
-    s_tp30: dict = {}
-    hm = {r["id"]: r["cluster_id"] for r in dedup_clusters(
-        p30, method="hashmin", max_iterations=40, _stats=s_hm
-    ).collect()}
-    tp30 = {r["id"]: r["cluster_id"] for r in dedup_clusters(
-        p30, method="twophase", max_iterations=12, _stats=s_tp30
-    ).collect()}
-    assert hm == tp30
-    assert s_tp30["rounds"] < s_hm["rounds"]
-    with pytest.raises(ValueError, match="hashmin/twophase"):
-        dedup_clusters(path, method="bogus")
+        dedup_clusters(path, max_iterations=12)
 
 
-def test_dedup_clusters_twophase_empty_and_real_pairs(spark):
+def test_dedup_clusters_empty_and_real_pairs_match_union_find(spark):
     from cosmap_spark.operators.dedup import dedup_clusters, ngram_jaccard_pairs
     from cosmap_spark.tables import load_table
 
     empty = spark.createDataFrame([], "id_a long, id_b long")
-    assert dedup_clusters(empty, method="twophase").count() == 0
+    assert dedup_clusters(empty).count() == 0
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
     pairs = ngram_jaccard_pairs(docs, threshold=0.5).localCheckpoint(eager=True)
-    a = sorted(map(tuple, dedup_clusters(pairs, method="hashmin").collect()))
-    b = sorted(map(tuple, dedup_clusters(pairs, method="twophase").collect()))
-    assert a == b
+    edges = [(r["id_a"], r["id_b"]) for r in pairs.collect()]
+    assert edges, "sf0.001 documents must hold near-duplicate pairs"
+    got = sorted(map(tuple, dedup_clusters(pairs).collect()))
+    assert got == sorted(_union_find_clusters(edges).items())
 
 
 def test_contamination_hits_planted(spark):
@@ -630,8 +629,7 @@ def test_ngram_jaccard_pins_no_storage_blocks(spark, corpus_with_dups):
     )
 
 
-@pytest.mark.parametrize("method", ["hashmin", "twophase"])
-def test_dedup_clusters_one_expensive_job_per_round(spark, monkeypatch, method):
+def test_dedup_clusters_one_expensive_job_per_round(spark, monkeypatch):
     """Each round's only jobs are its eager localCheckpoint: convergence
     is read from an Observation on that checkpoint, so NO job runs
     between one checkpoint and the next (nor after the last one).  Jobs
@@ -660,7 +658,7 @@ def test_dedup_clusters_one_expensive_job_per_round(spark, monkeypatch, method):
     sc.setJobGroup(between, "between checkpoints")
     try:
         stats: dict = {}
-        clusters = dedup_clusters(pairs, method=method, _stats=stats)
+        clusters = dedup_clusters(pairs, _stats=stats)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     got = {(r["id"], r["cluster_id"]) for r in clusters.collect()}
@@ -675,15 +673,32 @@ def test_dedup_clusters_one_expensive_job_per_round(spark, monkeypatch, method):
 
 def test_dedup_plan_build_round_trip_budget(spark):
     """Building the corpus dedup plans costs a few hundred py4j round
-    trips, not thousands (3,518 for minhash_lsh_pairs and 676 for a
-    2-round dedup_clusters when every hash, band and round frame was
-    built with ``F.*`` calls one at a time)."""
+    trips, not thousands (3,518 for minhash_lsh_pairs, 676 for a 2-round
+    dedup_clusters, 482 for ngram_jaccard_pairs' direct path, 662 for
+    its capped path and 478 for _incremental_pairs when every hash,
+    band, join condition and round frame was built with ``F.*`` calls
+    one at a time)."""
+    from cosmap_spark.operators.dedup import _incremental_pairs, minhash_signatures
     from tests.conftest import jvm_round_trips
 
     docs = spark.createDataFrame(
         [(i, " ".join(f"w{(i * 7 + j) % 50}" for j in range(20))) for i in range(30)],
         "doc_id long, text string",
     )
+    new_sig = minhash_signatures(docs.where("doc_id % 2 = 1"))
+    all_sig = new_sig.unionByName(minhash_signatures(docs.where("doc_id % 2 = 0")))
+    builds = {
+        "ngram_jaccard_pairs": lambda: ngram_jaccard_pairs(docs),
+        "capped ngram_jaccard_pairs": lambda: ngram_jaccard_pairs(docs, max_shingle_df=10),
+        "_incremental_pairs": lambda: _incremental_pairs(
+            new_sig, all_sig, bands=8, rows=4, num_hashes=32, threshold=0.5
+        ),
+    }
+    for name, build in builds.items():
+        build()  # first call pays one-off JVM lookups
+        with jvm_round_trips() as n:
+            build()
+        assert n[0] <= 200, f"{name} build took {n[0]} round trips"
     # 2 rounds: every label settles in round 1, round 2 sees no change
     pairs = spark.createDataFrame(
         [(1, 2), (1, 3), (10, 11)], "id_a long, id_b long"
@@ -772,7 +787,10 @@ def test_shingle_k_below_one_refused(spark, tmp_path, k):
 
 def test_sql_text_parameters_refused_by_name(spark):
     """Every parameter the dedup operators write into SQL text is
-    refused, by name, before any plan is built."""
+    refused, by name, before any plan is built; so is a split fraction
+    that would silently put every document on one side."""
+    from cosmap_spark.operators.dedup import leakage_safe_split
+
     docs = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
     pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
     bad = [
@@ -789,8 +807,13 @@ def test_sql_text_parameters_refused_by_name(spark):
         (lambda: minhash_lsh_pairs(docs, id_col=""), "id_col"),
         (lambda: dedup_clusters(pairs, max_iterations=0), "max_iterations"),
         (lambda: dedup_clusters(pairs, max_iterations=-1), "max_iterations"),
-        (lambda: dedup_clusters(pairs, method="twophase", max_iterations=0),
-         "max_iterations"),
+        (lambda: ngram_jaccard_pairs(docs, max_shingle_df=0), "max_shingle_df"),
+        (lambda: ngram_jaccard_pairs(docs, max_shingle_df=2.5), "max_shingle_df"),
+        (lambda: leakage_safe_split(docs, pairs, test_fraction=float("nan")),
+         "test_fraction"),
+        (lambda: leakage_safe_split(docs, pairs, test_fraction=-0.1), "test_fraction"),
+        (lambda: leakage_safe_split(docs, pairs, test_fraction=1.5), "test_fraction"),
+        (lambda: leakage_safe_split(docs, pairs, test_fraction="0.1"), "test_fraction"),
         (lambda: dedup_clusters(pairs, left_col=None), "left_col"),
     ]
     for call, name in bad:

@@ -144,16 +144,16 @@ def test_funnel_family_empty_events(spark):
     assert cohort_retention(ev).count() == 0
 
 
-def test_dedup_clusters_twophase_single_and_self_edges(spark):
+def test_dedup_clusters_single_and_self_edges(spark):
     from cosmap_spark.operators.dedup import dedup_clusters
 
     # only self-pairs: no real edges, empty assignment
     selfs = spark.createDataFrame([(3, 3), (7, 7)], "id_a long, id_b long")
-    assert dedup_clusters(selfs, method="twophase").count() == 0
-    # one real pair converges in one round
+    assert dedup_clusters(selfs).count() == 0
+    # one real pair, larger id first
     one = spark.createDataFrame([(9, 4)], "id_a long, id_b long")
     out = {r["id"]: r["cluster_id"]
-           for r in dedup_clusters(one, method="twophase").collect()}
+           for r in dedup_clusters(one).collect()}
     assert out == {4: 4, 9: 4}
 
 
@@ -349,8 +349,7 @@ def _spec_corpus_report(spark):
 
 def _spec_dedup_clusters_empty(spark):
     import cosmap_spark.operators as O
-    for method in ("hashmin", "twophase"):
-        assert O.dedup_clusters(_e(spark, _PAIRS), method=method).count() == 0
+    assert O.dedup_clusters(_e(spark, _PAIRS)).count() == 0
 
 
 def _spec_degrees(spark):
