@@ -28,7 +28,7 @@ from cosmap_spark.pipeline.dag import topo_order
 from cosmap_spark.pipeline.pipeline import (
     _get_impl,
     compile_pipeline,
-    resolve_parameter,
+    node_kwargs,
 )
 from cosmap_spark.sinks.writers import write_output
 
@@ -57,18 +57,7 @@ def run_setup_block(
         # a missing setup implementation raises DagValidationError naming
         # the node instead of an opaque "'NoneType' is not callable"
         fn = _get_impl(implementations, name)
-        kwargs: dict[str, Any] = {}
-        for alias, dep in (spec.get("dependencies", {}) or {}).items():
-            # list-valued dependency = the alias receives a LIST of
-            # results, the same shape dag._dep_names and pipeline.py
-            # accept — a dict lookup on the raw list would TypeError
-            if isinstance(dep, (list, tuple)):
-                kwargs[alias] = [results[d] for d in dep]
-            else:
-                kwargs[alias] = results[dep]
-        for p in spec.get("needed-parameters", []) or []:
-            kwargs[p.rsplit(".", 1)[-1]] = resolve_parameter(parameters, p)
-        results[name] = fn(**kwargs)
+        results[name] = fn(**node_kwargs(name, spec, results, parameters, {}))
         if spec.get("output") or name not in dependents:
             exports[spec.get("output-name", name)] = results[name]
     merged = dict(parameters)

@@ -73,6 +73,38 @@ def resolve_parameter(parameters: dict, dotted: str) -> Any:
     return cur
 
 
+def node_kwargs(name: str, spec: dict, results: dict, parameters: dict,
+                data: dict) -> dict[str, Any]:
+    """The keyword arguments of DAG node ``name`` — the one resolver of
+    both walkers (:func:`compile_pipeline` and
+    ``analysis.run_setup_block``, which passes no data): its
+    ``needed-data`` from ``data``, its ``dependencies`` from
+    ``results`` (a list-valued one receives a LIST), its
+    ``needed-parameters``, and whichever ``optional-parameters``
+    resolve (soft-fail, reference utils.py:208-214)."""
+    kwargs: dict[str, Any] = {}
+    for dtype in spec.get("needed-data", []) or []:
+        if dtype not in data:
+            raise DagValidationError(
+                f"transformation {name!r} needs data {dtype!r} "
+                f"which was not provided"
+            )
+        kwargs[dtype] = data[dtype]
+    for alias, dep in (spec.get("dependencies", {}) or {}).items():
+        if isinstance(dep, (list, tuple)):
+            kwargs[alias] = [results[d] for d in dep]
+        else:
+            kwargs[alias] = results[dep]
+    for p in spec.get("needed-parameters", []) or []:
+        kwargs[p.rsplit(".", 1)[-1]] = resolve_parameter(parameters, p)
+    for p in spec.get("optional-parameters", []) or []:
+        try:
+            kwargs[p.rsplit(".", 1)[-1]] = resolve_parameter(parameters, p)
+        except DagValidationError:
+            pass
+    return kwargs
+
+
 def verify_block(block: dict, implementations: Any) -> None:
     """Spec ↔ implementation cross-check + DAG validity (reference
     CosmapAnalysis.verify_analysis, src/cosmap/analysis/analysis.py:93-126)."""
@@ -115,26 +147,7 @@ def compile_pipeline(
         results: dict[str, Any] = {}
         for name in order:
             spec = block[name]
-            kwargs: dict[str, Any] = {}
-            for dtype in spec.get("needed-data", []) or []:
-                if dtype not in data:
-                    raise DagValidationError(
-                        f"transformation {name!r} needs data {dtype!r} "
-                        f"which was not provided"
-                    )
-                kwargs[dtype] = data[dtype]
-            for alias, dep in (spec.get("dependencies", {}) or {}).items():
-                if isinstance(dep, (list, tuple)):
-                    kwargs[alias] = [results[d] for d in dep]
-                else:
-                    kwargs[alias] = results[dep]
-            for p in spec.get("needed-parameters", []) or []:
-                kwargs[p.rsplit(".", 1)[-1]] = resolve_parameter(parameters, p)
-            for p in spec.get("optional-parameters", []) or []:
-                try:
-                    kwargs[p.rsplit(".", 1)[-1]] = resolve_parameter(parameters, p)
-                except DagValidationError:
-                    pass  # soft-fail (reference utils.py:208-214)
+            kwargs = node_kwargs(name, spec, results, parameters, data)
             if "sql" in spec:
                 dfs = {
                     k: v for k, v in kwargs.items()

@@ -751,76 +751,194 @@ def dedup_stream(stream_docs: DataFrame, store_path: str, out_path: str,
     )
 
 
-def _ledgered_loop(stream_df: DataFrame, store_path: str, checkpoint: str,
-                   *, subdir: str, op: str, batch_state, merge_state,
-                   sidecars: dict[str, str] | None = None,
-                   pre_epoch=None):
-    """The shared exactly-once store driver every batch-twin monitor
-    rides (sketch_stream, drift_stream, category_drift_stream,
-    abtest_stream, ks_stream, reservoir_stream; heavy_hitters_stream
-    keeps its own ledger because its sidecar carries batch-dependent
-    state — the running N): per micro-batch, ``batch_state(batch_df)``
-    reduces the batch to its bounded state frame, ``merge_state(old,
-    batch)`` folds it into the persisted store at ``store_path/subdir``,
-    and the result replaces the store through
-    :func:`cosmap_spark.sinks.writers.publish`.
-
-    Exactly-once is TWO-layered:
-
-    - the epoch ledger (``_epochs/epoch-<id>`` marker files) is the
-      fast path — a replayed epoch returns before any Spark work;
-    - a ``_last_epoch`` sidecar INSIDE the swapped store closes the
-      ledger's crash window: foreachBatch acknowledges only after
-      ``run`` returns, so a driver crash BETWEEN the completed swap
-      and the marker write re-delivers the epoch — the marker check
-      misses, and without the stamp the batch would merge twice
-      (silent double-counting of monitor state).  The stamp rides the
-      SAME atomic rename as the data (the heavy-hitters/mg-meta
-      discipline), so on replay ``stamp >= epoch_id`` proves the
-      store already contains this epoch: only the marker is restored.
-
-    ``sidecars`` (static name → content, e.g. the kmv k or the A/B
-    quantization dp) are re-written with every swap; ``pre_epoch``
-    (optional callable) runs validation before any work — stores
-    created after stream start still get parameter-checked.  Same
-    driver-local filesystem durability contract as documented on
-    ``sketch_stream``."""
+def _ledger_dir(path: str, *, beside: bool = False) -> str:
+    """Where the epoch ledger of the store at ``path`` lives:
+    ``<path>/_epochs`` inside a store directory the stream owns, or the
+    sibling ``<path>.__upsert_epochs`` beside a table whose directory
+    holds the table alone (:func:`upsert_stream`; named after the table,
+    so two streams under one parent never share markers)."""
     import os
 
-    from cosmap_spark.sinks.writers import _require_local, publish
+    return f"{path}.__upsert_epochs" if beside else os.path.join(path, "_epochs")
 
-    store_path = _require_local(store_path, op)
-    store = os.path.join(store_path, subdir)
+
+def _ledger_last_epoch(path: str) -> int | None:
+    """The highest epoch id the ledger of the store at ``path`` holds a
+    marker for (either :func:`_ledger_dir` layout), or ``None``."""
+    import os
+
+    for led in (_ledger_dir(path), _ledger_dir(path, beside=True)):
+        if os.path.isdir(led):
+            es = [
+                int(n.split("-", 1)[1])
+                for n in os.listdir(led)
+                if n.startswith("epoch-") and n.split("-", 1)[1].isdigit()
+            ]
+            if es:
+                return max(es)
+    return None
+
+
+def _check_params(op: str, where: str, have: dict, want: dict,
+                  *, verb: str = "built") -> None:
+    """Refuse a resume whose parameters differ from those the store at
+    ``where`` records — merging under other parameters (a smaller k,
+    another quantization scale, other bins) silently corrupts state."""
+    if have != want:
+        def show(d: dict) -> str:
+            return ", ".join(f"{k}={v!r}" for k, v in d.items()) or "none"
+
+        raise ValueError(
+            f"{op}: store at {where} was {verb} with {show(have)}; "
+            f"resume requested {show(want)}"
+        )
+
+
+def _require_k(k, op: str) -> None:
+    """``k`` (a sample, counter or sketch size) must be an int >= 1 —
+    ``k=0`` keeps an empty state forever, bools included."""
+    if isinstance(k, bool) or not isinstance(k, int) or k < 1:
+        raise ValueError(f"{op}: k must be an int >= 1; got {k!r}")
+
+
+def _write_marker_atomic(marker: str, content: str) -> None:
+    """Write a ledger marker via dot-prefixed temp + ``os.rename``: a
+    torn plain write would leave a partial fingerprint that differs
+    from the replayed batch, turning a harmless replay window into the
+    hard 'content differs' stop."""
+    import os
+    import uuid
+
+    d = os.path.dirname(marker)
+    tmp = os.path.join(d, f".{os.path.basename(marker)}.{uuid.uuid4().hex}")
+    with open(tmp, "w") as f:
+        f.write(content)
+    os.rename(tmp, marker)
+
+
+def _batch_fingerprint(batch_df: DataFrame) -> str:
+    """Order-independent content fingerprint of a micro-batch: row
+    count + XOR + SUM of per-row xxhash64 over every column.  Two
+    hardening details (both bugs a plain xor-of-xxhash64(cols)
+    fingerprint has):
+
+    * every column slot contributes (position, isnull flag, value) —
+      Spark's hash expressions SKIP null inputs, so ``('a', NULL)``
+      and ``(NULL, 'a')`` would otherwise produce the SAME row hash,
+      and a bare positional anchor is still ambiguous when a VALUE
+      numerically equals the next slot's anchor (INT ``(1, NULL)`` vs
+      ``(NULL, 1)`` both hash ``[0, 1, 1]``) — the explicit flag makes
+      the token stream's parse deterministic (the merge.py
+      snapshot_cdc discipline);
+    * the wrap-around SUM component catches even-multiplicity
+      differences XOR cancels (``[A, A, C]`` vs ``[B, B, C]``
+      xor-collide at equal counts; their sums differ)."""
+    anchored = ", ".join(
+        f"{i}, cast(`{c}` is null as int), `{c}`"
+        for i, c in enumerate(batch_df.columns)
+    )
+    row = batch_df.select(
+        F.count(F.lit(1)).alias("n"),
+        F.expr(f"bit_xor(xxhash64({anchored}))").alias("x"),
+        # summed as decimal (sum widens to decimal(30,0) — room for
+        # ~10^11 rows before overflow) and reduced mod 2^64
+        # driver-side, since a LONG sum would ANSI-throw on wrap
+        F.sum(F.expr(f"cast(xxhash64({anchored}) as decimal(20, 0))"))
+        .alias("s"),
+    ).first()
+    s = None if row["s"] is None else int(row["s"]) % (1 << 64)
+    return f"{row['n']}:{row['x']}:{s}"
+
+
+def _ledgered_loop(stream_df: DataFrame, store: str, checkpoint: str,
+                   *, op: str, ledger: str, commit,
+                   params: dict | None = None):
+    """The one exactly-once path of every ``foreachBatch`` store in
+    this module.  ``foreachBatch`` delivers at least once: an
+    in-flight epoch replays after a crash, and a rebuilt checkpoint
+    re-delivers completed epochs — or NEW data under their reused ids,
+    since it restarts at epoch 0.  Per micro-batch, in order:
+
+    1. refuse an interrupted swap of ``store`` (``publish``'s
+       restore message); a ledger whose ``store`` is missing is stale
+       — markers can only describe a store that exists — and is wiped;
+    2. an ``epoch-<id>`` marker in ``ledger`` records the content
+       fingerprint (:func:`_batch_fingerprint`, one batch-sized job) of
+       the batch its epoch committed: a matching batch is a replay and
+       returns before any store work; a different one raises "content
+       differs" instead of silently dropping new data;
+    3. ``params`` (JSON-able) are compared with the ``_params.json``
+       the store records — here and once at call time, so a mismatched
+       resume refuses before any epoch runs;
+    4. a ``_last_epoch`` stamp inside ``store`` at or past the epoch id
+       means the store already holds this epoch (a crash after its
+       publish, before its marker): only the marker is restored;
+    5. ``commit(batch_df, sidecars)`` applies the batch;
+    6. the marker is written (:func:`_write_marker_atomic`).
+
+    ``sidecars`` (the stamp, plus ``_params.json`` when ``params`` is
+    given) must ride the ``publish`` that replaces ``store``, so data,
+    stamp and parameters replace together.  ``mor_ingest_stream`` and
+    ``upsert_stream`` leave them out: a re-applied batch is a no-op
+    there (suffix idempotence; merge semantics), so the crash window
+    costs only redundant work.
+
+    Durability: markers and stamp use DRIVER-LOCAL ``os`` calls, so
+    exactly-once survives a driver restart only when the store lives
+    on a filesystem every prospective driver sees (single node, NFS, a
+    fuse-mounted object store); callers pass ``_require_local`` paths.
+    A multi-node deployment would swap these calls for the Hadoop
+    ``FileSystem`` the checkpoint uses."""
+    import json as _json
+    import os
+    import shutil
+
+    from cosmap_spark.sinks.writers import _refuse_interrupted_swap
+
     stamp_file = os.path.join(store, "_last_epoch")
+    params_file = os.path.join(store, "_params.json")
+
+    def check_params() -> None:
+        if params is None or not os.path.isdir(store):
+            return
+        have = {}
+        if os.path.exists(params_file):
+            with open(params_file) as f:
+                have = _json.load(f)
+        _check_params(op, store, have, params)
+
+    check_params()
 
     def run(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        ledger = os.path.join(store_path, "_epochs")
-        done_marker = os.path.join(ledger, f"epoch-{epoch_id}")
-        if os.path.exists(done_marker):
-            return  # replayed epoch: state already includes it
-        if pre_epoch is not None:
-            pre_epoch()
+        _refuse_interrupted_swap(store)
+        if not os.path.exists(store) and os.path.exists(ledger):
+            shutil.rmtree(ledger)
+        marker = os.path.join(ledger, f"epoch-{epoch_id}")
+        fp = _batch_fingerprint(batch_df)
+        if os.path.exists(marker):
+            with open(marker) as f:
+                if f.read().strip() == fp:
+                    return  # replayed epoch: the store already holds it
+            raise ValueError(
+                f"{op}: epoch {epoch_id} marker exists but the batch "
+                "content differs from what was committed — a rebuilt "
+                "checkpoint is re-delivering NEW data under a completed "
+                f"epoch id.  Refusing to silently drop it; remove the "
+                f"ledger {ledger!r} together with the checkpoint to "
+                "re-apply from a clean slate."
+            )
+        check_params()
         os.makedirs(ledger, exist_ok=True)
         if os.path.exists(stamp_file):
             with open(stamp_file) as f:
-                last = int(f.read().strip())
-            if last >= epoch_id:
-                # crash landed between the completed swap and the
-                # marker write: the store already contains this epoch
-                # (the stamp swapped in with it) — re-merging would
-                # double-count, so only the marker is restored
-                with open(done_marker, "w") as f:
-                    f.write("ok")
-                return
-        extra = dict(sidecars or {})
-        extra["_last_epoch"] = str(epoch_id)
-        batch = batch_state(batch_df)
-        if os.path.exists(store):
-            batch = merge_state(spark.read.parquet(store), batch)
-        publish(store, batch, extra_files=extra)
-        with open(done_marker, "w") as f:
-            f.write("ok")
+                if int(f.read().strip()) >= epoch_id:
+                    _write_marker_atomic(marker, fp)
+                    return
+        sidecars = {"_last_epoch": str(epoch_id)}
+        if params is not None:
+            sidecars["_params.json"] = _json.dumps(params)
+        commit(batch_df, sidecars)
+        _write_marker_atomic(marker, fp)
 
     return (
         stream_df.writeStream.foreachBatch(run)
@@ -830,20 +948,70 @@ def _ledgered_loop(stream_df: DataFrame, store_path: str, checkpoint: str,
     )
 
 
+def _fold(store: str, batch_state, merge_state):
+    """The ``commit`` of a monitor store: ``batch_state(batch_df)``
+    reduces the micro-batch to its bounded state frame,
+    ``merge_state(old, batch)`` folds it into the persisted ``store``,
+    and the result replaces it through
+    :func:`cosmap_spark.sinks.writers.publish`."""
+    import os
+
+    from cosmap_spark.sinks.writers import publish
+
+    def commit(batch_df: DataFrame, sidecars: dict) -> None:
+        batch = batch_state(batch_df)
+        if os.path.exists(store):
+            batch = merge_state(batch_df.sparkSession.read.parquet(store),
+                                batch)
+        publish(store, batch, extra_files=sidecars)
+
+    return commit
+
+
+def _frozen_reference(store_path: str, op: str, meta_name: str,
+                      params: dict, reference: DataFrame | None,
+                      build) -> dict:
+    """Freeze a monitor's reference once, under ``store_path/ref``: on
+    first start ``build(reference) -> (counts, extra_meta)`` and the
+    counts are published with a ``meta_name`` sidecar holding
+    ``params`` + ``extra_meta`` inside the same directory (one atomic
+    replace); later starts reuse it — that is what frozen means — and
+    refuse other ``params``.  Returns the meta."""
+    import json as _json
+    import os
+
+    from cosmap_spark.sinks.writers import publish
+
+    ref_dir = os.path.join(store_path, "ref")
+    if os.path.exists(ref_dir):
+        with open(os.path.join(ref_dir, meta_name)) as f:
+            meta = _json.load(f)
+        _check_params(op, store_path, {k: meta[k] for k in params}, params,
+                      verb="frozen")
+        return meta
+    if reference is None:
+        raise ValueError(
+            f"{op}: no frozen reference at {store_path} — pass "
+            "reference= on first start"
+        )
+    counts, extra = build(reference)
+    meta = {**params, **extra}
+    publish(ref_dir, counts, extra_files={meta_name: _json.dumps(meta)})
+    return meta
+
+
 def sketch_stream(stream_df: DataFrame, store_path: str, checkpoint: str,
                   *, keys: list[str], col: str, lg_k: int = 12,
                   kind: str = "hll", k: int = 256):
     """Streaming maintenance of a persisted HLL sketch store — live
     per-key distinct counts over an unbounded stream with BOUNDED
     state: each micro-batch is sketched (``hll_sketch_agg``), merged
-    into the parquet store via
+    into the parquet store at ``store_path/sketches`` via
     ``operators.sketch.merge_sketch_tables`` (history is touched as
     O(groups · 2^lg_k) sketch bytes, never re-scanned), and the store
-    is atomically swapped.  Because HLL union is idempotent ONLY
-    across distinct items — not across replayed batches wholesale —
-    exactly-once is provided by an epoch ledger: a replayed epoch id
-    is detected and skipped, so at-least-once foreachBatch delivery
-    still yields exactly-once sketch state.
+    is replaced through :func:`_ledgered_loop`, which makes the
+    at-least-once delivery exactly-once (HLL union is idempotent ONLY
+    across distinct items, not across replayed batches wholesale).
 
     Read the live estimates any time with ``spark.read.parquet(store)``
     + ``hll_sketch_estimate`` (or feed the store to
@@ -855,31 +1023,16 @@ def sketch_stream(stream_df: DataFrame, store_path: str, checkpoint: str,
     one-shot batch sketch is not promised — only the accuracy
     bound is.
 
-    Durability assumption: the epoch ledger and the store swap use
-    DRIVER-LOCAL ``os`` filesystem calls, so the exactly-once markers
-    survive driver restarts only when ``store_path`` lives on a
-    filesystem every prospective driver sees (single node, NFS, or a
-    fuse-mounted object store).  A driver restarted on a different
-    node without shared storage loses the ledger and re-merges
-    delivered epochs — harmless to the ESTIMATES (HLL union is
-    idempotent across distinct items) but it breaks the byte-stability
-    promise above.  A multi-node deployment should swap these calls
-    for the same Hadoop ``FileSystem`` abstraction the checkpoint
-    uses.
-
     ``kind="kmv"`` maintains a KMV store instead
     (``operators.sketch.kmv_leaf`` / ``merge_kmv_tables``, sketch
     size ``k``): same ledger and swap mechanics, but with a STRONGER
     replay contract — KMV merge is wholesale-idempotent and
-    merge-order bit-stable, so even a ledger lost to an unshared
-    driver filesystem leaves the store BIT-identical to a one-shot
-    batch build (asserted in tests/test_streaming.py); the ledger is
-    then purely a skip-work optimization.  The sketch ``k`` is
-    recorded in the store (``_kmv_k``) and a mismatched resume is
-    rejected loudly (merging under a smaller k would silently cap
-    history)."""
-    import os
-
+    merge-order bit-stable, so even a lost ledger leaves the store
+    BIT-identical to a one-shot batch build (asserted in
+    tests/test_streaming.py).  ``kind`` and its size (``lg_k`` or
+    ``k``) are the store's recorded parameters: a mismatched resume is
+    refused (merging under a smaller k would silently cap history;
+    ``hll_union_agg`` rejects mixed ``lg_k``)."""
     from pyspark.sql import functions as F
 
     from cosmap_spark.operators.sketch import (
@@ -887,38 +1040,13 @@ def sketch_stream(stream_df: DataFrame, store_path: str, checkpoint: str,
         merge_kmv_tables,
         merge_sketch_tables,
     )
+    from cosmap_spark.sinks.writers import _require_local
 
     if kind not in ("hll", "kmv"):
         raise ValueError(f"kind must be 'hll' or 'kmv'; got {kind!r}")
-    from cosmap_spark.sinks.writers import _require_local
-
-    store_path = _require_local(store_path, "sketch_stream")
-
-    def check_k() -> None:
-        # the k sidecar lives INSIDE the sketches dir (written by the
-        # same atomic swap/rename as the data, so a store can never
-        # exist without its k — the heavy_hitters meta discipline);
-        # the store_path root is the pre-hardening legacy location
-        for kfile in (
-            os.path.join(store_path, "sketches", "_kmv_k"),
-            os.path.join(store_path, "_kmv_k"),
-        ):
-            if os.path.exists(kfile):
-                with open(kfile) as f:
-                    stored_k = int(f.read().strip())
-                if stored_k != k:
-                    raise ValueError(
-                        f"store at {store_path} was built with k="
-                        f"{stored_k}, resume requested k={k}"
-                    )
-                return
-
     if kind == "kmv":
-        # validate SYNCHRONOUSLY against an existing store — a
-        # mismatched k must refuse before any epoch runs (the ledger
-        # short-circuits replayed epochs, so an in-run-only check
-        # would silently skip straight past the refusal)
-        check_k()
+        _require_k(k, "sketch_stream")
+    store_path = _require_local(store_path, "sketch_stream")
 
     def batch_state(batch_df: DataFrame) -> DataFrame:
         if kind == "kmv":
@@ -932,13 +1060,13 @@ def sketch_stream(stream_df: DataFrame, store_path: str, checkpoint: str,
             return merge_kmv_tables(old, batch, keys, k=k)
         return merge_sketch_tables(old, batch, keys)
 
+    store = f"{store_path}/sketches"
     return _ledgered_loop(
-        stream_df, store_path, checkpoint,
-        subdir="sketches", op="sketch_stream",
-        batch_state=batch_state, merge_state=merge_state,
-        sidecars={"_kmv_k": str(k)} if kind == "kmv" else None,
-        # a store created after setup still gets parameter-checked
-        pre_epoch=check_k if kind == "kmv" else None,
+        stream_df, store, checkpoint, op="sketch_stream",
+        ledger=_ledger_dir(store_path),
+        commit=_fold(store, batch_state, merge_state),
+        params={"kind": kind, "k": k} if kind == "kmv"
+        else {"kind": kind, "lg_k": lg_k},
     )
 
 
@@ -958,8 +1086,7 @@ def drift_stream(stream_df: DataFrame, store_path: str, checkpoint: str,
     from ``reference`` (pass ``relative_error`` for the sketch
     quantiles at scale) and persists them under ``store_path/ref``
     with the boundaries in a ``_drift_meta`` sidecar INSIDE the dir
-    (same atomic write as the data — the sketch_stream k-sidecar
-    discipline).  Subsequent starts REUSE the stored reference — that
+    (:func:`_frozen_reference`).  Subsequent starts REUSE the stored reference — that
     is what frozen means — and ``reference`` may be ``None``;
     passing different ``cols``/``bins`` than the store records
     refuses loudly.
@@ -968,10 +1095,7 @@ def drift_stream(stream_df: DataFrame, store_path: str, checkpoint: str,
     (``operators.diff.drift_bin_counts`` — map-side stack + one tiny
     groupBy) and merged into ``store_path/counts`` by integer
     addition over O(cols·bins) rows — history is never re-scanned.
-    Exactly-once via the shared ``_ledgered_loop`` driver (epoch
-    ledger fast path + a ``_last_epoch`` stamp swapped in atomically
-    with the counts, closing the crash window between a completed
-    swap and the marker write), and
+    Exactly-once via :func:`_ledgered_loop`, and
     because the merge is plain integer addition over exact counts,
     the monitor state is BIT-identical to a one-shot batch over the
     concatenated stream: ``drift_state(spark, store)`` ≡
@@ -979,54 +1103,36 @@ def drift_stream(stream_df: DataFrame, store_path: str, checkpoint: str,
     including the psi doubles (asserted in tests/test_streaming.py).
 
     Read with :func:`drift_state` (the snapshot_drift-shaped table)
-    or :func:`drift_alarms` (per-column PSI vs a threshold).  Same
-    driver-local-filesystem durability contract as ``sketch_stream``.
+    or :func:`drift_alarms` (per-column PSI vs a threshold).
     """
-    import json as _json
-    import os
-
     from cosmap_spark.operators.diff import drift_bin_counts, drift_reference
     from cosmap_spark.sinks.writers import _require_local
 
     store_path = _require_local(store_path, "drift_stream")
-    ref_dir = os.path.join(store_path, "ref")
-    meta_file = os.path.join(ref_dir, "_drift_meta")
-    if os.path.exists(ref_dir):
-        with open(meta_file) as f:
-            meta = _json.load(f)
-        if meta["cols"] != list(cols) or meta["bins"] != bins:
-            raise ValueError(
-                f"drift_stream: store at {store_path} was frozen with "
-                f"cols={meta['cols']}, bins={meta['bins']}; resume "
-                f"requested cols={list(cols)}, bins={bins}"
-            )
-        bounds = {c: [float(x) for x in meta["bounds"][c]] for c in cols}
-    else:
-        if reference is None:
-            raise ValueError(
-                "drift_stream: no frozen reference at "
-                f"{store_path} — pass reference= on first start"
-            )
-        bounds, ref_counts = drift_reference(
-            reference, cols, bins=bins, relative_error=relative_error
-        )
-        from cosmap_spark.sinks.writers import publish
 
-        publish(
-            ref_dir, ref_counts,
-            extra_files={"_drift_meta": _json.dumps(
-                {"cols": list(cols), "bins": bins, "bounds": bounds}
-            )},
+    def build(ref: DataFrame):
+        bounds, counts = drift_reference(
+            ref, cols, bins=bins, relative_error=relative_error
         )
+        return counts, {"bounds": bounds}
 
+    meta = _frozen_reference(
+        store_path, "drift_stream", "_drift_meta",
+        {"cols": list(cols), "bins": bins}, reference, build,
+    )
+    bounds = {c: [float(x) for x in meta["bounds"][c]] for c in cols}
+    store = f"{store_path}/counts"
     return _ledgered_loop(
-        stream_df, store_path, checkpoint,
-        subdir="counts", op="drift_stream",
-        batch_state=lambda b: drift_bin_counts(b, cols, bounds),
-        merge_state=lambda old, batch: (
-            old.unionByName(batch)
-            .groupBy("column", "bin")
-            .agg(F.sum("n").cast("long").alias("n"))
+        stream_df, store, checkpoint, op="drift_stream",
+        ledger=_ledger_dir(store_path),
+        commit=_fold(
+            store,
+            lambda b: drift_bin_counts(b, cols, bounds),
+            lambda old, batch: (
+                old.unionByName(batch)
+                .groupBy("column", "bin")
+                .agg(F.sum("n").cast("long").alias("n"))
+            ),
         ),
     )
 
@@ -1122,14 +1228,13 @@ def category_drift_stream(stream_df: DataFrame, store_path: str,
     folded counts; each micro-batch folds against that frozen
     selection and merges per-(column, category) counts by INTEGER
     addition.  State is O(cols·(top_n+2)); history never re-scans;
-    exactly-once via the epoch ledger; mismatched cols/top_n/labels on
-    resume refuse loudly.
+    exactly-once via :func:`_ledgered_loop`; mismatched
+    cols/top_n/labels on resume refuse loudly.
 
     Because selection is old-side-only in the batch operator too, the
     live readout (:func:`category_drift_state`) is BIT-identical to
     ``category_drift(reference, all_streamed_data)`` — counts AND psi
-    doubles (asserted in tests/test_streaming.py).  Same driver-local
-    durability contract as ``sketch_stream``.
+    doubles (asserted in tests/test_streaming.py).
 
     ``frozen_categories`` ({column: [categories keeping identity]} —
     derive with ``operators.diff.heavy_hitter_categories``) is the
@@ -1140,9 +1245,6 @@ def category_drift_stream(stream_df: DataFrame, store_path: str,
     fine for bounded mixes, not for open key spaces).  The sidecar
     records the selection's provenance (``selection_source``); resume
     with a different selection refuses loudly."""
-    import json as _json
-    import os
-
     from pyspark.sql import Window as W
 
     from cosmap_spark.operators.diff import (
@@ -1167,43 +1269,15 @@ def category_drift_stream(stream_df: DataFrame, store_path: str,
             cols, frozen_categories, other_label,
             "category_drift_stream", null_label=null_label,
         )
-    ref_dir = os.path.join(store_path, "ref")
-    meta_file = os.path.join(ref_dir, "_catdrift_meta")
-    if os.path.exists(ref_dir):
-        with open(meta_file) as f:
-            meta = _json.load(f)
-        want = {"cols": list(cols), "top_n": top_n,
-                "other_label": other_label, "null_label": null_label}
-        have = {k: meta[k] for k in want}
-        if have != want:
-            raise ValueError(
-                f"category_drift_stream: store at {store_path} was "
-                f"frozen with {have}; resume requested {want}"
-            )
-        if frozen_categories is not None and {
-            c: sorted(set(frozen_categories[c])) for c in cols
-        } != {c: sorted(meta["selected"][c]) for c in cols}:
-            raise ValueError(
-                f"category_drift_stream: store at {store_path} was "
-                f"frozen with selection {meta['selected']} "
-                f"(source: {meta.get('selection_source', 'unknown')}); "
-                "resume requested a different frozen_categories set"
-            )
-        selected = {c: set(meta["selected"][c]) for c in cols}
-    else:
-        if reference is None:
-            raise ValueError(
-                "category_drift_stream: no frozen reference at "
-                f"{store_path} — pass reference= on first start"
-            )
+
+    def build(ref: DataFrame):
         if frozen_categories is not None:
             # unbounded-vocabulary freeze: fold BEFORE the aggregation
             # — the ref-count frame is O(cols·(|frozen|+1)) by
             # construction and that bounded frame is all that is ever
             # collected (for the per-column no-rows check)
-            selected = {c: set(frozen_categories[c]) for c in cols}
             ref_counts = (
-                _cat_stack(reference, cols, null_label)
+                _cat_stack(ref, cols, null_label)
                 .select(
                     "column",
                     _frozen_fold(cols, frozen_categories, other_label)
@@ -1221,62 +1295,74 @@ def category_drift_stream(stream_df: DataFrame, store_path: str,
                     f"category_drift_stream: columns {missing} have no "
                     "rows in the reference — no distribution to compare"
                 )
-            source = "frozen_categories"
-        else:
-            counts = (
-                _cat_stack(reference, cols, null_label)
-                .groupBy("column", "category")
-                .agg(F.count(F.lit(1)).alias("n"))
-            )
-            rn = F.row_number().over(
-                W.partitionBy("column").orderBy(
-                    F.col("n").desc(), F.col("category").asc()
-                )
-            )
-            rows = counts.withColumn("__rn", rn).collect()
-            selected = {
-                c: {r["category"] for r in rows
-                    if r["column"] == c and r["__rn"] <= top_n}
-                for c in cols
+            return ref_counts, {
+                "selected": {c: sorted(set(frozen_categories[c]))
+                             for c in cols},
+                "selection_source": "frozen_categories",
             }
-            for c in cols:
-                if not selected[c]:
-                    # refuse at freeze time (mirrors the batch
-                    # operator's no-distribution error): an empty
-                    # frozen selection would otherwise build a
-                    # zero-element array literal whose array_contains
-                    # folds every streamed row into OTHER — the monitor
-                    # would start and silently compare against nothing
-                    raise ValueError(
-                        f"category_drift_stream: column {c!r} has no "
-                        "rows in the reference — no distribution to "
-                        "compare"
-                    )
-            folded = {}
-            for r in rows:
-                key = (
-                    r["column"],
-                    r["category"]
-                    if r["category"] in selected[r["column"]]
-                    else other_label,
-                )
-                folded[key] = folded.get(key, 0) + r["n"]
-            ref_counts = reference.sparkSession.createDataFrame(
-                [(c, cat, n) for (c, cat), n in sorted(folded.items())],
-                "column string, category string, n long",
-            )
-            source = "reference_top_n"
-        from cosmap_spark.sinks.writers import publish
-
-        publish(
-            ref_dir, ref_counts,
-            extra_files={"_catdrift_meta": _json.dumps({
-                "cols": list(cols), "top_n": top_n,
-                "other_label": other_label, "null_label": null_label,
-                "selected": {c: sorted(selected[c]) for c in cols},
-                "selection_source": source,
-            })},
+        counts = (
+            _cat_stack(ref, cols, null_label)
+            .groupBy("column", "category")
+            .agg(F.count(F.lit(1)).alias("n"))
         )
+        rn = F.row_number().over(
+            W.partitionBy("column").orderBy(
+                F.col("n").desc(), F.col("category").asc()
+            )
+        )
+        rows = counts.withColumn("__rn", rn).collect()
+        selected = {
+            c: {r["category"] for r in rows
+                if r["column"] == c and r["__rn"] <= top_n}
+            for c in cols
+        }
+        for c in cols:
+            if not selected[c]:
+                # refuse at freeze time (mirrors the batch operator's
+                # no-distribution error): an empty frozen selection
+                # would otherwise build a zero-element array literal
+                # whose array_contains folds every streamed row into
+                # OTHER — the monitor would start and silently compare
+                # against nothing
+                raise ValueError(
+                    f"category_drift_stream: column {c!r} has no "
+                    "rows in the reference — no distribution to "
+                    "compare"
+                )
+        folded = {}
+        for r in rows:
+            key = (
+                r["column"],
+                r["category"]
+                if r["category"] in selected[r["column"]]
+                else other_label,
+            )
+            folded[key] = folded.get(key, 0) + r["n"]
+        ref_counts = ref.sparkSession.createDataFrame(
+            [(c, cat, n) for (c, cat), n in sorted(folded.items())],
+            "column string, category string, n long",
+        )
+        return ref_counts, {
+            "selected": {c: sorted(selected[c]) for c in cols},
+            "selection_source": "reference_top_n",
+        }
+
+    meta = _frozen_reference(
+        store_path, "category_drift_stream", "_catdrift_meta",
+        {"cols": list(cols), "top_n": top_n,
+         "other_label": other_label, "null_label": null_label},
+        reference, build,
+    )
+    if frozen_categories is not None and {
+        c: sorted(set(frozen_categories[c])) for c in cols
+    } != {c: sorted(meta["selected"][c]) for c in cols}:
+        raise ValueError(
+            f"category_drift_stream: store at {store_path} was "
+            f"frozen with selection {meta['selected']} "
+            f"(source: {meta.get('selection_source', 'unknown')}); "
+            "resume requested a different frozen_categories set"
+        )
+    selected = {c: set(meta["selected"][c]) for c in cols}
 
     sel_chain = None
     for c in cols:
@@ -1304,14 +1390,17 @@ def category_drift_stream(stream_df: DataFrame, store_path: str,
             .agg(F.count(F.lit(1)).alias("n"))
         )
 
+    store = f"{store_path}/counts"
     return _ledgered_loop(
-        stream_df, store_path, checkpoint,
-        subdir="counts", op="category_drift_stream",
-        batch_state=batch_state,
-        merge_state=lambda old, batch: (
-            old.unionByName(batch)
-            .groupBy("column", "category")
-            .agg(F.sum("n").cast("long").alias("n"))
+        stream_df, store, checkpoint, op="category_drift_stream",
+        ledger=_ledger_dir(store_path),
+        commit=_fold(
+            store, batch_state,
+            lambda old, batch: (
+                old.unionByName(batch)
+                .groupBy("column", "category")
+                .agg(F.sum("n").cast("long").alias("n"))
+            ),
         ),
     )
 
@@ -1430,34 +1519,15 @@ def abtest_stream(stream_df: DataFrame, store_path: str, checkpoint: str,
     a one-shot ``welch_ttest`` over the concatenated stream (t, dof,
     means — all of it; asserted in tests/test_streaming.py).
 
-    Exactly-once via the shared ``_ledgered_loop`` driver (ledger +
-    atomic ``_last_epoch`` stamp); the quantization dp is recorded
-    in a sidecar INSIDE the store (the sketch_stream k discipline) and
-    a mismatched resume refuses loudly — merging sums at two different
-    scales would silently corrupt every statistic.  Same driver-local
-    durability contract as ``sketch_stream``; NULL variants/values are
-    excluded (matching the batch operator)."""
-    import os
-
+    Exactly-once via :func:`_ledgered_loop`; ``quantize_dp`` is the
+    store's recorded parameter and a mismatched resume refuses —
+    merging sums at two different scales would silently corrupt every
+    statistic.  NULL variants/values are excluded (matching the batch
+    operator)."""
     from cosmap_spark.sinks.writers import _require_local
 
     store_path = _require_local(store_path, "abtest_stream")
     scale = float(10 ** quantize_dp)
-
-    def check_dp() -> None:
-        f = os.path.join(store_path, "arms", "_abtest_dp")
-        if os.path.exists(f):
-            with open(f) as fh:
-                stored = int(fh.read().strip())
-            if stored != quantize_dp:
-                raise ValueError(
-                    f"abtest_stream: store at {store_path} was built "
-                    f"with quantize_dp={stored}, resume requested "
-                    f"{quantize_dp} — sums at different scales cannot "
-                    "merge"
-                )
-
-    check_dp()
 
     def batch_state(batch_df: DataFrame) -> DataFrame:
         q = F.round(F.col(value_col) * F.lit(scale)).cast("long")
@@ -1478,21 +1548,23 @@ def abtest_stream(stream_df: DataFrame, store_path: str, checkpoint: str,
             )
         )
 
+    store = f"{store_path}/arms"
     return _ledgered_loop(
-        stream_df, store_path, checkpoint,
-        subdir="arms", op="abtest_stream",
-        batch_state=batch_state,
-        merge_state=lambda old, batch: (
-            old.unionByName(batch)
-            .groupBy("variant")
-            .agg(
-                F.sum("n").cast("long").alias("n"),
-                F.sum("s").cast("decimal(20,0)").alias("s"),
-                F.sum("ss").cast("decimal(38,0)").alias("ss"),
-            )
+        stream_df, store, checkpoint, op="abtest_stream",
+        ledger=_ledger_dir(store_path),
+        commit=_fold(
+            store, batch_state,
+            lambda old, batch: (
+                old.unionByName(batch)
+                .groupBy("variant")
+                .agg(
+                    F.sum("n").cast("long").alias("n"),
+                    F.sum("s").cast("decimal(20,0)").alias("s"),
+                    F.sum("ss").cast("decimal(38,0)").alias("ss"),
+                )
+            ),
         ),
-        sidecars={"_abtest_dp": str(quantize_dp)},
-        pre_epoch=check_dp,
+        params={"quantize_dp": quantize_dp},
     )
 
 
@@ -1503,12 +1575,13 @@ def abtest_state(spark: SparkSession, store_path: str) -> DataFrame:
     t_stat, dof]``.  The store holds exact integer sums, so this is
     bit-identical to the batch operator over all data streamed so
     far."""
+    import json as _json
     import os
 
     from cosmap_spark.operators.stats_tests import _welch_from_moments
 
-    with open(os.path.join(store_path, "arms", "_abtest_dp")) as f:
-        dp = int(f.read().strip())
+    with open(os.path.join(store_path, "arms", "_params.json")) as f:
+        dp = _json.load(f)["quantize_dp"]
     g = spark.read.parquet(os.path.join(store_path, "arms"))
     return _welch_from_moments(g, float(10 ** dp))
 
@@ -1522,8 +1595,8 @@ def ks_stream(stream_df: DataFrame, store_path: str, checkpoint: str,
     the first monitor built as pure CONFIG over the shared
     :func:`_ledgered_loop` (the round-8 consolidation's purpose): the
     batch kernel is ``stats_tests.one_side_quantized_counts``, the
-    merge is integer addition per (column, q), the sidecar records
-    cols + quantize_dp with loud mismatch refusal.
+    merge is integer addition per (column, q), the frozen reference
+    records cols + quantize_dp with loud mismatch refusal.
 
     First start freezes the reference's quantized-value counts under
     ``store_path/ref``; each micro-batch's counts accumulate into
@@ -1534,56 +1607,36 @@ def ks_stream(stream_df: DataFrame, store_path: str, checkpoint: str,
     (``ks_from_counts``), :func:`ks_state` is BIT-identical to
     ``ks_test(reference, all_streamed_data)`` — d_num, d_stat and
     lambda_stat included (asserted in tests).  Read verdicts with
-    ``decide(ks_state(...), "ks")``.  Exactly-once via the shared
-    driver (ledger + atomic ``_last_epoch`` stamp); same driver-local
-    durability contract as ``sketch_stream``."""
-    import json as _json
-    import os
-
+    ``decide(ks_state(...), "ks")``.  Exactly-once via
+    :func:`_ledgered_loop`."""
     from cosmap_spark.operators.stats_tests import (
         one_side_quantized_counts,
     )
-    from cosmap_spark.sinks.writers import _require_local, publish
+    from cosmap_spark.sinks.writers import _require_local
 
     store_path = _require_local(store_path, "ks_stream")
-    ref_dir = os.path.join(store_path, "ref")
-    meta_file = os.path.join(ref_dir, "_ks_meta")
-    if os.path.exists(ref_dir):
-        with open(meta_file) as f:
-            meta = _json.load(f)
-        if meta["cols"] != list(cols) or meta["quantize_dp"] != quantize_dp:
-            raise ValueError(
-                f"ks_stream: store at {store_path} was frozen with "
-                f"cols={meta['cols']}, quantize_dp="
-                f"{meta['quantize_dp']}; resume requested "
-                f"cols={list(cols)}, quantize_dp={quantize_dp}"
-            )
-    else:
-        if reference is None:
-            raise ValueError(
-                "ks_stream: no frozen reference at "
-                f"{store_path} — pass reference= on first start"
-            )
-        ref_counts = one_side_quantized_counts(
-            reference, cols, quantize_dp, "ks_stream"
-        )
-        publish(
-            ref_dir, ref_counts,
-            extra_files={"_ks_meta": _json.dumps(
-                {"cols": list(cols), "quantize_dp": quantize_dp}
-            )},
-        )
-
-    return _ledgered_loop(
-        stream_df, store_path, checkpoint,
-        subdir="counts", op="ks_stream",
-        batch_state=lambda b: one_side_quantized_counts(
-            b, cols, quantize_dp, "ks_stream"
+    _frozen_reference(
+        store_path, "ks_stream", "_ks_meta",
+        {"cols": list(cols), "quantize_dp": quantize_dp}, reference,
+        lambda ref: (
+            one_side_quantized_counts(ref, cols, quantize_dp, "ks_stream"),
+            {},
         ),
-        merge_state=lambda old, batch: (
-            old.unionByName(batch)
-            .groupBy("column", "q")
-            .agg(F.sum("n").cast("long").alias("n"))
+    )
+    store = f"{store_path}/counts"
+    return _ledgered_loop(
+        stream_df, store, checkpoint, op="ks_stream",
+        ledger=_ledger_dir(store_path),
+        commit=_fold(
+            store,
+            lambda b: one_side_quantized_counts(
+                b, cols, quantize_dp, "ks_stream"
+            ),
+            lambda old, batch: (
+                old.unionByName(batch)
+                .groupBy("column", "q")
+                .agg(F.sum("n").cast("long").alias("n"))
+            ),
         ),
     )
 
@@ -1709,7 +1762,7 @@ def reservoir_stream(stream_df: DataFrame, store_path: str,
     a unique sampling key (the intended use) the twin is
     unconditional.
 
-    Exactly-once is DOUBLY held: the shared epoch ledger short-circuits
+    Exactly-once is DOUBLY held: :func:`_ledgered_loop` short-circuits
     replays like every monitor, and — uniquely — the min-k fold itself
     is idempotent across replays by construction
     (:func:`reservoir_merge`: distinct rows, KMV property), so even a
@@ -1726,29 +1779,14 @@ def reservoir_stream(stream_df: DataFrame, store_path: str,
 
     State/scale shape: each micro-batch folds to its own ≤k(·strata)
     candidate set batch-side, the store merge touches O(k·strata)
-    rows, history is never re-scanned.  Parameters ride a sidecar and
-    a mismatched resume refuses (the sketch_stream k lesson)."""
-    import json as _json
-    import os
-
+    rows, history is never re-scanned.  ``k`` (an int >= 1), the keys,
+    strata, weight column and seed are the store's recorded parameters:
+    a mismatched resume refuses."""
     from cosmap_spark.operators.sampler import _es_rank, _key_hash
+    from cosmap_spark.sinks.writers import _require_local
 
-    params = {"k": int(k), "key_cols": list(key_cols),
-              "strata_cols": list(strata_cols or []),
-              "weight_col": weight_col, "seed": int(seed)}
-    meta_path = os.path.join(store_path, "sample", "_reservoir_meta")
-
-    def check_params() -> None:
-        if os.path.exists(meta_path):
-            with open(meta_path) as f:
-                have = _json.load(f)
-            if have != params:
-                raise ValueError(
-                    f"reservoir_stream: store at {store_path} was built "
-                    f"with {have}; resume requested {params}"
-                )
-
-    check_params()
+    _require_k(k, "reservoir_stream")
+    store_path = _require_local(store_path, "reservoir_stream")
 
     def batch_state(batch_df: DataFrame) -> DataFrame:
         if weight_col is not None:
@@ -1767,12 +1805,14 @@ def reservoir_stream(stream_df: DataFrame, store_path: str,
             strata_cols=strata_cols,
         )
 
+    store = f"{store_path}/sample"
     return _ledgered_loop(
-        stream_df, store_path, checkpoint,
-        subdir="sample", op="reservoir_stream",
-        batch_state=batch_state, merge_state=merge_state,
-        sidecars={"_reservoir_meta": _json.dumps(params)},
-        pre_epoch=check_params,
+        stream_df, store, checkpoint, op="reservoir_stream",
+        ledger=_ledger_dir(store_path),
+        commit=_fold(store, batch_state, merge_state),
+        params={"k": k, "key_cols": list(key_cols),
+                "strata_cols": list(strata_cols or []),
+                "weight_col": weight_col, "seed": int(seed)},
     )
 
 
@@ -1911,7 +1951,9 @@ def store_health(spark: SparkSession, stores: dict[str, str], *,
       ``mor_oldest_delta_age_s``;
     - any rename-swap streaming store: ``pending_interrupted_swap``
       (backup present with the live dir MISSING — significant, the
-      one state needing a manual restore), ``ledger_last_epoch``;
+      one state needing a manual restore), ``ledger_last_epoch``
+      (wherever :func:`_ledger_dir` puts the ledger — an
+      ``upsert_stream`` table's sits beside it);
     - monitor stores additionally report ``rows:<subdir>`` per state
       table (monitor state is O(cols·bins)-sized, so counting is
       cheap; MOR bases are table-sized and deliberately NEVER counted
@@ -1937,17 +1979,6 @@ def store_health(spark: SparkSession, stores: dict[str, str], *,
             "health", name, stat,
             None if value is None else float(value), None, bool(sig),
         ))
-
-    def ledger_last(path: str) -> int | None:
-        led = _os.path.join(path, "_epochs")
-        if not _os.path.isdir(led):
-            return None
-        es = [
-            int(n.split("-", 1)[1])
-            for n in _os.listdir(led)
-            if n.startswith("epoch-") and n.split("-", 1)[1].isdigit()
-        ]
-        return max(es) if es else None
 
     def sync_facts(name: str, path: str) -> None:
         # a replica / maintained-aggregate destination carries its
@@ -1994,13 +2025,13 @@ def store_health(spark: SparkSession, stores: dict[str, str], *,
                 )
                 fact(name, "mor_oldest_delta_age_s",
                      round(_time.time() - oldest, 1), False)
-            le = ledger_last(path)
+            le = _ledger_last_epoch(path)
             if le is not None:
                 fact(name, "ledger_last_epoch", le, False)
             continue
         # generic monitor store: ledger + per-state-table row counts +
         # interrupted-swap flags on each state subdir
-        le = ledger_last(path)
+        le = _ledger_last_epoch(path)
         if le is not None:
             fact(name, "ledger_last_epoch", le, False)
         if _os.path.isdir(path):
@@ -2045,23 +2076,18 @@ def heavy_hitters_stream(stream_df: DataFrame, store_path: str,
     batch) and merged into the ≤k-row store
     (``merge_mg_tables`` — Agarwal et al. mergeable summaries, the
     undercount bound accumulating as Σ Nᵢ/(k+1)).  The store records
-    the running total N in ``_mg_meta.json`` so readers can state the
+    the running total N in ``counters/_mg_meta.json`` so readers can state the
     guarantee: any key whose TRUE total frequency exceeds N/(k+1) is
     present, with ``mg_count`` a lower bound undercounting by at most
     N/(k+1).
 
     MG merge is NOT replay-idempotent (re-merging a batch double-
-    counts), so exactly-once rides the same epoch ledger as the
-    HLL/KMV stores — hardened here because a double-count is silent
-    data corruption, not just wasted work: the meta sidecar (running
-    N, k, and the LAST MERGED EPOCH) is written INSIDE the counters
-    directory by the same atomic swap that replaces the counters, so
-    a crash between the swap and the done-marker is detected on
-    replay (``last_epoch`` already equals the epoch id ⇒ skip the
-    merge, restore the marker) instead of double-merging.  A
-    mismatched ``k`` on resume is refused synchronously (merging
-    under a different k silently changes the guarantee).  Exact
-    counts for the surviving candidates, when needed, are one
+    counts — silent data corruption), so exactly-once rides
+    :func:`_ledgered_loop`; the running N rides the same publish as
+    the counters, so both replace together.  ``k`` (an int >= 1) is
+    the store's recorded parameter: a mismatched resume is refused
+    (merging under a different k silently changes the guarantee).
+    Exact counts for the surviving candidates, when needed, are one
     broadcast-verify scan over the archived corpus — the batch
     ``heavy_hitters_sketch`` second pass, by design not possible from
     a stream alone."""
@@ -2071,64 +2097,26 @@ def heavy_hitters_stream(stream_df: DataFrame, store_path: str,
     from cosmap_spark.operators.sketch import merge_mg_tables, mg_summary
     from cosmap_spark.sinks.writers import _require_local, publish
 
+    _require_k(k, "heavy_hitters_stream")
     store_path = _require_local(store_path, "heavy_hitters_stream")
-    store = os.path.join(store_path, "counters")
-    # meta lives INSIDE the counters dir so the swap replaces both
-    # atomically; the legacy location (store_path root) is read as a
-    # fallback for stores written before the hardening
-    meta_name = "_mg_meta.json"
-    legacy_meta = os.path.join(store_path, meta_name)
+    store = f"{store_path}/counters"
+    meta_file = os.path.join(store, "_mg_meta.json")
 
-    def read_meta() -> dict:
-        for p in (os.path.join(store, meta_name), legacy_meta):
-            if os.path.exists(p):
-                with open(p) as f:
-                    return _json.load(f)
-        return {"k": k, "n": 0}
-
-    meta0 = read_meta()
-    if meta0["k"] != k:
-        raise ValueError(
-            f"store at {store_path} was built with k={meta0['k']}, "
-            f"resume requested k={k}"
-        )
-
-    def run(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        ledger = os.path.join(store_path, "_epochs")
-        done_marker = os.path.join(ledger, f"epoch-{epoch_id}")
-        if os.path.exists(done_marker):
-            return  # replayed epoch: counters already include it
-        meta = read_meta()
-        if meta["k"] != k:
-            raise ValueError(
-                f"store at {store_path} was built with k={meta['k']}, "
-                f"resume requested k={k}"
-            )
-        os.makedirs(ledger, exist_ok=True)
-        if meta.get("last_epoch") == epoch_id:
-            # crash landed between the store swap and the marker: the
-            # counters already contain this epoch (the stamp swapped in
-            # with them) — re-merging would double-count, so only the
-            # marker is restored
-            with open(done_marker, "w") as f:
-                f.write("ok")
-            return
-        batch, n_batch = mg_summary(batch_df, key_col, k=k)
-        new_meta = _json.dumps(
-            {"k": k, "n": meta["n"] + n_batch, "last_epoch": epoch_id}
-        )
+    def commit(batch_df: DataFrame, sidecars: dict) -> None:
+        batch, n = mg_summary(batch_df, key_col, k=k)
         if os.path.exists(store):
-            batch = merge_mg_tables(spark.read.parquet(store), batch, k=k)
-        publish(store, batch, extra_files={meta_name: new_meta})
-        with open(done_marker, "w") as f:
-            f.write("ok")
+            with open(meta_file) as f:
+                n += _json.load(f)["n"]
+            batch = merge_mg_tables(
+                batch_df.sparkSession.read.parquet(store), batch, k=k
+            )
+        publish(store, batch, extra_files={
+            **sidecars, "_mg_meta.json": _json.dumps({"n": n}),
+        })
 
-    return (
-        stream_df.writeStream.foreachBatch(run)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _ledgered_loop(
+        stream_df, store, checkpoint, op="heavy_hitters_stream",
+        ledger=_ledger_dir(store_path), commit=commit, params={"k": k},
     )
 
 
@@ -2355,22 +2343,16 @@ def mor_ingest_stream(changes: DataFrame, store_path: str,
     ``latest_per_key``; without it batches must be key-unique, which
     ``mor_append`` validates).
 
-    Exactly-once is DOUBLY held, like the reservoir: the epoch ledger
-    (``_epochs`` markers beside the store, each recording the batch's
-    content FINGERPRINT — ``upsert_stream``'s discipline, because
-    epoch ids alone cannot distinguish a replay from NEW data landing
-    under a reused id after a checkpoint rebuild) short-circuits
-    replays before any Spark work, and even a marker lost to the
-    crash-after-append window is harmless — the re-delivered batch
-    appends a SECOND identical delta epoch whose application is a
-    no-op under the reconcile algebra (the suffix-idempotence law
-    pinned in tests/test_mor.py), so the view can never double-apply.
-    A marker hit with a DIFFERENT fingerprint raises instead of
-    silently dropping genuine data.  The store must already exist
+    Exactly-once is DOUBLY held, like the reservoir:
+    :func:`_ledgered_loop` short-circuits replays before any Spark work
+    (and refuses new data under a reused epoch id), and even a marker
+    lost to the crash-after-append window is harmless — the
+    re-delivered batch appends a SECOND identical delta epoch whose
+    application is a no-op under the reconcile algebra (the
+    suffix-idempotence law pinned in tests/test_mor.py), so the view
+    can never double-apply.  The store must already exist
     (``mor_init`` first — a stream must not invent the base
     snapshot's schema)."""
-    import os
-
     from cosmap_spark.operators.merge import latest_per_key
     from cosmap_spark.sinks.mor import _meta_for, mor_append
     from cosmap_spark.sinks.writers import _require_local
@@ -2381,91 +2363,18 @@ def mor_ingest_stream(changes: DataFrame, store_path: str,
     store_path = _require_local(store_path, "mor_ingest_stream")
     keys = _meta_for(store_path)["keys"]
 
-    def run(batch_df: DataFrame, epoch_id: int) -> None:
-        ledger = os.path.join(store_path, "_epochs")
-        marker = os.path.join(ledger, f"epoch-{epoch_id}")
-        fp = _batch_fingerprint(batch_df)  # one batch-sized job
-        if os.path.exists(marker):
-            with open(marker) as f:
-                recorded = f.read().strip()
-            if recorded == fp:
-                return  # replayed epoch: the log already contains it
-            raise ValueError(
-                f"mor_ingest_stream: epoch {epoch_id} marker exists "
-                "but the batch content differs from what was appended "
-                "— a rebuilt checkpoint is re-delivering NEW data "
-                "under a completed epoch id.  Refusing to silently "
-                f"drop it; remove the ledger {ledger!r} together with "
-                "the checkpoint to re-apply from a clean slate (extra "
-                "re-appends are harmless — suffix idempotence)."
-            )
-        os.makedirs(ledger, exist_ok=True)
+    def commit(batch_df: DataFrame, _sidecars: dict) -> None:
         spark = batch_df.sparkSession
         if seq_col is not None:
             batch = latest_per_key(batch_df, keys, seq_col=seq_col)
             mor_append(spark, store_path, batch, assume_unique=True)
         else:
             mor_append(spark, store_path, batch_df)
-        _write_marker_atomic(marker, fp)
 
-    return (
-        changes.writeStream.foreachBatch(run)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _ledgered_loop(
+        changes, store_path, checkpoint, op="mor_ingest_stream",
+        ledger=_ledger_dir(store_path), commit=commit,
     )
-
-
-def _write_marker_atomic(marker: str, content: str) -> None:
-    """Write a ledger marker whose CONTENT is compared on replay
-    (fingerprint markers) via dot-prefixed temp + ``os.rename``: a
-    torn plain write would leave a partial fingerprint that differs
-    from the replayed batch, turning a harmless replay window into the
-    hard 'marker exists but content differs' stop (round-9 advice).
-    Existence-only markers ('ok') don't need this — a torn one still
-    exists, which is the only fact checked."""
-    import os
-    import uuid
-
-    d = os.path.dirname(marker)
-    tmp = os.path.join(d, f".{os.path.basename(marker)}.{uuid.uuid4().hex}")
-    with open(tmp, "w") as f:
-        f.write(content)
-    os.rename(tmp, marker)
-
-
-def _batch_fingerprint(batch_df: DataFrame) -> str:
-    """Order-independent content fingerprint of a micro-batch: row
-    count + XOR + SUM of per-row xxhash64 over every column.  Two
-    hardening details (both bugs a plain xor-of-xxhash64(cols)
-    fingerprint has):
-
-    * every column slot contributes (position, isnull flag, value) —
-      Spark's hash expressions SKIP null inputs, so ``('a', NULL)``
-      and ``(NULL, 'a')`` would otherwise produce the SAME row hash,
-      and a bare positional anchor is still ambiguous when a VALUE
-      numerically equals the next slot's anchor (INT ``(1, NULL)`` vs
-      ``(NULL, 1)`` both hash ``[0, 1, 1]``) — the explicit flag makes
-      the token stream's parse deterministic (the merge.py
-      snapshot_cdc discipline);
-    * the wrap-around SUM component catches even-multiplicity
-      differences XOR cancels (``[A, A, C]`` vs ``[B, B, C]``
-      xor-collide at equal counts; their sums differ)."""
-    anchored = ", ".join(
-        f"{i}, cast(`{c}` is null as int), `{c}`"
-        for i, c in enumerate(batch_df.columns)
-    )
-    row = batch_df.select(
-        F.count(F.lit(1)).alias("n"),
-        F.expr(f"bit_xor(xxhash64({anchored}))").alias("x"),
-        # summed as decimal (sum widens to decimal(30,0) — room for
-        # ~10^11 rows before overflow) and reduced mod 2^64
-        # driver-side, since a LONG sum would ANSI-throw on wrap
-        F.sum(F.expr(f"cast(xxhash64({anchored}) as decimal(20, 0))"))
-        .alias("s"),
-    ).first()
-    s = None if row["s"] is None else int(row["s"]) % (1 << 64)
-    return f"{row['n']}:{row['x']}:{s}"
 
 
 def upsert_stream(changes: DataFrame, table_path: str, checkpoint: str,
@@ -2478,30 +2387,18 @@ def upsert_stream(changes: DataFrame, table_path: str, checkpoint: str,
     algebra in :func:`cosmap_spark.operators.merge.merge_upsert`, with
     the copy-on-write backup-swap of the batch sinks.
 
-    Exactly-once story under foreachBatch's at-least-once contract:
-    with an intact checkpoint only the IN-FLIGHT batch can replay,
-    and re-applying that identical batch is a no-op by merge
-    semantics (same winners, same tombstones ⇒ same table).  The
-    ``<table>.__upsert_epochs`` sibling ledger (sketch_stream's
-    discipline, same driver-local-filesystem durability caveat; named
-    after the table directory so concurrent streams under one parent
-    never share markers) additionally skips the redundant O(table)
-    rewrite such a replay would pay — and guards the one genuinely
-    dangerous replay: a rebuilt checkpoint re-delivering COMPLETED
-    epochs, where re-applying an old batch is NOT idempotent (it can
-    resurrect a key a later batch deleted).  Epoch ids alone cannot
-    distinguish that replay from NEW data landing under a reused epoch
-    id (a rebuilt checkpoint restarts at 0), so each marker records a
-    content fingerprint (row count + order-independent XOR and SUM of
-    positionally-anchored per-row xxhash64 — anchors because Spark's
-    hash skips null slots, the sum because XOR cancels even-repeated
-    rows): a marker hit with a MATCHING fingerprint
-    skips the redundant rewrite; a MISMATCH raises instead of silently
-    dropping genuine data — wipe the ledger (or the checkpoint AND the
-    ledger together) to re-apply from a clean slate.  A MISSING table
-    invalidates the ledger (it is wiped and the stream bootstraps
-    cleanly) — markers can only describe a table that still exists.  Snapshot schema = change schema minus ``seq_col``
-    / ``delete_col``, fixed by the first batch.
+    Exactly-once via :func:`_ledgered_loop`, whose ledger sits BESIDE
+    the table (``<table>.__upsert_epochs``, :func:`_ledger_dir`).
+    With an intact checkpoint only the in-flight batch can replay, and
+    re-applying that identical batch is a no-op by merge semantics (the
+    ledger skips the redundant O(table) rewrite); the dangerous replay
+    is a rebuilt checkpoint re-delivering completed epochs, where
+    re-applying an old batch can resurrect a key a later batch deleted
+    — the fingerprint markers skip it, and refuse new data under a
+    reused epoch id.  A MISSING table invalidates the ledger (it is
+    wiped and the stream bootstraps cleanly).  Snapshot schema = change
+    schema minus ``seq_col`` / ``delete_col``, fixed by the first
+    batch.
 
     At scale: each micro-batch costs one broadcastable anti-join over
     the snapshot plus the rewrite — the rewrite is the copy-on-write
@@ -2509,66 +2406,26 @@ def upsert_stream(changes: DataFrame, table_path: str, checkpoint: str,
     partitioned table and swaps per touched partition
     (``merge_upsert_partitioned``), or at a log-backed table format."""
     import os
-    import shutil
 
     from cosmap_spark.operators.merge import merge_upsert as _merge_plan
-    from cosmap_spark.sinks.writers import (
-        _refuse_interrupted_swap,
-        _require_local,
-        publish,
-    )
+    from cosmap_spark.sinks.writers import _require_local, publish
 
     table_path = _require_local(table_path, "upsert_stream")
     drop_cols = [c for c in (seq_col, delete_col) if c is not None]
-    # the ledger is a SIBLING named after the table directory itself:
-    # two streams under one parent never share markers, and the ledger
-    # dies with the table name it describes
-    ledger = f"{table_path}.__upsert_epochs"
 
-    fingerprint = _batch_fingerprint
-
-    def run(batch_df: DataFrame, epoch_id: int) -> None:
+    def commit(batch_df: DataFrame, _sidecars: dict) -> None:
         spark = batch_df.sparkSession
-        done_marker = os.path.join(ledger, f"epoch-{epoch_id}")
-        # a crash inside a previous epoch's swap leaves the table
-        # missing with only the backup: the bootstrap branch below
-        # would wipe the ledger before publish refuses — refuse first
-        _refuse_interrupted_swap(table_path)
-        fp = fingerprint(batch_df)  # one batch-sized job
         if os.path.exists(table_path):
-            if os.path.exists(done_marker):
-                with open(done_marker) as f:
-                    recorded = f.read().strip()
-                if recorded == fp:
-                    return  # replayed epoch: already merged
-                raise ValueError(
-                    f"upsert_stream: epoch {epoch_id} marker exists but "
-                    "the batch content differs from what was merged — a "
-                    "rebuilt checkpoint is re-delivering NEW data under "
-                    "a completed epoch id.  Refusing to silently drop "
-                    f"it; remove the ledger {ledger!r} together with "
-                    "the checkpoint to re-apply from a clean slate."
-                )
             existing = spark.read.parquet(table_path)
         else:
-            # bootstrap — any surviving ledger is STALE (it can only
-            # describe a table that no longer exists, e.g. a wiped-and-
-            # rebuilt lineage); honoring it would silently drop every
-            # replayed batch and never re-create the table
-            if os.path.exists(ledger):
-                shutil.rmtree(ledger)
             existing = spark.createDataFrame(
                 [], batch_df.drop(*drop_cols).schema
             )
         publish(table_path, _merge_plan(existing, batch_df, keys,
                                         seq_col=seq_col,
                                         delete_col=delete_col))
-        os.makedirs(ledger, exist_ok=True)
-        _write_marker_atomic(done_marker, fp)
 
-    return (
-        changes.writeStream.foreachBatch(run)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _ledgered_loop(
+        changes, table_path, checkpoint, op="upsert_stream",
+        ledger=_ledger_dir(table_path, beside=True), commit=commit,
     )

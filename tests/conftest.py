@@ -18,8 +18,9 @@ from cosmap_spark.tables import TABLES  # noqa: E402
 SF_DIR = os.environ.get("COSMAP_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
-#: The slow tier (round 11): test FUNCTIONS (all parametrizations)
-#: whose full-suite call time totalled >= 4 s in the --durations=0
+#: The slow tier (round 11): test FUNCTIONS (all parametrizations),
+#: or single ``fn[param]`` cells, whose full-suite call time totalled
+#: >= 4 s in the --durations=0
 #: profile of commit 16ff5b1 (992 passed, 54m18s total).  Marked
 #: centrally here - not with per-test decorators - so the tier has
 #: ONE auditable definition; the parity mirror and plan audit are
@@ -64,6 +65,10 @@ SLOW_TESTS = {
     "test_fault_injection.py::test_kill_point_matrix",
     "test_fault_injection.py::test_mor_manifest_ingest_kill_matrix",
     "test_fault_injection.py::test_merge_upsert_interrupted_window",
+    # one cell (reservoir) stays in the default tier
+    *(f"test_fault_injection.py::test_rebuilt_checkpoint_replay[{k}]"
+      for k in ("abtest", "category", "drift", "heavy_hitters", "ks",
+                "mor", "sketch", "upsert")),
     "test_funnel.py::test_attribution_credit_conservation_property",
     "test_funnel.py::test_cohort_retention_month_boundary_property",
     "test_funnel.py::test_sliding_randomized_differential",
@@ -221,10 +226,11 @@ def pytest_collection_modifyitems(config, items):
     )
     matched = set()
     for item in items:
-        key = f"{os.path.basename(str(item.fspath))}::" + item.name.split("[")[0]
-        if key in SLOW_TESTS:
-            matched.add(key)
-            item.add_marker(pytest.mark.slow)
+        base = f"{os.path.basename(str(item.fspath))}::"
+        for key in (base + item.name.split("[")[0], base + item.name):
+            if key in SLOW_TESTS:
+                matched.add(key)
+                item.add_marker(pytest.mark.slow)
         if not run_slow and "slow" in item.keywords:
             item.add_marker(skip)
     # stale-entry guard: an entry whose FILE was collected but whose

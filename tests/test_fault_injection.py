@@ -5,7 +5,8 @@ sinks/writers.py::publish: the overwrite sink that Analysis.run and
 both benchmark workloads end in, the merge/delete rewrites and the
 streaming monitor stores.  The exactly-once story of the monitors also
 rests on WHERE the epoch stamp rides relative to that replace
-(streaming/ops.py::_ledgered_loop, heavy_hitters_stream's own ledger).
+(streaming/ops.py::_ledgered_loop, the one ledger of every streaming
+store).
 This suite stops reasoning about it in comments and PROVES it: a
 harness injects a simulated process death at each ordered step of
 publish, restarts on the same checkpoint, and asserts the final state
@@ -36,6 +37,7 @@ Kill points, in the order publish runs them:
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
@@ -342,6 +344,61 @@ def _spec_reservoir(spark, land):
     return start, state, "sample"
 
 
+def _spec_mor(spark, land):
+    schema = "k long, v long, seq long"
+    _land_files(spark, land, [
+        spark.range(i * 50, (i + 1) * 50).select(
+            (F.col("id") % 70).alias("k"), F.col("id").alias("v"),
+            F.col("id").alias("seq"),
+        )
+        for i in range(3)
+    ])
+
+    def start(store, ckpt):
+        from cosmap_spark.sinks.mor import mor_init
+        from cosmap_spark.streaming.ops import mor_ingest_stream
+
+        if not store.exists():
+            mor_init(spark.createDataFrame([(0, 0, 0)], schema), str(store),
+                     ["k"])
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1).parquet(str(land))
+        )
+        return mor_ingest_stream(stream, str(store), str(ckpt),
+                                 seq_col="seq")
+
+    def state(store):
+        from cosmap_spark.sinks.mor import mor_read
+
+        return sorted(map(tuple, mor_read(spark, str(store)).collect()))
+
+    return start, state, None
+
+
+def _spec_upsert(spark, land):
+    _land_files(spark, land, [
+        spark.range(i * 50, (i + 1) * 50).select(
+            (F.col("id") % 70).alias("k"), F.col("id").alias("v"),
+        )
+        for i in range(3)
+    ])
+
+    def start(store, ckpt):
+        from cosmap_spark.streaming.ops import upsert_stream
+
+        stream = (
+            spark.readStream.schema("k long, v long")
+            .option("maxFilesPerTrigger", 1).parquet(str(land))
+        )
+        return upsert_stream(stream, str(store), str(ckpt), ["k"])
+
+    def state(store):
+        return sorted(map(tuple, spark.read.parquet(str(store)).collect()))
+
+    return start, state, None
+
+
 SPECS = {
     "sketch": _spec_sketch,
     "reservoir": _spec_reservoir,
@@ -351,6 +408,9 @@ SPECS = {
     "ks": _spec_ks,
     "heavy_hitters": _spec_heavy_hitters,
 }
+# every foreachBatch store on the ledger: the monitors plus the two
+# CDC sinks, whose kill windows have their own tests below
+REPLAY_SPECS = {**SPECS, "mor": _spec_mor, "upsert": _spec_upsert}
 STEPS = ["after_tmp", "between_renames", "after_swap", "after_bootstrap"]
 
 
@@ -389,6 +449,50 @@ def test_kill_point_matrix(spark, tmp_path, monitor):
         resumed = _await(start(store, ckpt))
         assert resumed is None, (monitor, step, resumed)
         assert state(store) == golden, (monitor, step)
+
+
+def _files(store):
+    """Every file of ``store`` and of a ledger beside it, by path."""
+    out = {}
+    for root in glob.glob(f"{store}*"):
+        for dirpath, _, names in os.walk(root):
+            for n in names:
+                p = os.path.join(dirpath, n)
+                with open(p, "rb") as f:
+                    out[os.path.relpath(p, store.parent)] = f.read()
+    return out
+
+
+@pytest.mark.parametrize("kind", sorted(REPLAY_SPECS))
+def test_rebuilt_checkpoint_replay(spark, tmp_path, kind):
+    """foreachBatch delivers at least once, and a rebuilt checkpoint
+    restarts at epoch 0.  Through the one ledger every store tells the
+    two replays apart by content: the same landing replayed through a
+    fresh checkpoint is skipped and leaves the store byte-stable; a
+    landing whose epoch 0 holds other rows raises "content differs"
+    and leaves the store as it was."""
+    start, state, _ = REPLAY_SPECS[kind](spark, tmp_path / "land")
+    store = tmp_path / "store"
+    assert _await(start(store, tmp_path / "ck1")) is None
+    golden, before = state(store), _files(store)
+    assert before
+
+    assert _await(start(store, tmp_path / "ck2")) is None
+    assert _files(store) == before
+
+    # a rebuilt checkpoint whose epoch 0 delivers other rows: the first
+    # landed file with one of its rows twice
+    land2 = tmp_path / "land2"
+    start2, _, _ = REPLAY_SPECS[kind](spark, land2)
+    shutil.rmtree(land2)
+    first = spark.read.parquet(
+        min(glob.glob(f"{tmp_path / 'land'}/*.parquet"), key=os.path.getmtime)
+    )
+    first.unionByName(first.limit(1)).coalesce(1).write.parquet(str(land2))
+    err = _await(start2(store, tmp_path / "ck3"))
+    assert err is not None and "content differs" in err, (kind, err)
+    assert _files(store) == before
+    assert state(store) == golden
 
 
 def test_merge_upsert_interrupted_window(spark, tmp_path):

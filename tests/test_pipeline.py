@@ -521,6 +521,24 @@ def test_setup_block_list_dependencies():
     assert params["analysis_parameters"]["s"] == 5
 
 
+def test_setup_block_optional_parameters():
+    """A setup node receives its optional parameters like a pipeline
+    node (one kwargs resolver for both walkers): a resolvable one
+    arrives, a missing one leaves the default."""
+    block = {"scaled": {"needed-parameters": ["analysis_parameters.base"],
+                        "optional-parameters": ["analysis_parameters.factor",
+                                                "analysis_parameters.shift"]}}
+
+    def scaled(base, factor=1, shift=0):
+        return base * factor + shift
+
+    params = run_setup_block(
+        block, {"scaled": scaled},
+        {"analysis_parameters": {"base": 10, "factor": 3}},
+    )
+    assert params["analysis_parameters"]["scaled"] == 30
+
+
 def test_registry_env_var_read_at_call_time(tmp_path, monkeypatch):
     """COSMAP_SPARK_REGISTRY set AFTER import must be honored — an
     import-time default silently wrote to the user's real registry."""

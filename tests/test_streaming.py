@@ -1333,12 +1333,13 @@ def test_sketch_stream_kmv_bit_stable(spark, tmp_path):
     replay = kmv_leaf(
         rows.where(F.col("uid") % 2 == 0), ["grp"], "uid", k=64
     )
+    params = (store / "sketches" / "_params.json").read_text()
     publish(
         str(store / "sketches"),
         merge_kmv_tables(old, replay, ["grp"], k=64),
-        # the k sidecar rides INSIDE the store dir (atomic with the
-        # data) — a manual swap must carry it like the operator does
-        extra_files={"_kmv_k": "64"},
+        # the parameters ride INSIDE the store dir (atomic with the
+        # data) — a manual swap must carry them like the operator does
+        extra_files={"_params.json": params},
     )
     assert snap() == got
     # mismatched k on resume is refused (the error surfaces either as
@@ -1356,6 +1357,27 @@ def test_sketch_stream_kmv_bit_stable(spark, tmp_path):
             keys=["grp"], col="uid", kind="kmv", k=32,
         )
     assert snap() == got  # the refused resume left the store untouched
+
+
+@pytest.mark.parametrize("k", [0, -1, True, 2.0])
+def test_k_refused_by_name(k):
+    """A sample, counter or sketch size that is not an int >= 1 is
+    refused at call time: k=0 kept an empty reservoir forever and died
+    inside a Python worker for heavy hitters."""
+    from cosmap_spark.streaming.ops import (
+        heavy_hitters_stream,
+        reservoir_stream,
+        sketch_stream,
+    )
+
+    for start in (
+        lambda: reservoir_stream(None, "s", "c", k=k, key_cols=["u"]),
+        lambda: heavy_hitters_stream(None, "s", "c", key_col="u", k=k),
+        lambda: sketch_stream(None, "s", "c", keys=["g"], col="u",
+                              kind="kmv", k=k),
+    ):
+        with pytest.raises(ValueError, match="k must be an int >= 1"):
+            start()
 
 
 def test_batch_fingerprint_null_slots_and_multiplicity(spark):
@@ -1487,12 +1509,14 @@ def test_heavy_hitters_stream_guarantee_and_replay(spark, tmp_path):
         )
 
     got = dict(snap())
-    # meta rides INSIDE the counters dir (same atomic swap as the data)
+    # N, k and the epoch stamp ride INSIDE the counters dir (same
+    # atomic swap as the data)
     meta = json.load(open(store / "counters" / "_mg_meta.json"))
     n_true = 12_000
     heavy_true = rows.where(F.col("k") == -1).count()
-    assert meta["k"] == 16 and meta["n"] == n_true
-    assert "last_epoch" in meta
+    assert meta["n"] == n_true
+    assert json.load(open(store / "counters" / "_params.json")) == {"k": 16}
+    assert (store / "counters" / "_last_epoch").exists()
     assert len(got) <= 16
     assert -1 in got, got
     assert heavy_true - n_true / 17 <= got[-1] <= heavy_true, got[-1]
@@ -2146,12 +2170,14 @@ def test_reservoir_stream_matches_batch_exact_k_sample(spark, tmp_path):
                       spark.read.parquet(f"{store}/sample").collect())) \
         == before
 
-    with pytest.raises(ValueError, match="was built with"):
-        reservoir_stream(
-            spark.readStream.schema("uid long, grp long, v long")
-            .parquet(str(land)),
-            store, str(tmp_path / "rs_ck3"), k=30, key_cols=["uid"],
-        )
+    for resumed_at in (store, f"file://{store}"):
+        with pytest.raises(ValueError, match="was built with"):
+            reservoir_stream(
+                spark.readStream.schema("uid long, grp long, v long")
+                .parquet(str(land)),
+                resumed_at, str(tmp_path / "rs_ck3"), k=30,
+                key_cols=["uid"],
+            )
 
     # stratified: per-group budget equals the per-stratum batch twin
     store2 = str(tmp_path / "rs_store2")
@@ -2460,7 +2486,7 @@ def test_category_drift_chi2_matches_batch(spark, tmp_path):
 
 
 def test_fingerprint_marker_write_is_atomic(tmp_path):
-    """Fingerprint ledger markers (mor_ingest_stream / upsert_stream)
+    """Fingerprint ledger markers (every store on _ledgered_loop)
     must never be observable torn: a partial marker would differ from
     the replayed batch's fingerprint and turn a harmless replay window
     into the hard 'content differs' stop (round-10 advice fix).  The
@@ -2564,6 +2590,20 @@ def test_store_health_page(spark, tmp_path):
     h2 = store_health(spark, {"mon": mon})
     rows2 = {r["statistic"]: r["value"] for r in h2.collect()}
     assert rows2["rows:state"] == 5.0
+
+    # an upsert table's ledger sits BESIDE the table
+    from cosmap_spark.streaming.ops import upsert_stream
+
+    land = tmp_path / "up_land"
+    base.limit(3).coalesce(1).write.parquet(str(land))
+    table = str(tmp_path / "tbl")
+    upsert_stream(
+        spark.readStream.schema("k long, v long").parquet(str(land)),
+        table, str(tmp_path / "up_ck"), ["k"],
+    ).awaitTermination(120)
+    h3 = store_health(spark, {"tbl": table})
+    rows3 = {r["statistic"]: r["value"] for r in h3.collect()}
+    assert rows3["ledger_last_epoch"] == 0.0
 
 
 def test_store_health_sync_staleness(spark, tmp_path):
