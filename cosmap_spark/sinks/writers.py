@@ -17,13 +17,17 @@ from pyspark.sql import functions as F
 _FORMATS = ("parquet", "csv", "json", "orc")
 
 
+def _require_format(fmt: str) -> None:
+    if fmt not in _FORMATS:
+        raise ValueError(f"unsupported sink format {fmt!r}")
+
+
 def _writer(df: DataFrame, fmt: str, mode: str,
             partition_by: list[str] | None):
     """The one format switch of the sinks: a configured writer, ready
     for ``.save(path)``.  CSV gets one header per file — the
     distributed reading of the reference's header-on-first-write."""
-    if fmt not in _FORMATS:
-        raise ValueError(f"unsupported sink format {fmt!r}")
+    _require_format(fmt)
     writer = df.write.mode(mode).format(fmt)
     if fmt == "csv":
         writer = writer.option("header", True)

@@ -22,6 +22,9 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from cosmap_spark.sinks.writers import _require_local
+
+
 def _events_schema(ts_type) -> StructType:
     return StructType(
         [
@@ -501,34 +504,30 @@ def enrich_with_dimension(events: DataFrame, dim: DataFrame,
 
 def write_incremental(df: DataFrame, path: str, checkpoint: str,
                       *, fmt: str = "parquet",
-                      partition_by: list[str] | None = None,
-                      trigger_available_now: bool = True):
+                      partition_by: list[str] | None = None):
     """Incremental sink via ``foreachBatch`` — the Spark twin of the
     reference's drain-completed-futures + append-CSV loop (reference
     src/cosmap/analysis/analysis.py:150-162, output/writer.py:23-35).
 
-    foreachBatch alone is only at-least-once: a micro-batch whose write
-    partially succeeded before a failure is REPLAYED with the same
-    ``epoch_id`` on restart, so a blind append would land duplicates.
-    The write is made idempotent by keying each epoch to its own
-    ``epoch=<id>`` subdirectory written with mode("overwrite") — a
-    replayed epoch replaces its own output instead of appending, giving
-    exactly-once table contents per epoch.  Readers scan ``path`` and
-    see ``epoch`` as a discovered partition column (drop it on read)."""
+    Each epoch lands in its own ``epoch=<id>`` subdirectory through the
+    sinks' one format switch (``writers._writer``: CSV gets a header
+    per file, an unknown ``fmt`` is refused here, at call time).
+    Readers scan ``path`` and see ``epoch`` as a discovered partition
+    column (drop it on read).  Exactly-once: :func:`_ledgered_loop`."""
+    from cosmap_spark.sinks.writers import _require_format, _writer
 
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        w = batch_df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.format(fmt).save(f"{path}/epoch={epoch_id}")
+    _require_format(fmt)
+    path = _require_local(path, "write_incremental")
 
-    writer = (
-        df.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
+    def commit(batch_df: DataFrame, epoch_id: int, _sidecars: dict) -> None:
+        _writer(batch_df, fmt, "overwrite", partition_by).save(
+            f"{path}/epoch={epoch_id}"
+        )
+
+    return _ledgered_loop(
+        df, path, checkpoint, op="write_incremental",
+        ledger=_ledger_dir(path), commit=commit,
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def sliding_counts(events: DataFrame, *, window: str = "10 minutes",
@@ -590,19 +589,18 @@ def decontaminate_stream(stream_docs: DataFrame, bench: DataFrame,
     other stream rows, so no watermark or state store is needed and the
     union over epochs equals the batch answer on the same corpus (the
     stream/batch equivalence the test asserts).  Output is epoch-keyed
-    like ``write_incremental`` — a replayed epoch overwrites itself, so
-    the flagged-doc table is exactly-once per epoch."""
+    like ``write_incremental``; exactly-once: :func:`_ledgered_loop`."""
     from cosmap_spark.operators.dedup import contamination_hits
 
-    def run(batch_df: DataFrame, epoch_id: int) -> None:
+    path = _require_local(path, "decontaminate_stream")
+
+    def commit(batch_df: DataFrame, epoch_id: int, _sidecars: dict) -> None:
         hits = contamination_hits(batch_df, bench, k=k)
         hits.write.mode("overwrite").parquet(f"{path}/epoch={epoch_id}")
 
-    return (
-        stream_docs.writeStream.foreachBatch(run)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _ledgered_loop(
+        stream_docs, path, checkpoint, op="decontaminate_stream",
+        ledger=_ledger_dir(path), commit=commit,
     )
 
 
@@ -626,22 +624,22 @@ def knn_serve_stream(query_stream: DataFrame, index: DataFrame,
     index), never on other stream rows, so there is no watermark or
     state store, and the union over epochs equals the batch answer on
     the same query set (asserted in tests/test_streaming.py).  Results
-    land epoch-keyed like ``write_incremental`` — replayed epochs
-    overwrite themselves (exactly-once per epoch)."""
+    land epoch-keyed like ``write_incremental``; exactly-once:
+    :func:`_ledgered_loop`."""
     from cosmap_spark.operators.knn import knn_lsh
 
-    def run(batch_df: DataFrame, epoch_id: int) -> None:
+    path = _require_local(path, "knn_serve_stream")
+
+    def commit(batch_df: DataFrame, epoch_id: int, _sidecars: dict) -> None:
         topk = knn_lsh(
             index, batch_df, k=k, dim=dim, tables=tables, planes=planes,
             seed=seed, prebuilt_buckets=index,
         )
         topk.write.mode("overwrite").parquet(f"{path}/epoch={epoch_id}")
 
-    return (
-        query_stream.writeStream.foreachBatch(run)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _ledgered_loop(
+        query_stream, path, checkpoint, op="knn_serve_stream",
+        ledger=_ledger_dir(path), commit=commit,
     )
 
 
@@ -725,29 +723,24 @@ def dedup_stream(stream_docs: DataFrame, store_path: str, out_path: str,
     against the PERSISTENT signature store
     (operators/dedup.py::incremental_minhash_dedup — history is read as
     signatures only, never re-shingled), writes the flagged pairs
-    epoch-keyed, and upserts the batch's signatures into the store.
-
-    Exactly-once story under foreachBatch's at-least-once contract:
-    a replayed epoch re-bands against a store that already holds its
-    signatures, but re-submitted ids are superseded inside
-    ``incremental_minhash_dedup`` (the retry discipline), so the same
-    pair set is produced and the ``epoch=<id>`` overwrite replaces the
-    previous attempt — pair table contents are exactly-once, and the
-    keyed signature upsert is idempotent."""
+    epoch-keyed under ``out_path``, and upserts the batch's signatures
+    into the store.  Exactly-once: :func:`_ledgered_loop`, ledger in
+    ``<out_path>/_epochs``."""
     from cosmap_spark.operators.dedup import incremental_minhash_dedup
 
-    def run(batch_df: DataFrame, epoch_id: int) -> None:
+    store_path = _require_local(store_path, "dedup_stream")
+    out_path = _require_local(out_path, "dedup_stream")
+
+    def commit(batch_df: DataFrame, epoch_id: int, _sidecars: dict) -> None:
         pairs = incremental_minhash_dedup(
             batch_df.sparkSession, batch_df, store_path,
             text_col=text_col, id_col=id_col, threshold=threshold,
         )
         pairs.write.mode("overwrite").parquet(f"{out_path}/epoch={epoch_id}")
 
-    return (
-        stream_docs.writeStream.foreachBatch(run)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _ledgered_loop(
+        stream_docs, out_path, checkpoint, op="dedup_stream",
+        ledger=_ledger_dir(out_path), commit=commit,
     )
 
 
@@ -873,14 +866,17 @@ def _ledgered_loop(stream_df: DataFrame, store: str, checkpoint: str,
     4. a ``_last_epoch`` stamp inside ``store`` at or past the epoch id
        means the store already holds this epoch (a crash after its
        publish, before its marker): only the marker is restored;
-    5. ``commit(batch_df, sidecars)`` applies the batch;
+    5. ``commit(batch_df, epoch_id, sidecars)`` applies the batch;
     6. the marker is written (:func:`_write_marker_atomic`).
 
     ``sidecars`` (the stamp, plus ``_params.json`` when ``params`` is
     given) must ride the ``publish`` that replaces ``store``, so data,
-    stamp and parameters replace together.  ``mor_ingest_stream`` and
-    ``upsert_stream`` leave them out: a re-applied batch is a no-op
-    there (suffix idempotence; merge semantics), so the crash window
+    stamp and parameters replace together.  ``mor_ingest_stream``,
+    ``upsert_stream`` and the six append sinks, which write each epoch
+    to an ``epoch=<id>`` directory under ``store``
+    (``write_incremental`` and its kin), leave them out: a re-applied
+    batch is a no-op there (suffix idempotence; merge semantics; the
+    same rows rewrite the same epoch directory), so the crash window
     costs only redundant work.
 
     Durability: markers and stamp use DRIVER-LOCAL ``os`` calls, so
@@ -920,12 +916,13 @@ def _ledgered_loop(stream_df: DataFrame, store: str, checkpoint: str,
                 if f.read().strip() == fp:
                     return  # replayed epoch: the store already holds it
             raise ValueError(
-                f"{op}: epoch {epoch_id} marker exists but the batch "
-                "content differs from what was committed — a rebuilt "
+                f"{op}: epoch {epoch_id} of the store {store!r} was "
+                "committed with other content (ledger "
+                f"{ledger!r}); the batch content differs — a rebuilt "
                 "checkpoint is re-delivering NEW data under a completed "
-                f"epoch id.  Refusing to silently drop it; remove the "
-                f"ledger {ledger!r} together with the checkpoint to "
-                "re-apply from a clean slate."
+                "epoch id.  Refusing to drop or overwrite it: resume "
+                "from the checkpoint that committed those epochs, or "
+                "stream into a new store path."
             )
         check_params()
         os.makedirs(ledger, exist_ok=True)
@@ -937,7 +934,7 @@ def _ledgered_loop(stream_df: DataFrame, store: str, checkpoint: str,
         sidecars = {"_last_epoch": str(epoch_id)}
         if params is not None:
             sidecars["_params.json"] = _json.dumps(params)
-        commit(batch_df, sidecars)
+        commit(batch_df, epoch_id, sidecars)
         _write_marker_atomic(marker, fp)
 
     return (
@@ -958,7 +955,7 @@ def _fold(store: str, batch_state, merge_state):
 
     from cosmap_spark.sinks.writers import publish
 
-    def commit(batch_df: DataFrame, sidecars: dict) -> None:
+    def commit(batch_df: DataFrame, _epoch_id: int, sidecars: dict) -> None:
         batch = batch_state(batch_df)
         if os.path.exists(store):
             batch = merge_state(batch_df.sparkSession.read.parquet(store),
@@ -1040,7 +1037,6 @@ def sketch_stream(stream_df: DataFrame, store_path: str, checkpoint: str,
         merge_kmv_tables,
         merge_sketch_tables,
     )
-    from cosmap_spark.sinks.writers import _require_local
 
     if kind not in ("hll", "kmv"):
         raise ValueError(f"kind must be 'hll' or 'kmv'; got {kind!r}")
@@ -1106,7 +1102,6 @@ def drift_stream(stream_df: DataFrame, store_path: str, checkpoint: str,
     or :func:`drift_alarms` (per-column PSI vs a threshold).
     """
     from cosmap_spark.operators.diff import drift_bin_counts, drift_reference
-    from cosmap_spark.sinks.writers import _require_local
 
     store_path = _require_local(store_path, "drift_stream")
 
@@ -1252,7 +1247,6 @@ def category_drift_stream(stream_df: DataFrame, store_path: str,
         _check_frozen,
         _frozen_fold,
     )
-    from cosmap_spark.sinks.writers import _require_local
 
     store_path = _require_local(store_path, "category_drift_stream")
     if other_label == null_label:
@@ -1524,7 +1518,6 @@ def abtest_stream(stream_df: DataFrame, store_path: str, checkpoint: str,
     merging sums at two different scales would silently corrupt every
     statistic.  NULL variants/values are excluded (matching the batch
     operator)."""
-    from cosmap_spark.sinks.writers import _require_local
 
     store_path = _require_local(store_path, "abtest_stream")
     scale = float(10 ** quantize_dp)
@@ -1612,7 +1605,6 @@ def ks_stream(stream_df: DataFrame, store_path: str, checkpoint: str,
     from cosmap_spark.operators.stats_tests import (
         one_side_quantized_counts,
     )
-    from cosmap_spark.sinks.writers import _require_local
 
     store_path = _require_local(store_path, "ks_stream")
     _frozen_reference(
@@ -1783,7 +1775,6 @@ def reservoir_stream(stream_df: DataFrame, store_path: str,
     strata, weight column and seed are the store's recorded parameters:
     a mismatched resume refuses."""
     from cosmap_spark.operators.sampler import _es_rank, _key_hash
-    from cosmap_spark.sinks.writers import _require_local
 
     _require_k(k, "reservoir_stream")
     store_path = _require_local(store_path, "reservoir_stream")
@@ -2095,14 +2086,14 @@ def heavy_hitters_stream(stream_df: DataFrame, store_path: str,
     import os
 
     from cosmap_spark.operators.sketch import merge_mg_tables, mg_summary
-    from cosmap_spark.sinks.writers import _require_local, publish
+    from cosmap_spark.sinks.writers import publish
 
     _require_k(k, "heavy_hitters_stream")
     store_path = _require_local(store_path, "heavy_hitters_stream")
     store = f"{store_path}/counters"
     meta_file = os.path.join(store, "_mg_meta.json")
 
-    def commit(batch_df: DataFrame, sidecars: dict) -> None:
+    def commit(batch_df: DataFrame, _epoch_id: int, sidecars: dict) -> None:
         batch, n = mg_summary(batch_df, key_col, k=k)
         if os.path.exists(store):
             with open(meta_file) as f:
@@ -2128,9 +2119,9 @@ def vector_ingest_stream(vec_stream: DataFrame, index_path: str,
     of new vectors are ASSIGNED to the persisted index's frozen
     centroids (`index_store.ivf_append` semantics — one Arrow pass
     over the batch, history untouched) and appended to the inverted
-    lists as an epoch-keyed parquet sub-directory, so a replayed epoch
-    overwrites itself (exactly-once per epoch) and readers reconstruct
-    the full lists as base ∪ appends.
+    lists as an epoch-keyed parquet sub-directory; readers reconstruct
+    the full lists as base ∪ appends.  Exactly-once:
+    :func:`_ledgered_loop`, ledger in ``<index_path>/_epochs``.
 
     Centroids never move here — periodic retrain (ivf_build on the
     accumulated corpus) handles drift; that is the standard
@@ -2149,6 +2140,7 @@ def vector_ingest_stream(vec_stream: DataFrame, index_path: str,
     from cosmap_spark.operators.knn import ivf_assign
     from cosmap_spark.operators.pq import ivf_residuals, pq_encode
 
+    index_path = _require_local(index_path, "vector_ingest_stream")
     # centroids/codebooks are FROZEN by contract: load them ONCE at
     # stream start and close over them — a per-batch reload would pay
     # a manifest + collect per epoch and, worse, silently mix
@@ -2161,7 +2153,7 @@ def vector_ingest_stream(vec_stream: DataFrame, index_path: str,
     books = loaded.get("codebooks")
     residual = bool(loaded.get("residual"))
 
-    def run(batch_df: DataFrame, epoch_id: int) -> None:
+    def commit(batch_df: DataFrame, epoch_id: int, _sidecars: dict) -> None:
         fresh = ivf_assign(
             batch_df, cents, id_col=id_col, vec_col=vec_col
         )
@@ -2179,11 +2171,9 @@ def vector_ingest_stream(vec_stream: DataFrame, index_path: str,
                 f"{index_path}/pq_coded_appends/epoch={epoch_id}"
             )
 
-    return (
-        vec_stream.writeStream.foreachBatch(run)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _ledgered_loop(
+        vec_stream, index_path, checkpoint, op="vector_ingest_stream",
+        ledger=_ledger_dir(index_path), commit=commit,
     )
 
 
@@ -2233,10 +2223,10 @@ def lex_ingest_stream(doc_stream: DataFrame, index_path: str,
     :func:`vector_ingest_stream`: each micro-batch tokenizes ONLY its
     own documents (``retrieval.build_lex_index`` over the batch —
     history never re-tokenizes) and lands its (doc, term, tf) and
-    doc-length rows as epoch-keyed parquet sub-directories, so a
-    replayed epoch overwrites itself (exactly-once per epoch) and
-    readers reconstruct the index as base ∪ appends
-    (:func:`load_appended_lex`).
+    doc-length rows as epoch-keyed parquet sub-directories; readers
+    reconstruct the index as base ∪ appends (:func:`load_appended_lex`).
+    Exactly-once: :func:`_ledgered_loop`, ledger in
+    ``<index_path>/_epochs``.
 
     APPEND-ONLY contract on disk, like the vector twin: resubmitted
     doc ids land as a NEW epoch without touching history, and
@@ -2247,7 +2237,9 @@ def lex_ingest_stream(doc_stream: DataFrame, index_path: str,
     appends lack."""
     from cosmap_spark.operators.retrieval import build_lex_index
 
-    def run(batch_df: DataFrame, epoch_id: int) -> None:
+    index_path = _require_local(index_path, "lex_ingest_stream")
+
+    def commit(batch_df: DataFrame, epoch_id: int, _sidecars: dict) -> None:
         tf, _ = build_lex_index(
             batch_df, id_col=id_col, text_col=text_col
         )
@@ -2261,11 +2253,9 @@ def lex_ingest_stream(doc_stream: DataFrame, index_path: str,
             f"{index_path}/lex_lens_appends/epoch={epoch_id}"
         )
 
-    return (
-        doc_stream.writeStream.foreachBatch(run)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _ledgered_loop(
+        doc_stream, index_path, checkpoint, op="lex_ingest_stream",
+        ledger=_ledger_dir(index_path), commit=commit,
     )
 
 
@@ -2355,7 +2345,6 @@ def mor_ingest_stream(changes: DataFrame, store_path: str,
     snapshot's schema)."""
     from cosmap_spark.operators.merge import latest_per_key
     from cosmap_spark.sinks.mor import _meta_for, mor_append
-    from cosmap_spark.sinks.writers import _require_local
 
     # the epoch LEDGER here is os-based, unlike the store's own commit
     # protocol — a remote store with a CommitFS still needs its ledger
@@ -2363,7 +2352,7 @@ def mor_ingest_stream(changes: DataFrame, store_path: str,
     store_path = _require_local(store_path, "mor_ingest_stream")
     keys = _meta_for(store_path)["keys"]
 
-    def commit(batch_df: DataFrame, _sidecars: dict) -> None:
+    def commit(batch_df: DataFrame, _epoch_id: int, _sidecars: dict) -> None:
         spark = batch_df.sparkSession
         if seq_col is not None:
             batch = latest_per_key(batch_df, keys, seq_col=seq_col)
@@ -2408,12 +2397,12 @@ def upsert_stream(changes: DataFrame, table_path: str, checkpoint: str,
     import os
 
     from cosmap_spark.operators.merge import merge_upsert as _merge_plan
-    from cosmap_spark.sinks.writers import _require_local, publish
+    from cosmap_spark.sinks.writers import publish
 
     table_path = _require_local(table_path, "upsert_stream")
     drop_cols = [c for c in (seq_col, delete_col) if c is not None]
 
-    def commit(batch_df: DataFrame, _sidecars: dict) -> None:
+    def commit(batch_df: DataFrame, _epoch_id: int, _sidecars: dict) -> None:
         spark = batch_df.sparkSession
         if os.path.exists(table_path):
             existing = spark.read.parquet(table_path)

@@ -65,10 +65,11 @@ SLOW_TESTS = {
     "test_fault_injection.py::test_kill_point_matrix",
     "test_fault_injection.py::test_mor_manifest_ingest_kill_matrix",
     "test_fault_injection.py::test_merge_upsert_interrupted_window",
-    # one cell (reservoir) stays in the default tier
+    # two cells (reservoir, write_incremental) stay in the default tier
     *(f"test_fault_injection.py::test_rebuilt_checkpoint_replay[{k}]"
-      for k in ("abtest", "category", "drift", "heavy_hitters", "ks",
-                "mor", "sketch", "upsert")),
+      for k in ("abtest", "category", "decontaminate", "dedup", "drift",
+                "heavy_hitters", "knn_serve", "ks", "lex_ingest", "mor",
+                "sketch", "upsert", "vector_ingest")),
     "test_funnel.py::test_attribution_credit_conservation_property",
     "test_funnel.py::test_cohort_retention_month_boundary_property",
     "test_funnel.py::test_sliding_randomized_differential",

@@ -399,6 +399,180 @@ def _spec_upsert(spark, land):
     return start, state, None
 
 
+# ---------------------------------------------------------------------------
+# append-sink specs: each epoch lands in an epoch=<id> directory under the
+# store, so they have no publish to kill and join only the replay test
+# ---------------------------------------------------------------------------
+
+def _stream(spark, land, schema):
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1).parquet(str(land))
+    )
+
+
+def _words(width):
+    """A ``text`` column of 12 words ``w<(id * width + j) % 40>``, j < 12:
+    ids whose ``id * width`` agree mod 40 share their text."""
+    return F.expr(
+        "concat_ws(' ', transform(sequence(0, 11), "
+        f"j -> concat('w', cast((id * {width} + j) % 40 AS string))))"
+    ).alias("text")
+
+
+def _vectors(ids):
+    return ids.select(
+        F.col("id").alias("vec_id"),
+        F.array(*[F.sin((F.col("id") + 1) * (j + 1)) for j in range(8)])
+        .cast("array<float>").alias("embedding"),
+    )
+
+
+def _land_docs(spark, land, width):
+    _land_files(spark, land, [
+        spark.range(i * 30, (i + 1) * 30).select(
+            F.col("id").alias("doc_id"), _words(width)
+        )
+        for i in range(3)
+    ])
+
+
+def _sorted_rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def _spec_write_incremental(spark, land):
+    _land_files(spark, land, [
+        spark.range(i * 50, (i + 1) * 50).select(
+            F.col("id").alias("k"), (F.col("id") % 7).alias("v")
+        )
+        for i in range(3)
+    ])
+
+    def start(store, ckpt):
+        from cosmap_spark.streaming.ops import write_incremental
+
+        return write_incremental(_stream(spark, land, "k long, v long"),
+                                 str(store), str(ckpt))
+
+    def state(store):
+        return _sorted_rows(spark.read.parquet(str(store)))
+
+    return start, state, None
+
+
+def _spec_decontaminate(spark, land):
+    _land_docs(spark, land, 3)
+    bench = spark.range(0, 4).select(
+        F.col("id").alias("doc_id"), _words(3)
+    )
+
+    def start(store, ckpt):
+        from cosmap_spark.streaming.ops import decontaminate_stream
+
+        return decontaminate_stream(
+            _stream(spark, land, "doc_id long, text string"), bench,
+            str(store), str(ckpt),
+        )
+
+    def state(store):
+        return _sorted_rows(spark.read.parquet(str(store)))
+
+    return start, state, None
+
+
+def _spec_knn_serve(spark, land):
+    from cosmap_spark.operators.knn import lsh_build
+
+    _land_files(spark, land, [
+        _vectors(spark.range(i * 10, (i + 1) * 10)) for i in range(3)
+    ])
+    index = lsh_build(_vectors(spark.range(100, 300)), dim=8)
+
+    def start(store, ckpt):
+        from cosmap_spark.streaming.ops import knn_serve_stream
+
+        return knn_serve_stream(
+            _stream(spark, land, "vec_id long, embedding array<float>"),
+            index, str(store), str(ckpt), dim=8,
+        )
+
+    def state(store):
+        return _sorted_rows(spark.read.parquet(str(store)))
+
+    return start, state, None
+
+
+def _spec_dedup(spark, land):
+    _land_docs(spark, land, 10)
+
+    def start(store, ckpt):
+        from cosmap_spark.streaming.ops import dedup_stream
+
+        # the signature store sits beside the pair output, so _files
+        # checks that a skipped or refused epoch leaves it alone too
+        return dedup_stream(
+            _stream(spark, land, "doc_id long, text string"),
+            f"{store}_sigs", str(store), str(ckpt),
+        )
+
+    def state(store):
+        return _sorted_rows(spark.read.parquet(str(store)))
+
+    return start, state, None
+
+
+def _spec_vector_ingest(spark, land):
+    _land_files(spark, land, [
+        _vectors(spark.range(i * 10, (i + 1) * 10)) for i in range(3)
+    ])
+
+    def start(store, ckpt):
+        from cosmap_spark.operators.index_store import save_ann_index
+        from cosmap_spark.operators.knn import ivf_build
+        from cosmap_spark.streaming.ops import vector_ingest_stream
+
+        if not store.exists():
+            cents, assigned = ivf_build(
+                _vectors(spark.range(100, 300)), nlist=4, iters=1
+            )
+            save_ann_index(str(store), index=(
+                cents, assigned.localCheckpoint(eager=True)
+            ))
+        return vector_ingest_stream(
+            _stream(spark, land, "vec_id long, embedding array<float>"),
+            str(store), str(ckpt),
+        )
+
+    def state(store):
+        from cosmap_spark.streaming.ops import load_appended_index
+
+        return _sorted_rows(load_appended_index(spark, str(store))[1]
+                            .select("nid", "cid"))
+
+    return start, state, None
+
+
+def _spec_lex_ingest(spark, land):
+    _land_docs(spark, land, 3)
+
+    def start(store, ckpt):
+        from cosmap_spark.streaming.ops import lex_ingest_stream
+
+        return lex_ingest_stream(
+            _stream(spark, land, "doc_id long, text string"),
+            str(store), str(ckpt),
+        )
+
+    def state(store):
+        from cosmap_spark.streaming.ops import load_appended_lex
+
+        lex = load_appended_lex(spark, str(store))
+        return _sorted_rows(lex["tf"]), lex["n_docs"]
+
+    return start, state, None
+
+
 SPECS = {
     "sketch": _spec_sketch,
     "reservoir": _spec_reservoir,
@@ -408,9 +582,16 @@ SPECS = {
     "ks": _spec_ks,
     "heavy_hitters": _spec_heavy_hitters,
 }
-# every foreachBatch store on the ledger: the monitors plus the two
-# CDC sinks, whose kill windows have their own tests below
-REPLAY_SPECS = {**SPECS, "mor": _spec_mor, "upsert": _spec_upsert}
+# every foreachBatch store on the ledger: the monitors, the two CDC
+# sinks, whose kill windows have their own tests below, and the six
+# epoch-keyed append sinks
+REPLAY_SPECS = {
+    **SPECS, "mor": _spec_mor, "upsert": _spec_upsert,
+    "write_incremental": _spec_write_incremental,
+    "decontaminate": _spec_decontaminate, "knn_serve": _spec_knn_serve,
+    "dedup": _spec_dedup, "vector_ingest": _spec_vector_ingest,
+    "lex_ingest": _spec_lex_ingest,
+}
 STEPS = ["after_tmp", "between_renames", "after_swap", "after_bootstrap"]
 
 
@@ -491,6 +672,11 @@ def test_rebuilt_checkpoint_replay(spark, tmp_path, kind):
     first.unionByName(first.limit(1)).coalesce(1).write.parquet(str(land2))
     err = _await(start2(store, tmp_path / "ck3"))
     assert err is not None and "content differs" in err, (kind, err)
+    # the refusal names the store and offers only steps that neither
+    # drop nor double-apply data
+    assert str(store) in err, (kind, err)
+    assert "resume from the checkpoint that committed" in err, (kind, err)
+    assert "new store path" in err and "remove the ledger" not in err
     assert _files(store) == before
     assert state(store) == golden
 
