@@ -29,16 +29,10 @@ Scale shape (mirrors the FAISS IVF-PQ layout, re-expressed Spark-first):
 Query-set contract matches ``knn_bruteforce``: |Q| is small (it is
 collected and shipped in the scorer's closure, exactly the broadcast
 pattern of the exact path).  The LUT costs m·ksub doubles per query
-(8 KB at m=16/ksub=64), so the driver-collect serving shape holds to
-|Q| ~ 10⁵ (~1 GB closure; ÷nlist in residual mode).  For corpus-scale
-|Q| — joining two embedding corpora — ``knn_ivfpq(distributed_lut=
-True)`` never collects queries: each probe row carries its in-plan LUT
-(computed against the codebook literal), ONE cid join meets the coded
-corpus (AQE broadcasts the probe side while it fits), and a per-batch
-Arrow local top-k caps the final per-qid window exchange at
-O(partitions·|Q|·n_short) rows.  ``residual=True`` switches both paths
+(8 KB at m=16/ksub=64), so the closure holds to |Q| ~ 10⁵ (~1 GB;
+×nlist in residual mode).  ``residual=True`` switches ``knn_ivfpq``
 to the FAISS IVFPQ residual layout (codes quantize v − centroid[cid]).
-See SCALE.md §Similarity search for the switchover analysis.
+See SCALE.md §Similarity search.
 """
 
 from __future__ import annotations
@@ -49,6 +43,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from cosmap_spark.operators.dedup import _require_int
+from cosmap_spark.operators.topk import topk_indices, topk_pandas
 
 Codebooks = list[list[list[float]]]  # (m, ksub, dsub)
 
@@ -436,8 +433,8 @@ def _adc_luts(
             # cumsum, NOT sum: np.sum switches to pairwise summation
             # past 8 elements, which differs from a sequential fold by
             # an ulp ~half the time — cumsum is sequential by
-            # definition, so these values match the distributed
-            # in-plan LUT (pq._lut_expr, an F.aggregate fold) exactly
+            # definition, so a table entry is the plain left-to-right
+            # sum a numpy oracle replays exactly
             luts[qi, s] = (diff * diff).cumsum(axis=1)[:, -1]
     return qids, luts
 
@@ -452,11 +449,8 @@ def _adc_luts_by_list(
     ``luts[qi·nlist + ci, s, c] = ||(q − centroid_ci)_sub − codeword||²``
     — the codes quantize residuals, so the query must be re-expressed
     relative to each probed list's centroid (FAISS IVFPQ's per-list
-    precomputed-table layout).  Closure cost is nlist× the flat LUT;
-    the distributed path has no such ceiling (LUT rows are in-plan).
-    Same strictly-sequential cumsum fold as :func:`_adc_luts`, so the
-    distributed twin (elementwise zip_with subtract + the
-    :func:`_lut_expr` F.aggregate fold) agrees exactly."""
+    precomputed-table layout).  Closure cost is nlist× the flat LUT.
+    Same strictly-sequential cumsum fold as :func:`_adc_luts`."""
     m, ksub, dsub = codebooks.shape
     order = sorted(range(len(cents)), key=lambda i: cents[i][0])
     cidpos = {int(cents[i][0]): ci for ci, i in enumerate(order)}
@@ -474,79 +468,6 @@ def _adc_luts_by_list(
     return qids, cidpos, luts
 
 
-def _local_topk(n_short: int):
-    """mapInPandas per-batch partial top-k per qid under the (dist,
-    nid) total order — the map-side combine the closure scorer already
-    performs, applied to the distributed-LUT path's scored rows so the
-    final per-qid window exchange carries O(partitions·|Q|·n_short)
-    (long, long, double) triples instead of every probed candidate
-    (the round-4 verdict's largest-exchange finding).  Top-k under a
-    total order is associative, so local-then-global is exact."""
-
-    from cosmap_spark.operators.topk import topk_pandas
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            yield topk_pandas(
-                pdf, ["qid"], [("dist", True), ("nid", True)], n_short
-            )
-
-    return fn
-
-
-def _codebook_literal(books: np.ndarray):
-    """The (m, ksub, dsub) codebook as ONE parsed SQL literal —
-    array<array<array<double>>> — the same single-py4j-round-trip trick
-    as ``knn._centroid_array`` (thousands of nested F.lit Columns build
-    the identical tree thousands of py4j calls slower)."""
-    def vec(v):
-        return "array({})".format(
-            ", ".join(f"CAST({float(x)!r} AS DOUBLE)" for x in v)
-        )
-
-    subs = ", ".join(
-        "array({})".format(", ".join(vec(c) for c in sub)) for sub in books
-    )
-    return F.expr(f"array({subs})")
-
-
-def _lut_expr(qvec, books: np.ndarray):
-    """In-plan ADC lookup table for one query row:
-    ``luts[s][c] = ||q_sub(s) − books[s][c]||²`` as a pure column
-    expression over the codebook literal — array<array<double>>
-    (m × ksub).  The distributed twin of :func:`_adc_luts`; BOTH paths
-    use a strictly sequential fold (F.aggregate here, cumsum there —
-    numpy's plain .sum would silently switch to pairwise summation
-    past 8 terms and drift an ulp), so values agree exactly."""
-    m, ksub, dsub = books.shape
-    return F.transform(
-        _codebook_literal(books),
-        lambda sub, s: F.transform(
-            sub,
-            lambda c: F.aggregate(
-                F.sequence(F.lit(1), F.lit(int(dsub))),
-                F.lit(0.0),
-                # (a−b)·(a−b), not pow(·, 2): libm pow is not
-                # guaranteed exact even for squares, and the driver
-                # twin computes diff*diff.  The doubled element_at is
-                # the usual no-CSE-in-lambdas cost — two O(1) array
-                # reads, cheaper than the bind-via-transform trick.
-                lambda acc, j: acc
-                + (
-                    F.element_at(qvec, (s * dsub + j).cast("int"))
-                    - F.element_at(c, j.cast("int"))
-                )
-                * (
-                    F.element_at(qvec, (s * dsub + j).cast("int"))
-                    - F.element_at(c, j.cast("int"))
-                ),
-            ),
-        ),
-    )
-
-
 def _topk_by_dist_nid(dists: np.ndarray, nids: np.ndarray, k: int) -> np.ndarray:
     """Indices of the k smallest under the TOTAL order (dist, nid).
 
@@ -558,8 +479,6 @@ def _topk_by_dist_nid(dists: np.ndarray, nids: np.ndarray, k: int) -> np.ndarray
     Top-k under a total order is associative, so lexsort-based local
     top-k is exactly safe.  Contract and kernel live in
     ``operators.topk`` (the engine's one local-top-k)."""
-    from cosmap_spark.operators.topk import topk_indices
-
     return topk_indices((dists, nids), k)
 
 
@@ -577,8 +496,8 @@ def _adc_scorer(qids: np.ndarray, luts: np.ndarray, k: int):
             nids = pdf["nid"].to_numpy()
             out = []
             for qi, qid in enumerate(qids):
-                # cumsum = sequential fold, matching the distributed
-                # zip_with/aggregate path to the last ulp (see _adc_luts)
+                # cumsum = sequential fold, so knn_ivfpq's scorer (the
+                # same fold) agrees to the last ulp (see _adc_luts)
                 d = np.round(
                     luts[qi][s_idx[None, :], codes].cumsum(axis=1)[:, -1], 6
                 )
@@ -614,19 +533,16 @@ def _rerank_exact(
     k: int,
     id_col: str,
     vec_col: str,
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """Exact-L2 re-rank of an ADC shortlist (the FAISS "refine" stage):
     raw vectors are fetched ONLY for the R·|Q| shortlist rows via a hash
-    join, queries broadcast (``broadcast_queries=False`` on the
-    corpus-scale-|Q| path leaves the join strategy to AQE); the
-    quantization error that shuffles close-neighbor ranks is removed
-    where it matters."""
+    join, queries broadcast; the quantization error that shuffles
+    close-neighbor ranks is removed where it matters."""
     vs = vectors.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("nvec"))
     qs = queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec"))
     exact = (
         shortlist.join(vs, "nid")
-        .join(F.broadcast(qs) if broadcast_queries else qs, "qid")
+        .join(F.broadcast(qs), "qid")
         .select(
             "qid", "nid",
             F.round(_exact_l2(F.col("qvec"), F.col("nvec")), 6).alias("dist"),
@@ -650,13 +566,11 @@ def _finish_shortlist(
     rerank: int | None,
     id_col: str,
     vec_col: str,
-    broadcast_queries: bool = True,
 ) -> DataFrame:
-    """Shared serving tail of every ADC path: the global (dist, nid)
-    window shortlist, then either the k-cut or the exact-L2 rerank.
-    One definition so the tie-break/typing contract the parity tests
-    pin cannot drift between the driver-closure and distributed-LUT
-    branches."""
+    """Shared serving tail of ``pq_adc_topk`` and ``knn_ivfpq``: the
+    global (dist, nid) window shortlist, then either the k-cut or the
+    exact-L2 rerank.  One definition so the tie-break/typing contract
+    the parity tests pin cannot drift between the two operators."""
     w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("nid"))
     shortlist = (
         scored.withColumn("rn", F.row_number().over(w))
@@ -669,7 +583,6 @@ def _finish_shortlist(
     return _rerank_exact(
         shortlist.select("qid", "nid"), queries, vectors,
         k=k, id_col=id_col, vec_col=vec_col,
-        broadcast_queries=broadcast_queries,
     )
 
 
@@ -730,7 +643,6 @@ def knn_ivfpq(
     prebuilt: tuple[list, DataFrame] | None = None,
     codebooks: Codebooks | None = None,
     coded: DataFrame | None = None,
-    distributed_lut: bool = False,
     residual: bool = False,
     prune_scan: bool = False,
     opq=None,
@@ -757,38 +669,21 @@ def knn_ivfpq(
     at scale ``coded`` is the stored, cid-partitioned codes table, and
     serving touches nothing corpus-sized but its pruned scan.
 
-    ``distributed_lut=True`` is the corpus-scale-|Q| serving shape
-    (SCALE.md §Similarity search): the default path collects the query
-    set to the driver and ships per-query LUTs in the scorer's closure
-    (8 KB/query at m=16/ksub=64 — a ~10⁵-query ceiling; ×nlist in
-    residual mode); the distributed path never collects queries — each
-    PROBE row carries its in-plan LUT (:func:`_lut_expr` against the
-    codebook literal), so ONE cid join delivers LUTs to candidates:
-    AQE broadcasts the probe side while it fits (zero corpus-sized
-    exchanges) and falls back to a single cid shuffle when |Q|
-    outgrows it.  Scored rows then pass a per-batch Arrow local top-k
-    (:func:`_local_topk`, the same (dist, nid) total order as every
-    other partial) so the final per-qid window exchange carries
-    O(partitions·|Q|·n_short) triples — never every probed candidate
-    (the round-4 verdict's largest-exchange finding, fixed).  Probe
-    rows carry O(nprobe·m·ksub) doubles per query — linear in |Q|,
-    never corpus-sized.  Results are identical across paths: every sum
-    is a strictly SEQUENTIAL fold (F.aggregate in-plan; cumsum — not
-    numpy's silently-pairwise .sum — on the driver) and rounds to
-    6 dp, so agreement is by construction, not by luck on one fixture;
-    tests/test_pq.py pins distributed ≡ driver at nprobe=nlist vs
-    ``pq_adc_topk`` and at nprobe<nlist vs the closure path.
+    The query set is collected at construction and each query's ADC
+    lookup tables ship in the scorer's closure (8 KB/query at
+    m=16/ksub=64 — a ~10⁵-query ceiling; ×nlist in residual mode).
+    Every sum is a strictly SEQUENTIAL fold (cumsum — not numpy's
+    silently-pairwise .sum) rounded to 6 dp, so at nprobe=nlist the
+    result equals ``pq_adc_topk``'s (pinned in tests/test_pq.py).
+    ``k``, ``nlist`` and ``nprobe`` must be ints >= 1 and ``rerank``
+    ``None`` or an int >= 1.
 
     ``residual=True`` encodes r = v − centroid[cid] per inverted list
     (the standard FAISS IVFPQ layout): codebooks model the residual
     distribution — tighter than the raw one — so recall at identical
     m/ksub improves (pinned ≥ raw in tests/test_pq.py).  LUTs become
-    per-(query, list): the closure ships |Q|·nlist tables, the
-    distributed path computes them per probe row (the per-row
-    centroid subtract is bound ONCE via the single-element-array +
-    transform trick — an unbound zip_with inside the fold's lambdas
-    would re-evaluate per element under Spark's no-CSE-in-lambdas
-    rule).  ``codebooks``/``coded`` passed in must have been built
+    per-(query, list): the closure ships |Q|·nlist tables.
+    ``codebooks``/``coded`` passed in must have been built
     under the SAME ``residual`` flag (codes are meaningless across
     layouts; not mechanically checkable — the persistence layer
     stores the flag).
@@ -802,25 +697,24 @@ def knn_ivfpq(
     first, per-list residuals of the rotated vectors — FAISS's
     ``OPQ..,IVF..,PQ..`` factory order).
 
-    ``prune_scan=True`` (closure path only) collects the tiny probe
-    table (|Q|·nprobe (qid, cid) rows — ONE extra driver job, the
-    query set is driver-resident on this path anyway) and pushes the
-    probed cid set into the coded scan as a LITERAL ``isin`` filter:
-    on a ``partitionBy("cid")`` store (``save_ann_index``'s layout)
-    that becomes a static PartitionFilter — unprobed inverted lists
-    are skipped at the file-listing level, the on-disk pruning the
-    IVF layout exists for (asserted on the physical plan in
+    ``prune_scan=True`` collects the tiny probe table (|Q|·nprobe
+    (qid, cid) rows — ONE extra driver job) and pushes the probed cid
+    set into the coded scan as a LITERAL ``isin`` filter: on a
+    ``partitionBy("cid")`` store (``save_ann_index``'s layout) that
+    becomes a static PartitionFilter — unprobed inverted lists are
+    skipped at the file-listing level, the on-disk pruning the IVF
+    layout exists for (asserted on the physical plan in
     tests/test_index_store.py).  Spark's dynamic partition pruning
     does not fire for a filterless broadcast probe table, so the
-    pruning is done statically; the distributed-LUT path (queries not
-    driver-resident) relies on min/max row-group skipping instead.
-    Correct by construction even if the filter were a superset: list
-    membership is re-checked by the equi-join."""
-    from cosmap_spark.operators.knn import (
-        _centroid_array,
-        _scored_centroids,
-        ivf_build,
-    )
+    pruning is done statically.  Correct by construction even if the
+    filter were a superset: list membership is re-checked by the
+    equi-join."""
+    from cosmap_spark.operators.knn import _scored_centroids, ivf_build
+
+    for name, value in (("k", k), ("nlist", nlist), ("nprobe", nprobe)):
+        _require_int(name, value)
+    if rerank is not None:
+        _require_int("rerank", rerank)
 
     if opq is not None:
         # OPQ pre-transform (opq_train's rotation): rotate BOTH sides
@@ -865,91 +759,30 @@ def knn_ivfpq(
                 assigned, codebooks, id_col="nid", vec_col="nvec",
                 keep=["cid"],
             )
-    q0 = queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec"))
     probes = F.slice(
-        F.reverse(F.array_sort(_scored_centroids(F.col("qvec"), cents))), 1, nprobe
+        F.reverse(F.array_sort(_scored_centroids(F.col(vec_col), cents))),
+        1, nprobe,
     )
-    q = q0.select(
-        "qid", "qvec",
+    q = queries.select(
+        F.col(id_col).alias("qid"),
         F.explode(F.transform(probes, lambda s: -s["negcid"])).alias("cid"),
     )
     books = _as_array(codebooks)
     n_short = max(k, rerank or 0)
-    if prune_scan and distributed_lut:
-        # the probe table is NOT driver-resident on this path, so the
-        # static filter cannot be built — refuse rather than silently
-        # skip the pruning the caller asked for (rely on parquet
-        # min/max row-group skipping instead)
-        raise ValueError(
-            "prune_scan requires the closure path (distributed_lut=False): "
-            "the probed cid set is only driver-resident there"
-        )
-    if distributed_lut:
-        # queries never leave the cluster: each probe row computes its
-        # LUT in-plan, then ONE cid join meets the coded corpus (AQE
-        # broadcasts the small probe side, else shuffles once on cid)
-        if residual:
-            cvec = F.element_at(
-                F.filter(
-                    _centroid_array(cents),
-                    lambda c: c["cid"] == F.col("cid"),
-                ),
-                1,
-            )["cvec"]
-            # bind (qvec − centroid) ONCE: element_at inside _lut_expr's
-            # lambdas would otherwise re-evaluate the zip_with per
-            # element (no CSE inside higher-order-function bodies)
-            lut = F.element_at(
-                F.transform(
-                    F.array(F.zip_with(F.col("qvec"), cvec, lambda a, b: a - b)),
-                    lambda qe: _lut_expr(qe, books),
-                ),
-                1,
-            )
-        else:
-            lut = _lut_expr(F.col("qvec"), books)
-        ql = q.select("qid", "cid", lut.alias("__luts"))
-        scored = (
-            coded.join(ql, "cid")
-            .where(F.col("nid") != F.col("qid"))
-            .select(
-                "qid", "nid",
-                F.round(
-                    F.aggregate(
-                        F.zip_with(
-                            F.col("__luts"), F.col("codes"),
-                            lambda l, c: F.element_at(l, (c + 1).cast("int")),
-                        ),
-                        F.lit(0.0),
-                        lambda acc, x: acc + x,
-                    ),
-                    6,
-                ).alias("dist"),
-            )
-        )
-        partial = scored.mapInPandas(_local_topk(n_short), _ADC_SCHEMA)
-        return _finish_shortlist(
-            partial, queries, corpus, k=k, n_short=n_short, rerank=rerank,
-            id_col=id_col, vec_col=vec_col, broadcast_queries=False,
-        )
-
     qrows = queries.select(id_col, vec_col).collect()
     if prune_scan:
         probed = sorted(
             {r["cid"] for r in q.select("cid").distinct().collect()}
         )
         coded = coded.where(F.col("cid").isin(probed))
+    cand = coded.join(F.broadcast(q), "cid")
     if residual:
         qids, cidpos, luts = _adc_luts_by_list(qrows, books, cents)
         nl = len(cents)
-        cand = coded.join(
-            F.broadcast(q.select("qid", "cid")), "cid"
-        ).select("nid", "codes", "qid", "cid")
+        cand = cand.select("nid", "codes", "qid", "cid")
     else:
         qids, luts = _adc_luts(qrows, books)
-        cand = coded.join(
-            F.broadcast(q.select("qid", "cid")), "cid"
-        ).select("nid", "codes", "qid")
+        cand = cand.select("nid", "codes", "qid")
     qpos = {int(qq): i for i, qq in enumerate(qids)}
     m_ = luts.shape[1]
     s_idx = np.arange(m_)
@@ -982,10 +815,8 @@ def knn_ivfpq(
             # post-scan exchange carries every probed candidate, i.e.
             # O(corpus) rows at scale instead of
             # O(partitions · |Q| · n_short)
-            yield (
-                scored_pdf.sort_values(["qid", "dist", "nid"])
-                .groupby("qid", sort=False)
-                .head(n_short)
+            yield topk_pandas(
+                scored_pdf, ["qid"], [("dist", True), ("nid", True)], n_short
             )
 
     scored = cand.mapInPandas(score, _ADC_SCHEMA)

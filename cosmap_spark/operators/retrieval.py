@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from cosmap_spark.functions.text import tokens
+from cosmap_spark.operators.dedup import _require_int
 
 
 def bm25_weight(
@@ -179,7 +180,6 @@ def bm25_scored(
     text_col: str = "text",
     variants: dict[str, tuple[float, float]] | None = None,
     prebuilt: dict | None = None,
-    broadcast_lens: bool = True,
 ) -> DataFrame:
     """The UNCUT per-(query, doc) BM25 score table, optionally under
     SEVERAL (k1, b) parameterizations from ONE corpus pass —
@@ -201,14 +201,9 @@ def bm25_scored(
 
     The inline (non-``prebuilt``) path carries the document length
     through the token explode itself, so NOTHING doc-count-sized is
-    joined or broadcast at any corpus scale.  ``broadcast_lens``
-    applies to the ``prebuilt`` path only, where dl comes from the
-    persisted doc-length table: ``True`` (default) broadcasts it —
-    the serving shape while lens fits the broadcast budget (16
-    bytes/doc → ~10⁸ docs against a 2 GB limit); past that pass
-    ``False`` and the join shuffles on doc id instead (AQE balances
-    it) — the same escape hatch as
-    ``_rerank_exact(broadcast_queries=)``."""
+    joined or broadcast at any corpus scale.  The ``prebuilt`` path
+    takes dl from the persisted doc-length table and broadcasts it
+    (16 bytes/doc → ~10⁸ docs against a 2 GB broadcast limit)."""
     if not queries:
         raise ValueError("bm25_search: empty query set")
     variants = variants or {"score": (1.2, 0.75)}
@@ -279,12 +274,9 @@ def bm25_scored(
         .join(F.broadcast(dfreq), "term")
     )
     if lens is not None:
-        # prebuilt path: dl comes from the persisted doc-length table;
-        # broadcast while it fits the budget (16 bytes/doc → ~10⁸ docs
-        # against a 2 GB limit), else shuffle-join on doc id
-        lens_side = lens.withColumnRenamed("dl", "__dl")
+        # prebuilt path: dl comes from the persisted doc-length table
         scored_src = scored_src.join(
-            F.broadcast(lens_side) if broadcast_lens else lens_side, "__d"
+            F.broadcast(lens.withColumnRenamed("dl", "__dl")), "__d"
         )
     if stats is not None:
         scored_src = scored_src.crossJoin(F.broadcast(stats))
@@ -347,7 +339,6 @@ def bm25_search(
     b: float = 0.75,
     top_n: int = 10,
     prebuilt: dict | None = None,
-    broadcast_lens: bool = True,
 ) -> DataFrame:
     """Top ``top_n`` documents per query by BM25 —
     ``[query_id, doc_id, score, n_hit]`` (``n_hit`` = how many query
@@ -378,7 +369,6 @@ def bm25_search(
     scored = bm25_scored(
         docs, queries, id_col=id_col, text_col=text_col,
         variants={"score": (k1, b)}, prebuilt=prebuilt,
-        broadcast_lens=broadcast_lens,
     )
     return topk_cut(scored, score_col="score", id_col=id_col, top_n=top_n)
 
@@ -585,7 +575,6 @@ def phrase_search(
     b: float = 0.75,
     top_n: int = 10,
     prebuilt: dict | None = None,
-    broadcast_lens: bool = True,
     slop: int = 0,
 ) -> DataFrame:
     """Quoted-phrase retrieval: top ``top_n`` docs per query that
@@ -628,7 +617,6 @@ def phrase_search(
     else:
         scored = bm25_scored(
             None, queries, variants={"score": (k1, b)}, prebuilt=prebuilt,
-            broadcast_lens=broadcast_lens,
         )
     tf = prebuilt["tf"]
     if "pos" not in tf.columns:
@@ -1160,8 +1148,6 @@ def maxsim_topk(
     qvecs_col: str = "tvecs",
     normalize: bool = True,
     batch_k: int | None = None,
-    distributed_queries: bool = False,
-    max_queries: int = 4096,
 ) -> DataFrame:
     """ColBERT-style late-interaction retrieval: per query, the top-k
     documents under the MaxSim score
@@ -1175,12 +1161,12 @@ def maxsim_topk(
 
     Scale shape (the ADC-scorer discipline): the query token matrix is
     driver-resident and ships ONCE in the kernel closure (queries are
-    query-sized by contract — the closure path's standing assumption);
-    the corpus streams through ONE ``mapInPandas`` pass that scores
-    every batch fully vectorized and emits only a per-batch LOCAL
-    top-``batch_k`` per query under the TOTAL order (−score, doc_id) —
-    so the only exchange is O(partitions·|Q|·k) rows into the final
-    per-query rank window, never corpus-sized.  Dot products use
+    query-sized by contract); the corpus streams through ONE
+    ``mapInPandas`` pass that scores every batch fully vectorized and
+    emits only a per-batch LOCAL top-``batch_k`` per query under the
+    TOTAL order (−score, doc_id) — so the only exchange is
+    O(partitions·|Q|·k) rows into the final per-query rank window,
+    never corpus-sized.  Dot products use
     strictly sequential summation (:func:`_seq_dot`), so a pair's
     score is bit-identical under any partition layout and the local
     prune can never disagree with the global window (the repo's
@@ -1194,218 +1180,90 @@ def maxsim_topk(
     is the exact full-corpus scorer (small corpora, oracles,
     recall measurement).  ``batch_k`` widens the per-batch local
     top-k (never narrows: values below ``k`` would drop global
-    winners, so it clamps to ``k``).
+    winners, so it clamps to ``k``).  ``k`` must be an int >= 1.
 
-    ``distributed_queries=True`` is the |Q|-scale twin (the
-    ``knn_ivfpq(distributed_lut=True)`` pattern): the query table
-    never touches the driver — it broadcast-joins the doc stream and
-    a per-(doc, query) Arrow kernel scores each pair, with the same
-    per-batch local top-k bounding the exchange.  ZERO driver jobs at
-    construction (pinned in tests); results equal the closure path
-    bit-for-bit (every (doc, query) cell is an independent sequential
-    dot, so batching cannot reassociate it).  The trade: each doc's
-    token payload is replicated per query by the join — exact
-    full-corpus scoring against a LARGE query set is a block matmul
-    however expressed; past broadcast scale run the ANN stage first
-    and use ``maxsim_rerank(distributed_queries=True)``, whose joins
-    are all equi-joins.  Ids (doc and query) may be any scalar type —
-    string ids flow through natively.
-
-    Error-contract divergence (the price of zero driver jobs): the
-    closure path validates the query set at the driver — empty set
-    and token-less queries raise at CONSTRUCTION; the distributed
-    path cannot look at the data without running a job, so an empty
-    query table yields an empty RESULT, and a token-less query raises
-    only when some batch pairs it with a kept doc.  Callers owning
-    broken upstream state should validate it themselves before the
-    distributed call.
-
-    ``max_queries`` (distributed path only) is the ENFORCED guard on
-    the pair join's replication factor (the ``segment_overlap``
-    contract): the broadcast side carries an in-plan global count, so
-    a query table larger than ``max_queries`` fails the broadcast
-    build LOUDLY — naming ``maxsim_rerank`` as the equi-join
-    alternative — instead of silently replicating every doc's token
-    payload |Q|×.  In-plan (a query-sized window inside the broadcast
-    build) so construction still runs zero driver jobs."""
+    The query set is collected at construction (one driver job): an
+    empty set or a token-less query raises there.  Query sets too
+    large for the closure belong to :func:`maxsim_rerank`, whose
+    joins are all equi-joins and which never collects queries.  Ids
+    (doc and query) may be any scalar type — string ids flow through
+    natively."""
     import numpy as np
     import pandas as pd
 
+    _require_int("k", k)
     # batch_k is a WIDEN-ONLY knob (more local candidates per batch =
     # more tie headroom); below k it would prune global winners and
     # make results layout-dependent, so it clamps
     n_short = max(k, batch_k) if batch_k else k
     out_schema = _maxsim_schema(docs, id_col, queries, qid_col)
 
-    if distributed_queries:
-        if max_queries < 1:
-            raise ValueError(
-                f"max_queries must be >= 1; got {max_queries}"
-            )
-        # in-plan cardinality guard: the global count rides a window
-        # on the QUERY-SIZED broadcast side, so an oversized query
-        # table fails the broadcast build loudly instead of silently
-        # replicating every doc's token payload |Q|x — and
-        # construction still runs zero driver jobs (the pinned
-        # contract)
-        wq_all = Window.partitionBy()
-        qside = queries.select(
-            F.col(qid_col).alias("__qid"),
-            F.col(qvecs_col).alias("__qv"),
-        ).withColumn("__qn", F.count(F.lit(1)).over(wq_all)).select(
-            F.when(
-                F.col("__qn") <= max_queries, F.col("__qid")
-            ).otherwise(
-                F.raise_error(F.concat(
-                    F.lit("maxsim_topk: "), F.col("__qn").cast("string"),
-                    F.lit(f" queries exceed max_queries={max_queries} "
-                          "— the distributed pair join replicates "
-                          "every doc's token payload per query; run "
-                          "the ANN stage first and use maxsim_rerank "
-                          "(equi-joins), or raise max_queries "
-                          "deliberately"),
-                )).cast(queries.schema[qid_col].dataType)
-            ).alias("__qid"),
-            "__qv",
-        )
-        paired = docs.select(
-            F.col(id_col).alias("__did"), F.col(vecs_col).alias("__dv")
-        ).crossJoin(F.broadcast(qside))
+    qrows = queries.select(qid_col, qvecs_col).collect()
+    if not qrows:
+        raise ValueError("maxsim_topk: empty query set")
+    qids = [r[qid_col] for r in qrows]
+    qmats = []
+    for r in qrows:
+        toks = r[qvecs_col] or []
+        if not toks:
+            raise ValueError(f"maxsim_topk: query {r[qid_col]} has no tokens")
+        qmats.append(np.asarray(toks, dtype=np.float64))
+    dim = qmats[0].shape[1]
+    if any(m.shape[1] != dim for m in qmats):
+        raise ValueError("maxsim_topk: query token dims differ")
+    qmat = np.concatenate(qmats, axis=0)
+    if normalize:
+        qmat = _norm_rows(qmat)
+    # column group boundaries per query for the reduceat sum
+    qstarts = np.cumsum([0] + [m.shape[0] for m in qmats])[:-1]
 
-        def dkernel(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                outs = []
-                for qkey, grp in pdf.groupby("__qid", sort=False):
-                    qtoks = grp["__qv"].iloc[0]
-                    if qtoks is None or not len(qtoks):
-                        raise ValueError(
-                            f"maxsim_topk: query {qkey} has no tokens"
-                        )
-                    qm = np.stack(
-                        [np.asarray(t, dtype=np.float64) for t in qtoks]
-                    )
-                    if normalize:
-                        qm = _norm_rows(qm)
-                    toks = grp["__dv"].tolist()
-                    ids = grp["__did"].to_numpy()
-                    keep = [
-                        i for i, t in enumerate(toks)
-                        if t is not None and len(t)
-                    ]
-                    if not keep:
-                        continue
-                    mats = [
-                        np.stack(
-                            [np.asarray(t, dtype=np.float64)
-                             for t in toks[i]]
-                        )
-                        for i in keep
-                    ]
-                    if any(m.shape[1] != qm.shape[1] for m in mats):
-                        raise ValueError(
-                            "maxsim_topk: doc token dim != query dim "
-                            f"{qm.shape[1]}"
-                        )
-                    dmat = np.concatenate(mats, axis=0)
-                    if normalize:
-                        dmat = _norm_rows(dmat)
-                    sims = _seq_dot(dmat, qm)          # (Σt_d, t_q)
-                    dstarts = np.cumsum(
-                        [0] + [m.shape[0] for m in mats]
-                    )[:-1]
-                    per_doc = np.maximum.reduceat(sims, dstarts, axis=0)
-                    # sequential over query tokens — the rerank-kernel
-                    # cumsum form, pinned bit-equal to the closure
-                    # path's add.reduceat by the full-scan ≡ rerank
-                    # equality tests
-                    scores = np.cumsum(per_doc, axis=1)[:, -1]
-                    outs.append(
-                        _topk_by_score_id(
-                            pd.DataFrame({
-                                "qid": [qkey] * len(keep),
-                                "doc_id": ids[keep],
-                                "score": scores,
-                            }),
-                            min(n_short, len(keep)),
-                        )
-                    )
-                if outs:
-                    yield pd.concat(outs, ignore_index=True)
-
-        partial = paired.mapInPandas(dkernel, out_schema)
-    else:
-        qrows = queries.select(qid_col, qvecs_col).collect()
-        if not qrows:
-            raise ValueError("maxsim_topk: empty query set")
-        qids = [r[qid_col] for r in qrows]
-        qmats = []
-        for r in qrows:
-            toks = r[qvecs_col] or []
-            if not toks:
-                raise ValueError(
-                    f"maxsim_topk: query {r[qid_col]} has no tokens"
+    def kernel(batches):
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            toks = pdf[vecs_col].tolist()
+            ids = pdf[id_col].to_numpy()
+            keep = [
+                i for i, t in enumerate(toks) if t is not None and len(t)
+            ]
+            if not keep:
+                continue
+            # Arrow hands array<array<double>> cells over as object
+            # arrays of ndarrays — stack element-wise, asarray chokes
+            mats = [
+                np.stack(
+                    [np.asarray(t, dtype=np.float64) for t in toks[i]]
                 )
-            qmats.append(np.asarray(toks, dtype=np.float64))
-        dim = qmats[0].shape[1]
-        if any(m.shape[1] != dim for m in qmats):
-            raise ValueError("maxsim_topk: query token dims differ")
-        qmat = np.concatenate(qmats, axis=0)
-        if normalize:
-            qmat = _norm_rows(qmat)
-        # column group boundaries per query for the reduceat sum
-        qstarts = np.cumsum([0] + [m.shape[0] for m in qmats])[:-1]
+                for i in keep
+            ]
+            if any(m.shape[1] != dim for m in mats):
+                raise ValueError(
+                    f"maxsim_topk: doc token dim != query dim {dim}"
+                )
+            dmat = np.concatenate(mats, axis=0)
+            if normalize:
+                dmat = _norm_rows(dmat)
+            sims = _seq_dot(dmat, qmat)            # (Σt_d, T_all)
+            dstarts = np.cumsum([0] + [m.shape[0] for m in mats])[:-1]
+            per_doc = np.maximum.reduceat(sims, dstarts, axis=0)
+            scores = np.add.reduceat(per_doc, qstarts, axis=1)
+            kept_ids = ids[keep]
+            outs = []
+            top = min(n_short, scores.shape[0])
+            for qi, q in enumerate(qids):
+                outs.append(
+                    _topk_by_score_id(
+                        pd.DataFrame({
+                            "qid": [q] * len(kept_ids),
+                            "doc_id": kept_ids,
+                            "score": scores[:, qi],
+                        }),
+                        top,
+                    )
+                )
+            yield pd.concat(outs, ignore_index=True)
 
-        def kernel(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                toks = pdf[vecs_col].tolist()
-                ids = pdf[id_col].to_numpy()
-                keep = [
-                    i for i, t in enumerate(toks) if t is not None and len(t)
-                ]
-                if not keep:
-                    continue
-                # Arrow hands array<array<double>> cells over as object
-                # arrays of ndarrays — stack element-wise, asarray chokes
-                mats = [
-                    np.stack(
-                        [np.asarray(t, dtype=np.float64) for t in toks[i]]
-                    )
-                    for i in keep
-                ]
-                if any(m.shape[1] != dim for m in mats):
-                    raise ValueError(
-                        f"maxsim_topk: doc token dim != query dim {dim}"
-                    )
-                dmat = np.concatenate(mats, axis=0)
-                if normalize:
-                    dmat = _norm_rows(dmat)
-                sims = _seq_dot(dmat, qmat)            # (Σt_d, T_all)
-                dstarts = np.cumsum([0] + [m.shape[0] for m in mats])[:-1]
-                per_doc = np.maximum.reduceat(sims, dstarts, axis=0)
-                scores = np.add.reduceat(per_doc, qstarts, axis=1)
-                kept_ids = ids[keep]
-                outs = []
-                top = min(n_short, scores.shape[0])
-                for qi, q in enumerate(qids):
-                    outs.append(
-                        _topk_by_score_id(
-                            pd.DataFrame({
-                                "qid": [q] * len(kept_ids),
-                                "doc_id": kept_ids,
-                                "score": scores[:, qi],
-                            }),
-                            top,
-                        )
-                    )
-                yield pd.concat(outs, ignore_index=True)
-
-        partial = docs.select(id_col, vecs_col).mapInPandas(
-            kernel, out_schema
-        )
+    partial = docs.select(id_col, vecs_col).mapInPandas(kernel, out_schema)
     w = Window.partitionBy("qid").orderBy(
         F.col("score").desc(), F.col("doc_id").asc()
     )
@@ -1426,7 +1284,6 @@ def maxsim_rerank(
     qid_col: str = "qid",
     qvecs_col: str = "tvecs",
     normalize: bool = True,
-    distributed_queries: bool = False,
 ) -> DataFrame:
     """MaxSim-score an ANN SHORTLIST — the 100 TB serving shape for
     late interaction: a cheap first stage (e.g. ``knn.knn_lsh`` /
@@ -1439,108 +1296,68 @@ def maxsim_rerank(
     :func:`maxsim_topk` (equality on the overlap pinned in
     tests/test_retrieval.py).
 
-    ``distributed_queries=True`` removes the driver-side query
-    collect: the query token table joins the candidate frame by a
-    second EQUI-join on qid, so BOTH data paths distribute and |Q|
-    is unbounded — the genuinely-scalable late-interaction serve
-    (shortlist equi-join on doc_id × query equi-join on qid; zero
-    driver jobs at construction, pinned in tests).  Ids (doc and
-    query) may be any scalar type — string ids flow through
-    natively on both paths."""
+    The query token table joins the candidate frame by a second
+    EQUI-join on qid, so queries never reach the driver, |Q| is
+    unbounded, and construction runs zero driver jobs (pinned in
+    tests).  A shortlist row whose qid has no query row is dropped by
+    that join.  A query with no tokens raises when its candidates are
+    scored, not at construction.  Ids (doc and query) may be any
+    scalar type — string ids flow through natively."""
     import numpy as np
     import pandas as pd
 
     out_schema = _maxsim_schema(docs, id_col, queries, qid_col)
-    cand = shortlist.select(
-        F.col(qid_col).alias("qid"), F.col(id_col).alias("doc_id")
-    ).join(
-        docs.select(
-            F.col(id_col).alias("doc_id"), F.col(vecs_col).alias("__tv")
-        ),
-        "doc_id",
-    )
-
-    def score_one(qm, tv):
-        dm = np.stack([np.asarray(t, dtype=np.float64) for t in tv])
-        if normalize:
-            dm = _norm_rows(dm)
-        sims = _seq_dot(dm, qm)
-        # SEQUENTIAL sum over query tokens (cumsum), exactly
-        # like maxsim_topk's np.add.reduceat: numpy .sum()
-        # switches to pairwise past 8 elements and the two
-        # paths' scores would drift by ulps on real (>8-token)
-        # queries, breaking the pinned full-scan ≡ rerank
-        # equality (CLAUDE.md sequential-sum rule)
-        mx = sims.max(axis=0)
-        return float(np.cumsum(mx)[-1])
-
-    if distributed_queries:
-        cand = cand.join(
+    cand = (
+        shortlist.select(
+            F.col(qid_col).alias("qid"), F.col(id_col).alias("doc_id")
+        )
+        .join(
+            docs.select(
+                F.col(id_col).alias("doc_id"), F.col(vecs_col).alias("__tv")
+            ),
+            "doc_id",
+        )
+        .join(
             queries.select(
-                F.col(qid_col).alias("qid"),
-                F.col(qvecs_col).alias("__qv"),
+                F.col(qid_col).alias("qid"), F.col(qvecs_col).alias("__qv")
             ),
             "qid",
         )
+    )
 
-        def kernel(batches):
-            for pdf in batches:
-                if not len(pdf):
+    def as_matrix(toks):
+        m = np.stack([np.asarray(t, dtype=np.float64) for t in toks])
+        return _norm_rows(m) if normalize else m
+
+    def kernel(batches):
+        # shortlist-sized input: a python loop over rows is bounded by
+        # |Q|·k, the documented imperative exception (per-row matrices
+        # are tokens×dim — tiny)
+        for pdf in batches:
+            if not len(pdf):
+                continue
+            out_q, out_d, out_s = [], [], []
+            for q, d, tv, qv in zip(
+                pdf["qid"], pdf["doc_id"], pdf["__tv"], pdf["__qv"]
+            ):
+                if qv is None or not len(qv):
+                    raise ValueError(f"maxsim_rerank: query {q} has no tokens")
+                if tv is None or not len(tv):
                     continue
-                out_q, out_d, out_s = [], [], []
-                for q, d, tv, qv in zip(
-                    pdf["qid"], pdf["doc_id"], pdf["__tv"], pdf["__qv"]
-                ):
-                    if qv is None or not len(qv):
-                        raise ValueError(
-                            f"maxsim_rerank: query {q} has no tokens"
-                        )
-                    if tv is None or not len(tv):
-                        continue
-                    qm = np.stack(
-                        [np.asarray(t, dtype=np.float64) for t in qv]
-                    )
-                    if normalize:
-                        qm = _norm_rows(qm)
-                    out_q.append(q)
-                    out_d.append(d)
-                    out_s.append(score_one(qm, tv))
-                if out_q:
-                    yield pd.DataFrame(
-                        {"qid": out_q, "doc_id": out_d, "score": out_s}
-                    )
-
-    else:
-        qrows = queries.select(qid_col, qvecs_col).collect()
-        qmap = {}
-        for r in qrows:
-            toks = r[qvecs_col] or []
-            if not toks:
-                raise ValueError(
-                    f"maxsim_rerank: query {r[qid_col]} has no tokens"
+                sims = _seq_dot(as_matrix(tv), as_matrix(qv))
+                # SEQUENTIAL sum over query tokens (cumsum), exactly
+                # like maxsim_topk's np.add.reduceat: numpy .sum()
+                # switches to pairwise past 8 elements and the two
+                # operators' scores would drift by ulps on real
+                # (>8-token) queries, breaking the pinned full-scan ≡
+                # rerank equality (CLAUDE.md sequential-sum rule)
+                out_q.append(q)
+                out_d.append(d)
+                out_s.append(float(np.cumsum(sims.max(axis=0))[-1]))
+            if out_q:
+                yield pd.DataFrame(
+                    {"qid": out_q, "doc_id": out_d, "score": out_s}
                 )
-            m = np.asarray(toks, dtype=np.float64)
-            qmap[r[qid_col]] = _norm_rows(m) if normalize else m
-
-        def kernel(batches):
-            # shortlist-sized input: a python loop over rows is bounded
-            # by |Q|·k, the documented imperative exception (per-row
-            # matrices are tokens×dim — tiny)
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                out_q, out_d, out_s = [], [], []
-                for q, d, tv in zip(pdf["qid"], pdf["doc_id"], pdf["__tv"]):
-                    qm = qmap.get(q)
-                    if qm is None or tv is None or not len(tv):
-                        continue
-                    out_q.append(q)
-                    out_d.append(d)
-                    out_s.append(score_one(qm, tv))
-                if out_q:
-                    yield pd.DataFrame(
-                        {"qid": out_q, "doc_id": out_d, "score": out_s}
-                    )
 
     scored = cand.mapInPandas(kernel, out_schema)
     w = Window.partitionBy("qid").orderBy(
@@ -1564,7 +1381,6 @@ def maxsim_rerank_pruned(
     qid_col: str = "qid",
     qvecs_col: str = "tvecs",
     normalize: bool = True,
-    distributed_queries: bool = False,
 ) -> DataFrame:
     """Centroid-pruned two-stage MaxSim rerank — the PLAID-shaped
     serving path (Santhanam et al., CIKM 2022: prune candidates with
@@ -1676,7 +1492,6 @@ def maxsim_rerank_pruned(
         pruned, docs, queries,
         id_col=id_col, vecs_col=vecs_col, qid_col=qid_col,
         qvecs_col=qvecs_col, normalize=normalize,
-        distributed_queries=distributed_queries,
     )
 
 
@@ -1784,7 +1599,6 @@ def maxsim_rerank_plaid(
     qid_col: str = "qid",
     qvecs_col: str = "tvecs",
     normalize: bool = True,
-    distributed_queries: bool = False,
 ) -> DataFrame:
     """Token-level centroid-pruned MaxSim rerank — full PLAID: the ANN
     shortlist is cut to the top ``prune_k`` docs per query by
@@ -1892,5 +1706,4 @@ def maxsim_rerank_plaid(
         pruned, docs, queries,
         id_col=id_col, vecs_col=vecs_col, qid_col=qid_col,
         qvecs_col=qvecs_col, normalize=normalize,
-        distributed_queries=distributed_queries,
     )

@@ -120,7 +120,7 @@ def grouped_topk(
 ) -> DataFrame:
     """Top-``k`` rows per key group with a BOUNDED exchange — the
     reusable form of the engine's partial-top-k discipline (the ADC
-    scorer / ``pq._local_topk`` pattern): an Arrow per-batch local
+    scorer / ``pq.knn_ivfpq`` scorer pattern): an Arrow per-batch local
     top-k prunes each partition to ≤ groups·k candidate rows BEFORE
     the keyed window ranks globally, so the shuffle carries
     O(partitions·groups·k) rows instead of every row.  A plain

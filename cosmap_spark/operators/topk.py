@@ -2,8 +2,8 @@
 a single place.
 
 Every bounded-exchange top-k in the engine (the ADC scorer's per-batch
-partial, ``knn_ivfpq``'s distributed-LUT partial, ``grouped_topk``,
-the MaxSim kernels) follows the same discipline: a per-batch LOCAL
+partial, ``knn_ivfpq``'s scorer partial, ``grouped_topk``, the MaxSim
+kernels) follows the same discipline: a per-batch LOCAL
 top-k prunes each partition to ≤ groups·k candidates before the keyed
 window ranks globally, so the shuffle carries O(partitions·groups·k)
 rows instead of every row.  That is exact ONLY when the local prune

@@ -224,16 +224,6 @@ def test_prune_scan_partition_filters_on_persisted_store(spark, tmp_path):
         "cid" in ln and ("inset" in ln.lower() or " in " in ln.lower())
         for ln in pf
     ), pf
-    # no silent no-op: the distributed path cannot build the static
-    # filter (probe table not driver-resident) and must say so
-    import pytest
-
-    with pytest.raises(ValueError, match="prune_scan"):
-        knn_ivfpq(
-            emb, queries, k=5, nlist=8, nprobe=2, m=8, ksub=16,
-            prebuilt=loaded["index"], codebooks=loaded["codebooks"],
-            coded=loaded["coded"], prune_scan=True, distributed_lut=True,
-        )
 
 
 def test_partial_save_round_trips(spark, tmp_path):

@@ -296,17 +296,16 @@ def test_residual_ivfpq_recall_at_least_raw(spark, emb, vecs):
     assert r_res >= r_raw, f"residual {r_res} < raw {r_raw}"
 
 
-def test_residual_parity_closure_vs_distributed(spark, emb):
-    """Residual mode must agree EXACTLY between the closure path
-    (per-(query, list) driver LUTs) and the distributed path (per-probe
-    in-plan LUTs with the bound centroid subtract) — the sequential-
-    fold discipline extended to the residual arithmetic.  Also pins
-    rerank invariance: the exact-L2 refine reads raw vectors, so its
-    output is identical whichever coding layout produced the
-    shortlist ids."""
+def test_residual_ivfpq_distances_match_numpy_adc(spark, emb, vecs):
+    """Residual-mode ADC distances at nprobe=nlist must equal a numpy
+    ‖(q − c_cid) − decoded residual‖² over every corpus vector: each
+    returned distance matches its vector's numpy value, and each
+    query's returned distances are the k smallest numpy values (the
+    per-(query, list) LUT arithmetic, checked end to end)."""
     from cosmap_spark.operators.knn import ivf_build
     from cosmap_spark.operators.pq import ivf_residuals
 
+    ids, v = vecs
     queries = emb.where(F.col("vec_id") < 8)
     idx = ivf_build(emb, nlist=8, iters=1)
     res = ivf_residuals(idx[1], idx[0])
@@ -314,29 +313,38 @@ def test_residual_parity_closure_vs_distributed(spark, emb):
     rcodes = pq_encode(
         res, rbooks, id_col="nid", vec_col="rvec", keep=["cid"]
     ).localCheckpoint(eager=True)
+    out = knn_ivfpq(
+        emb, queries, k=5, nlist=8, nprobe=8, m=8, ksub=16,
+        prebuilt=idx, codebooks=rbooks, coded=rcodes, residual=True,
+    ).collect()
 
-    def rows(df):
-        return sorted(map(tuple, df.collect()))
+    books = _as_array(rbooks)
+    cvec = {int(c): np.asarray(vec, dtype=np.float64) for c, vec in idx[0]}
+    coded = rcodes.collect()
+    nids = np.array([r["nid"] for r in coded])
+    cents = np.stack([cvec[int(r["cid"])] for r in coded])
+    decoded = np.stack([
+        np.concatenate([books[s][c] for s, c in enumerate(r["codes"])])
+        for r in coded
+    ])
+    vpos = {int(i): n for n, i in enumerate(ids)}
+    by_q: dict[int, dict[int, float]] = {}
+    for r in out:
+        by_q.setdefault(r["qid"], {})[r["nid"]] = r["dist"]
+    assert sorted(by_q) == list(range(8))
+    for qid, got in by_q.items():
+        d = (((v[vpos[qid]] - cents) - decoded) ** 2).sum(axis=1)
+        ref = dict(zip(nids.tolist(), d.tolist()))
+        for nid, dist in got.items():
+            assert abs(dist - ref[nid]) <= 1e-6, (qid, nid, dist, ref[nid])
+        want = sorted(x for n, x in ref.items() if n != qid)[:5]
+        assert np.allclose(sorted(got.values()), want, rtol=0, atol=1e-6), qid
 
-    for nprobe, rerank in ((8, None), (3, None), (3, 20)):
-        a = knn_ivfpq(
-            emb, queries, k=5, nlist=8, nprobe=nprobe, m=8, ksub=16,
-            rerank=rerank, prebuilt=idx, codebooks=rbooks, coded=rcodes,
-            residual=True, distributed_lut=True,
-        )
-        b = knn_ivfpq(
-            emb, queries, k=5, nlist=8, nprobe=nprobe, m=8, ksub=16,
-            rerank=rerank, prebuilt=idx, codebooks=rbooks, coded=rcodes,
-            residual=True,
-        )
-        assert rows(a) == rows(b), (nprobe, rerank)
 
-
-def test_distributed_lut_parity_with_driver_paths(spark, emb, books):
-    """distributed_lut=True must return EXACTLY the driver-closure
-    results: at nprobe=nlist the probed set is the whole corpus, so it
-    must also equal flat pq_adc_topk; at nprobe<nlist it must equal the
-    closure-path knn_ivfpq.  |Q|=10, both with and without rerank."""
+def test_ivfpq_full_probe_equals_flat_adc(spark, emb, books):
+    """At nprobe=nlist the probed set is the whole corpus, so
+    knn_ivfpq must return EXACTLY flat pq_adc_topk's rows, with and
+    without the exact-L2 rerank.  |Q|=10."""
     from cosmap_spark.operators.knn import ivf_build
 
     queries = emb.where(F.col("vec_id") < 10)
@@ -346,101 +354,53 @@ def test_distributed_lut_parity_with_driver_paths(spark, emb, books):
     def rows(df):
         return sorted(map(tuple, df.collect()))
 
-    # full probe == flat ADC scan
-    dist_full = knn_ivfpq(
-        emb, queries, k=5, nlist=8, nprobe=8, m=8, ksub=16,
-        prebuilt=idx, codebooks=books, coded=codes, distributed_lut=True,
-    )
-    flat = pq_adc_topk(
-        codes.select("nid", "codes"), queries, books, k=5,
-    )
-    assert rows(dist_full) == rows(flat)
-
-    # pruned probe == closure path, with rerank
     for rerank in (None, 20):
-        a = knn_ivfpq(
-            emb, queries, k=5, nlist=8, nprobe=3, m=8, ksub=16, rerank=rerank,
-            prebuilt=idx, codebooks=books, coded=codes, distributed_lut=True,
-        )
-        b = knn_ivfpq(
-            emb, queries, k=5, nlist=8, nprobe=3, m=8, ksub=16, rerank=rerank,
+        ivf = knn_ivfpq(
+            emb, queries, k=5, nlist=8, nprobe=8, m=8, ksub=16, rerank=rerank,
             prebuilt=idx, codebooks=books, coded=codes,
         )
-        assert rows(a) == rows(b)
+        flat = pq_adc_topk(
+            codes.select("nid", "codes"), queries, books, k=5, rerank=rerank,
+            vectors=emb,
+        )
+        assert rows(ivf) == rows(flat), rerank
 
 
-def test_distributed_lut_plan_never_collects_queries(spark, emb, books):
-    """The corpus-scale-|Q| contract: building the distributed plan must
-    trigger ZERO Spark jobs (the driver path collects the query set);
-    LUT computation and ADC scoring stay fully in-plan (no Python
-    scorer closure); the ONE allowed Arrow eval is the per-batch local
-    top-k over (qid, nid, dist) triples, and it must sit BETWEEN the
-    scoring join and the per-qid window so the window's exchange
-    carries partial-top-k rows, never every probed candidate (round-4
-    verdict finding #1)."""
-    from cosmap_spark.operators.knn import ivf_build
-    from cosmap_spark.operators.report import plan_summary
+@pytest.mark.parametrize(
+    "op, name, value",
+    [
+        ("knn_ivfpq", "k", 0),
+        ("knn_ivfpq", "k", True),
+        ("knn_ivfpq", "nlist", 0),
+        ("knn_ivfpq", "nprobe", 0),
+        ("knn_ivfpq", "nprobe", 2.0),
+        ("knn_ivfpq", "rerank", 0),
+        ("knn_ivfpq", "rerank", True),
+        ("maxsim_topk", "k", 0),
+        ("maxsim_topk", "k", False),
+    ],
+)
+def test_serving_sizes_refused_by_name(spark, op, name, value):
+    """A size that is not an int >= 1 (bools included) is refused by
+    name when the plan is built, instead of returning no rows."""
+    from cosmap_spark.operators.retrieval import maxsim_topk
 
-    queries = emb.where(F.col("vec_id") < 10)
-    idx = ivf_build(emb, nlist=8, iters=1)
-    codes = pq_encode(idx[1], books, id_col="nid", vec_col="nvec", keep=["cid"])
-    codes = codes.localCheckpoint(eager=True)  # freeze upstream Arrow encode
-
-    tracker = spark.sparkContext.statusTracker()
-    before = tracker.getJobIdsForGroup(None)
-    df = knn_ivfpq(
-        emb, queries, k=5, nlist=8, nprobe=3, m=8, ksub=16,
-        prebuilt=idx, codebooks=books, coded=codes, distributed_lut=True,
-    )
-    after = tracker.getJobIdsForGroup(None)
-    assert before == after, "plan construction must not run driver collects"
-    s = plan_summary(df)
-    assert s["python_evals"] == 0 and s["arrow_evals"] == 1  # local top-k only
-    assert s["cartesian_products"] == 0 and s["nested_loop_joins"] == 0
-    # structural order: scan/join → MapInPandas (local top-k) → Window;
-    # i.e. the window's input exchange is fed by the partial, so its
-    # rows are O(partitions·|Q|·n_short), not O(probed candidates)
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "simple"
-    )
-    i_map, i_win = plan.find("MapInPandas"), plan.find("Window")
-    assert 0 <= i_win < i_map, plan  # explain prints top-down: window above
-
-
-def test_distributed_lut_local_topk_bounds_window_input(spark, emb, books):
-    """The partial stage's OUTPUT row count is bounded by
-    batches·|Q|·n_short and strictly below the probed-candidate count
-    (the shuffle-row assertion, measured not inferred)."""
-    from cosmap_spark.operators.knn import ivf_build
-    from cosmap_spark.operators.pq import _local_topk
-
-    queries = emb.where(F.col("vec_id") < 4)
-    idx = ivf_build(emb, nlist=8, iters=1)
-    codes = pq_encode(
-        idx[1], books, id_col="nid", vec_col="nvec", keep=["cid"]
-    ).localCheckpoint(eager=True)
-    import pandas as pd
-
-    n_short = 5
-    # at nprobe=nlist every (query, corpus vector) pair is a probed
-    # candidate — the volume the window USED to receive
-    n_candidates = emb.count() * 4
-    out = knn_ivfpq(
-        emb, queries, k=n_short, nlist=8, nprobe=8, m=8, ksub=16,
-        prebuilt=idx, codebooks=books, coded=codes, distributed_lut=True,
-    )
-    assert out.count() == 4 * n_short < n_candidates
-    # kernel-level bound: one dense batch of 100 rows/qid → ≤ n_short out
-    pdf = pd.DataFrame(
-        {
-            "qid": [1] * 100 + [2] * 100,
-            "nid": list(range(100)) * 2,
-            "dist": [float(i % 37) for i in range(200)],
-        }
-    )
-    got = pd.concat(list(_local_topk(n_short)(iter([pdf]))))
-    assert len(got) == 2 * n_short
-    assert set(got["qid"]) == {1, 2}
+    if op == "knn_ivfpq":
+        vecs = spark.createDataFrame(
+            [(i, [float(i % 5), float(i % 3), 1.0, float(i)]) for i in range(20)],
+            "vec_id long, embedding array<double>",
+        )
+        fn, args = knn_ivfpq, (vecs, vecs.limit(2))
+        kw = {"m": 2, "ksub": 2, "dim": 4, "nlist": 2, "nprobe": 1, name: value}
+    else:
+        toks = spark.createDataFrame(
+            [(i, [[1.0, float(i)]]) for i in range(4)],
+            "doc_id long, tvecs array<array<double>>",
+        )
+        fn, args = maxsim_topk, (toks, toks.withColumnRenamed("doc_id", "qid"))
+        kw = {name: value}
+    with pytest.raises(ValueError, match=rf"^{name} must be an int >= 1"):
+        fn(*args, **kw)
 
 
 # ---------------------------------------------------------------- OPQ

@@ -282,12 +282,11 @@ def test_retrieval_eval_graded_differential(spark):
     assert binary == graded
 
 
-def test_bm25_scored_variants_one_pass_and_lens_knob(spark, corpus):
+def test_bm25_scored_variants_one_pass(spark, corpus):
     """bm25_scored with several (k1, b) variants must equal per-variant
     bm25_search results exactly (the one-corpus-pass restructure is an
-    algebraic no-op), and broadcast_lens=False — the corpus-scale shape
-    where the doc-length table outgrows the broadcast budget — must be
-    row-identical to the broadcast default."""
+    algebraic no-op), and the prebuilt path (persisted doc-length
+    table, broadcast) must be row-identical to the inline path."""
     from cosmap_spark.operators.retrieval import bm25_scored, topk_cut
 
     docs, df = corpus
@@ -303,18 +302,14 @@ def test_bm25_scored_variants_one_pass_and_lens_knob(spark, corpus):
         assert rows(topk_cut(scored, score_col=name, top_n=10)) == rows(
             bm25_search(df, queries, top_n=10, k1=k1)
         ), name
-    # the lens knob lives on the PREBUILT path (inline carries dl
-    # through the explode): shuffle-join and broadcast-join must be
-    # row-identical, and both must equal the inline path
+    # the lens join lives on the PREBUILT path (inline carries dl
+    # through the explode); it must equal the inline path
     from cosmap_spark.operators.retrieval import build_lex_index
 
     tf, lens = build_lex_index(df)
     pre = {"tf": tf, "lens": lens}
     want = rows(bm25_search(df, queries))
     assert rows(bm25_search(None, queries, prebuilt=pre)) == want
-    assert rows(
-        bm25_search(None, queries, prebuilt=pre, broadcast_lens=False)
-    ) == want
 
 
 def test_bm25_null_text_docs_excluded_consistently(spark):
@@ -576,47 +571,38 @@ def test_phrase_search_exact_recall_and_ranking(spark):
             assert abs(got[qid][d] - ref[d][0]) < 1e-9, (qid, d)
 
 
-def test_maxsim_distributed_queries_equals_closure(spark):
-    """distributed_queries=True must equal the closure path EXACTLY
-    (scores to the emitted 6dp, ranks identical) on both maxsim_topk
-    and maxsim_rerank, across partition layouts — and construct with
-    ZERO driver jobs (the knn_ivfpq(distributed_lut=True) plan gate)."""
-    import numpy as np
+def test_maxsim_rerank_family_builds_with_zero_jobs(spark):
+    """maxsim_rerank, maxsim_rerank_pruned and maxsim_rerank_plaid
+    build their plans with ZERO Spark jobs under default arguments:
+    queries reach the scoring kernel by an equi-join on qid, never by
+    a driver collect, and the pruning proxies are computed in-plan."""
+    from cosmap_spark.operators.knn import ivf_build
+    from cosmap_spark.operators.retrieval import (
+        maxsim_rerank, maxsim_rerank_plaid, maxsim_rerank_pruned,
+        maxsim_token_quantizer,
+    )
 
-    from cosmap_spark.operators.retrieval import maxsim_rerank, maxsim_topk
+    ddf, pooled, qdf = _clustered_maxsim_fixture(spark)
+    ddf, qdf = ddf.localCheckpoint(), qdf.localCheckpoint()
+    cents, assigned = ivf_build(pooled, nlist=4, iters=1)
+    assigned = assigned.localCheckpoint()
+    tcents, bags = maxsim_token_quantizer(ddf, nlist=4)
+    bags = bags.localCheckpoint()
+    short = qdf.select("qid").crossJoin(ddf.select("doc_id")).localCheckpoint()
 
-    rng = np.random.default_rng(23)
-    docs = [(i, rng.normal(0, 1, (4, 8)).tolist()) for i in range(50)]
-    queries = [(0, rng.normal(0, 1, (3, 8)).tolist()),
-               (1, rng.normal(0, 1, (11, 8)).tolist())]  # >8 tokens
-    ddf = _token_frame(spark, docs).localCheckpoint()
-    qdf = _token_frame(spark, queries, name="qid").localCheckpoint()
-
-    def rows(df):
-        return sorted(
-            (r["qid"], r["doc_id"], r["score"], r["rn"])
-            for r in df.collect()
-        )
-
-    # the shortlist comes from the closure path (collects queries), so
-    # freeze it BEFORE the zero-jobs window
-    short = maxsim_topk(ddf, qdf, k=20).select(
-        "qid", "doc_id"
-    ).localCheckpoint()
     tracker = spark.sparkContext.statusTracker()
-    before = len(tracker.getJobIdsForGroup(None))
-    dist = maxsim_topk(
-        ddf.repartition(5), qdf, k=7, distributed_queries=True
-    )
-    dist_rr = maxsim_rerank(short, ddf, qdf, distributed_queries=True)
-    assert len(tracker.getJobIdsForGroup(None)) == before, (
-        "distributed maxsim construction must not run driver jobs"
-    )
-    # the closure twins (these DO collect queries)
-    clos = maxsim_topk(ddf.repartition(2), qdf, k=7)
-    clos_rr = maxsim_rerank(short, ddf, qdf)
-    assert rows(dist) == rows(clos)
-    assert rows(dist_rr) == rows(clos_rr)
+    for name, build in (
+        ("maxsim_rerank", lambda: maxsim_rerank(short, ddf, qdf)),
+        ("maxsim_rerank_pruned", lambda: maxsim_rerank_pruned(
+            short, ddf, qdf, assigned, cents, prune_k=10)),
+        ("maxsim_rerank_plaid", lambda: maxsim_rerank_plaid(
+            short, ddf, qdf, bags, tcents, prune_k=10)),
+    ):
+        before = len(tracker.getJobIdsForGroup(None))
+        build()
+        assert len(tracker.getJobIdsForGroup(None)) == before, (
+            f"{name} construction ran a Spark job"
+        )
 
 
 def test_maxsim_string_ids(spark):
@@ -645,23 +631,16 @@ def test_maxsim_string_ids(spark):
         (d, round(-s, 6)) for s, d in want
     ]
     assert all(r["qid"] == "qA" for r in got)
-    # distributed twins agree on string ids too
-    got_d = sorted(
-        maxsim_topk(ddf, qdf, k=5, distributed_queries=True).collect(),
-        key=lambda r: r["rn"],
-    )
-    assert [(r["doc_id"], r["score"]) for r in got_d] == [
-        (d, round(-s, 6)) for s, d in want
-    ]
     short = spark.createDataFrame(
         [("qA", d) for d, _ in docs[:8]], "qid string, doc_id string"
     )
-    rr = maxsim_rerank(short, ddf, qdf)
-    rr_d = maxsim_rerank(short, ddf, qdf, distributed_queries=True)
-    key = lambda df: sorted(  # noqa: E731
-        (r["qid"], r["doc_id"], r["score"], r["rn"]) for r in df.collect()
+    rr = sorted(maxsim_rerank(short, ddf, qdf).collect(), key=lambda r: r["rn"])
+    want_rr = sorted(
+        (-_maxsim_ref(dt, queries[0][1]), d) for d, dt in docs[:8]
     )
-    assert key(rr) == key(rr_d) and rr.count() == 8
+    assert [(r["qid"], r["doc_id"], r["score"]) for r in rr] == [
+        ("qA", d, round(-s, 6)) for s, d in want_rr
+    ]
 
 
 def test_rm3_expansion_matches_python_reference(spark):
@@ -878,35 +857,6 @@ def test_phrase_match_slop_differential(spark):
         phrase_match(tf, "web retrieval", slop=-1)
 
 
-def test_maxsim_distributed_query_cardinality_guard(spark):
-    """The distributed pair join's enforced max_queries contract
-    (round-8 verdict #8, the segment_overlap pattern): an oversized
-    query table fails LOUDLY at execution naming maxsim_rerank —
-    in-plan, so construction still runs zero driver jobs."""
-    import pytest
-
-    from cosmap_spark.operators.retrieval import maxsim_topk
-
-    ddf = spark.createDataFrame(
-        [(i, [[1.0, 0.0], [0.0, 1.0]]) for i in range(20)],
-        "doc_id long, tvecs array<array<double>>",
-    )
-    qdf = spark.createDataFrame(
-        [(i, [[1.0, 1.0]]) for i in range(6)],
-        "qid long, tvecs array<array<double>>",
-    )
-    df = maxsim_topk(ddf, qdf, k=3, distributed_queries=True,
-                     max_queries=5)  # construction must NOT raise
-    with pytest.raises(Exception, match="max_queries"):
-        df.collect()
-    # under the cap the same call round-trips
-    ok = maxsim_topk(ddf, qdf, k=3, distributed_queries=True,
-                     max_queries=6)
-    assert ok.count() == 18
-    with pytest.raises(ValueError, match="max_queries"):
-        maxsim_topk(ddf, qdf, distributed_queries=True, max_queries=0)
-
-
 def _clustered_maxsim_fixture(spark, seed=11):
     import numpy as np
 
@@ -965,7 +915,6 @@ def test_maxsim_rerank_pruned_identity_and_recall(spark):
     jobs_before = spark.sparkContext._jsc.sc().statusTracker().getJobIdsForGroup(None)
     pruned = maxsim_rerank_pruned(
         short, ddf, qdf, assigned, cents, prune_k=35,
-        distributed_queries=True,
     )
     jobs_after = spark.sparkContext._jsc.sc().statusTracker().getJobIdsForGroup(None)
     assert len(jobs_after) == len(jobs_before), (
@@ -1121,7 +1070,6 @@ def test_maxsim_plaid_token_bags(spark, tmp_path):
         .getJobIdsForGroup(None)
     frame = maxsim_rerank_plaid(
         dense, ddf, q0, bags, tcents, prune_k=8,
-        distributed_queries=True,
     )
     jobs_after = spark.sparkContext._jsc.sc().statusTracker() \
         .getJobIdsForGroup(None)
