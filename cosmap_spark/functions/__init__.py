@@ -2,9 +2,9 @@
 
 from cosmap_spark.functions.spherical import (  # noqa: F401
     SEP_DEG_SQL,
-    angular_sep_deg,
-    ra_delta_deg,
-    zone_of_dec,
+    ra_delta_sql,
+    sep_deg_sql,
+    zone_sql,
 )
 from cosmap_spark.functions.web import (  # noqa: F401
     canonical_url,

@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from cosmap_spark.functions.sqlargs import require_int
+
 #: tiny multilingual stopword lists for the language-ID heuristic
 LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
     "en": ("the", "a", "of", "and", "to"),
@@ -48,7 +50,7 @@ def shingles_from_tokens(t: Column, k: int = 3) -> Column:
     guard in the DuckDB oracles.  ``k`` must be an int ≥ 1: at k ≤ 0
     every document's only shingle would be the empty gram, making every
     pair of documents a Jaccard-1.0 duplicate."""
-    _check_k(k)
+    require_int("k", k)
     idx = F.sequence(F.lit(0), F.size(t) - k)
     cols = lambda i: [F.element_at(t, i + j + 1) for j in range(k)]  # noqa: E731
     grams = F.transform(idx, lambda i: F.concat_ws(" ", *cols(i)))
@@ -57,18 +59,13 @@ def shingles_from_tokens(t: Column, k: int = 3) -> Column:
     )
 
 
-def _check_k(k: int) -> None:
-    if isinstance(k, bool) or not isinstance(k, int) or k < 1:
-        raise ValueError(f"k must be an int >= 1, got {k!r}")
-
-
 def shingles_sql(toks: str, k: int) -> str:
     """:func:`shingles_from_tokens` as SQL text over the token-array
     column named by the SQL expression ``toks`` — the same grams, same
     short-document guard, built in one expression string instead of
     ~k+10 ``F.*`` calls (each one or more py4j round trips).  For
     operators whose whole plan is SQL text (``dedup._shingle_sets``)."""
-    _check_k(k)
+    require_int("k", k)
     parts = ", ".join(f"element_at({toks}, i + {j + 1})" for j in range(k))
     return (
         f"CASE WHEN size({toks}) >= {k} "

@@ -18,13 +18,17 @@ make it an EQUI-join with 2-D sky bucketing:
 3. join on (zone, sector) equality, AND the exact RA/dec bounding box,
    AND the exact haversine predicate as residual.
 
-Catalyst plans a BroadcastHashJoin when the exploded samples side is
-small (the common case: samples ≈ 10³–10⁶) or a shuffled hash join
-partitioned by cell otherwise.  Candidate pairs per catalog row are the
+By default (``broadcast_samples=True``) the exploded samples side
+carries a broadcast hint, so Catalyst plans a BroadcastHashJoin that
+builds the samples side whatever its size (at 1 GiB of driver heap a
+few million cones no longer fit); ``broadcast_samples=False`` leaves
+the choice to the planner's size estimates — a broadcast of whichever
+side is under the threshold, else a shuffled join on the (zone,
+sector) cell.  Candidate pairs per catalog row are the
 samples in ITS cell only — at 10k samples / 2160 cells that's ~25× less
 residual work than 1-D zoning.  The 100 TB catalog side is never
 nested-loop-scanned and, in the broadcast case, never shuffled.  The
-join computes each row's ``__zone`` from dec, so it prunes no parquet
+join computes each row's zone from dec, so it prunes no parquet
 partition or row group by itself: scan pruning is the literal ``zone``
 range filter that ``Analysis.build`` puts on a zone-partitioned catalog
 (sources.ingest_catalog, read through sources.read_catalog_source).
@@ -32,25 +36,24 @@ range filter that ``Analysis.build`` puts on a zone-partitioned catalog
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from collections import Counter
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cosmap_spark.functions.spherical import (
-    angular_sep_deg,
-    ra_delta_deg,
-    ra_diff_wrapped,
-    zone_of_dec,
+    ra_delta_sql,
+    ra_diff_wrapped_sql,
+    sep_deg_sql,
+    zone_sql,
 )
+from cosmap_spark.functions.sqlargs import double_sql, quote, require_number
 
 DEFAULT_ZONE_DEG = 3.0
 DEFAULT_SECTOR_DEG = 10.0
 #: field-metadata key marking a catalog's stored ``zone`` column with
 #: the zone height it was written with (sources.read_catalog_source)
 ZONE_HEIGHT_KEY = "cosmap.zone_height_deg"
-
-
-def _sector_of_ra(ra: Column, w: float) -> Column:
-    return F.floor(ra / F.lit(w)).cast("long")
 
 
 def cone_search(
@@ -68,7 +71,8 @@ def cone_search(
     ``ra, dec, radius_deg``.  All other columns pass through (sample
     coordinates surface as ``s_ra, s_dec``).  When ``sep_col`` is set,
     the output carries the exact separation under that name.
-    ``zone_height_deg`` must be a finite number > 0.
+    ``zone_height_deg`` and ``sector_width_deg`` must be finite
+    numbers > 0.
 
     ``sector_width_deg`` is rounded to the nearest width that tiles
     the circle with an INTEGER sector count: the wrap arithmetic
@@ -77,64 +81,80 @@ def cone_search(
     sector would be reachable from the catalog side (``floor(ra/w)``)
     but never from a sample's wrapped span, silently dropping in-cone
     rows near ra = 360.
-    """
-    n_sectors = max(1, int(round(360.0 / sector_width_deg)))
-    w = 360.0 / n_sectors  # exact tiling (see docstring)
 
-    s = samples
-    for c in ("ra", "dec"):
-        s = s.withColumnRenamed(c, f"__s_{c}")
-    dra = ra_delta_deg(F.col("__s_dec"), F.col("radius_deg"))
+    Output column names must be distinct, compared case-insensitively
+    as Spark resolves them by default: a name on both sides (or equal to
+    ``sep_col``) is refused by name.
+
+    The plan is built as SQL text — five ``selectExpr`` calls and one
+    string join condition, about 55 py4j round trips (929 when every
+    expression was an ``F.*`` call).
+    """
+    zone_lo, zone_hi, zone_cat = (
+        zone_sql(dec, zone_height_deg)
+        for dec in ("`s_dec` - `radius_deg`", "`s_dec` + `radius_deg`", "`dec`")
+    )
+    n_sectors = max(1, int(round(
+        360.0 / require_number("sector_width_deg", sector_width_deg, positive=True)
+    )))
+    w = double_sql("sector width", 360.0 / n_sectors)  # exact tiling (see docstring)
+
+    # sample coordinates take their output names (s_ra, s_dec) up front,
+    # so the join condition and the projection need no frame qualifiers
+    cat_cols, smp_cols = catalog.columns, samples.columns
+    s_names = [{"ra": "s_ra", "dec": "s_dec"}.get(c, c) for c in smp_cols]
+    out_names = cat_cols + s_names + ([sep_col] if sep_col else [])
+    n_lower = Counter(c.lower() for c in out_names)
+    if len(n_lower) < len(out_names):
+        raise ValueError(
+            "cone_search output names must be distinct (sample ra/dec surface as "
+            "s_ra/s_dec, then sep_col); repeated: "
+            f"{sorted({c for c in out_names if n_lower[c.lower()] > 1})}"
+        )
+    out = [quote(c, "column") for c in out_names]
+
     # sectors the cone's RA span touches, wrapped onto [0, n_sectors);
     # a span ≥ 360° (pole-adjacent cone) covers every sector
-    lo = F.floor((F.col("__s_ra") - dra) / F.lit(w)).cast("long")
-    hi = F.least(
-        lo + F.lit(n_sectors - 1),
-        F.floor((F.col("__s_ra") + dra) / F.lit(w)).cast("long"),
-    )
-    sectors = F.array_distinct(
-        F.transform(F.sequence(lo, hi), lambda x: F.pmod(x, F.lit(n_sectors)))
+    lo = f"CAST(floor((`s_ra` - `__ra_delta`) / {w}) AS BIGINT)"
+    hi = (
+        f"least({lo} + {n_sectors - 1}, "
+        f"CAST(floor((`s_ra` + `__ra_delta`) / {w}) AS BIGINT))"
     )
     s = (
-        s.withColumn("__ra_delta", dra)
-        .withColumn(
-            "__zone",
-            F.explode(
-                F.sequence(
-                    zone_of_dec(F.col("__s_dec") - F.col("radius_deg"), zone_height_deg),
-                    zone_of_dec(F.col("__s_dec") + F.col("radius_deg"), zone_height_deg),
-                )
-            ),
+        samples.selectExpr(
+            *[f"{quote(c, 'column')} AS {n}" for c, n in zip(smp_cols, out[len(cat_cols):])],
+            f"{ra_delta_sql('`dec`', '`radius_deg`')} AS `__ra_delta`",
         )
-        .withColumn("__sector", F.explode(sectors))
+        .selectExpr("*", f"explode(sequence({zone_lo}, {zone_hi})) AS `__s_zone`")
+        .selectExpr(
+            "*",
+            f"explode(array_distinct(transform(sequence({lo}, {hi}), "
+            f"x -> pmod(x, {n_sectors})))) AS `__s_sector`",
+        )
     )
     if broadcast_samples:
         s = F.broadcast(s)
 
-    cat = catalog.withColumn(
-        "__zone", zone_of_dec(F.col("dec"), zone_height_deg)
-    ).withColumn(
+    cat = catalog.selectExpr(
+        "*",
+        f"{zone_cat} AS `__zone`",
         # pmod guards the ra = 360.0 float edge (floor would emit
         # n_sectors, unreachable from any sample span)
-        "__sector", F.pmod(_sector_of_ra(F.col("ra"), w), F.lit(n_sectors))
+        f"pmod(CAST(floor(`ra` / {w}) AS BIGINT), {n_sectors}) AS `__sector`",
     )
 
-    sep = angular_sep_deg(F.col("__s_ra"), F.col("__s_dec"), cat["ra"], cat["dec"])
+    sep = sep_deg_sql("`s_ra`", "`s_dec`", "`ra`", "`dec`")
     cond = (
-        (cat["__zone"] == s["__zone"])
-        & (cat["__sector"] == s["__sector"])
+        "`__zone` = `__s_zone` AND `__sector` = `__s_sector`"
         # conservative bbox: cheap prefilter evaluated before the trig
-        & (F.abs(cat["dec"] - F.col("__s_dec")) <= F.col("radius_deg"))
-        & (ra_diff_wrapped(cat["ra"], F.col("__s_ra")) <= F.col("__ra_delta"))
+        " AND abs(`dec` - `s_dec`) <= `radius_deg`"
+        f" AND {ra_diff_wrapped_sql('`ra`', '`s_ra`')} <= `__ra_delta`"
         # exact predicate
-        & (sep <= F.col("radius_deg"))
+        f" AND {sep} <= `radius_deg`"
     )
-    out = cat.join(s, cond, "inner")
     if sep_col:
-        out = out.withColumn(sep_col, sep)
-    out = out.drop("__zone", "__sector", "__ra_delta")
-    out = out.withColumnRenamed("__s_ra", "s_ra").withColumnRenamed("__s_dec", "s_dec")
-    return out
+        out[-1] = f"{sep} AS {out[-1]}"
+    return cat.join(s, F.expr(cond), "inner").selectExpr(*out)
 
 
 def cone_search_bruteforce(catalog: DataFrame, samples: DataFrame,
@@ -145,10 +165,10 @@ def cone_search_bruteforce(catalog: DataFrame, samples: DataFrame,
     production path (nested-loop at scale).
     """
     s = samples.withColumnRenamed("ra", "s_ra").withColumnRenamed("dec", "s_dec")
-    sep = angular_sep_deg(F.col("s_ra"), F.col("s_dec"), catalog["ra"], catalog["dec"])
+    sep = sep_deg_sql("`s_ra`", "`s_dec`", "`ra`", "`dec`")
     return (
-        catalog.join(s, sep <= s["radius_deg"], "inner")
-        .withColumn(sep_col, sep)
+        catalog.join(s, F.expr(f"{sep} <= `radius_deg`"), "inner")
+        .withColumn(sep_col, F.expr(sep))
     )
 
 

@@ -20,47 +20,13 @@ no Python UDFs.
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from cosmap_spark.functions.sqlargs import quote, require_fraction, require_int, require_seed
 from cosmap_spark.functions.text import shingles_sql, tokens
-
-
-def _quote(name: str, what: str) -> str:
-    """``name`` as a backtick-quoted SQL identifier (embedded backticks
-    doubled), for column names put into SQL text."""
-    if not isinstance(name, str) or not name:
-        raise ValueError(f"{what} must be a non-empty column name, got {name!r}")
-    return "`" + name.replace("`", "``") + "`"
-
-
-def _require_int(name: str, value, lo: int = 1, hi: int | None = None) -> int:
-    """Refuse, by name, a parameter that is not an int in [lo, hi] —
-    every one of them is interpolated into SQL text."""
-    if (
-        isinstance(value, bool) or not isinstance(value, int) or value < lo
-        or (hi is not None and value > hi)
-    ):
-        bound = f">= {lo}" if hi is None else f"in [{lo}, {hi}]"
-        raise ValueError(f"{name} must be an int {bound}, got {value!r}")
-    return value
-
-
-def _require_fraction(name: str, value) -> str:
-    """Refuse, by name, a fraction that is not a finite number in [0, 1]
-    (a NaN or out-of-range Jaccard threshold silently returns no pairs,
-    a split fraction silently puts every document on one side); returns
-    it as a DOUBLE SQL literal."""
-    if (
-        isinstance(value, bool) or not isinstance(value, (int, float))
-        or not math.isfinite(value) or not 0 <= value <= 1
-    ):
-        raise ValueError(f"{name} must be a finite number in [0, 1], got {value!r}")
-    return f"CAST('{float(value)!r}' AS DOUBLE)"
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -113,8 +79,8 @@ def _shingle_sets(df: DataFrame, text_col: str, id_col: str, k: int) -> DataFram
     """
     grams = shingles_sql("__toks", k)
     return df.selectExpr(
-        f"{_quote(id_col, 'id_col')} AS id",
-        f"split({_quote(text_col, 'text_col')}, ' ') AS __toks",
+        f"{quote(id_col, 'id_col')} AS id",
+        f"split({quote(text_col, 'text_col')}, ' ') AS __toks",
     ).selectExpr(
         "id", f"explode(array_distinct(transform({grams}, g -> xxhash64(g)))) AS shingle"
     )
@@ -155,9 +121,9 @@ def ngram_jaccard_pairs(
     verification (``_verified``); ``max_shingle_df``, when given, is an
     int ≥ 1.
     """
-    thr = _require_fraction("threshold", threshold)
+    thr = require_fraction("threshold", threshold)
     if max_shingle_df is not None:
-        _require_int("max_shingle_df", max_shingle_df)
+        require_int("max_shingle_df", max_shingle_df)
     sh = _shingle_sets(df, text_col, id_col, k)
     if max_shingle_df is None:
         # direct path: shared-shingle self-join doubles as the
@@ -210,7 +176,7 @@ def _verified(inter: DataFrame, sizes: DataFrame, thr: str) -> DataFrame:
     """The exact-Jaccard tail every shingle pair operator ends with:
     candidate intersections ``(id_a, id_b, n_inter)`` joined to both
     documents' shingle-set sizes ``(id, n_sh)``, scored, and kept at
-    ``jaccard >= thr`` (a :func:`_require_fraction` literal).
+    ``jaccard >= thr`` (a :func:`require_fraction` literal).
 
     No broadcast HINT on the per-document size table: it is
     corpus-sized (one row per doc — ~16 GB at 10⁹ docs, past the 8 GB
@@ -291,8 +257,8 @@ def _signatures(sh: DataFrame, *, num_hashes: int, seed: int) -> DataFrame:
     as ``F.lit`` typed it (INT when it fits 32 bits, else BIGINT, and INT
     ``i``) — the literal type is part of the hash, so the hashes, and
     every signature store written with them, are unchanged."""
-    _require_int("num_hashes", num_hashes)
-    _require_int("seed", seed, -(1 << 63), (1 << 63) - 1)
+    require_int("num_hashes", num_hashes)
+    require_seed("seed", seed)
     mins = ", ".join(
         f"min(xxhash64(shingle, {seed}, {i}))" for i in range(num_hashes)
     )
@@ -314,8 +280,8 @@ def _band_signatures(sig: DataFrame, *, bands: int, rows: int) -> DataFrame:
 
 def _lsh_rows(num_hashes: int, bands: int) -> int:
     """Rows per band; refuses parameters the banding cannot honour."""
-    _require_int("num_hashes", num_hashes)
-    _require_int("bands", bands)
+    require_int("num_hashes", num_hashes)
+    require_int("bands", bands)
     if num_hashes % bands:
         raise ValueError(
             f"num_hashes ({num_hashes}) must be divisible by bands "
@@ -352,7 +318,7 @@ def minhash_lsh_pairs(
     trips per call where the ``F.*`` form took 3,518 (budgeted by
     ``tests/test_dedup_knn.py::test_dedup_plan_build_round_trip_budget``)."""
     rows = _lsh_rows(num_hashes, bands)
-    thr = _require_fraction("threshold", threshold)
+    thr = require_fraction("threshold", threshold)
     sh = _shingle_sets(df, text_col, id_col, k)
     banded = _band_signatures(
         _signatures(sh, num_hashes=num_hashes, seed=seed), bands=bands, rows=rows
@@ -398,7 +364,7 @@ def leakage_safe_split(
     partition-independent, same discipline as the samplers.  Adds a
     ``split`` column ('train' | 'test'); ``test_fraction`` must be a
     finite number in [0, 1]."""
-    _require_fraction("test_fraction", test_fraction)
+    require_fraction("test_fraction", test_fraction)
     # no broadcast hint: the cluster table scales with the corpus dup
     # rate (can be 10-20% of a web corpus) — let AQE pick the strategy
     clusters = dedup_clusters(pairs).withColumnRenamed("id", id_col)
@@ -455,7 +421,7 @@ def incremental_minhash_dedup(
     # treated as first-batch and dedup history would restart from empty
     store_path = _require_local(store_path, "incremental_minhash_dedup")
     rows = _lsh_rows(num_hashes, bands)
-    _require_fraction("threshold", threshold)
+    require_fraction("threshold", threshold)
     new_sig = minhash_signatures(
         new_docs, text_col=text_col, id_col=id_col, k=k,
         num_hashes=num_hashes, seed=seed,
@@ -496,7 +462,7 @@ def _incremental_pairs(
     its shape: the ARRIVING batch's bands broadcast against (store ∪
     new) and the verify joins are hash equi-joins; the checkpoint the
     caller adds would otherwise truncate the auditable lineage."""
-    thr = _require_fraction("threshold", threshold)
+    thr = require_fraction("threshold", threshold)
     banded_new = _band_signatures(new_sig, bands=bands, rows=rows)
     banded_all = _band_signatures(all_sig, bands=bands, rows=rows)
     cand = (
@@ -665,8 +631,8 @@ def dedup_clusters(
     py4j round trips each.  ``_stats``, when a dict, receives
     ``{"rounds": n}`` — measurement hook, not API.
     """
-    _require_int("max_iterations", max_iterations)
-    src, dst = _quote(left_col, "left_col"), _quote(right_col, "right_col")
+    require_int("max_iterations", max_iterations)
+    src, dst = quote(left_col, "left_col"), quote(right_col, "right_col")
     edges = pairs.selectExpr(f"{src} AS src", f"{dst} AS dst").where("src != dst")
     # undirected: keep both directions so every node sees all neighbors.
     # Materialized ONCE (eager localCheckpoint): the edge list is joined

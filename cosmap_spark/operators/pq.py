@@ -44,7 +44,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from cosmap_spark.operators.dedup import _require_int
+from cosmap_spark.functions.sqlargs import require_int
 from cosmap_spark.operators.topk import topk_indices, topk_pandas
 
 Codebooks = list[list[list[float]]]  # (m, ksub, dsub)
@@ -609,7 +609,11 @@ def pq_adc_topk(
     error to shuffle close neighbors, and the shortlist+refine split is
     the standard fix — measured here recall@5 0.14 → 0.62 at m=8,
     ksub=16, R=50 on the driver's embeddings (1.0 at m=16, ksub=64).
-    Ranking ties break on nid for cross-engine stability."""
+    Ranking ties break on nid for cross-engine stability.  ``k`` and
+    ``rerank`` must be ints >= 1."""
+    require_int("k", k)
+    if rerank is not None:
+        require_int("rerank", rerank)
     books = _as_array(codebooks)
     qrows = queries.select(id_col, vec_col).collect()
     qids, luts = _adc_luts(qrows, books)
@@ -712,9 +716,9 @@ def knn_ivfpq(
     from cosmap_spark.operators.knn import _scored_centroids, ivf_build
 
     for name, value in (("k", k), ("nlist", nlist), ("nprobe", nprobe)):
-        _require_int(name, value)
+        require_int(name, value)
     if rerank is not None:
-        _require_int("rerank", rerank)
+        require_int("rerank", rerank)
 
     if opq is not None:
         # OPQ pre-transform (opq_train's rotation): rotate BOTH sides

@@ -30,8 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from cosmap_spark.functions.sqlargs import require_int
 from cosmap_spark.functions.text import tokens
-from cosmap_spark.operators.dedup import _require_int
 
 
 def bm25_weight(
@@ -1191,7 +1191,7 @@ def maxsim_topk(
     import numpy as np
     import pandas as pd
 
-    _require_int("k", k)
+    require_int("k", k)
     # batch_k is a WIDEN-ONLY knob (more local candidates per batch =
     # more tie headroom); below k it would prune global winners and
     # make results layout-dependent, so it clamps
@@ -1423,8 +1423,7 @@ def maxsim_rerank_pruned(
     default (they were nominated by the same index)."""
     import math
 
-    if prune_k < 1:
-        raise ValueError(f"prune_k must be >= 1; got {prune_k}")
+    require_int("prune_k", prune_k)
     if not centroids:
         raise ValueError("maxsim_rerank_pruned: empty centroid list")
     spark = shortlist.sparkSession
@@ -1559,8 +1558,7 @@ def maxsim_token_quantizer(
     ≤ min(tokens, nlist) ints, tiny beside the token matrices."""
     from cosmap_spark.operators.knn import ivf_build
 
-    if nlist < 1:
-        raise ValueError(f"nlist must be >= 1; got {nlist}")
+    require_int("nlist", nlist)
     tok = docs.where(F.col(vecs_col).isNotNull()).select(
         F.col(id_col).alias("__did"),
         F.posexplode(_norm_tokens(F.col(vecs_col), normalize))
@@ -1630,8 +1628,7 @@ def maxsim_rerank_plaid(
     maxsim_rerank_pruned contract: silently-unindexed docs refuse)."""
     import math
 
-    if prune_k < 1:
-        raise ValueError(f"prune_k must be >= 1; got {prune_k}")
+    require_int("prune_k", prune_k)
     if not centroids:
         raise ValueError("maxsim_rerank_plaid: empty centroid list")
     spark = shortlist.sparkSession

@@ -17,8 +17,12 @@ perfectly parallel (no driver-side RNG state).
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from cosmap_spark.functions.sqlargs import double_sql, require_number, require_seed
 
 _HASH_BUCKETS = 2**40  # uniform grid fine enough for double precision
 
@@ -27,6 +31,55 @@ def _hash_uniform(id_col: Column, seed: int, stream: int) -> Column:
     """Deterministic U[0,1) from (id, seed, stream) — partition-independent."""
     h = F.xxhash64(id_col, F.lit(seed), F.lit(stream))
     return F.pmod(h, F.lit(_HASH_BUCKETS)).cast("double") / F.lit(float(_HASH_BUCKETS))
+
+
+def _hash_uniform_sql(id_sql: str, seed: int, stream: int) -> str:
+    """:func:`_hash_uniform` as SQL text, bit for bit: the seed is
+    written as a plain int literal, so it is INT or BIGINT by range as
+    ``F.lit`` types it (the hash depends on the type)."""
+    return (
+        f"CAST(pmod(xxhash64({id_sql}, {seed}, {stream}), {_HASH_BUCKETS}) AS DOUBLE)"
+        f" / {float(_HASH_BUCKETS)!r}D"
+    )
+
+
+def _centers_sql(
+    seed: int,
+    ra_bounds: tuple[float, float],
+    dec_bounds: tuple[float, float],
+    margins: tuple[float, float],
+    shrink_frame: bool,
+    what: str,
+) -> tuple[str, str]:
+    """SQL text of the (ra, dec) of area-uniform centers over the patch:
+    ``ra = lo + u1·(hi−lo)``, ``dec = degrees(asin(slo + u2·(shi−slo)))``
+    with hash uniforms of ``id``.  With ``shrink_frame`` each side of
+    the patch moves in by its margin (``margins`` = (ra, dec)), except
+    that the full RA circle keeps its whole range; ``what`` names the
+    sample shape when it no longer fits.  Bounds must be finite, the
+    seed an int."""
+    require_seed("seed", seed)
+    ra_lo, ra_hi = (require_number("ra_bounds", b) for b in ra_bounds)
+    dec_lo, dec_hi = (require_number("dec_bounds", b) for b in dec_bounds)
+    if shrink_frame:
+        if (ra_lo, ra_hi) != (0.0, 360.0):  # full circle: no RA margin needed
+            ra_lo, ra_hi = ra_lo + margins[0], ra_hi - margins[0]
+        dec_lo, dec_hi = dec_lo + margins[1], dec_hi - margins[1]
+        if ra_lo >= ra_hi or dec_lo >= dec_hi:
+            # inverted bounds would still "work" (lo + u·(hi−lo) walks
+            # backwards INSIDE the patch) — but the documented whole-
+            # shapes-inside guarantee is silently broken, so refuse
+            raise ValueError(
+                f"{what} does not fit the patch "
+                f"ra={ra_bounds} dec={dec_bounds} after frame shrinking"
+            )
+    sin_lo, sin_hi = math.sin(math.radians(dec_lo)), math.sin(math.radians(dec_hi))
+    u1, u2 = (_hash_uniform_sql("`id`", seed, stream) for stream in (1, 2))
+    lit = lambda x: double_sql("patch bound", x)  # noqa: E731
+    return (
+        f"{lit(ra_lo)} + ({u1}) * {lit(ra_hi - ra_lo)}",
+        f"degrees(asin({lit(sin_lo)} + ({u2}) * {lit(sin_hi - sin_lo)}))",
+    )
 
 
 def _key_hash(key_cols: list[str], *extra: Column) -> Column:
@@ -74,33 +127,14 @@ def uniform_sphere_samples(
     form.  ``shrink_frame`` reproduces the reference's frame margin so
     every cone lies fully inside the patch (sampler.py:48-85).
     """
-    ra_lo, ra_hi = ra_bounds
-    dec_lo, dec_hi = dec_bounds
-    if shrink_frame:
-        ra_lo, ra_hi = ra_lo + radius_deg, ra_hi - radius_deg
-        dec_lo, dec_hi = dec_lo + radius_deg, dec_hi - radius_deg
-        if ra_bounds == (0.0, 360.0):  # full circle: no RA margin needed
-            ra_lo, ra_hi = 0.0, 360.0
-        if ra_lo >= ra_hi or dec_lo >= dec_hi:
-            # inverted bounds would still "work" (lo + u·(hi−lo) walks
-            # backwards INSIDE the patch) — but the documented whole-
-            # cones-inside guarantee is silently broken, so refuse like
-            # the box sampler does
-            raise ValueError(
-                f"cone radius {radius_deg}° does not fit the patch "
-                f"ra={ra_bounds} dec={dec_bounds} after frame shrinking"
-            )
-    import math
-
-    sin_lo, sin_hi = math.sin(math.radians(dec_lo)), math.sin(math.radians(dec_hi))
+    radius = double_sql("radius_deg", radius_deg)
+    ra, dec = _centers_sql(
+        seed, ra_bounds, dec_bounds, (float(radius_deg),) * 2, shrink_frame,
+        f"cone radius {radius_deg}°",
+    )
     base = spark.range(0, n, 1, num_partitions) if num_partitions else spark.range(n)
-    u1 = _hash_uniform(F.col("id"), seed, 1)
-    u2 = _hash_uniform(F.col("id"), seed, 2)
-    return base.select(
-        F.col("id").alias("sample_id"),
-        (F.lit(ra_lo) + u1 * F.lit(ra_hi - ra_lo)).alias("ra"),
-        F.degrees(F.asin(F.lit(sin_lo) + u2 * F.lit(sin_hi - sin_lo))).alias("dec"),
-        F.lit(float(radius_deg)).alias("radius_deg"),
+    return base.selectExpr(
+        "`id` AS `sample_id`", f"{ra} AS `ra`", f"{dec} AS `dec`", f"{radius} AS `radius_deg`"
     )
 
 
@@ -129,39 +163,23 @@ def uniform_box_samples(
     the patch (the analog of the reference's cone-radius margin,
     src/cosmap/analysis/sampler.py:48-85).
     """
-    ra_lo, ra_hi = ra_bounds
-    dec_lo, dec_hi = dec_bounds
-    if shrink_frame:
-        ra_lo, ra_hi = ra_lo + width_deg / 2, ra_hi - width_deg / 2
-        dec_lo, dec_hi = dec_lo + height_deg / 2, dec_hi - height_deg / 2
-        if ra_bounds == (0.0, 360.0):  # full circle: no RA margin needed
-            # NOTE: boxes near 0/360 then emit ra_min < 0 or
-            # ra_max > 360 — the unwrapped representation; consumers
-            # filtering `ra BETWEEN ra_min AND ra_max` must compare on
-            # (ra mod 360) shifted into the box frame, exactly as the
-            # cone search handles RA wrap.
-            ra_lo, ra_hi = 0.0, 360.0
-        if ra_lo >= ra_hi or dec_lo >= dec_hi:
-            raise ValueError(
-                f"box ({width_deg}°×{height_deg}°) does not fit the patch "
-                f"ra={ra_bounds} dec={dec_bounds} after frame shrinking"
-            )
-    import math
-
-    sin_lo, sin_hi = math.sin(math.radians(dec_lo)), math.sin(math.radians(dec_hi))
+    half_w = require_number("width_deg", width_deg) / 2
+    half_h = require_number("height_deg", height_deg) / 2
+    ra, dec = _centers_sql(
+        seed, ra_bounds, dec_bounds, (half_w, half_h), shrink_frame,
+        f"box ({width_deg}°×{height_deg}°)",
+    )
+    w, h = double_sql("width_deg", half_w), double_sql("height_deg", half_h)
+    # on the full RA circle, boxes near 0/360 emit ra_min < 0 or
+    # ra_max > 360 — the unwrapped representation; consumers filtering
+    # `ra BETWEEN ra_min AND ra_max` must compare on (ra mod 360)
+    # shifted into the box frame, exactly as the cone search handles
+    # RA wrap.
     base = spark.range(0, n, 1, num_partitions) if num_partitions else spark.range(n)
-    u1 = _hash_uniform(F.col("id"), seed, 1)
-    u2 = _hash_uniform(F.col("id"), seed, 2)
-    ra = F.lit(ra_lo) + u1 * F.lit(ra_hi - ra_lo)
-    dec = F.degrees(F.asin(F.lit(sin_lo) + u2 * F.lit(sin_hi - sin_lo)))
-    return base.select(
-        F.col("id").alias("sample_id"),
-        ra.alias("ra"),
-        dec.alias("dec"),
-        (ra - F.lit(width_deg / 2)).alias("ra_min"),
-        (ra + F.lit(width_deg / 2)).alias("ra_max"),
-        (dec - F.lit(height_deg / 2)).alias("dec_min"),
-        (dec + F.lit(height_deg / 2)).alias("dec_max"),
+    return base.selectExpr(
+        "`id` AS `sample_id`", f"{ra} AS `ra`", f"{dec} AS `dec`",
+        f"{ra} - {w} AS `ra_min`", f"{ra} + {w} AS `ra_max`",
+        f"{dec} - {h} AS `dec_min`", f"{dec} + {h} AS `dec_max`",
     )
 
 

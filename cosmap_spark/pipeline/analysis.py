@@ -18,9 +18,9 @@ from __future__ import annotations
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from cosmap_spark.functions.spherical import zone_range
+from cosmap_spark.functions.sqlargs import quote
 from cosmap_spark.operators.cone_search import ZONE_HEIGHT_KEY, cone_search
 from cosmap_spark.operators.sampler import uniform_sphere_samples
 from cosmap_spark.pipeline.config import AnalysisConfig, load_config
@@ -133,7 +133,8 @@ class Analysis:
         )
         cols = self.config.dataset_parameters.columns
         has_cone_plugin = plugins._HOOKS.get("cone_strategy") is not None
-        zone = next((f for f in catalog.schema.fields if f.name == "zone"), None)
+        fields = catalog.schema.fields
+        zone = next((f for f in fields if f.name == "zone"), None)
         if (
             zone is not None
             and ZONE_HEIGHT_KEY in zone.metadata
@@ -146,7 +147,7 @@ class Analysis:
             lo, hi = zone_range(
                 sp.dec_bounds[0] - r, sp.dec_bounds[1] + r, zone.metadata[ZONE_HEIGHT_KEY]
             )
-            catalog = catalog.where(F.col("zone").between(lo, hi))
+            catalog = catalog.where(f"`zone` >= {lo} AND `zone` <= {hi}")
         if cols and not has_cone_plugin:
             # O3: source projection → parquet column pruning.  Skipped
             # when a cone_strategy PLUGIN is registered: the plugin may
@@ -158,7 +159,9 @@ class Analysis:
             # the post-join pruning into the scan for the plugin's
             # actually-unused columns.
             needed = {"ra", "dec", *cols}
-            catalog = catalog.select(*[c for c in catalog.columns if c in needed])
+            catalog = catalog.selectExpr(
+                *[quote(f.name, "column") for f in fields if f.name in needed]
+            )
         joined = plugins.call(
             "cone_strategy", catalog, samples, default=cone_search
         )

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from cosmap_spark.functions.spherical import zone_of_dec
+from cosmap_spark.functions.spherical import zone_sql
 from cosmap_spark.operators.cone_search import DEFAULT_ZONE_DEG, ZONE_HEIGHT_KEY
 
 #: what :func:`ingest_catalog` writes next to a zone catalog: its zone
@@ -239,9 +239,7 @@ def ingest_catalog(
     """
     if files_per_zone < 1:
         raise ValueError(f"files_per_zone must be >= 1; got {files_per_zone}")
-    zoned = catalog.withColumn(
-        "zone", zone_of_dec(F.col("dec"), zone_height_deg)
-    )
+    zoned = catalog.withColumn("zone", F.expr(zone_sql("`dec`", zone_height_deg)))
     if files_per_zone == 1:
         rep = zoned.repartition(F.col("zone"))
     else:

@@ -22,6 +22,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from cosmap_spark.functions.sqlargs import require_int
 from cosmap_spark.sinks.writers import _require_local
 
 
@@ -787,13 +788,6 @@ def _check_params(op: str, where: str, have: dict, want: dict,
         )
 
 
-def _require_k(k, op: str) -> None:
-    """``k`` (a sample, counter or sketch size) must be an int >= 1 —
-    ``k=0`` keeps an empty state forever, bools included."""
-    if isinstance(k, bool) or not isinstance(k, int) or k < 1:
-        raise ValueError(f"{op}: k must be an int >= 1; got {k!r}")
-
-
 def _write_marker_atomic(marker: str, content: str) -> None:
     """Write a ledger marker via dot-prefixed temp + ``os.rename``: a
     torn plain write would leave a partial fingerprint that differs
@@ -1041,7 +1035,7 @@ def sketch_stream(stream_df: DataFrame, store_path: str, checkpoint: str,
     if kind not in ("hll", "kmv"):
         raise ValueError(f"kind must be 'hll' or 'kmv'; got {kind!r}")
     if kind == "kmv":
-        _require_k(k, "sketch_stream")
+        require_int("sketch_stream: k", k)
     store_path = _require_local(store_path, "sketch_stream")
 
     def batch_state(batch_df: DataFrame) -> DataFrame:
@@ -1776,7 +1770,7 @@ def reservoir_stream(stream_df: DataFrame, store_path: str,
     a mismatched resume refuses."""
     from cosmap_spark.operators.sampler import _es_rank, _key_hash
 
-    _require_k(k, "reservoir_stream")
+    require_int("reservoir_stream: k", k)
     store_path = _require_local(store_path, "reservoir_stream")
 
     def batch_state(batch_df: DataFrame) -> DataFrame:
@@ -2088,7 +2082,7 @@ def heavy_hitters_stream(stream_df: DataFrame, store_path: str,
     from cosmap_spark.operators.sketch import merge_mg_tables, mg_summary
     from cosmap_spark.sinks.writers import publish
 
-    _require_k(k, "heavy_hitters_stream")
+    require_int("heavy_hitters_stream: k", k)
     store_path = _require_local(store_path, "heavy_hitters_stream")
     store = f"{store_path}/counters"
     meta_file = os.path.join(store, "_mg_meta.json")

@@ -494,3 +494,45 @@ def test_ivfpq_opq_distances_invariant_and_recall(spark, emb, vecs):
     # measured 0.86 at these lean (m=8, ksub=16, R=100) parameters on
     # the i.i.d. worst-case embeddings; floor pinned with headroom
     assert hits / (5 * len(by_q)) >= 0.8
+
+
+@pytest.mark.parametrize(
+    "op, name, value",
+    [
+        ("pq_adc_topk", "k", 0),
+        ("pq_adc_topk", "rerank", 0),
+        ("pq_adc_topk", "rerank", True),
+        ("maxsim_rerank_pruned", "prune_k", 2.5),
+        ("maxsim_rerank_pruned", "prune_k", True),
+        ("maxsim_rerank_plaid", "prune_k", 2.5),
+        ("maxsim_rerank_plaid", "prune_k", True),
+        ("maxsim_token_quantizer", "nlist", 2.5),
+        ("maxsim_token_quantizer", "nlist", True),
+    ],
+)
+def test_flat_and_pruned_sizes_refused_by_name(spark, op, name, value):
+    """``pq_adc_topk`` returned 0 rows for ``k=0`` and ran ``rerank=0``
+    as no rerank; ``prune_k=2.5`` ran as a ``<= 2.5`` filter and
+    ``prune_k=True`` failed only at execution: each is refused by name
+    when the plan is built."""
+    from cosmap_spark.operators import retrieval
+
+    docs = spark.createDataFrame([], "doc_id long, tvecs array<array<double>>")
+    if op == "pq_adc_topk":
+        vecs = spark.createDataFrame(
+            [(i, [float(i % 5), float(i % 3), 1.0, float(i)]) for i in range(20)],
+            "vec_id long, embedding array<double>",
+        )
+        books = pq_train(vecs, m=2, ksub=2, iters=0, dim=4)
+        fn, args = pq_adc_topk, (pq_encode(vecs, books), vecs.limit(2), books)
+        kw = {"vectors": vecs, name: value}
+    elif op == "maxsim_token_quantizer":
+        fn, args, kw = retrieval.maxsim_token_quantizer, (docs,), {name: value}
+    else:
+        short = spark.createDataFrame([], "qid long, doc_id long")
+        qs = spark.createDataFrame([], "qid long, tvecs array<array<double>>")
+        index = spark.createDataFrame([], "nid long, cid long")
+        fn = getattr(retrieval, op)
+        args, kw = (short, docs, qs, index, [(0, [1.0, 0.0])]), {name: value}
+    with pytest.raises(ValueError, match=rf"^{name} must be an int >= 1"):
+        fn(*args, **kw)

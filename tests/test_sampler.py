@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from cosmap_spark.operators.sampler import uniform_sphere_samples
@@ -436,6 +437,34 @@ def test_sphere_sampler_rejects_oversized_radius(spark):
             spark, 5, radius_deg=10.0, dec_bounds=(-5.0, 5.0),
             ra_bounds=(0.0, 40.0),
         )
+
+
+@pytest.mark.parametrize(
+    "kwargs, name",
+    [
+        ({"radius_deg": float("nan")}, "radius_deg"),
+        ({"radius_deg": float("inf")}, "radius_deg"),
+        ({"ra_bounds": (0.0, float("nan"))}, "ra_bounds"),
+        ({"dec_bounds": (float("-inf"), 10.0)}, "dec_bounds"),
+        ({"seed": 1.5}, "seed"),
+        ({"seed": True}, "seed"),
+        ({"seed": 1 << 63}, "seed"),
+        ({"box": True, "width_deg": float("nan")}, "width_deg"),
+        ({"box": True, "height_deg": float("inf")}, "height_deg"),
+        ({"box": True, "seed": False}, "seed"),
+        ({"box": True, "ra_bounds": (float("nan"), 5.0)}, "ra_bounds"),
+    ],
+)
+def test_sky_samplers_refuse_bad_arguments_by_name(spark, kwargs, name):
+    """A NaN radius used to draw rows with dec = NaN and no error, and
+    a float or bool seed hashed as a different literal type: each is
+    refused by name when the plan is built."""
+    from cosmap_spark.operators.sampler import uniform_box_samples
+
+    kwargs = dict(kwargs)
+    sampler = uniform_box_samples if kwargs.pop("box", False) else uniform_sphere_samples
+    with pytest.raises(ValueError, match=rf"^{name} must be"):
+        sampler(spark, 3, **kwargs)
 
 
 def test_negative_pairs_never_duplicates(spark):

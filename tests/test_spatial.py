@@ -13,7 +13,8 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from cosmap_spark.functions.spherical import angular_sep_deg
+from cosmap_spark.functions.spherical import sep_deg_sql
+from cosmap_spark.functions.sqlargs import double_sql
 from cosmap_spark.operators.cone_search import cone_search, cone_search_bruteforce
 from cosmap_spark.tables import catalog_df, samples_df
 
@@ -75,7 +76,7 @@ def test_haversine_known_values(spark):
     )
     seps = [
         r["s"] for r in df.select(
-            angular_sep_deg(F.col("ra1"), F.col("dec1"), F.col("ra2"), F.col("dec2")).alias("s")
+            F.expr(sep_deg_sql("ra1", "dec1", "ra2", "dec2")).alias("s")
         ).collect()
     ]
     assert seps[0] == pytest.approx(90.0, abs=1e-9)
@@ -108,7 +109,7 @@ def test_haversine_matches_vincenty_reference(spark):
     df = spark.createDataFrame(rows, "ra1 double, dec1 double, ra2 double, dec2 double")
     got = [
         r["s"] for r in df.select(
-            angular_sep_deg(F.col("ra1"), F.col("dec1"), F.col("ra2"), F.col("dec2")).alias("s")
+            F.expr(sep_deg_sql("ra1", "dec1", "ra2", "dec2")).alias("s")
         ).collect()
     ]
     assert np.allclose(got, want, atol=1e-8)
@@ -171,9 +172,8 @@ def test_sample_agg_matches_loop_semantics(spark):
     for s in smp.collect():
         n = (
             cat.where(
-                angular_sep_deg(
-                    F.lit(s["ra"]), F.lit(s["dec"]), F.col("ra"), F.col("dec")
-                ) <= s["radius_deg"]
+                F.expr(sep_deg_sql(double_sql("ra", s["ra"]), double_sql("dec", s["dec"]), "ra", "dec"))
+                <= s["radius_deg"]
             ).count()
         )
         assert got.get(s["sample_id"], 0) == n
@@ -436,9 +436,7 @@ def test_crossmatch_matches_bruteforce(spark):
     }
     # brute force: exact nearest within radius per left row
     a, b = cat.alias("a"), twin.alias("b")
-    sep = angular_sep_deg(
-        F.col("a.ra"), F.col("a.dec"), F.col("b.ra"), F.col("b.dec")
-    ) * 3600.0
+    sep = F.expr(sep_deg_sql("a.ra", "a.dec", "b.ra", "b.dec")) * 3600.0
     from pyspark.sql import Window
 
     pairs = (
@@ -528,3 +526,126 @@ def test_non_divisor_sector_width_equals_bruteforce(spark):
         got = _pairs(cone_search(cat, smp, sector_width_deg=w))
         want = _pairs(cone_search_bruteforce(cat, smp))
         assert got == want, f"width={w}"
+
+
+# --- the sky plan built as SQL text ------------------------------------------
+
+
+@pytest.mark.parametrize("width", [0, -10.0, float("nan"), float("inf"), True])
+def test_sector_width_must_be_finite_and_positive(spark, width):
+    """A zero width divided by zero, NaN failed to convert, and a
+    negative or infinite one silently became one 360° sector (right
+    rows, no pruning): all are refused by name."""
+    cat = _sky(spark, 100)
+    samples = spark.createDataFrame(
+        [(1, 10.0, 5.0, 2.0)], "sample_id long, ra double, dec double, radius_deg double"
+    )
+    with pytest.raises(ValueError, match="sector_width_deg"):
+        cone_search(cat, samples, sector_width_deg=width)
+
+
+def test_cone_search_refuses_repeated_output_names(spark):
+    """The projection is by name, so a column on both sides (or one
+    named like ``sep_col``) is refused by name, not left ambiguous."""
+    samples = spark.createDataFrame(
+        [(1, 10.0, 5.0, 2.0)], "object_id long, ra double, dec double, radius_deg double"
+    )
+    with pytest.raises(ValueError, match="object_id"):
+        cone_search(_sky(spark, 100), samples)
+    with pytest.raises(ValueError, match="ra"):
+        cone_search(_sky(spark, 100), samples.withColumnRenamed("object_id", "i"), sep_col="RA")
+
+
+def test_sky_plan_bits_are_pinned(spark):
+    """Exact bits of the sampler and of the cone join's separation,
+    taken from the plan built one ``F.*`` call at a time: a literal
+    typed differently (a seed as INT vs BIGINT, a double as DECIMAL)
+    or a reordered operation changes a bit here."""
+    from cosmap_spark.operators.sampler import uniform_sphere_samples
+
+    want = {
+        42: [("0x1.3c2e6f6fcc700p+7", "-0x1.a3ff0d8060049p+1"),
+             ("0x1.6787f8dee5e80p+8", "0x1.23adaf9df08ddp+4"),
+             ("0x1.47a289e3dd600p+7", "0x1.d20a0ba4922b4p+3")],
+        2**31 - 1: [("0x1.5d6f13a84ea00p+7", "0x1.b456f93fefef6p+3"),
+                    ("0x1.c705af611a700p+7", "0x1.8f1821b33b04ep+3"),
+                    ("0x1.5f75e5fc8eb80p+8", "-0x1.091ff27a50e83p+4")],
+        2**31: [("0x1.2e3e1ab17a100p+8", "0x1.dd087591bbdd7p+3"),
+                ("0x1.4bd2291234f80p+8", "-0x1.d09a2b386ef60p+3"),
+                ("0x1.1843f9d244380p+8", "-0x1.203695e990a0ep-1")],
+    }
+    for seed, rows in want.items():
+        got = uniform_sphere_samples(
+            spark, 3, seed=seed, radius_deg=0.5, dec_bounds=(-20.0, 20.0)
+        ).orderBy("sample_id").collect()
+        assert [(r["ra"].hex(), r["dec"].hex()) for r in got] == rows, seed
+    cat = spark.createDataFrame(
+        [(1, 0.1, 89.9), (2, 359.9, 0.3), (3, 0.4, -0.2), (4, 33.3, 45.1), (5, 180.0, -89.95)],
+        "object_id long, ra double, dec double",
+    )
+    smp = spark.createDataFrame(
+        [(10, 0.0, 90.0, 1.0), (11, 0.05, 0.0, 1.0), (12, 33.0, 45.0, 0.5), (13, 180.0, -89.0, 2.0)],
+        "sample_id long, ra double, dec double, radius_deg double",
+    )
+    got = sorted(
+        (r["sample_id"], r["object_id"], r["sep_deg"].hex())
+        for r in cone_search(cat, smp).collect()
+    )
+    assert got == [
+        (10, 1, "0x1.9999999999800p-4"), (11, 2, "0x1.5775b0b316ba0p-2"),
+        (11, 3, "0x1.9cc9768602682p-2"), (12, 4, "0x1.dff48115412a4p-3"),
+        (13, 5, "0x1.e666666666681p-1"),
+    ]
+
+
+def test_sky_plan_build_round_trip_budget(spark, zone_catalogs):
+    """Building the sky plan costs tens of py4j round trips per
+    operator, not hundreds (929 for cone_search and 254 for
+    uniform_sphere_samples when every expression was an ``F.*`` call),
+    and the plan keeps its shape: a broadcast hash join on the (zone,
+    sector) cell over two Generate nodes."""
+    from cosmap_spark.operators.sampler import uniform_sphere_samples
+    from cosmap_spark.pipeline.analysis import Analysis
+    from cosmap_spark.sources.readers import read_catalog_source
+    from tests.conftest import jvm_round_trips
+
+    class SqlDag:
+        @staticmethod
+        def with_sep(catalog):
+            return catalog.selectExpr("*", "`sep_deg` * 3600.0D AS `sep_arcsec`")
+
+        @staticmethod
+        def per_sample(with_sep):
+            return with_sep.groupBy("sample_id").agg(
+                F.expr("count(*) AS n_objects"), F.expr("sum(`sep_arcsec`) AS sum_sep_arcsec")
+            )
+
+    catalog = read_catalog_source(spark, zone_catalogs[1][3.0])
+    samples = uniform_sphere_samples(spark, 100, seed=1)
+    analysis = Analysis(
+        {
+            "sampling_parameters": {
+                "n_samples": 10_000, "sample_dimensions": 0.5,
+                "dec_bounds": [-20.0, 20.0], "seed": 1,
+            },
+            "dataset_parameters": {"columns": ["object_id"]},
+        },
+        {
+            "with_sep": {"needed-data": ["catalog"]},
+            "per_sample": {"dependencies": {"with_sep": "with_sep"}, "is-output": True},
+        },
+        SqlDag,
+    )
+    builds = {
+        "cone_search": (lambda: cone_search(catalog, samples), 100),
+        "uniform_sphere_samples": (lambda: uniform_sphere_samples(spark, 10_000, seed=1), 30),
+        "Analysis.build": (lambda: analysis.build(spark, catalog), 150),
+    }
+    for name, (build, budget) in builds.items():
+        build()  # first call pays one-off JVM lookups
+        with jvm_round_trips() as n:
+            build()
+        assert n[0] <= budget, f"{name} build took {n[0]} round trips"
+    plan = cone_search(catalog, samples)._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"BroadcastHashJoin \[__zone#\d+L, __sector#\d+L\]", plan), plan
+    assert plan.count("Generate explode") == 2, plan
