@@ -18,20 +18,24 @@ make it an EQUI-join with 2-D sky bucketing:
 3. join on (zone, sector) equality, AND the exact RA/dec bounding box,
    AND the exact haversine predicate as residual.
 
-By default (``broadcast_samples=True``) the exploded samples side
-carries a broadcast hint, so Catalyst plans a BroadcastHashJoin that
-builds the samples side whatever its size (at 1 GiB of driver heap a
-few million cones no longer fit); ``broadcast_samples=False`` leaves
-the choice to the planner's size estimates — a broadcast of whichever
-side is under the threshold, else a shuffled join on the (zone,
-sector) cell.  Candidate pairs per catalog row are the
-samples in ITS cell only — at 10k samples / 2160 cells that's ~25× less
-residual work than 1-D zoning.  The 100 TB catalog side is never
-nested-loop-scanned and, in the broadcast case, never shuffled.  The
+Candidate pairs per catalog row are the samples in ITS cell only — at
+10k samples / 2160 cells that's ~25× less residual work than 1-D
+zoning.  The 100 TB catalog side is never nested-loop-scanned.  The
 join computes each row's zone from dec, so it prunes no parquet
 partition or row group by itself: scan pruning is the literal ``zone``
 range filter that ``Analysis.build`` puts on a zone-partitioned catalog
 (sources.ingest_catalog, read through sources.read_catalog_source).
+
+The join carries no hint, so Catalyst picks the build side from its
+size estimates, or a shuffled join on the (zone, sector) cell when
+neither side is under ``spark.sql.autoBroadcastJoinThreshold``.  At 10k
+cones it builds the samples side; at 3M it broadcasts the zone-pruned
+catalog (estimated 7.7 MB) and completes at a 1 GiB driver heap.
+Limit: the estimate for ``Generate`` ignores the explode (samples side
+0.2, 20 and 60 MB at 10k, 1M and 3M cones; a few times that exploded),
+so with a catalog over the threshold and samples estimated just under
+it the samples are broadcast and the run can fail at the heap cap —
+loudly: ``publish`` keeps the previous output.
 """
 
 from __future__ import annotations
@@ -62,7 +66,6 @@ def cone_search(
     *,
     zone_height_deg: float = DEFAULT_ZONE_DEG,
     sector_width_deg: float = DEFAULT_SECTOR_DEG,
-    broadcast_samples: bool = True,
     sep_col: str | None = "sep_deg",
 ) -> DataFrame:
     """Join each sample region to the catalog rows inside its cone.
@@ -132,8 +135,6 @@ def cone_search(
             f"x -> pmod(x, {n_sectors})))) AS `__s_sector`",
         )
     )
-    if broadcast_samples:
-        s = F.broadcast(s)
 
     cat = catalog.selectExpr(
         "*",
@@ -181,7 +182,6 @@ def crossmatch(
     right_id: str = "object_id",
     best_match: bool = True,
     exclude_self: bool = False,
-    broadcast_left: bool = False,
 ) -> DataFrame:
     """Catalog×catalog positional crossmatch — the multi-survey
     operation the reference's per-sample cone loop cannot express:
@@ -189,20 +189,19 @@ def crossmatch(
     row within ``radius_arcsec`` of a left row (``best_match=True``
     keeps only each left row's nearest, ties broken by r_id).
 
-    Same Zones machinery as :func:`cone_search` but SYMMETRIC: both
-    sides are corpus-sized, so nothing broadcasts by default
-    (``broadcast_left=True`` opts in when the left survey is small)
-    and the join is a shuffled hash/sort-merge on (zone, sector) cells
-    SCALED TO THE MATCH RADIUS — at arcsec radii the 3° default zones
-    would put ~10⁶ rows of a 10⁹-row survey in one cell and the
-    candidate pairing inside it would be quadratic; radius-scaled
-    cells keep candidates per row at (survey density × cell area).
-    Exact haversine residual; RA wraparound and pole cells inherit
-    cone_search's handling.
+    Same Zones machinery and unhinted join as :func:`cone_search` (a
+    shuffled cell join when both surveys are large, a broadcast of a
+    small one), with (zone, sector) cells SCALED TO THE MATCH RADIUS —
+    at arcsec radii the 3° default zones would put ~10⁶ rows of a
+    10⁹-row survey in one cell and the candidate pairing inside it
+    would be quadratic; radius-scaled cells keep candidates per row at
+    (survey density × cell area).  Exact haversine residual; RA
+    wraparound and pole cells inherit cone_search's handling.
 
     Self-match (``left is right``): pass ``exclude_self=True`` to drop
-    the trivial l_id == r_id pairs (ids must then share one space)."""
-    radius_deg = radius_arcsec / 3600.0
+    the trivial l_id == r_id pairs (ids must then share one space).
+    ``radius_arcsec`` must be a finite number > 0."""
+    radius_deg = require_number("radius_arcsec", radius_arcsec, positive=True) / 3600.0
     # cells ~4 radii wide: each left row explodes to ≤ 2×2 cells while
     # cell population stays density-bounded; floors keep the cell grid
     # sane for huge radii (falls back to the cone_search defaults)
@@ -225,7 +224,6 @@ def crossmatch(
         r, l,
         zone_height_deg=zone_h,
         sector_width_deg=sector_w,
-        broadcast_samples=broadcast_left,
         sep_col="__sep",
     ).select(
         "l_id", "r_id",

@@ -31,8 +31,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cosmap_spark.functions.sqlargs import require_seed
 from cosmap_spark.functions.text import tokens
-from cosmap_spark.operators.sampler import _hash_uniform
+from cosmap_spark.operators.sampler import _hash_uniform_sql
 from cosmap_spark.operators.vocab import _adjacent_pairs
 
 
@@ -157,8 +158,8 @@ def dsir_sample(
         raw, target, text_col=text_col, id_col=id_col,
         buckets=buckets, seed=seed, smoothing=smoothing,
     )
-    u = _hash_uniform(F.col("id"), gumbel_seed, 0)
-    # LOAD-BEARING clamp: _hash_uniform is pmod(h, B)/B and yields
+    u = F.expr(_hash_uniform_sql("`id`", require_seed("gumbel_seed", gumbel_seed), 0))
+    # LOAD-BEARING clamp: the hash uniform is pmod(h, B)/B and yields
     # exactly 0.0 for ~1/B of ids; Spark's ln(0) returns NULL, so an
     # unclamped id would get a NULL gumbel_key, sort deterministically
     # LAST under the desc ordering, and be excluded from every draw

@@ -22,21 +22,16 @@ import math
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cosmap_spark.functions.sqlargs import double_sql, require_number, require_seed
+from cosmap_spark.functions.sqlargs import double_sql, quote, require_number, require_seed
 
 _HASH_BUCKETS = 2**40  # uniform grid fine enough for double precision
 
 
-def _hash_uniform(id_col: Column, seed: int, stream: int) -> Column:
-    """Deterministic U[0,1) from (id, seed, stream) — partition-independent."""
-    h = F.xxhash64(id_col, F.lit(seed), F.lit(stream))
-    return F.pmod(h, F.lit(_HASH_BUCKETS)).cast("double") / F.lit(float(_HASH_BUCKETS))
-
-
 def _hash_uniform_sql(id_sql: str, seed: int, stream: int) -> str:
-    """:func:`_hash_uniform` as SQL text, bit for bit: the seed is
-    written as a plain int literal, so it is INT or BIGINT by range as
-    ``F.lit`` types it (the hash depends on the type)."""
+    """Deterministic U[0,1) from (id, seed, stream) as SQL text —
+    partition-independent.  The seed is written as a plain int literal,
+    so it is INT or BIGINT by range as ``F.lit`` types it (the hash
+    depends on the type)."""
     return (
         f"CAST(pmod(xxhash64({id_sql}, {seed}, {stream}), {_HASH_BUCKETS}) AS DOUBLE)"
         f" / {float(_HASH_BUCKETS)!r}D"
@@ -82,21 +77,22 @@ def _centers_sql(
     )
 
 
-def _key_hash(key_cols: list[str], *extra: Column) -> Column:
-    """``xxhash64`` of a composite row key with per-slot (position,
-    isnull flag, value) anchoring — Spark's hash functions SKIP null
-    argument slots, so a bare ``xxhash64(a, b)`` collides ('x', NULL)
-    with (NULL, 'x') and their sampling fates would be perfectly
-    correlated for every seed (the CLAUDE.md row-hash rule;
+def _key_hash_sql(key_cols: list[str], *extra: int) -> str:
+    """SQL text of ``xxhash64`` of a composite row key with per-slot
+    (position, isnull flag, value) anchoring — Spark's hash functions
+    SKIP null argument slots, so a bare ``xxhash64(a, b)`` collides
+    ('x', NULL) with (NULL, 'x') and their sampling fates would be
+    perfectly correlated for every seed (the CLAUDE.md row-hash rule;
     merge.py::snapshot_cdc's ``hashed()`` is the same token stream).
-    ``extra`` appends never-null literals (seed/stream/epoch)
-    unanchored."""
-    anchored = [
-        x
-        for i, c in enumerate(key_cols)
-        for x in (F.lit(i), F.isnull(F.col(c)).cast("int"), F.col(c))
-    ]
-    return F.xxhash64(*anchored, *extra)
+    ``extra`` appends never-null int literals (seed/stream/epoch)
+    unanchored; every int is written plainly, so it is INT or BIGINT
+    by range exactly as ``F.lit`` typed it."""
+    slots = []
+    for i, c in enumerate(key_cols):
+        q = quote(c, "key column")
+        slots += [str(i), f"CAST(isnull({q}) AS INT)", q]
+    slots += [str(require_seed("seed", x)) for x in extra]
+    return f"xxhash64({', '.join(slots)})"
 
 
 def _key_uniform(key_cols: list[str], seed: int, stream: int) -> Column:
@@ -104,7 +100,7 @@ def _key_uniform(key_cols: list[str], seed: int, stream: int) -> Column:
     of deterministic/stratified/weighted sampling (one place to change
     key normalization; distinct ``stream`` per sampler keeps their
     decisions independent)."""
-    return _hash_uniform(_key_hash(key_cols), seed, stream)
+    return F.expr(_hash_uniform_sql(_key_hash_sql(key_cols), require_seed("seed", seed), stream))
 
 
 def uniform_sphere_samples(
@@ -462,7 +458,7 @@ def epoch_shuffle(
     would UNDO the permutation if pointed at the original id; pass
     ``key_col_out`` to keep the permutation key as a column and hand it
     to them as the order column instead."""
-    h = _key_hash(key_cols, F.lit(seed), F.lit(int(epoch)))
+    h = F.expr(_key_hash_sql(key_cols, seed, int(epoch)))
     key = key_col_out or "__shuffle_key"
     keyed = df.withColumn(key, h)
     n = num_partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
@@ -492,7 +488,7 @@ def kfold_assign(
     any job recomputes membership from the key."""
     if k < 2:
         raise ValueError(f"need k >= 2 folds; got {k}")
-    h = _key_hash(key_cols, F.lit(seed), F.lit(71))
+    h = F.expr(_key_hash_sql(key_cols, seed, 71))
     return df.withColumn(fold_col, F.pmod(h, F.lit(k)).cast("int"))
 
 
@@ -514,7 +510,7 @@ def group_kfold_assign(
     no shuffle, no group table materialized."""
     if k < 2:
         raise ValueError(f"need k >= 2 folds; got {k}")
-    h = _key_hash([group_col], F.lit(seed), F.lit(73))
+    h = F.expr(_key_hash_sql([group_col], seed, 73))
     return df.withColumn(fold_col, F.pmod(h, F.lit(k)).cast("int"))
 
 
@@ -536,7 +532,7 @@ def exact_k_sample(
     carving, fixed-size debugging slices.  Same hash-threshold family:
     partition-layout independent, stable across runs/clusters, and a
     different seed draws an (almost) independent sample."""
-    h = _key_hash(key_cols, F.lit(seed))
+    h = F.expr(_key_hash_sql(key_cols, seed))
     return (
         df.withColumn("__h", h)
         .orderBy("__h", *key_cols)
@@ -557,7 +553,7 @@ def _es_rank(weight_col: str, key_cols: list[str], seed: int) -> Column:
     one.  Invalid weights (NULL/NaN/≤0) rank NULL — the caller drops
     them (the weighted_sample NULL-drop contract).  Stream id 7
     (unique among this module's samplers)."""
-    h = _key_hash(key_cols, F.lit(seed), F.lit(7))
+    h = F.expr(_key_hash_sql(key_cols, seed, 7))
     u = (F.pmod(h, F.lit(_HASH_BUCKETS)).cast("double") + F.lit(1.0)) \
         / F.lit(float(_HASH_BUCKETS) + 1.0)
     w = F.col(weight_col).cast("double")
@@ -662,7 +658,7 @@ def exact_k_per_group(
             "rename the input column"
         )
 
-    h = _key_hash(key_cols, F.lit(seed))
+    h = F.expr(_key_hash_sql(key_cols, seed))
     w = Window.partitionBy(*group_cols).orderBy(h, *key_cols)
     return (
         df.withColumn("__rn", F.row_number().over(w))

@@ -1768,7 +1768,7 @@ def reservoir_stream(stream_df: DataFrame, store_path: str,
     rows, history is never re-scanned.  ``k`` (an int >= 1), the keys,
     strata, weight column and seed are the store's recorded parameters:
     a mismatched resume refuses."""
-    from cosmap_spark.operators.sampler import _es_rank, _key_hash
+    from cosmap_spark.operators.sampler import _es_rank, _key_hash_sql
 
     require_int("reservoir_stream: k", k)
     store_path = _require_local(store_path, "reservoir_stream")
@@ -1777,7 +1777,7 @@ def reservoir_stream(stream_df: DataFrame, store_path: str,
         if weight_col is not None:
             rank = _es_rank(weight_col, list(key_cols), int(seed))
         else:
-            rank = _key_hash(list(key_cols), F.lit(int(seed)))
+            rank = F.expr(_key_hash_sql(list(key_cols), int(seed)))
         hashed = batch_df.withColumn("__h", rank).where(
             F.col("__h").isNotNull()
         )

@@ -168,6 +168,7 @@ SLOW_TESTS = {
     "test_sampler.py::test_negative_pairs_uniform_never_self_excludable",
     "test_sinks.py::test_lex_append_forwards_allow_new_columns",
     "test_sketch.py::test_quantile_rollup_rank_error_bounded",
+    "test_skew.py::test_cone_search_3m_cones_complete_at_1g_heap",
     "test_skew.py::test_sweep_tunes_a_real_operator",
     "test_skew.py::test_threshold_sweep_one_pass",
     "test_spatial.py::test_non_divisor_sector_width_equals_bruteforce",

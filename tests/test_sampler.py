@@ -418,12 +418,12 @@ def test_key_hash_null_slot_disambiguation(spark):
     """('x', NULL) and (NULL, 'x') must hash differently — bare
     xxhash64 skips NULL slots so their sampling fates were perfectly
     correlated for every seed (CLAUDE.md row-hash rule)."""
-    from cosmap_spark.operators.sampler import _key_hash
+    from cosmap_spark.operators.sampler import _key_hash_sql
 
     df = spark.createDataFrame(
         [("x", None), (None, "x")], "a string, b string"
     )
-    h = [r[0] for r in df.select(_key_hash(["a", "b"])).collect()]
+    h = [r[0] for r in df.select(F.expr(_key_hash_sql(["a", "b"]))).collect()]
     assert h[0] != h[1]
 
 
@@ -494,7 +494,7 @@ def test_weighted_k_sample_reference_and_monotone(spark):
     from pyspark.sql import functions as F
 
     from cosmap_spark.operators.sampler import (
-        _HASH_BUCKETS, _key_hash, weighted_k_sample,
+        _HASH_BUCKETS, _key_hash_sql, weighted_k_sample,
     )
 
     df = spark.range(0, 500).select(
@@ -511,7 +511,7 @@ def test_weighted_k_sample_reference_and_monotone(spark):
         r["doc_id"]: ((r["h"] % _HASH_BUCKETS) + 1.0) / (_HASH_BUCKETS + 1.0)
         for r in df.select(
             "doc_id",
-            F.pmod(_key_hash(["doc_id"], F.lit(9), F.lit(7)),
+            F.pmod(F.expr(_key_hash_sql(["doc_id"], 9, 7)),
                    F.lit(_HASH_BUCKETS)).alias("h"),
         ).collect()
     }
@@ -550,3 +550,75 @@ def test_weighted_k_sample_reference_and_monotone(spark):
         seed=9
     ).collect())
     assert got3 == got
+
+
+def test_keyed_sampler_bits_are_pinned(spark):
+    """Exact outputs of every keyed sampler and of DSIR's Gumbel draw,
+    taken when the hashes were built one ``F.*`` call at a time: an
+    anchor slot typed differently (a seed as INT vs BIGINT, the isnull
+    flag as BOOLEAN) or a reordered argument changes a bit here.  The
+    key has a NULL slot every fifth row."""
+    from cosmap_spark.operators.dsir import dsir_sample
+    from cosmap_spark.operators.sampler import (
+        deterministic_sample, epoch_shuffle, exact_k_per_group, exact_k_sample,
+        group_kfold_assign, kfold_assign, stratified_sample, weighted_k_sample,
+        weighted_sample,
+    )
+
+    df = spark.createDataFrame(
+        [(i, None if i % 5 == 0 else ("en", "de", "fr")[i % 3], (i % 7) / 6.0)
+         for i in range(40)],
+        "doc_id long, lang string, w double",
+    )
+    keys = ["doc_id", "lang"]
+
+    def ids(out):
+        return sorted(r["doc_id"] for r in out.collect())
+
+    assert ids(deterministic_sample(df, 0.5, key_cols=keys, seed=7)) == [
+        0, 1, 2, 4, 6, 16, 17, 18, 23, 27, 28, 29, 30, 31, 33, 34, 35, 36]
+    assert ids(stratified_sample(
+        df, {"en": 0.8, "de": 0.3, None: 0.5}, strata_col="lang", key_cols=keys, seed=7
+    )) == [4, 9, 12, 15, 16, 18, 19, 20, 21, 22, 25, 27, 30, 33, 34, 36]
+    assert ids(weighted_sample(df, weight_col="w", key_cols=keys, seed=7)) == [
+        1, 3, 6, 9, 11, 12, 13, 15, 17, 19, 20, 22, 24, 25, 26, 27, 32, 33, 34, 38, 39]
+    assert ids(weighted_k_sample(df, k=10, weight_col="w", key_cols=keys, seed=7)) == [
+        3, 6, 13, 18, 19, 20, 24, 29, 34, 38]
+    assert ids(exact_k_sample(df, k=8, key_cols=keys, seed=7)) == [
+        16, 17, 19, 21, 23, 24, 35, 38]
+    assert ids(exact_k_per_group(df, k=3, group_cols=["lang"], key_cols=keys, seed=7)) == [
+        6, 15, 16, 17, 19, 21, 23, 24, 25, 34, 35, 38]
+    folds = kfold_assign(df, key_cols=keys, k=5, seed=7).orderBy("doc_id").collect()
+    assert [r["fold"] for r in folds] == [
+        0, 3, 0, 1, 4, 3, 1, 2, 3, 4, 3, 4, 3, 3, 2, 4, 2, 2, 2, 1,
+        3, 3, 1, 1, 1, 1, 3, 3, 4, 3, 4, 0, 3, 1, 4, 0, 1, 0, 4, 1]
+    groups = group_kfold_assign(df, group_col="lang", k=5, seed=7).orderBy("doc_id").collect()
+    assert [r["fold"] for r in groups[:6]] == [1, 4, 2, 2, 4, 1]
+    shuffled = epoch_shuffle(
+        df, key_cols=keys, epoch=3, seed=7, num_partitions=4, key_col_out="k"
+    ).collect()
+    assert [r["doc_id"] for r in shuffled] == [
+        0, 3, 32, 36, 29, 9, 17, 7, 1, 18, 35, 15, 6, 22, 10, 16, 24, 14, 5, 31,
+        19, 23, 28, 27, 39, 38, 12, 21, 33, 26, 34, 30, 37, 13, 25, 2, 8, 11, 20, 4]
+    assert [r["k"] for r in sorted(shuffled, key=lambda r: r["doc_id"])[:4]] == [
+        -8917539707202822124, -5602729023965579301,
+        7893969840188614141, -8685416548637260633]
+
+    raw = spark.createDataFrame(
+        [(i, f"w{i % 5} x{i % 3} shared {'sci' if i % 2 else 'web'}") for i in range(30)],
+        "doc_id long, text string",
+    )
+    target = spark.createDataFrame(
+        [(100 + i, f"sci shared x{i % 3}") for i in range(10)], "doc_id long, text string"
+    )
+    got = [
+        (r["id"], r["log_w"].hex(), r["gumbel_key"].hex())
+        for r in dsir_sample(raw, target, k=5, buckets=64).collect()
+    ]
+    assert got == [
+        (19, "-0x1.9df2239e6ab9bp+1", "0x1.816134ce3de61p+1"),
+        (25, "-0x1.be1d323fee2cap+1", "-0x1.8740357a35504p+1"),
+        (21, "-0x1.98835dedf1e08p+2", "-0x1.9c42f1ed17c5fp+1"),
+        (22, "-0x1.881f85d744f5dp+2", "-0x1.abb8c32a8c9b8p+1"),
+        (1, "-0x1.0b86ad2dcb146p+2", "-0x1.ecaf2d7f950b9p+1"),
+    ]

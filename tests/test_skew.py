@@ -1,9 +1,11 @@
 """Skew-mitigation operator tests: salted aggregation and replicated
 broadcast join must be RESULT-identical to their plain counterparts
 (salting changes the shuffle layout, never the answer), plus the capped
-shingle candidate generation and the non-broadcast cone-search path."""
+shingle candidate generation and the planner's choice of cone-join plan."""
 
 from __future__ import annotations
+
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -86,21 +88,118 @@ def test_ngram_cap_keeps_jaccard_exact(spark):
         assert full[pair] == j
 
 
-def test_cone_search_shuffled_path_equals_broadcast(spark):
-    from cosmap_spark.operators.cone_search import cone_search
-    from cosmap_spark.tables import catalog_df, samples_df
+def _r2_sky(spark, n):
+    """``n`` catalog points area-uniform on the sphere (the R2
+    low-discrepancy sequence in (ra, sin dec))."""
+    return spark.range(1, n + 1).selectExpr(
+        "id AS object_id",
+        "(id * 0.7548776662466927D) % 1.0D * 360.0D AS ra",
+        "degrees(asin(2.0D * ((id * 0.5698402909980532D) % 1.0D) - 1.0D)) AS dec",
+    )
 
-    cat = catalog_df(spark, "/root/testdata/sf0.001")
-    smp = samples_df(spark, "/root/testdata/sf0.001")
-    bc = sorted(
-        (r["sample_id"], r["object_id"])
-        for r in cone_search(cat, smp, broadcast_samples=True).collect()
+
+def test_cone_search_join_is_the_planners_choice(spark):
+    """The cone join carries no hint, so the planner builds whichever
+    side is smaller (the exploded samples at benchmark size, the
+    catalog when the cones outnumber it) and falls back to a shuffled
+    join on the (zone, sector) cell when broadcasting is off.  Every
+    regime returns exactly the brute-force pairs and separations."""
+    from cosmap_spark.operators.cone_search import cone_search, cone_search_bruteforce
+    from cosmap_spark.operators.sampler import uniform_sphere_samples
+
+    keys = r"\[__zone#\d+L, __sector#\d+L\], \[__s_zone#\d+L, __s_sector#\d+L\], Inner"
+    few_cones = (_r2_sky(spark, 20_000), uniform_sphere_samples(spark, 40, seed=3, radius_deg=2.0))
+    many_cones = (_r2_sky(spark, 300), uniform_sphere_samples(spark, 5_000, seed=4, radius_deg=2.0))
+    regimes = [
+        ("samples smaller", few_cones, "10485760", rf"BroadcastHashJoin {keys}, BuildRight"),
+        ("catalog smaller", many_cones, "10485760", rf"BroadcastHashJoin {keys}, BuildLeft"),
+        ("no broadcast", many_cones, "-1", rf"(SortMergeJoin|ShuffledHashJoin) {keys}"),
+    ]
+
+    def triples(df):
+        return sorted((r["sample_id"], r["object_id"], r["sep_deg"]) for r in df.collect())
+
+    conf = ("spark.sql.autoBroadcastJoinThreshold", "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    saved = {k: spark.conf.get(k, None) for k in conf}
+    try:
+        for name, (cat, smp), threshold, plan_shape in regimes:
+            want = triples(cone_search_bruteforce(cat, smp))
+            for k in conf:
+                spark.conf.set(k, threshold)
+            joined = cone_search(cat, smp)
+            assert want and triples(joined) == want, name
+            plan = joined._jdf.queryExecution().executedPlan().toString()
+            plan = plan.split("== Initial Plan ==")[0]
+            assert re.search(plan_shape, plan), (name, plan)
+            assert "NestedLoop" not in plan and "Cartesian" not in plan, name
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+_HEAP_CAP_RUN = """
+import sys
+from cosmap_spark.operators.cone_search import cone_search
+from cosmap_spark.operators.sampler import _hash_uniform_sql, uniform_sphere_samples
+from cosmap_spark.session import get_spark
+
+catalog_path, pairs_path = sys.argv[1:]
+spark = get_spark("cone-heap-cap", master="local[4]", extra_conf={
+    "spark.driver.memory": "1g", "spark.ui.enabled": "false",
+    "spark.sql.shuffle.partitions": "4",
+})
+spark.sparkContext.setLogLevel("ERROR")
+spark.range(400_000).selectExpr(
+    "id AS object_id",
+    f"{_hash_uniform_sql('id', 11, 1)} * 360.0D AS ra",
+    f"degrees(asin({_hash_uniform_sql('id', 11, 2)} * 2.0D - 1.0D)) AS dec",
+).write.parquet(catalog_path)
+samples = uniform_sphere_samples(spark, 3_000_000, seed=1, radius_deg=0.5, dec_bounds=(-20.0, 20.0))
+cone_search(spark.read.parquet(catalog_path), samples).select(
+    "sample_id", "object_id"
+).write.parquet(pairs_path)
+"""
+
+
+def test_cone_search_3m_cones_complete_at_1g_heap(spark, tmp_path):
+    """3M cones of 0.5° against a 400k-object catalog, at a 1 GiB
+    driver heap on local[4]: the exploded samples side does not fit a
+    broadcast there, and with no hint the planner builds the catalog
+    side instead, so the run completes.  A seeded subset of 50 samples
+    returns exactly the brute-force pairs."""
+    import os
+    import random
+    import subprocess
+    import sys
+
+    from cosmap_spark.operators.cone_search import cone_search_bruteforce
+    from cosmap_spark.operators.sampler import uniform_sphere_samples
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    catalog_path, pairs_path = str(tmp_path / "catalog"), str(tmp_path / "pairs")
+    proc = subprocess.run(
+        [sys.executable, "-c", _HEAP_CAP_RUN, catalog_path, pairs_path],
+        cwd=root, env={**os.environ, "PYTHONPATH": root},
+        capture_output=True, text=True, timeout=900,
     )
-    sh = sorted(
+    assert proc.returncode == 0, proc.stderr[-3000:]
+
+    subset = random.Random(12).sample(range(3_000_000), 50)
+    samples = uniform_sphere_samples(
+        spark, 3_000_000, seed=1, radius_deg=0.5, dec_bounds=(-20.0, 20.0)
+    ).where(F.col("sample_id").isin(subset))
+    want = sorted(
         (r["sample_id"], r["object_id"])
-        for r in cone_search(cat, smp, broadcast_samples=False).collect()
+        for r in cone_search_bruteforce(spark.read.parquet(catalog_path), samples).collect()
     )
-    assert bc == sh
+    got = sorted(
+        (r["sample_id"], r["object_id"])
+        for r in spark.read.parquet(pairs_path).where(F.col("sample_id").isin(subset)).collect()
+    )
+    assert want and got == want
 
 
 def test_replicated_join_rejects_right_preserving_how(spark):

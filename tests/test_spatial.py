@@ -544,6 +544,21 @@ def test_sector_width_must_be_finite_and_positive(spark, width):
         cone_search(cat, samples, sector_width_deg=width)
 
 
+@pytest.mark.parametrize("radius", [-1.0, float("nan"), float("inf"), True])
+def test_crossmatch_radius_must_be_finite_and_positive(spark, radius):
+    """A negative radius silently returned no rows, NaN failed with an
+    unnamed "cannot convert float NaN to integer", inf failed inside a
+    Spark job (COLLECTION_SIZE_LIMIT_EXCEEDED) and True ran as 1″: all
+    are refused by name."""
+    from cosmap_spark.operators.cone_search import crossmatch
+
+    two = spark.createDataFrame(
+        [(1, 10.0, 5.0), (2, 10.0001, 5.0)], "object_id long, ra double, dec double"
+    )
+    with pytest.raises(ValueError, match="radius_arcsec"):
+        crossmatch(two, two, radius_arcsec=radius)
+
+
 def test_cone_search_refuses_repeated_output_names(spark):
     """The projection is by name, so a column on both sides (or one
     named like ``sep_col``) is refused by name, not left ambiguous."""
