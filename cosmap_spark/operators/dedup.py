@@ -40,16 +40,25 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     )
 
 
-def _shingle_sets(df: DataFrame, text_col: str, id_col: str, k: int) -> DataFrame:
-    """(id, shingle) distinct pairs; ``shingle`` is the gram's xxhash64.
-
-    Two deliberate shapes for the hot path:
+def _shingle_arrays(
+    df: DataFrame, text_col: str, id_col: str, k: int, *, explode: bool = False
+) -> DataFrame:
+    """(id, s) with ``s`` the document's distinct shingle SET as an
+    array of gram xxhash64s — the one place the gram and hash expression
+    is written; ``explode=True`` (:func:`_shingle_sets`) explodes it to
+    (id, shingle) rows.  Deliberate shapes for the hot path:
 
     * the token array is materialized in its own projection BEFORE
       shingling — element_at inside the shingle lambda then reads the
       row's array instead of re-splitting the document per gram (Spark
       performs no CSE inside lambda functions; measured 2× on this
       stage);
+    * the explode takes the set EXPRESSION, never a projected ``s``
+      column: over a bare column Catalyst infers ``size(s) > 0 AND
+      isnotnull(s)`` (InferFiltersFromGenerate) and pushes that filter
+      below both projections, where it rebuilds every document's grams
+      from the raw text, re-splitting it per gram (signatures of 20k
+      perfbench documents, ``local[4]``: 5.5 s against 0.8–1.0 s);
     * grams are hashed to int64 AT CREATION, before any exchange — the
       groupBy / self-join downstream all shuffle 8-byte longs, never
       ~25-byte gram strings.  Set/intersection counts are unchanged
@@ -64,26 +73,28 @@ def _shingle_sets(df: DataFrame, text_col: str, id_col: str, k: int) -> DataFram
       per consumer instance; guide §2.1 "remove shuffles outright").
 
     CALLER INVARIANT (round-10 ADVICE): the input must have ONE ROW
-    PER ``id_col`` VALUE.  Duplicate-id inputs are undefined — the
-    in-row dedup cannot see across rows, so a repeated id would
-    inflate every downstream set-size/intersection count
-    (``ngram_jaccard_pairs``, ``minhash_signatures``,
-    ``dedup_clusters``; ``contamination_hits`` alone is safe via its
-    ``countDistinct``).  Every current caller passes a
-    one-row-per-document frame; dedupe upstream before calling with
-    anything else.
+    PER ``id_col`` VALUE.  The in-row dedup cannot see across rows, so
+    a repeated id inflates ``ngram_jaccard_pairs``' set sizes and
+    intersections, and REPEATS ``minhash_lsh_pairs``' output pairs (its
+    verification joins the arrays once per occurrence);
+    ``contamination_hits`` alone is safe via its ``countDistinct``.
+    Every current caller passes a one-row-per-document frame; dedupe
+    upstream before calling with anything else.
 
     Built as SQL text (two ``selectExpr`` calls): the same plan as the
     ``tokens`` + ``shingles_from_tokens`` column form, in a fraction of
     its py4j round trips.
     """
-    grams = shingles_sql("__toks", k)
+    s = f"array_distinct(transform({shingles_sql('__toks', k)}, g -> xxhash64(g)))"
     return df.selectExpr(
         f"{quote(id_col, 'id_col')} AS id",
         f"split({quote(text_col, 'text_col')}, ' ') AS __toks",
-    ).selectExpr(
-        "id", f"explode(array_distinct(transform({grams}, g -> xxhash64(g)))) AS shingle"
-    )
+    ).selectExpr("id", f"explode({s}) AS shingle" if explode else f"{s} AS s")
+
+
+def _shingle_sets(df: DataFrame, text_col: str, id_col: str, k: int) -> DataFrame:
+    """(id, shingle) distinct pairs: :func:`_shingle_arrays` exploded."""
+    return _shingle_arrays(df, text_col, id_col, k, explode=True)
 
 
 def ngram_jaccard_pairs(
@@ -117,9 +128,10 @@ def ngram_jaccard_pairs(
     storage blocks for the session's lifetime (round-3 VERDICT finding
     #1).  tests/test_dedup_knn.py asserts zero pinned RDDs post-run.
 
-    Both paths are SQL text and end in :func:`minhash_lsh_pairs`' exact
-    verification (``_verified``); ``max_shingle_df``, when given, is an
-    int ≥ 1.
+    Both paths are SQL text and end in the same size-join tail
+    (``_verified``), scored by the jaccard expression
+    :func:`minhash_lsh_pairs` also uses (``_jaccard_kept``);
+    ``max_shingle_df``, when given, is an int ≥ 1.
     """
     thr = require_fraction("threshold", threshold)
     if max_shingle_df is not None:
@@ -173,19 +185,31 @@ def ngram_jaccard_pairs(
 
 
 def _verified(inter: DataFrame, sizes: DataFrame, thr: str) -> DataFrame:
-    """The exact-Jaccard tail every shingle pair operator ends with:
-    candidate intersections ``(id_a, id_b, n_inter)`` joined to both
-    documents' shingle-set sizes ``(id, n_sh)``, scored, and kept at
-    ``jaccard >= thr`` (a :func:`require_fraction` literal).
+    """The exact-Jaccard tail of :func:`ngram_jaccard_pairs`: candidate
+    intersections ``(id_a, id_b, n_inter)`` joined to both documents'
+    shingle-set sizes ``(id, n_sh)`` and kept by :func:`_jaccard_kept`.
 
     No broadcast HINT on the per-document size table: it is
     corpus-sized (one row per doc — ~16 GB at 10⁹ docs, past the 8 GB
     broadcast hard limit), so the join strategy is left to AQE, which
     still broadcasts it while it fits and degrades to a hash join
     instead of failing the job when it doesn't."""
-    return (
+    return _jaccard_kept(
         inter.join(sizes.selectExpr("id AS id_a", "n_sh AS n_a"), "id_a")
-        .join(sizes.selectExpr("id AS id_b", "n_sh AS n_b"), "id_b")
+        .join(sizes.selectExpr("id AS id_b", "n_sh AS n_b"), "id_b"),
+        thr,
+    )
+
+
+def _jaccard_kept(counts: DataFrame, thr: str) -> DataFrame:
+    """``(id_a, id_b, jaccard)`` from ``(id_a, id_b, n_inter, n_a, n_b)``
+    rows, kept at ``jaccard >= thr`` (a :func:`require_fraction`
+    literal) for pairs sharing at least one shingle — so even
+    ``threshold=0`` never emits a pair with nothing in common.  Every
+    shingle pair operator scores with this one expression, so their
+    jaccard doubles agree bit for bit."""
+    return (
+        counts.where("n_inter > 0")
         .selectExpr(
             "id_a", "id_b",
             "CAST(n_inter AS DOUBLE) / CAST(n_a + n_b - n_inter AS DOUBLE) AS jaccard",
@@ -313,9 +337,13 @@ def minhash_lsh_pairs(
     is exact; recall is the LSH S-curve (hence rows-only correctness
     check, SURVEY.md §2.4).
 
-    The plan is built as SQL text from ONE shingle frame (signatures,
-    set sizes and verification all read it): about 150 py4j round
-    trips per call where the ``F.*`` form took 3,518 (budgeted by
+    Verification is in-row: candidates join, on ``id_a`` and on
+    ``id_b``, the per-document arrays of :func:`_shingle_arrays` and are
+    scored from ``size(array_intersect)`` — one row per document, no
+    set-size aggregate, no shingle-level join; the signature side holds
+    the plan's only ``explode``.  A repeated input id repeats its pairs.
+    Built as SQL text: about 110 py4j round trips per call where the
+    ``F.*`` form took 3,518 (budgeted by
     ``tests/test_dedup_knn.py::test_dedup_plan_build_round_trip_budget``)."""
     rows = _lsh_rows(num_hashes, bands)
     thr = require_fraction("threshold", threshold)
@@ -332,15 +360,16 @@ def minhash_lsh_pairs(
         .selectExpr("a.id AS id_a", "b.id AS id_b")
         .distinct()
     )
-    # exact verification of candidates only
-    sizes = sh.groupBy("id").agg(F.expr("count(*) AS n_sh"))
-    inter = (
-        cand.join(sh.selectExpr("id AS id_a", "shingle"), "id_a")
-        .join(sh.selectExpr("id AS id_b", "shingle"), ["id_b", "shingle"])
-        .groupBy("id_a", "id_b")
-        .agg(F.expr("count(*) AS n_inter"))
+    arrays = _shingle_arrays(df, text_col, id_col, k)
+    counts = (
+        cand.join(arrays.selectExpr("id AS id_a", "s AS sa"), "id_a")
+        .join(arrays.selectExpr("id AS id_b", "s AS sb"), "id_b")
+        .selectExpr(
+            "id_a", "id_b", "size(array_intersect(sa, sb)) AS n_inter",
+            "size(sa) AS n_a", "size(sb) AS n_b",
+        )
     )
-    return _verified(inter, sizes, thr)
+    return _jaccard_kept(counts, thr)
 
 
 def leakage_safe_split(
