@@ -11,7 +11,9 @@ to the literal type the ``F.lit`` form gave:
 * a double is written as ``repr(x) + "D"``: a bare ``2.5`` parses as
   DECIMAL(2,1), and decimal-with-decimal arithmetic does not round
   like double arithmetic;
-* a column name is backtick-quoted with embedded backticks doubled.
+* a column name is backtick-quoted with embedded backticks doubled;
+* a string is written as its UTF-8 bytes cast to STRING, which reads
+  the same under either string-escape setting of the parser.
 """
 
 from __future__ import annotations
@@ -84,3 +86,19 @@ def require_fraction(name: str, value) -> str:
     if not 0 <= _as_float(value) <= 1:
         raise ValueError(f"{name} must be a finite number in [0, 1], got {value!r}")
     return double_sql(name, value)
+
+
+def literal_sql(name: str, value) -> str:
+    """A ``None``, bool, int, float or str as the SQL literal ``F.lit``
+    gives for it; any other type is refused by name."""
+    if value is None:
+        return "NULL"
+    if isinstance(value, bool):
+        return "true" if value else "false"
+    if isinstance(value, int):
+        return str(require_seed(name, value))
+    if isinstance(value, float):
+        return double_sql(name, value)
+    if isinstance(value, str):
+        return f"CAST(X'{value.encode().hex()}' AS STRING)"
+    raise ValueError(f"{name} must be None, a bool, int, float or str, got {value!r}")

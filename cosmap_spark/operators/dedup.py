@@ -201,19 +201,21 @@ def _verified(inter: DataFrame, sizes: DataFrame, thr: str) -> DataFrame:
     )
 
 
+def _jaccard_sql(n_inter: str, n_a: str, n_b: str) -> str:
+    """SQL text of the Jaccard double from an intersection size and the
+    two set sizes.  Every shingle pair operator scores with this one
+    expression, so their jaccard doubles agree bit for bit."""
+    return f"CAST({n_inter} AS DOUBLE) / CAST({n_a} + {n_b} - {n_inter} AS DOUBLE)"
+
+
 def _jaccard_kept(counts: DataFrame, thr: str) -> DataFrame:
     """``(id_a, id_b, jaccard)`` from ``(id_a, id_b, n_inter, n_a, n_b)``
     rows, kept at ``jaccard >= thr`` (a :func:`require_fraction`
     literal) for pairs sharing at least one shingle — so even
-    ``threshold=0`` never emits a pair with nothing in common.  Every
-    shingle pair operator scores with this one expression, so their
-    jaccard doubles agree bit for bit."""
+    ``threshold=0`` never emits a pair with nothing in common."""
     return (
         counts.where("n_inter > 0")
-        .selectExpr(
-            "id_a", "id_b",
-            "CAST(n_inter AS DOUBLE) / CAST(n_a + n_b - n_inter AS DOUBLE) AS jaccard",
-        )
+        .selectExpr("id_a", "id_b", f"{_jaccard_sql('n_inter', 'n_a', 'n_b')} AS jaccard")
         .where(f"jaccard >= {thr}")
     )
 
@@ -339,8 +341,9 @@ def minhash_lsh_pairs(
 
     Verification is in-row: candidates join, on ``id_a`` and on
     ``id_b``, the per-document arrays of :func:`_shingle_arrays` and are
-    scored from ``size(array_intersect)`` — one row per document, no
-    set-size aggregate, no shingle-level join; the signature side holds
+    scored from ``size(array_intersect)``, evaluated once per candidate
+    — one row per document, no set-size aggregate, no shingle-level
+    join; the signature side holds
     the plan's only ``explode``.  A repeated input id repeats its pairs.
     Built as SQL text: about 110 py4j round trips per call where the
     ``F.*`` form took 3,518 (budgeted by
@@ -361,15 +364,19 @@ def minhash_lsh_pairs(
         .distinct()
     )
     arrays = _shingle_arrays(df, text_col, id_col, k)
-    counts = (
+    # the intersection size is bound once, as a lambda argument: a
+    # projected column would be inlined into the pushed-down keep
+    # filter and computed again there
+    jaccard = _jaccard_sql("n", "size(sa)", "size(sb)")
+    return (
         cand.join(arrays.selectExpr("id AS id_a", "s AS sa"), "id_a")
         .join(arrays.selectExpr("id AS id_b", "s AS sb"), "id_b")
         .selectExpr(
-            "id_a", "id_b", "size(array_intersect(sa, sb)) AS n_inter",
-            "size(sa) AS n_a", "size(sb) AS n_b",
+            "inline(filter(transform(array(size(array_intersect(sa, sb))), "
+            f"n -> struct(id_a, id_b, CASE WHEN n > 0 THEN {jaccard} END AS jaccard)), "
+            f"r -> r.jaccard >= {thr}))"
         )
     )
-    return _jaccard_kept(counts, thr)
 
 
 def leakage_safe_split(
@@ -645,34 +652,40 @@ def dedup_clusters(
     Iterative min-label propagation (the DataFrame form of hash-to-min,
     cf. Rastogi et al., "Finding Connected Components in Map-Reduce"
     ICDE'13): each round every node adopts the minimum label in its
-    closed neighborhood, at ONE shuffle per round, so a component needs
-    about as many rounds as its diameter.  Dup clusters are near-cliques
-    (diameter 2-3) and settle in two or three rounds.  A chain-shaped
-    component longer than ``max_iterations`` (an int ≥ 1) — e.g. a
-    boilerplate/template chain in scraped web text — raises a
-    ``RuntimeError`` instead of being silently split (a split component
-    poisons the drop list); raise ``max_iterations`` for such inputs.
+    closed neighborhood, so a component needs about as many rounds as
+    its diameter.  Dup clusters are near-cliques (diameter 2-3) and
+    settle in two or three rounds.  A chain-shaped component longer
+    than ``max_iterations`` (an int ≥ 1) — e.g. a boilerplate/template
+    chain in scraped web text — raises a ``RuntimeError`` instead of
+    being silently split (a split component poisons the drop list);
+    raise ``max_iterations`` for such inputs.
 
-    Each round is ONE eager ``localCheckpoint`` and convergence is read
-    from a ``pyspark.sql.Observation`` attached to that checkpoint: the
-    round's own jobs report whether any label changed, so no probe job
-    runs between rounds.  The round's frames are SQL text, a few dozen
-    py4j round trips each.  ``_stats``, when a dict, receives
-    ``{"rounds": n}`` — measurement hook, not API.
+    The caller's pair plan is read ONCE: one generator emits both
+    directions of each pair plus a self-loop on each endpoint, and the
+    distinct edge set is checkpointed.  The self-loops close every
+    neighborhood, so round 1 is ``min(dst)`` per ``src`` and each later
+    round is one join (edges ⋈ labels on ``dst``) and one aggregate
+    that yields both the new label (the minimum) and the old one (the
+    self-loop's).  Each round is ONE eager ``localCheckpoint`` and
+    convergence is read from a ``pyspark.sql.Observation`` attached to
+    it, so no probe job runs between rounds.  The frames are SQL text,
+    a few dozen py4j round trips each.  ``_stats``, when a dict,
+    receives ``{"rounds": n}`` — measurement hook, not API.
     """
     require_int("max_iterations", max_iterations)
     src, dst = quote(left_col, "left_col"), quote(right_col, "right_col")
-    edges = pairs.selectExpr(f"{src} AS src", f"{dst} AS dst").where("src != dst")
-    # undirected: keep both directions so every node sees all neighbors.
-    # Materialized ONCE (eager localCheckpoint): the edge list is joined
-    # every round, and its lineage is the caller's whole pair-producing
-    # plan (e.g. the full shingle join) — without truncation each round
-    # would recompute it from scratch (measured 3× on the sf0.1 ledger
-    # corpus).  localCheckpoint blocks are reclaimed by the
-    # ContextCleaner when the frame goes out of scope, unlike cache()
-    # (round-3 leak finding).
+    # Checkpointed: the edge set is joined every round, and its lineage
+    # is the caller's whole pair-producing plan (e.g. the full shingle
+    # join) — without truncation each round would recompute it.
+    # localCheckpoint blocks are reclaimed by the ContextCleaner when
+    # the frame goes out of scope, unlike cache() (round-3 leak finding).
     sym = (
-        edges.unionByName(edges.selectExpr("dst AS src", "src AS dst"))
+        pairs.selectExpr(f"{src} AS src", f"{dst} AS dst")
+        .where("src != dst")
+        .selectExpr(
+            "inline(array(struct(src, dst), struct(dst AS src, src AS dst), "
+            "struct(src, src AS dst), struct(dst AS src, dst)))"
+        )
         .distinct()
         .localCheckpoint(eager=True)
     )
@@ -682,20 +695,18 @@ def dedup_clusters(
     for _ in range(max_iterations):
         rounds += 1
         if labels is None:
-            # round 1: every node's label is still its own id, so the
-            # neighbor minimum is min(dst) per src — one groupBy, no
-            # label table to distinct and join (every node is a src)
-            step = sym.groupBy("src").agg(F.expr("min(dst) AS nbr_label")).selectExpr(
-                "src AS id", "src AS label", "nbr_label"
+            # round 1: every label is still the node's own id, and the
+            # self-loop puts it among the dst values
+            step = sym.groupBy("src").agg(F.expr("min(dst) AS label")).selectExpr(
+                "src AS id", "label", "src AS old"
             )
         else:
-            neighbor_min = (
-                sym.join(labels.selectExpr("id AS dst", "label"), "dst")
+            step = (
+                sym.join(labels.selectExpr("id AS dst", "label AS l"), "dst")
                 .groupBy("src")
-                .agg(F.expr("min(label) AS nbr_label"))
-            )
-            step = labels.join(
-                neighbor_min.selectExpr("src AS id", "nbr_label"), "id", "left"
+                .agg(F.expr("min(l) AS label"),
+                     F.expr("min(CASE WHEN dst = src THEN l END) AS old"))
+                .selectExpr("src AS id", "label", "old")
             )
         changed = Observation()
         # localCheckpoint truncates the growing lineage each round —
@@ -704,8 +715,8 @@ def dedup_clusters(
         # round's only action; the observation counts, inside its jobs,
         # the labels this round lowered.
         labels = (
-            step.observe(changed, F.expr("count_if(nbr_label < label) AS n"))
-            .selectExpr("id", "least(label, coalesce(nbr_label, label)) AS label")
+            step.observe(changed, F.expr("count_if(label < old) AS n"))
+            .selectExpr("id", "label")
             .localCheckpoint(eager=True)
         )
         if changed.get["n"] == 0:

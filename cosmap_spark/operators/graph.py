@@ -76,11 +76,7 @@ def pagerank(
     ``dst``.  Lineage is truncated with ``localCheckpoint`` every
     ``checkpoint_every`` iterations."""
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
+    nodes = e.selectExpr("explode(array(src, dst)) AS node").distinct()
     out_deg = e.groupBy(F.col("src").alias("node")).agg(
         F.count("*").alias("out_deg")
     )
@@ -189,11 +185,7 @@ def pagerank_quantized(
             f"{damping_num}/{damping_den}"
         )
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
+    nodes = e.selectExpr("explode(array(src, dst)) AS node").distinct()
     out_deg = e.groupBy(F.col("src").alias("node")).agg(
         F.count("*").alias("out_deg")
     )
@@ -280,8 +272,7 @@ def triangle_counts(
         .distinct()
     )
     deg = (
-        e.select(F.col("u").alias("node"))
-        .unionAll(e.select(F.col("v").alias("node")))
+        e.selectExpr("explode(array(u, v)) AS node")
         .groupBy("node")
         .agg(F.count("*").alias("degree"))
     )
@@ -314,9 +305,7 @@ def triangle_counts(
         & (F.greatest("x", "y") == F.col("__cv")),
     ).select("s", "x", "y")
     per_node = (
-        tri.select(F.col("s").alias("node"))
-        .unionAll(tri.select(F.col("x").alias("node")))
-        .unionAll(tri.select(F.col("y").alias("node")))
+        tri.selectExpr("explode(array(s, x, y)) AS node")
         .groupBy("node")
         .agg(F.count("*").alias("n_tri"))
     )

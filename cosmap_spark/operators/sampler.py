@@ -22,7 +22,9 @@ import math
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cosmap_spark.functions.sqlargs import double_sql, quote, require_number, require_seed
+from cosmap_spark.functions.sqlargs import (
+    double_sql, literal_sql, quote, require_number, require_seed,
+)
 
 _HASH_BUCKETS = 2**40  # uniform grid fine enough for double precision
 
@@ -95,12 +97,17 @@ def _key_hash_sql(key_cols: list[str], *extra: int) -> str:
     return f"xxhash64({', '.join(slots)})"
 
 
+def _key_uniform_sql(key_cols: list[str], seed: int, stream: int) -> str:
+    """SQL text of U[0,1) from a composite row key — the shared
+    hash-threshold core of deterministic/stratified/weighted sampling
+    (one place to change key normalization; distinct ``stream`` per
+    sampler keeps their decisions independent)."""
+    return _hash_uniform_sql(_key_hash_sql(key_cols), require_seed("seed", seed), stream)
+
+
 def _key_uniform(key_cols: list[str], seed: int, stream: int) -> Column:
-    """U[0,1) from a composite row key — the shared hash-threshold core
-    of deterministic/stratified/weighted sampling (one place to change
-    key normalization; distinct ``stream`` per sampler keeps their
-    decisions independent)."""
-    return F.expr(_hash_uniform_sql(_key_hash_sql(key_cols), require_seed("seed", seed), stream))
+    """:func:`_key_uniform_sql` as a Column."""
+    return F.expr(_key_uniform_sql(key_cols, seed, stream))
 
 
 def uniform_sphere_samples(
@@ -210,15 +217,17 @@ def stratified_sample(
     partition-dependence): each stratum keeps its own fraction.  Strata
     absent from ``fractions`` are dropped — the rebalancing primitive for
     skewed training corpora (e.g. downsample the dominant language)."""
-    u = _key_uniform(key_cols, seed, 4)
-    frac = None
-    for value, f in fractions.items():
-        # eqNullSafe so a None stratum key (unlabeled rows) is a real,
-        # addressable stratum instead of silently matching nothing
-        cond = F.col(strata_col).eqNullSafe(F.lit(value))
-        frac = F.when(cond, F.lit(float(f))) if frac is None else frac.when(cond, F.lit(float(f)))
-    frac = frac.otherwise(F.lit(0.0)) if frac is not None else F.lit(0.0)
-    return df.where(u < frac)
+    u = _key_uniform_sql(key_cols, seed, 4)
+    col = quote(strata_col, "strata_col")
+    # <=> so a None stratum key (unlabeled rows) is a real, addressable
+    # stratum instead of silently matching nothing
+    whens = "".join(
+        f" WHEN {col} <=> {literal_sql('fractions key', value)}"
+        f" THEN {double_sql('fractions', f)}"
+        for value, f in fractions.items()
+    )
+    frac = f"CASE{whens} ELSE 0.0D END" if whens else "0.0D"
+    return df.where(f"{u} < {frac}")
 
 
 def weighted_sample(
@@ -541,25 +550,22 @@ def exact_k_sample(
     )
 
 
-def _es_rank(weight_col: str, key_cols: list[str], seed: int) -> Column:
-    """The Efraimidis–Spirakis exponential rank ``r = −ln(u)/w`` with a
-    DETERMINISTIC hash-uniform ``u`` strictly inside (0, 1): the +1
-    shift keeps u off 0 (rank +inf — a random zero-probability row) and
-    the B+1 denominator keeps it off 1 (rank EXACTLY 0 — a row that
-    would sample regardless of weight, violating the weight-monotone
-    inclusion contract at the endpoint; round-9 advice) — shared by
-    :func:`weighted_k_sample` and the streaming reservoir's weighted
-    mode, which is what makes the live sample bit-equal to the batch
-    one.  Invalid weights (NULL/NaN/≤0) rank NULL — the caller drops
-    them (the weighted_sample NULL-drop contract).  Stream id 7
-    (unique among this module's samplers)."""
-    h = F.expr(_key_hash_sql(key_cols, seed, 7))
-    u = (F.pmod(h, F.lit(_HASH_BUCKETS)).cast("double") + F.lit(1.0)) \
-        / F.lit(float(_HASH_BUCKETS) + 1.0)
-    w = F.col(weight_col).cast("double")
-    return F.when(
-        w.isNotNull() & ~F.isnan(w) & (w > 0), -F.ln(u) / w
-    )
+def _es_rank_sql(weight_col: str, key_cols: list[str], seed: int) -> str:
+    """SQL text of the Efraimidis–Spirakis exponential rank
+    ``r = −ln(u)/w`` with a DETERMINISTIC hash-uniform ``u`` strictly
+    inside (0, 1): the +1 shift keeps u off 0 (rank +inf — a random
+    zero-probability row) and the B+1 denominator keeps it off 1 (rank
+    EXACTLY 0 — a row that would sample regardless of weight, violating
+    the weight-monotone inclusion contract at the endpoint; round-9
+    advice) — shared by :func:`weighted_k_sample` and the streaming
+    reservoir's weighted mode, which is what makes the live sample
+    bit-equal to the batch one.  Invalid weights (NULL/NaN/≤0) rank
+    NULL — the caller drops them (the weighted_sample NULL-drop
+    contract).  Stream id 7 (unique among this module's samplers)."""
+    h = _key_hash_sql(key_cols, seed, 7)
+    u = f"(CAST(pmod({h}, {_HASH_BUCKETS}) AS DOUBLE) + 1.0D) / {float(_HASH_BUCKETS) + 1.0!r}D"
+    w = f"CAST({quote(weight_col, 'weight_col')} AS DOUBLE)"
+    return f"CASE WHEN {w} IS NOT NULL AND NOT isnan({w}) AND {w} > 0 THEN -ln({u}) / {w} END"
 
 
 def weighted_k_sample(
@@ -585,11 +591,10 @@ def weighted_k_sample(
     weight_col=)`` — bit-equal by the shared rank."""
     if k < 1:
         raise ValueError(f"need k >= 1; got {k}")
-    r = _es_rank(weight_col, key_cols, seed)
     return (
-        df.withColumn("__r", r)
-        .where(F.col("__r").isNotNull())
-        .orderBy("__r", *key_cols)
+        df.withColumn("__r", F.expr(_es_rank_sql(weight_col, key_cols, seed)))
+        .where("__r IS NOT NULL")
+        .orderBy(F.expr("__r"), *(F.expr(quote(c, "key column")) for c in key_cols))
         .limit(k)
         .drop("__r")
     )

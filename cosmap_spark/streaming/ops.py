@@ -1768,14 +1768,14 @@ def reservoir_stream(stream_df: DataFrame, store_path: str,
     rows, history is never re-scanned.  ``k`` (an int >= 1), the keys,
     strata, weight column and seed are the store's recorded parameters:
     a mismatched resume refuses."""
-    from cosmap_spark.operators.sampler import _es_rank, _key_hash_sql
+    from cosmap_spark.operators.sampler import _es_rank_sql, _key_hash_sql
 
     require_int("reservoir_stream: k", k)
     store_path = _require_local(store_path, "reservoir_stream")
 
     def batch_state(batch_df: DataFrame) -> DataFrame:
         if weight_col is not None:
-            rank = _es_rank(weight_col, list(key_cols), int(seed))
+            rank = F.expr(_es_rank_sql(weight_col, list(key_cols), int(seed)))
         else:
             rank = F.expr(_key_hash_sql(list(key_cols), int(seed)))
         hashed = batch_df.withColumn("__h", rank).where(

@@ -140,6 +140,22 @@ def test_minhash_lsh_verifies_against_shingle_arrays(spark):
     assert pair_aggs and set(pair_aggs) == {""}, pair_aggs
 
 
+def test_minhash_lsh_intersects_each_candidate_once(spark):
+    """``size(array_intersect(sa, sb))`` is evaluated once per
+    candidate: it is bound as a lambda argument, so the keep filter that
+    Catalyst pushes into the ``id_b`` join cannot copy it (a projected
+    column was computed there three more times)."""
+    docs = spark.createDataFrame(
+        [(i, " ".join(f"w{(i * 7 + j) % 50}" for j in range(20))) for i in range(30)],
+        "doc_id long, text string",
+    )
+    pairs = minhash_lsh_pairs(docs, threshold=0.5)
+    assert pairs.collect()
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("array_intersect(") == 1, final
+
+
 def test_simhash_flags_exact_copies(corpus_with_dups):
     pairs = {
         (r["id_a"], r["id_b"]): r["hamming"]
@@ -739,6 +755,37 @@ def test_dedup_clusters_one_expensive_job_per_round(spark, monkeypatch):
     tracker = sc.statusTracker()
     assert tracker.getJobIdsForGroup(inside)
     assert list(tracker.getJobIdsForGroup(between)) == []
+
+
+def test_dedup_clusters_reads_pairs_once_and_joins_once_per_round(
+    spark, monkeypatch, tmp_path
+):
+    """The edge set reads the caller's pair plan ONCE (one generator
+    emits both directions and the self-loops, no union of two
+    projections that would each run the pair plan), and every round
+    after the first is ONE join of the edges with the labels.  Plans
+    are read from each ``localCheckpoint``'s frame: the first is the
+    edge set, the rest are the rounds; round 1 joins nothing."""
+    import re
+
+    path = str(tmp_path / "pairs")
+    spark.createDataFrame([(1, 2), (2, 3), (7, 8)], "id_a long, id_b long").write.parquet(path)
+    pairs = spark.read.parquet(path)
+    cls = type(pairs)
+    real = cls.localCheckpoint
+    plans: list[str] = []
+
+    def recording(self, *args, **kwargs):
+        plans.append(self._jdf.queryExecution().optimizedPlan().toString())
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", recording)
+    got = {(r["id"], r["cluster_id"]) for r in dedup_clusters(pairs).collect()}
+    assert got == {(1, 1), (2, 1), (3, 1), (7, 7), (8, 7)}
+    edges, rounds = plans[0], plans[1:]
+    assert edges.count("Relation [") == 1, edges
+    assert [len(re.findall(r"\bJoin\b", p)) for p in rounds] == [0] + [1] * (len(rounds) - 1)
+    assert len(rounds) >= 2
 
 
 def test_dedup_plan_build_round_trip_budget(spark):

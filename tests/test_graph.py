@@ -238,3 +238,36 @@ def test_pagerank_quantized_python_replay_property(spark):
         assert got == r
 
     prop()
+
+
+def test_graph_operators_read_each_lineage_once(spark, monkeypatch):
+    """Node lists, degrees and per-node triangle tallies come from one
+    ``explode(array(...))`` pass, not a ``Union`` of projections: a
+    union re-runs its input plan once per branch (the caller's edge
+    plan, or the wedge self-join and closing join).  The PageRank plans
+    are read at their ``localCheckpoint``s, the triangle plan from the
+    returned frame; the outputs are the brute-force ones."""
+    from cosmap_spark.operators.graph import pagerank_quantized, triangle_counts
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (3, 4)], "src long, dst long"
+    )
+    cls = type(edges)
+    real = cls.localCheckpoint
+    plans: list[str] = []
+
+    def recording(self, *args, **kwargs):
+        plans.append(self._jdf.queryExecution().optimizedPlan().toString())
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "localCheckpoint", recording)
+    ranks = pagerank(edges, max_iterations=2, checkpoint_every=1)
+    assert {r["node"] for r in ranks.collect()} == {1, 2, 3, 4}
+    units = pagerank_quantized(edges, iterations=2)
+    assert {r["node"] for r in units.collect()} == {1, 2, 3, 4}
+    assert plans and not [p for p in plans if "Union" in p], plans
+    tri = triangle_counts(edges)
+    plan = tri._jdf.queryExecution().optimizedPlan().toString()
+    assert "Union" not in plan, plan
+    assert {(r["node"], r["degree"], r["n_tri"]) for r in tri.collect()} == {
+        (1, 2, 1), (2, 2, 1), (3, 3, 1), (4, 1, 0)}
