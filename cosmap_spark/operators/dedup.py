@@ -343,8 +343,7 @@ def minhash_lsh_pairs(
     ``id_b``, the per-document arrays of :func:`_shingle_arrays` and are
     scored from ``size(array_intersect)``, evaluated once per candidate
     — one row per document, no set-size aggregate, no shingle-level
-    join; the signature side holds
-    the plan's only ``explode``.  A repeated input id repeats its pairs.
+    join; the signature side holds the plan's only ``explode``.  A repeated input id repeats its pairs.
     Built as SQL text: about 110 py4j round trips per call where the
     ``F.*`` form took 3,518 (budgeted by
     ``tests/test_dedup_knn.py::test_dedup_plan_build_round_trip_budget``)."""
